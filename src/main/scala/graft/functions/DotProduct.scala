@@ -16,7 +16,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   *
   * Summation order is the same sequential left fold as the HOF version (and
   * DuckDB's list_dot_product), so results stay bit-identical across the
-  * engine's three dot-product paths.
+  * engine's three dot-product paths (ExprsSpec pins parity against the
+  * test-scope `TestOracles.dotHof`).
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {

@@ -6,9 +6,10 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
 /** Column-expression helpers shared across the engine.
   *
-  * Everything here stays inside Catalyst (built-in functions + higher-order
-  * functions, no Scala UDFs), so plans remain codegen-friendly and the same
-  * expression works identically in batch and Structured Streaming.
+  * Everything here stays inside Catalyst (built-in functions, higher-order
+  * functions and graft's codegen kernels, no Scala UDFs), so plans remain
+  * codegen-friendly and the same expression works identically in batch and
+  * Structured Streaming.
   */
 object Exprs {
 
@@ -30,24 +31,12 @@ object Exprs {
     * ~10× faster in the kNN/ANN kernels). */
   def dot(a: Column, b: Column): Column = DotProduct(a, b)
 
-  /** Interpreted HOF twin of [[dot]] — kept as a cross-check oracle for
-    * [[DotProduct]]'s bit-equality in tests. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-
   /** Sequential left-fold squared L2 distance over two double-array columns —
     * the codegen [[SqDist]] expression (same fold order as the HOF
     * formulation the L2 kernels previously inlined, so results stay
     * bit-equal; removes the interpreted-lambda tax from the k-means / PQ /
     * brute-L2 hot paths). */
   def sqdist(a: Column, b: Column): Column = SqDist(a, b)
-
-  /** Interpreted HOF twin of [[sqdist]] — the cross-check oracle for
-    * [[SqDist]]'s bit-equality in tests (the exact expression the kernels
-    * used before the codegen swap). */
-  def sqdistHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)),
-      lit(0.0d), (acc, v) => acc + v)
 
   /** Cosine similarity between two double-array columns (0.0 for zero vectors —
     * the reference emits a guard value for those, KNNMapper.java:139-143). */
@@ -74,9 +63,11 @@ object Exprs {
   }
 
   /** Reference tokenizer (TF_IDF_Compute.java:79-99 semantics): lowercase,
-    * non-alphanumerics to spaces, split on runs of spaces, drop empties. */
-  def tokens(text: Column): Column =
-    filter(split(regexp_replace(lower(text), "[^a-z0-9 ]", " "), " +"), t => t =!= "")
+    * non-alphanumerics to spaces, split on runs of spaces, drop empties —
+    * the codegen [[Tokens]] expression (one byte loop per ASCII row, the
+    * exact built-in composition for any other row; TokensSpec pins parity
+    * with the former `filter(split(regexp_replace(lower(..))))` chain). */
+  def tokens(text: Column): Column = Tokens(text)
 
   /** Token n-gram shingles of an array column (space-joined), for near-dup
     * detection; empty array when the doc has fewer than n tokens. */
@@ -90,22 +81,9 @@ object Exprs {
     * kNN kernel shape (KNNMapper.java:118-143 iterates a HashMap<Int,Double>).
     * Dot is over the key intersection; norms over each map's own values.
     * Compiled as the codegen [[MapCosine]] expression (bit-equal to the HOF
-    * form below — MapCosineSpec pins parity). */
+    * form it replaced, kept as a test-scope oracle — MapCosineSpec pins
+    * parity). */
   def mapCosine(a: Column, b: Column): Column = MapCosine(a, b)
-
-  /** Interpreted HOF twin of [[mapCosine]] — the cross-check oracle for
-    * [[MapCosine]]'s bit-equality in tests (the exact expression the sparse
-    * kernel used before the codegen swap). */
-  def mapCosineHof(a: Column, b: Column): Column = {
-    def dotMaps(x: Column, y: Column): Column =
-      aggregate(
-        map_values(map_zip_with(x, y, (_, u, v) => coalesce(u, lit(0.0d)) * coalesce(v, lit(0.0d)))),
-        lit(0.0d), (acc, p) => acc + p)
-    def norm(m: Column): Column =
-      sqrt(aggregate(map_values(m), lit(0.0d), (acc, v) => acc + v * v))
-    val denom = norm(a) * norm(b)
-    when(denom === 0.0d, lit(0.0d)).otherwise(dotMaps(a, b) / denom)
-  }
 
   /** Portable 60-bit hash: the first 15 hex chars of md5 as a non-negative
     * long. The hash-based operators (MinHash, SimHash, sign-LSH) take this as

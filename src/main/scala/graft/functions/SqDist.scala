@@ -19,9 +19,10 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   *
   * Summation order is the identical sequential left fold — acc + (x−c)·(x−c)
   * element by element — so results are bit-equal to the HOF form (SqDistSpec
-  * pins parity) and to the oracles' unrolled arithmetic. Length mismatches
-  * min-truncate, the [[DotProduct]] contract; all callers feed fixed-dim
-  * vector pairs where both forms agree.
+  * pins parity against the test-scope `TestOracles.sqdistHof`) and to the
+  * oracles' unrolled arithmetic. Length mismatches min-truncate, the
+  * [[DotProduct]] contract; all callers feed fixed-dim vector pairs where
+  * both forms agree.
   */
 case class SqDist(left: Expression, right: Expression)
     extends BinaryExpression {

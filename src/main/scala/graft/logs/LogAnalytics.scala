@@ -26,11 +26,6 @@ object LogAnalytics {
     logs.groupBy(epochTrunc("hour", col("ts")).as("hour_epoch"), col(keyCol))
       .agg(count(lit(1)).as("cnt"))
 
-  /** Task 3: per-second tumbling-window counts per URL. */
-  def perSecondCounts(logs: DataFrame): DataFrame =
-    logs.groupBy(epochTrunc("second", col("ts")).as("sec_epoch"), col("url"))
-      .agg(count(lit(1)).as("cnt"))
-
   /** Task 4: per-URL average response time per hour. */
   def hourlyAvgResponse(logs: DataFrame): DataFrame =
     logs.groupBy(epochTrunc("hour", col("ts")).as("hour_epoch"), col("url"))

@@ -1,7 +1,7 @@
 package graft.ml
 
 import graft.functions.Exprs._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -25,26 +25,30 @@ object Evaluate {
     scored.groupBy(col("truth"), col("pred")).agg(count(lit(1)).as("n"))
 
   /** Per-class precision / recall / F1 from (truth, pred) rows — the
-    * evaluation surface beyond plain accuracy. Classes are the union of
-    * observed truths and predictions (a class never predicted gets
-    * precision 0, one never true gets recall 0); ratios are exact integer
-    * divisions, F1 a fixed expression over them → engine-portable. */
+    * evaluation surface beyond plain accuracy. Derived from [[confusion]]:
+    * one (truth, pred) aggregate, each cell exploded into a truth-side
+    * (tp, n_truth) and a pred-side (n_pred) contribution, one
+    * class-sized groupBy(label). Classes are the observed truths and
+    * predictions (a class never predicted gets precision 0, one never true
+    * gets recall 0). A null label contributes no counts, so it keeps the
+    * all-zero row it gets under equi-join semantics. Ratios are exact
+    * integer divisions, F1 a fixed expression over them → engine-portable. */
   def classMetrics(scored: DataFrame): DataFrame = {
-    val classes = scored.select(col("truth").as("label"))
-      .unionByName(scored.select(col("pred").as("label"))).distinct()
-    val tp = scored.filter(col("truth") === col("pred"))
-      .groupBy(col("truth").as("label")).agg(count(lit(1)).as("tp"))
-    val truths = scored.groupBy(col("truth").as("label")).agg(count(lit(1)).as("n_truth"))
-    val preds = scored.groupBy(col("pred").as("label")).agg(count(lit(1)).as("n_pred"))
+    val n = col("n")
     val z = lit(0L)
-    classes
-      .join(tp, Seq("label"), "left")
-      .join(truths, Seq("label"), "left")
-      .join(preds, Seq("label"), "left")
-      .select(col("label"),
-        coalesce(col("tp"), z).as("tp"),
-        (coalesce(col("n_pred"), z) - coalesce(col("tp"), z)).as("fp"),
-        (coalesce(col("n_truth"), z) - coalesce(col("tp"), z)).as("fn"))
+    def side(label: String, tp: Column, nTruth: Column, nPred: Column): Column =
+      struct(col(label).as("label"), tp.as("tp"), nTruth.as("n_truth"), nPred.as("n_pred"))
+    confusion(scored)
+      .select(explode(array(
+        side("truth", when(col("truth") === col("pred"), n).otherwise(z),
+          when(col("truth").isNotNull, n).otherwise(z), z),
+        side("pred", z, z, when(col("pred").isNotNull, n).otherwise(z)))).as("c"))
+      .groupBy(col("c.label").as("label"))
+      .agg(sum(col("c.tp")).as("tp"), sum(col("c.n_truth")).as("n_truth"),
+        sum(col("c.n_pred")).as("n_pred"))
+      .select(col("label"), col("tp"),
+        (col("n_pred") - col("tp")).as("fp"),
+        (col("n_truth") - col("tp")).as("fn"))
       .withColumn("precision",
         when(col("tp") + col("fp") === 0L, 0.0d)
           .otherwise(col("tp").cast(DoubleType) / (col("tp") + col("fp")).cast(DoubleType)))

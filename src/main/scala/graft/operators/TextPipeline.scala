@@ -18,18 +18,22 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
   * by `row_number over (order by term)` for reproducibility (the reference
   * uses nondeterministic reducer-output position, TF_IDF_Compute.java:288).
   *
-  * Scale notes: tokenization/filtering fuse into one WholeStageCodegen stage
-  * over the scan; term counting partial-aggregates map-side; the IDF table is
-  * vocabulary-sized and always broadcast; only two shuffles survive (term
-  * counts, vector assembly) — at 100 TB both hash-partition on high-cardinality
-  * keys (doc_id, term) with no skew hot-spots.
+  * Scale notes: tokenization is the codegen [[graft.functions.Tokens]]
+  * kernel (one byte loop per ASCII row; no lambda, which would keep the
+  * projection out of whole-stage codegen), so tokenize, filter and explode
+  * fuse into one WholeStageCodegen stage over the scan; term counting
+  * partial-aggregates map-side; the IDF table is vocabulary-sized and
+  * always broadcast; only two shuffles survive (term counts, vector
+  * assembly) — at 100 TB both hash-partition on high-cardinality keys
+  * (doc_id, term) with no skew hot-spots.
   */
 object TextPipeline {
 
   /** (doc_id, term) token stream — one row per token occurrence.
     * Reference semantics: lowercase, strip non-alphanumerics, whitespace split
-    * (TF_IDF_Compute.java:79-99), minus the stop-word side file (P4) which the
-    * caller applies as a filter/anti-join when wanted. */
+    * (TF_IDF_Compute.java:79-99, the [[graft.functions.Tokens]] kernel),
+    * minus the stop-word side file (P4) which the caller applies as a
+    * filter/anti-join when wanted. */
   def tokenize(docs: DataFrame, textCol: String = "text", keep: Seq[String] = Seq("doc_id")): DataFrame =
     docs.select(keep.map(col) :+ explode(tokens(col(textCol))).as("term"): _*)
 

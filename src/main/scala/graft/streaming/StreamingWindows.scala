@@ -46,11 +46,10 @@ object StreamingWindows {
     * continuous 100 TB/day clickstream needs.
     *
     * Semantics note (asserted in StreamingSessionSpec): `session_window`
-    * merges an event while `diff < gap`, the batch operator while
-    * `diff <= gapSec`. For integer-second event times, passing
-    * `gap = gapSec + 1` seconds here reproduces the batch split decisions
-    * exactly; the emitted window end is `last_event + gap`, so
-    * `duration = end - start - gap`. */
+    * merges an event while `diff <= gap`, the same inclusive test as the
+    * batch operator's `diff <= gapSec`, so passing `gap = gapSec` seconds
+    * here reproduces the batch split decisions exactly; the emitted window
+    * end is `last_event + gap`, so `duration = end - start - gap`. */
   def sessionCounts(stream: DataFrame, keyCol: String, gap: String,
                     watermark: String = "1 hour"): DataFrame =
     eventTime(stream, "ts").withWatermark("ts", watermark)
@@ -58,13 +57,4 @@ object StreamingWindows {
       .agg(count(lit(1)).as("n_events"))
       .select(col(keyCol), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"))
-
-  /** Tumbling-window average of a value column per key. */
-  def windowedAvg(stream: DataFrame, keyCol: String, valueCol: String,
-                  windowLen: String, watermark: String = "1 hour"): DataFrame =
-    eventTime(stream, "ts").withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowLen).as("w"), col(keyCol))
-      .agg(count(lit(1)).as("cnt"), avg(col(valueCol)).as("avg_value"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col(keyCol), col("cnt"), col("avg_value"))
 }

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.{LambdaFunction, RegExpReplace}
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 
 /** Standing CI guard, catalog-wide: NO query may evaluate a tokenization
-  * (RegExpReplace — the tokenizer's signature expression) inside a LAMBDA
-  * BODY inside a Filter predicate. This is the q73 retokenize trap's
+  * (the Tokens kernel or a RegExpReplace — PlanProbes.tokenizations)
+  * inside a LAMBDA BODY inside a Filter predicate. This is the q73 retokenize trap's
   * machine check, generalized from CurationPlanSpec's hand-picked list
   * after round 12 demonstrated the trap is still reachable: q210's first
   * draft materialized its gram array as an attribute,
@@ -15,7 +15,7 @@ import org.apache.spark.sql.catalyst.plans.logical.Filter
   * per row in interpreted HOF code (43 s vs 2.3 s at sf0.1, invisible to
   * every correctness check).
   *
-  * The lint keys on lambda bodies, not on any RegExpReplace in a Filter: a
+  * The lint keys on lambda bodies, not on any tokenization in a Filter: a
   * plain per-row gate like `size(tokens(text)) > k` costs one bounded
   * extra tokenize per row (eight catalog queries legitimately carry that
   * shape — q100's length gate family), while a tokenize inside a lambda
@@ -39,7 +39,7 @@ class CatalogFilterLintSpec extends SparkSpec {
           case f: Filter =>
             f.condition.collect {
               case l: LambdaFunction =>
-                l.function.collect { case r: RegExpReplace => r }.size
+                PlanProbes.tokenizations(l.function)
             }.sum
         }.sum
         if (n > 0) Some(q.name -> n) else None

@@ -119,6 +119,16 @@ class ClassifierSpec extends SparkSpec {
       .as[(String, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(conf == Map(("a", "a") -> 2L, ("a", "b") -> 1L, ("b", "a") -> 1L,
       ("b", "b") -> 1L, ("c", "a") -> 1L))
+    // null truths and preds: the confusion-derived form equals the former
+    // union/three-aggregate/three-join form, whose equi-joins leave the null
+    // label an all-zero row
+    val withNulls = scored.unionByName(Seq[(String, String)](
+      (null, "a"), ("b", null), (null, null), (null, "d"), ("e", null)).toDF("truth", "pred"))
+    val got = graft.ml.Evaluate.classMetrics(withNulls).collect().toSet
+    assert(got == TestOracles.classMetricsJoin(withNulls).collect().toSet)
+    assert(got.map(_.getString(0)) == Set("a", "b", "c", "d", "e", null))
+    assert(got.find(_.isNullAt(0)).get.toSeq.tail == Seq(0L, 0L, 0L, 0.0, 0.0, 0.0))
+    assert(got.find(_.getString(0) == "a").get.getLong(2) == 3L) // (null, a) is a false positive
   }
 
   test("out-of-vocabulary test terms are dropped (J2 inner-join semantics)") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.RegExpReplace
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 
 /** Plan-shape guards for the curation text queries — the round-6 probe
@@ -25,14 +24,14 @@ class CurationPlanSpec extends SparkSpec {
     * 33x-retokenize trap in its round-6 disguise. */
   private def filterTokenizations(name: String): Int =
     optimized(name).collect { case f: Filter =>
-      f.condition.collect { case r: RegExpReplace => r }.size
+      PlanProbes.tokenizations(f.condition)
     }.sum
 
   /** Total tokenizations anywhere in the plan — bounded by the number of
     * scan branches, never by shingle positions. */
   private def totalTokenizations(name: String): Int =
     optimized(name).flatMap(_.expressions)
-      .map(_.collect { case r: RegExpReplace => r }.size).sum
+      .map(PlanProbes.tokenizations).sum
 
   test("no curation text query tokenizes inside a Filter predicate") {
     for (q <- Seq("q71_repetition_stats", "q73_decontamination", "q76_dup_spans",

@@ -13,7 +13,7 @@ class ExprsSpec extends SparkSpec {
     val pairs = emb.as("a").crossJoin(emb.as("b")).limit(2000)
     val diffs = pairs.select(
       Exprs.dot(col("a.v"), col("b.v")).as("fast"),
-      Exprs.dotHof(col("a.v"), col("b.v")).as("hof"))
+      TestOracles.dotHof(col("a.v"), col("b.v")).as("hof"))
       .filter($"fast" =!= $"hof")
     assert(diffs.count() == 0L)
   }

@@ -1,0 +1,62 @@
+package graft
+
+import graft.ml.NaiveBayes
+import graft.operators.TextPipeline
+import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+/** Scheduled-job budgets for catalog rows on a seeded fixture. Job counts
+  * are deterministic for a fixed input and session, so a change that adds
+  * Spark jobs (rounds, in the MapReduce cost model) fails here even when its
+  * wall-clock cost hides in the bench's noise band. A change that removes
+  * jobs lowers the budget. */
+class JobBudgetSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** A `documents` table in its own parquet directory: 600 docs of 10–100
+    * tokens over 30 mixed-case terms, five languages. */
+  private val dir: String = {
+    val rnd = new scala.util.Random(5)
+    val langs = Seq("en", "de", "es", "fr", "zh")
+    val docs = Seq.tabulate(600) { i =>
+      (i.toLong, langs(rnd.nextInt(langs.size)),
+        Seq.fill(10 + rnd.nextInt(91))(s"Term${rnd.nextInt(30)}").mkString(" "))
+    }
+    val d = java.nio.file.Files.createTempDirectory("job-budget").toString
+    docs.toDF("doc_id", "lang", "text").coalesce(1).write.parquet(s"$d/documents.parquet")
+    d
+  }
+
+  /** Jobs to build and fully materialise one frame (the bench's noop sink). */
+  private def jobs(build: => DataFrame): Int = Caching.scoped {
+    PlanProbes.countJobs(spark) {
+      build.write.format("noop").mode("overwrite").save()
+    }
+  }
+
+  private def row(name: String): Int = jobs(SparkEntry.queries(name)(spark, dir))
+
+  test("q21_tfidf stays within its job budget") {
+    val n = row("q21_tfidf")
+    info(s"q21_tfidf: $n jobs")
+    assert(n <= 10, s"q21_tfidf scheduled $n jobs, budget 10")
+  }
+
+  test("q66_nb_class_metrics stays within its job budget, below the join form") {
+    // q66 with the class metrics computed by the former union/join form
+    val joinForm = jobs {
+      val toks = TextPipeline.tokenize(Tables(spark, dir, "documents"),
+        keep = Seq("doc_id", "lang")).withColumnRenamed("lang", "label")
+      val train = toks.filter(col("doc_id") % 10 =!= 0)
+      val test = toks.filter(col("doc_id") % 10 === 0)
+      val truth = test.select(col("doc_id"), col("label").as("truth")).distinct()
+      TestOracles.classMetricsJoin(
+        NaiveBayes.predict(test.drop("label"), NaiveBayes.train(train)).join(truth, "doc_id"))
+    }
+    val n = row("q66_nb_class_metrics")
+    info(s"q66_nb_class_metrics: $n jobs (join form: $joinForm)")
+    assert(n < joinForm, s"q66 scheduled $n jobs, the join form $joinForm")
+    assert(n <= 23, s"q66_nb_class_metrics scheduled $n jobs, budget 23")
+  }
+}

@@ -110,23 +110,7 @@ class LsaParitySpec extends SparkSpec {
     // the folded normalize drops one eager checkpoint (= one job) per
     // power-iteration round plus the per-round broadcast-norm build; job
     // counts are deterministic where wall-clock medians are band-noisy
-    val counter = new org.apache.spark.scheduler.SparkListener {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    def countJobs(body: => Unit): Int = {
-      spark.sparkContext.addSparkListener(counter)
-      counter.jobs.set(0)
-      try {
-        body
-        // listener delivery is async — poll until the count stabilizes
-        var last = -1
-        while (counter.jobs.get() != last) { last = counter.jobs.get(); Thread.sleep(200) }
-      } finally spark.sparkContext.removeSparkListener(counter)
-      counter.jobs.get()
-    }
+    def countJobs(body: => Unit): Int = PlanProbes.countJobs(spark)(body)
     graft.ml.Lsa.clearMemo()
     val cells = corpus(nDocs = 120, nTerms = 37, seed = 23)
       .localCheckpoint(eager = true)

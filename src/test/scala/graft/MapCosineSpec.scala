@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Bit-parity of the round-15 codegen [[graft.functions.MapCosine]] sparse
   * cosine against the interpreted HOF form it replaced
-  * ([[Exprs.mapCosineHof]]): same union fold order, same doubles. */
+  * ([[TestOracles.mapCosineHof]]): same union fold order, same doubles. */
 class MapCosineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -25,7 +25,7 @@ class MapCosineSpec extends SparkSpec {
     val pairs = a.as("x").crossJoin(a.as("y"))
     val diffs = pairs.select(
       Exprs.mapCosine(col("x.f"), col("y.f")).as("fast"),
-      Exprs.mapCosineHof(col("x.f"), col("y.f")).as("hof"))
+      TestOracles.mapCosineHof(col("x.f"), col("y.f")).as("hof"))
       .filter($"fast" =!= $"hof" ||
         ($"fast".isNull =!= $"hof".isNull))
     assert(diffs.count() == 0L)
@@ -38,7 +38,7 @@ class MapCosineSpec extends SparkSpec {
       (Map.empty[Long, Double], Map(1L -> 1.0)) // empty map → guard value 0.0
     ).toDF("a", "b")
     val both = df.select(Exprs.mapCosine($"a", $"b").as("fast"),
-      Exprs.mapCosineHof($"a", $"b").as("hof")).collect()
+      TestOracles.mapCosineHof($"a", $"b").as("hof")).collect()
     both.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
         java.lang.Double.doubleToLongBits(r.getDouble(1)), r.toString)
@@ -74,7 +74,7 @@ class MapCosineSpec extends SparkSpec {
     val want = test.select(col("id").as("q_id"), col("features").as("q_f"))
       .crossJoin(broadcast(train.select(col("id").as("n_id"),
         col("label").as("n_label"), col("features").as("n_f"))))
-      .withColumn("sim", round(Exprs.mapCosineHof(col("q_f"), col("n_f")), 6))
+      .withColumn("sim", round(TestOracles.mapCosineHof(col("q_f"), col("n_f")), 6))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= 3)
       .select(col("q_id"), col("n_id"), col("n_label"), col("sim"), col("rk"))

@@ -16,7 +16,7 @@ class SqDistSpec extends SparkSpec {
     val pairs = emb.as("a").crossJoin(emb.as("b")).limit(2000)
     val diffs = pairs.select(
       Exprs.sqdist(col("a.v"), col("b.v")).as("fast"),
-      Exprs.sqdistHof(col("a.v"), col("b.v")).as("hof"))
+      TestOracles.sqdistHof(col("a.v"), col("b.v")).as("hof"))
       .filter($"fast" =!= $"hof")
     assert(diffs.count() == 0L)
   }

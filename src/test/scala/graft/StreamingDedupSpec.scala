@@ -95,12 +95,11 @@ class StreamingDedupSpec extends SparkSpec {
     // HOFs get no codegen/CSE: if the shingle expression is ever re-inlined
     // into the signature tree, tokenization runs once PER HASH — the x10
     // probe went from minutes to >1 h on exactly this. The optimized plan
-    // must tokenize once for bandedDocs (one regexp_replace) and keep the
+    // must tokenize once for bandedDocs (one tokens kernel) and keep the
     // materialized shs column alive.
-    import org.apache.spark.sql.catalyst.expressions.RegExpReplace
     def tokenizeCount(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.optimizedPlan.flatMap(_.expressions)
-        .map(_.collect { case r: RegExpReplace => r }.size).sum
+        .map(PlanProbes.tokenizations).sum
     // parquet-backed input: a Seq-backed LocalRelation would be folded away
     // by ConvertToLocalRelation and hide the projections under test
     val docs = graft.sources.Tables(spark, "/root/testdata/sf0.001", "documents")

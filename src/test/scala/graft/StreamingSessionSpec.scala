@@ -13,12 +13,15 @@ class StreamingSessionSpec extends SparkSpec {
     def t(s: String) = Timestamp.valueOf(s)
     val gapSec = 60L
     // key a: 30 s gap (merge), then 90 s gap (> 60 -> split)
-    // key b: EXACTLY 60 s gap — batch merges (diff <= gap); the streaming
-    // twin must too, via the gapSec+1 mapping for integer-second data
+    // key b: EXACTLY 60 s gap — batch merges (diff <= gap); session_window
+    // merges an equal gap too, so the twin takes gap = gapSec unchanged
+    // key c: gapSec + 1 = 61 s gap — batch splits; the stream must split too
+    // (a gapSec + 1 window would merge it)
     val events = Seq(
       ("a", t("2024-01-01 10:00:00")), ("a", t("2024-01-01 10:00:30")),
       ("a", t("2024-01-01 10:02:00")),
-      ("b", t("2024-01-01 10:00:00")), ("b", t("2024-01-01 10:01:00")))
+      ("b", t("2024-01-01 10:00:00")), ("b", t("2024-01-01 10:01:00")),
+      ("c", t("2024-01-01 10:00:00")), ("c", t("2024-01-01 10:01:01")))
 
     val batch = graft.operators.Sessions.sessionize(
         events.toDF("key", "ts").select($"key", unix_timestamp($"ts").as("sec")), gapSec)
@@ -27,7 +30,7 @@ class StreamingSessionSpec extends SparkSpec {
 
     val ms = MemoryStream[(String, Timestamp)]
     val q = StreamingWindows.sessionCounts(
-        ms.toDF().toDF("key", "ts"), "key", s"${gapSec + 1} seconds")
+        ms.toDF().toDF("key", "ts"), "key", s"$gapSec seconds")
       .writeStream.format("memory").queryName("ssess").outputMode("append").start()
     try {
       // sessions must merge across micro-batch boundaries: second wave holds
@@ -42,9 +45,9 @@ class StreamingSessionSpec extends SparkSpec {
       val streamed = spark.table("ssess").filter($"key" =!= "zz")
         .select($"key", unix_timestamp($"session_start").as("session_start"),
           (unix_timestamp($"session_end") - unix_timestamp($"session_start") -
-            (gapSec + 1)).as("duration_sec"), $"n_events")
+            gapSec).as("duration_sec"), $"n_events")
         .as[(String, Long, Long, Long)].collect().toSet
-      assert(streamed == batch && streamed.size == 3)
+      assert(streamed == batch && streamed.size == 5)
     } finally q.stop()
   }
 }
