@@ -10,12 +10,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native greedy longest-match (MaxMatch) dictionary segmentation.
   *
-  * The higher-order-function formulation ([[graft.operators.Segment.segmentHof]])
-  * pays Catalyst's interpreted-lambda cost per (character × dictionary word) —
-  * ~100 s for 5 000 docs at sf0.1. This expression runs the same scan as a
-  * tight JVM loop with one interpreted call per ROW (CodegenFallback), which
-  * is ~50× faster and the per-brief preference order for operators the
-  * built-ins can't express efficiently.
+  * The higher-order-function formulation (the test-scope
+  * `TestOracles.segmentHof`) pays Catalyst's interpreted-lambda cost per
+  * (character × dictionary word) — ~100 s for 5 000 docs at sf0.1. This
+  * expression runs the same scan as a tight JVM loop with one interpreted
+  * call per ROW (CodegenFallback), which is ~50× faster and the per-brief
+  * preference order for operators the built-ins can't express efficiently.
   *
   * Semantics (identical to the HOF twin, asserted in SegmentSpec): scan left
   * to right over UTF-16 positions; at each position take the first match from

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native MinHash band-signature computation over a shingle array.
   *
   * Semantics are bit-identical to the HOF formulation
-  * ([[graft.operators.Dedup.minhashBandSigsHof]]) and therefore to the
+  * (the test-scope `TestOracles.minhashBandSigsHof`) and therefore to the
   * grouped crossJoin+groupBy pipeline ([[graft.operators.Dedup
   * .minhashSignatures]]) — the three-way parity is asserted in
   * StreamingDedupSpec/PropertySpec. The HOF tree pays Catalyst's

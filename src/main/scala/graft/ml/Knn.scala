@@ -13,7 +13,10 @@ import org.apache.spark.sql.types.LongType
   * (KNNMapper.java:52-74) and hand-maintains a k-best array (:147-159).
   * Here the train side is an explicit `broadcast` (Spark plans a
   * BroadcastNestedLoopJoin — the same replicated-join shape, but spillable
-  * and columnar), and top-k is a rank window partitioned by query.
+  * and columnar), and top-k is a rank window partitioned by query. The test
+  * side streams through the join on every core: it is hash-partitioned on
+  * the query id into `defaultParallelism` partitions first (see [[spread]]);
+  * a one-row-group parquet file would otherwise be one task.
   *
   * Scale path: for train sets beyond broadcast size, swap the kernel for the
   * LSH-bucketed candidate join in [[graft.operators.Similarity]] — same
@@ -30,7 +33,7 @@ object Knn {
   def neighbors(test: DataFrame, train: DataFrame, k: Int): DataFrame = {
     // norms per ROW on both join inputs (one dot per pair instead of three;
     // sims bit-identical — Exprs.cosinePre)
-    val t = test.select(col("id").as("q_id"), col("vec").as("q_vec"))
+    val t = spread(test.select(col("id").as("q_id"), col("vec").as("q_vec")))
       .withColumn("q_nrm", vnorm(col("q_vec")))
     val tr = train.select(col("id").as("n_id"), col("label").as("n_label"), col("vec").as("n_vec"))
       .withColumn("n_nrm", vnorm(col("n_vec")))
@@ -47,7 +50,7 @@ object Knn {
     * reference's own vector representation (KNNMapper.java:20). Same plan
     * shape as [[neighbors]], kernel swapped for [[mapCosine]]. */
   def neighborsSparse(test: DataFrame, train: DataFrame, k: Int): DataFrame = {
-    val t = test.select(col("id").as("q_id"), col("features").as("q_f"))
+    val t = spread(test.select(col("id").as("q_id"), col("features").as("q_f")))
     val tr = train.select(col("id").as("n_id"), col("label").as("n_label"), col("features").as("n_f"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
     t.crossJoin(broadcast(tr))
@@ -56,6 +59,15 @@ object Knn {
       .filter(col("rk") <= k)
       .select(col("q_id"), col("n_id"), col("n_label"), col("sim"), col("rk"))
   }
+
+  /** The query side of a broadcast cross-join, spread over all cores. The
+    * join does |test|×|train| work in the tasks of the test side's stage, so
+    * the test side is hash-partitioned on `q_id` into `defaultParallelism`
+    * partitions: the shuffle moves |test| rows, and the per-query top-k
+    * window and the vote, both clustered on `q_id`, need no further
+    * exchange. AQE does not coalesce a repartition by number. */
+  private def spread(t: DataFrame): DataFrame =
+    t.repartition(t.sparkSession.sparkContext.defaultParallelism, col("q_id"))
 
   private def vote(nbrs: DataFrame): DataFrame = {
     val votes = nbrs.groupBy(col("q_id"), col("n_label")).agg(count(lit(1)).as("votes"))

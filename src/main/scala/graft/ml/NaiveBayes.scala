@@ -1,16 +1,20 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Multinomial Naive Bayes as aggregations (SURVEY.md §2.4 A6/A9).
   *
-  * Training is two grouped sums off one token stream (the reference's
-  * TrainModelReducer routes the same two sums to separate files by key shape,
-  * TrainModelReducer.java:22-41); the model is three small DataFrames that
-  * broadcast into scoring.
+  * Training is one aggregation query over the token stream whose small result
+  * (per-(label, term) counts, per-label token totals and document counts) is
+  * collected to the driver; the model is three local tables that broadcast
+  * into scoring. This is the reference's shape: TrainModelReducer writes the
+  * same sums once (TrainModelReducer.java:22-41) and PredictMapper loads them
+  * as a side input.
   *
   * Scoring (standard, log-space): score(d, c) = ln P(c) + Σ_t n_t(d)·ln p(t|c)
   * with Laplace smoothing p(t|c) = (cnt(c,t)+1)/(total(c)+V) — the smoothing
@@ -21,40 +25,72 @@ import org.apache.spark.sql.types.DoubleType
   */
 object NaiveBayes {
 
-  /** Model tables from labeled tokens (label, term). `vocabSizeDf` is a
-    * 1-row (v: Long) frame — the vocabulary size stays a lazy scalar inside
-    * the plan instead of an eager driver action. */
-  case class Model(termCounts: DataFrame, classTotals: DataFrame, priors: DataFrame,
-                   vocabSizeDf: DataFrame) {
-    /** Eager convenience accessor (tests, reporting). */
-    def vocabSize: Long = vocabSizeDf.collect().head.getLong(0)
-  }
+  /** A fitted model. Every frame is a `LocalRelation` over driver-held
+    * rows, so scoring re-reads no training data: [[predict]] broadcasts each
+    * one from the driver.
+    *  - `termCounts` (label, term, tcnt): one row per training (label, term);
+    *  - `classes` (label, total, prior, v): one row per non-null label, with
+    *    its token total, its document share and the vocabulary size;
+    *  - `vocab` (term): the distinct non-null training terms, `vocabSize` of
+    *    them (a term seen only under a null label still counts). */
+  case class Model(termCounts: DataFrame, classes: DataFrame, vocab: DataFrame, vocabSize: Long)
 
-  /** A6: train from a labeled token stream (doc_id, label, term).
-    * Fully lazy — no driver-side actions; scalars (doc count, vocabulary
-    * size) are 1-row broadcast frames folded into the scoring plan. */
+  /** A6: fit from a labeled token stream (doc_id, label, term). One Spark
+    * query: a grouping-sets scan counts (label, term) and (label, doc_id)
+    * groups, and a second aggregate folds the latter into per-label token
+    * totals and document counts. The driver computes each prior as
+    * `n_d.toDouble / n_docs.toDouble`; every log stays in the scoring plan,
+    * so no score depends on where the model was fitted. */
   def train(toks: DataFrame): Model = {
-    val termCounts = toks.groupBy(col("label"), col("term")).agg(count(lit(1)).as("tcnt"))
-    val classTotals = termCounts.groupBy(col("label")).agg(sum(col("tcnt")).as("total"))
-    val docs = toks.select(col("doc_id"), col("label")).distinct()
-    val nDocsDf = docs.agg(count(lit(1)).as("n_docs"))
-    val priors = docs.groupBy(col("label")).agg(count(lit(1)).as("n_d"))
-      .crossJoin(broadcast(nDocsDf))
-      .select(col("label"),
-        (col("n_d").cast(DoubleType) / col("n_docs").cast(DoubleType)).as("prior"))
-    val vocabSizeDf = termCounts.agg(countDistinct(col("term")).as("v"))
-    Model(termCounts, classTotals, priors, vocabSizeDf)
+    val spark = toks.sparkSession
+    // grouping_id over (label, term, doc_id): 1 for a (label, term) group,
+    // 2 for a (label, doc_id) group, whose term is then null
+    val (termSet, docSet) = (1L, 2L)
+    val fit = toks
+      .groupingSets(Seq(Seq(col("label"), col("term")), Seq(col("label"), col("doc_id"))),
+        col("label"), col("term"), col("doc_id"))
+      .agg(grouping_id().as("gid"), count(lit(1)).as("n"))
+      .groupBy(col("gid"), col("label"), col("term"))
+      .agg(sum(col("n")).as("n"), count(lit(1)).as("docs"))
+      .collect()
+    val terms = fit.filter(_.getLong(0) == termSet)
+    val labels = fit.filter(_.getLong(0) == docSet)
+    val nDocs = labels.map(_.getLong(4)).sum
+    val vocab = terms.filterNot(_.isNullAt(2)).map(_.get(2)).distinct
+    val v = vocab.length.toLong
+
+    val labelF = toks.schema("label")
+    val termF = toks.schema("term")
+    def local(fields: Seq[StructField], rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(rows.asJava, StructType(fields))
+    Model(
+      termCounts = local(Seq(labelF, termF, StructField("tcnt", LongType, nullable = false)),
+        terms.map(r => Row(r.get(1), r.get(2), r.getLong(3))).toSeq),
+      classes = local(Seq(labelF, StructField("total", LongType), StructField("prior", DoubleType),
+          StructField("v", LongType, nullable = false)),
+        labels.filterNot(_.isNullAt(1))
+          .map(r => Row(r.get(1), r.getLong(3), r.getLong(4).toDouble / nDocs.toDouble, v)).toSeq),
+      vocab = local(Seq(termF), vocab.map(Row(_)).toSeq),
+      vocabSize = v)
   }
 
   /** A9: score + argmax. Input: test tokens (doc_id, term). Output (doc_id, pred). */
   def predict(testToks: DataFrame, model: Model, referenceCompat: Boolean = false): DataFrame = {
+    val ord = if (referenceCompat) col("score").asc else col("score").desc
+    val w = Window.partitionBy(col("doc_id")).orderBy(ord, col("label").asc)
+    scores(testToks, model, referenceCompat)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("doc_id"), col("label").as("pred"))
+  }
+
+  /** Every test document's score under every class: (doc_id, label, score).
+    * A document with no in-vocabulary term has no row. */
+  def scores(testToks: DataFrame, model: Model, referenceCompat: Boolean = false): DataFrame = {
     val testCounts = testToks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("cnt"))
       // vocabulary restriction: J2 inner-join semantics (out-of-vocab dropped)
-      .join(broadcast(model.termCounts.select(col("term")).distinct()), "term")
-    val classes = model.classTotals.join(model.priors, "label")
-      .crossJoin(broadcast(model.vocabSizeDf))
+      .join(broadcast(model.vocab), "term")
     val scored = testCounts
-      .crossJoin(broadcast(classes))
+      .crossJoin(broadcast(model.classes))
       .join(broadcast(model.termCounts), Seq("label", "term"), "left")
       .na.fill(0L, Seq("tcnt"))
       .withColumn("logp",
@@ -73,10 +109,6 @@ object NaiveBayes {
         abs(product(pow(round(col("logp"), 10), col("cnt"))) * log(max(col("prior"))))
       else
         sum(col("cnt").cast(DoubleType) * col("logp")) + log(max(col("prior")))
-    val agg = scored.groupBy(col("doc_id"), col("label")).agg(score.as("score"))
-    val ord = if (referenceCompat) col("score").asc else col("score").desc
-    val w = Window.partitionBy(col("doc_id")).orderBy(ord, col("label").asc)
-    agg.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("doc_id"), col("label").as("pred"))
+    scored.groupBy(col("doc_id"), col("label")).agg(score.as("score"))
   }
 }

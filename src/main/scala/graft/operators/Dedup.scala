@@ -141,43 +141,12 @@ object Dedup {
     * dispatches to the native single-pass expression
     * ([[graft.functions.MinHashBandSigs]]): one traversal of the shingles
     * updating all numHashes minima in a primitive array, instead of
-    * numHashes separate interpreted `transform` walks. The HOF twin
-    * ([[minhashBandSigsHof]]) stays as the pure-Catalyst cross-check;
-    * native ≡ HOF ≡ grouped parity is spec-asserted. */
+    * numHashes separate interpreted `transform` walks. The HOF twin (the
+    * test-scope `TestOracles.minhashBandSigsHof`) is the pure-Catalyst
+    * cross-check; native ≡ HOF ≡ grouped parity is spec-asserted. */
   def minhashBandSigsFromShingles(shs: Column, numHashes: Int = 32,
                                   bands: Int = 8, portable: Boolean = true): Column =
     graft.functions.MinHashBandSigs(shs, numHashes, bands, portable)
-
-  /** Higher-order-function twin of [[minhashBandSigsFromShingles]] (parity
-    * reference; prefer the native form in plans).
-    *
-    * PERFORMANCE CONTRACT: pass `shs` as a *materialized column* (its own
-    * projection step), never as an inline `shingles(tokens(...))` expression.
-    * This tree references the shingle array numHashes+1 times, and
-    * higher-order functions get neither codegen nor common-subexpression
-    * elimination — an inline subtree is re-tokenized per reference (measured:
-    * the ×10 ScalingProbe q34 run went from ~2 min to not finishing in 10,
-    * exactly the 33× recompute). With a column reference, CollapseProject
-    * declines to re-inline a non-cheap alias used more than once, so the
-    * array is computed once per row. */
-  def minhashBandSigsHof(shs: Column, numHashes: Int = 32,
-                         bands: Int = 8, portable: Boolean = true): Column = {
-    require(bands >= 1 && numHashes % bands == 0,
-      s"numHashes=$numHashes must be a positive multiple of bands=$bands")
-    val rowsPerBand = numHashes / bands
-    val bandStructs = (0 until bands).map { b =>
-      val entries = (b * rowsPerBand until (b + 1) * rowsPerBand).map { seed =>
-        val mh = if (portable) array_min(transform(shs, x => h60(concat(lit(s"$seed:"), x))))
-                 else array_min(transform(shs, x => xxhash64(x, lit(seed.toLong))))
-        concat(lit(s"$seed:"), mh.cast("string"))
-      }
-      val joined = array_join(array_sort(array(entries: _*)), ",")
-      struct(lit(b.toLong).as("band"),
-        (if (portable) joined else xxhash64(joined).cast("string")).as("band_sig"))
-    }
-    when(size(shs) > 0, array(bandStructs: _*))
-      .otherwise(array().cast("array<struct<band:bigint,band_sig:string>>"))
-  }
 
   /** MinHash + LSH near-dup pairs: band the signature, bucket-join on
     * (band, band-signature), then verify candidates with exact Jaccard.
@@ -631,26 +600,10 @@ object Dedup {
   def winnowFingerprints(docs: DataFrame, k: Int, w: Int): DataFrame = {
     val tok = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
     // native fused kernel (gram join + h60 + window min in one JVM loop);
-    // [[winnowFingerprintsHof]] is the pure-Catalyst twin kept for the
-    // bit-equality cross-check (WinnowingSpec)
+    // the test-scope TestOracles.winnowFingerprintsHof is the pure-Catalyst
+    // twin kept for the bit-equality cross-check (WinnowingSpec)
     val wins = tok.select(col("doc_id"),
       graft.functions.WinnowSelect(col("toks"), k, w).as("wins"))
-    wins
-      .select(col("doc_id"), col("wins"),
-        explode(array_distinct(col("wins"))).as("fp"))
-      .select(col("doc_id"), col("fp"),
-        array_position(col("wins"), col("fp")).cast(LongType).as("first_pos"))
-  }
-
-  /** Interpreted HOF twin of [[winnowFingerprints]] — the cross-check
-    * oracle for [[graft.functions.WinnowSelect]]'s bit-equality. Pays an
-    * interpreted lambda per (gram × window) element; the fused native
-    * kernel replaced it in the shipped path (round-12 session 2). */
-  def winnowFingerprintsHof(docs: DataFrame, k: Int, w: Int): DataFrame = {
-    val tok = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-    val hs = tok.select(col("doc_id"),
-      transform(shingles(col("toks"), k), g => h60(g)).as("hs"))
-    val wins = hs.select(col("doc_id"), winnowMins(col("hs"), w).as("wins"))
     wins
       .select(col("doc_id"), col("wins"),
         explode(array_distinct(col("wins"))).as("fp"))

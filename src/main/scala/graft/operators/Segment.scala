@@ -43,7 +43,8 @@ object Segment {
   /** Greedy longest-match segmentation of `textCol` against `dict`, via the
     * native [[graft.functions.GreedySegment]] expression (tight JVM scan, one
     * interpreted call per row — ~50× the HOF formulation's throughput).
-    * [[segmentHof]] is the pure-Catalyst twin kept as a cross-check oracle.
+    * The test-scope `TestOracles.segmentHof` is the pure-Catalyst twin kept
+    * as a cross-check oracle.
     *
     * Dictionaries beyond `bigDictThreshold` distinct words switch to the
     * [[segmentBigDict]] trie-automaton path: the native expression's scan is
@@ -151,37 +152,5 @@ object Segment {
       }
     }
     spark.createDataFrame(rows, schema)
-  }
-
-  /** HOF twin of [[segment]]: (1) per dictionary word, scan all occurrence
-    * positions (a filter over character positions — the O(len·|dict|) work);
-    * (2) sort the sparse (pos, rank) match list and greedily fold over IT.
-    * Taking the first match with pos ≥ cursor from the (pos asc,
-    * longest-first) order is exactly MaxMatch. Interpreted-lambda cost per
-    * (char × word) makes this the slow reference path — kept for test parity
-    * with the native expression, mirroring dot/dotHof. */
-  def segmentHof(docs: DataFrame, dict: Seq[String], textCol: String = "text",
-                 keep: Seq[String] = Seq("doc_id")): DataFrame = {
-    require(dict.nonEmpty && dict.forall(_.nonEmpty), "dictionary words must be non-empty")
-    val ordered = dict.distinct.sortBy(w => (-w.length, w))
-    val rankToWord = array(ordered.map(lit(_)): _*)
-    val s = despace(col(textCol))
-    // rank = position in the (length desc, word asc) order, so an ascending
-    // struct sort puts the longest candidate first at every position
-    val matchArrays = ordered.zipWithIndex.map { case (w, r) =>
-      transform(
-        filter(sequence(lit(1), length(s)), i => s.substr(i, lit(w.length)) === w),
-        i => struct(i.as("pos"), lit(r).as("rank")))
-    }
-    val all = array_sort(flatten(array(matchArrays: _*)))
-    def word(m: Column) = element_at(rankToWord, m.getField("rank") + 1)
-    val zero = struct(lit(1).as("pos"), array().cast("array<string>").as("out"))
-    val folded = aggregate(all, zero, (acc, m) =>
-      when(m.getField("pos") < acc.getField("pos"), acc)
-        .otherwise(struct(
-          (m.getField("pos") + length(word(m))).as("pos"),
-          concat(acc.getField("out"), array(word(m))).as("out"))),
-      acc => acc.getField("out"))
-    docs.select(keep.map(col) :+ explode(folded).as("name"): _*)
   }
 }

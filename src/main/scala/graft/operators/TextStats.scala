@@ -260,9 +260,10 @@ object TextStats {
     * Entirely ROW-LOCAL: the whole operator rides the scan with zero
     * exchanges (the q211 winnowMins posture). The kernel is the native
     * [[graft.functions.CharEntropyStats]] expression (one tight JVM loop
-    * per row); [[charEntropyHof]] is the pure-Catalyst twin kept for the
-    * bit-equality cross-check (interpreted (char × alphabet) lambdas made
-    * it 50×+ slower — 39 s for sf0.1 in the round-12 probe).
+    * per row); the test-scope `TestOracles.charEntropyHof` is the
+    * pure-Catalyst twin kept for the bit-equality cross-check (interpreted
+    * (char × alphabet) lambdas made it 50×+ slower — 39 s for sf0.1 in the
+    * round-12 probe).
     * H = ln(L) − Σ c·ln(c) / L with the sum folded in sorted char order
     * and every libm term rounded at 12 dp, so the doubles hash-match the
     * oracle's list_reduce replay bit for bit. */
@@ -275,24 +276,6 @@ object TextStats {
         graft.functions.CharEntropyStats(col("clean")).as("st"))
       .select(col("doc_id"), col("n_chars"),
         col("st.n_alphabet").as("n_alphabet"), col("st.entropy").as("entropy"))
-  }
-
-  /** Interpreted HOF twin of [[charEntropy]] — the cross-check oracle for
-    * [[graft.functions.CharEntropyStats]]'s bit-equality (TextStatsSpec). */
-  def charEntropyHof(docs: DataFrame): DataFrame = {
-    val clean = docs
-      .select(col("doc_id"), array_join(tokens(col("text")), " ").as("clean"))
-      .filter(length(col("clean")) >= 1)
-    val chars = expr("transform(sequence(1, length(clean)), i -> substring(clean, i, 1))")
-    val dist = array_sort(array_distinct(chars))
-    val cnts = transform(dist, c => size(filter(chars, x => x === c)).cast(DoubleType))
-    val s = aggregate(transform(cnts, c => round(c * log(c), 12)),
-      lit(0d), (acc, x) => acc + x)
-    val L = length(col("clean")).cast(DoubleType)
-    clean.select(col("doc_id"),
-      length(col("clean")).cast(LongType).as("n_chars"),
-      size(dist).cast(LongType).as("n_alphabet"),
-      round(round(log(L), 12) - s / L, 6).as("entropy"))
   }
 
   /** Per-doc self-BLEU-2 against a fixed reference panel (Zhu et al. 2018's

@@ -45,7 +45,7 @@ class SegmentSpec extends SparkSpec {
     assert(got(2L) == Seq("洪七公", "黄蓉", "靖"))
     assert(!got.contains(3L))
     // HOF twin agrees on CJK input (same MaxMatch semantics, shared despace)
-    val hof = Segment.segmentHof(d, cjkDict)
+    val hof = TestOracles.segmentHof(d, cjkDict)
       .as[(Long, String)].collect().groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     assert(hof == got)
   }
@@ -73,7 +73,7 @@ class SegmentSpec extends SparkSpec {
     val native = Segment.segment(d, dict)
       .groupBy($"doc_id", $"name").count()
       .as[(Long, String, Long)].collect().toSet
-    val hof = Segment.segmentHof(d, dict)
+    val hof = TestOracles.segmentHof(d, dict)
       .groupBy($"doc_id", $"name").count()
       .as[(Long, String, Long)].collect().toSet
     assert(native == hof && native.nonEmpty)

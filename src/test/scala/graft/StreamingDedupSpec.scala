@@ -33,7 +33,7 @@ class StreamingDedupSpec extends SparkSpec {
           .select($"doc_id", $"bk.band", $"bk.band_sig")
           .as[(Long, Long, String)].collect().toSet
       val native = sigs(Dedup.minhashBandSigsFromShingles)
-      val hof = sigs(Dedup.minhashBandSigsHof)
+      val hof = sigs(TestOracles.minhashBandSigsHof)
       assert(native == hof && native.nonEmpty, s"portable=$portable")
     }
   }

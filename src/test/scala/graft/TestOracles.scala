@@ -1,8 +1,11 @@
 package graft
 
+import graft.functions.Exprs.{cosinePre, dot, h60, mapCosine, shingles, tokens, vnorm}
+import graft.operators.{Dedup, Segment}
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** The built-in forms that the engine's rewrites replaced, kept in test scope
   * as parity oracles: each spec compares a rewrite against the exact
@@ -66,5 +69,190 @@ object TestOracles {
         when(col("precision") + col("recall") === 0.0d, 0.0d)
           .otherwise(lit(2.0d) * col("precision") * col("recall") /
             (col("precision") + col("recall"))))
+  }
+
+  /** `NaiveBayes`' model before it was fitted on the driver: lazy frames,
+    * the scalars as 1-row frames folded into the scoring plan. */
+  case class LazyNbModel(termCounts: DataFrame, classTotals: DataFrame, priors: DataFrame,
+                         vocabSizeDf: DataFrame)
+
+  /** `NaiveBayes.train` before it was fitted on the driver. */
+  def nbTrainLazy(toks: DataFrame): LazyNbModel = {
+    val termCounts = toks.groupBy(col("label"), col("term")).agg(count(lit(1)).as("tcnt"))
+    val classTotals = termCounts.groupBy(col("label")).agg(sum(col("tcnt")).as("total"))
+    val docs = toks.select(col("doc_id"), col("label")).distinct()
+    val nDocsDf = docs.agg(count(lit(1)).as("n_docs"))
+    val priors = docs.groupBy(col("label")).agg(count(lit(1)).as("n_d"))
+      .crossJoin(broadcast(nDocsDf))
+      .select(col("label"),
+        (col("n_d").cast(DoubleType) / col("n_docs").cast(DoubleType)).as("prior"))
+    val vocabSizeDf = termCounts.agg(countDistinct(col("term")).as("v"))
+    LazyNbModel(termCounts, classTotals, priors, vocabSizeDf)
+  }
+
+  /** `NaiveBayes.scores` over the lazy model: (doc_id, label, score). */
+  def nbScoresLazy(testToks: DataFrame, model: LazyNbModel,
+                   referenceCompat: Boolean): DataFrame = {
+    val testCounts = testToks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("cnt"))
+      .join(broadcast(model.termCounts.select(col("term")).distinct()), "term")
+    val classes = model.classTotals.join(model.priors, "label")
+      .crossJoin(broadcast(model.vocabSizeDf))
+    val scored = testCounts
+      .crossJoin(broadcast(classes))
+      .join(broadcast(model.termCounts), Seq("label", "term"), "left")
+      .na.fill(0L, Seq("tcnt"))
+      .withColumn("logp",
+        log((col("tcnt").cast(DoubleType) + lit(1.0d)) /
+          (col("total").cast(DoubleType) + col("v").cast(DoubleType))))
+    val score =
+      if (referenceCompat)
+        abs(product(pow(round(col("logp"), 10), col("cnt"))) * log(max(col("prior"))))
+      else
+        sum(col("cnt").cast(DoubleType) * col("logp")) + log(max(col("prior")))
+    scored.groupBy(col("doc_id"), col("label")).agg(score.as("score"))
+  }
+
+  /** `NaiveBayes.predict` over the lazy model: (doc_id, pred). */
+  def nbPredictLazy(testToks: DataFrame, model: LazyNbModel,
+                    referenceCompat: Boolean): DataFrame = {
+    val ord = if (referenceCompat) col("score").asc else col("score").desc
+    val w = Window.partitionBy(col("doc_id")).orderBy(ord, col("label").asc)
+    nbScoresLazy(testToks, model, referenceCompat)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("doc_id"), col("label").as("pred"))
+  }
+
+  /** `Knn.neighbors` before its query side was spread over the cores. */
+  def knnNeighbors(test: DataFrame, train: DataFrame, k: Int): DataFrame = {
+    val t = test.select(col("id").as("q_id"), col("vec").as("q_vec"))
+      .withColumn("q_nrm", vnorm(col("q_vec")))
+    val tr = train.select(col("id").as("n_id"), col("label").as("n_label"), col("vec").as("n_vec"))
+      .withColumn("n_nrm", vnorm(col("n_vec")))
+    knnTopK(t.crossJoin(broadcast(tr))
+      .withColumn("sim", round(cosinePre(dot(col("q_vec"), col("n_vec")),
+        col("q_nrm"), col("n_nrm")), 6)), k)
+  }
+
+  /** `Knn.neighborsSparse` before its query side was spread over the cores. */
+  def knnNeighborsSparse(test: DataFrame, train: DataFrame, k: Int): DataFrame = {
+    val t = test.select(col("id").as("q_id"), col("features").as("q_f"))
+    val tr = train.select(col("id").as("n_id"), col("label").as("n_label"), col("features").as("n_f"))
+    knnTopK(t.crossJoin(broadcast(tr))
+      .withColumn("sim", round(mapCosine(col("q_f"), col("n_f")), 6)), k)
+  }
+
+  private def knnTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
+    pairs.withColumn("rk", row_number().over(w).cast(LongType))
+      .filter(col("rk") <= k)
+      .select(col("q_id"), col("n_id"), col("n_label"), col("sim"), col("rk"))
+  }
+
+  /** `Knn`'s majority vote over [[knnNeighbors]] output. */
+  def knnVote(nbrs: DataFrame): DataFrame = {
+    val votes = nbrs.groupBy(col("q_id"), col("n_label")).agg(count(lit(1)).as("votes"))
+    val w = Window.partitionBy(col("q_id")).orderBy(col("votes").desc, col("n_label").asc)
+    votes.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .select(col("q_id"), col("n_label").as("pred"))
+  }
+
+  /** HOF twin of [[graft.operators.Segment.segment]]: (1) per dictionary
+    * word, scan all occurrence positions (a filter over character positions
+    * — the O(len·|dict|) work); (2) sort the sparse (pos, rank) match list and greedily fold over IT.
+    * Taking the first match with pos ≥ cursor from the (pos asc,
+    * longest-first) order is exactly MaxMatch. Interpreted-lambda cost per
+    * (char × word) makes this the slow reference path — kept for test parity
+    * with the native expression, mirroring dot/dotHof. */
+  def segmentHof(docs: DataFrame, dict: Seq[String], textCol: String = "text",
+                 keep: Seq[String] = Seq("doc_id")): DataFrame = {
+    require(dict.nonEmpty && dict.forall(_.nonEmpty), "dictionary words must be non-empty")
+    val ordered = dict.distinct.sortBy(w => (-w.length, w))
+    val rankToWord = array(ordered.map(lit(_)): _*)
+    val s = Segment.despace(col(textCol))
+    // rank = position in the (length desc, word asc) order, so an ascending
+    // struct sort puts the longest candidate first at every position
+    val matchArrays = ordered.zipWithIndex.map { case (w, r) =>
+      transform(
+        filter(sequence(lit(1), length(s)), i => s.substr(i, lit(w.length)) === w),
+        i => struct(i.as("pos"), lit(r).as("rank")))
+    }
+    val all = array_sort(flatten(array(matchArrays: _*)))
+    def word(m: Column) = element_at(rankToWord, m.getField("rank") + 1)
+    val zero = struct(lit(1).as("pos"), array().cast("array<string>").as("out"))
+    val folded = aggregate(all, zero, (acc, m) =>
+      when(m.getField("pos") < acc.getField("pos"), acc)
+        .otherwise(struct(
+          (m.getField("pos") + length(word(m))).as("pos"),
+          concat(acc.getField("out"), array(word(m))).as("out"))),
+      acc => acc.getField("out"))
+    docs.select(keep.map(col) :+ explode(folded).as("name"): _*)
+  }
+
+  /** Higher-order-function twin of
+    * [[graft.operators.Dedup.minhashBandSigsFromShingles]] (parity
+    * reference; prefer the native form in plans).
+    *
+    * PERFORMANCE CONTRACT: pass `shs` as a *materialized column* (its own
+    * projection step), never as an inline `shingles(tokens(...))` expression.
+    * This tree references the shingle array numHashes+1 times, and
+    * higher-order functions get neither codegen nor common-subexpression
+    * elimination — an inline subtree is re-tokenized per reference (measured:
+    * the ×10 ScalingProbe q34 run went from ~2 min to not finishing in 10,
+    * exactly the 33× recompute). With a column reference, CollapseProject
+    * declines to re-inline a non-cheap alias used more than once, so the
+    * array is computed once per row. */
+  def minhashBandSigsHof(shs: Column, numHashes: Int = 32,
+                         bands: Int = 8, portable: Boolean = true): Column = {
+    require(bands >= 1 && numHashes % bands == 0,
+      s"numHashes=$numHashes must be a positive multiple of bands=$bands")
+    val rowsPerBand = numHashes / bands
+    val bandStructs = (0 until bands).map { b =>
+      val entries = (b * rowsPerBand until (b + 1) * rowsPerBand).map { seed =>
+        val mh = if (portable) array_min(transform(shs, x => h60(concat(lit(s"$seed:"), x))))
+                 else array_min(transform(shs, x => xxhash64(x, lit(seed.toLong))))
+        concat(lit(s"$seed:"), mh.cast("string"))
+      }
+      val joined = array_join(array_sort(array(entries: _*)), ",")
+      struct(lit(b.toLong).as("band"),
+        (if (portable) joined else xxhash64(joined).cast("string")).as("band_sig"))
+    }
+    when(size(shs) > 0, array(bandStructs: _*))
+      .otherwise(array().cast("array<struct<band:bigint,band_sig:string>>"))
+  }
+
+  /** Interpreted HOF twin of
+    * [[graft.operators.Dedup.winnowFingerprints]] — the cross-check
+    * oracle for [[graft.functions.WinnowSelect]]'s bit-equality. Pays an
+    * interpreted lambda per (gram × window) element; the fused native
+    * kernel replaced it in the shipped path (round-12 session 2). */
+  def winnowFingerprintsHof(docs: DataFrame, k: Int, w: Int): DataFrame = {
+    val tok = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
+    val hs = tok.select(col("doc_id"),
+      transform(shingles(col("toks"), k), g => h60(g)).as("hs"))
+    val wins = hs.select(col("doc_id"), Dedup.winnowMins(col("hs"), w).as("wins"))
+    wins
+      .select(col("doc_id"), col("wins"),
+        explode(array_distinct(col("wins"))).as("fp"))
+      .select(col("doc_id"), col("fp"),
+        array_position(col("wins"), col("fp")).cast(LongType).as("first_pos"))
+  }
+
+  /** Interpreted HOF twin of
+    * [[graft.operators.TextStats.charEntropy]] — the cross-check oracle for
+    * [[graft.functions.CharEntropyStats]]'s bit-equality (TextStatsSpec). */
+  def charEntropyHof(docs: DataFrame): DataFrame = {
+    val clean = docs
+      .select(col("doc_id"), array_join(tokens(col("text")), " ").as("clean"))
+      .filter(length(col("clean")) >= 1)
+    val chars = expr("transform(sequence(1, length(clean)), i -> substring(clean, i, 1))")
+    val dist = array_sort(array_distinct(chars))
+    val cnts = transform(dist, c => size(filter(chars, x => x === c)).cast(DoubleType))
+    val s = aggregate(transform(cnts, c => round(c * log(c), 12)),
+      lit(0d), (acc, x) => acc + x)
+    val L = length(col("clean")).cast(DoubleType)
+    clean.select(col("doc_id"),
+      length(col("clean")).cast(LongType).as("n_chars"),
+      size(dist).cast(LongType).as("n_alphabet"),
+      round(round(log(L), 12) - s / L, 6).as("entropy"))
   }
 }

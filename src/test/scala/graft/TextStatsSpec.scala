@@ -164,7 +164,7 @@ class TextStatsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val native = TextStats.charEntropy(docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
-    val hof = TextStats.charEntropyHof(docs).collect()
+    val hof = TestOracles.charEntropyHof(docs).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(native == hof)
   }

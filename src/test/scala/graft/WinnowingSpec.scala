@@ -32,7 +32,7 @@ class WinnowingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val native = Dedup.winnowFingerprints(docs, K, W)
       .as[(Long, Long, Long)].collect().toSet
-    val hof = Dedup.winnowFingerprintsHof(docs, K, W)
+    val hof = TestOracles.winnowFingerprintsHof(docs, K, W)
       .as[(Long, Long, Long)].collect().toSet
     assert(native == hof)
     assert(!native.exists(_._1 == 99L))
