@@ -176,7 +176,7 @@ object Bench {
     "q117_pca_scores", "q123_pca_topk")
 
   /** Rows that can BUILD session memo entries on a miss (LSA/PCA family +
-    * the DupClusters deployments — `dupClusterAssignment` users in
+    * the dup-cluster deployments — `dupClusterAssignment` users in
     * queries/Curation.scala). Their warm-ups seed the memos that later
     * rows' snapshots inherit, so they are never warm-skipped: skipping the
     * first builder would leave later readers' snapshots empty and turn
@@ -299,19 +299,20 @@ object Bench {
         s"Bench.lateAlways/memoTouching/warmChains names not in the catalog (renamed?): ${unresolved.mkString(", ")}")
     }
 
-    // LSA/PCA factorization memos are session-scoped product behavior: a
-    // query needing components 1..k reuses whatever earlier queries
-    // extracted (q105 after q103 pays only phase 2). Each timed pass
-    // restores the memo to the query's PRE-warm-up state so the pass
-    // measures that marginal work — never a free hit on its own warm-up's
-    // entry. Caching.release()/clearCache() after every pass leaves the
-    // memos intact (checkpoint blocks are persisted RDDs, not catalog cache
+    // Session memos (LSA/PCA factorizations, dup clusters) are
+    // session-scoped product behavior: a query needing components 1..k
+    // reuses whatever earlier queries extracted (q105 after q103 pays only
+    // phase 2). Each timed pass restores every memo to the query's
+    // PRE-warm-up SessionMemo.snapshot so the pass measures that marginal
+    // work — never a free hit on its own warm-up's entry.
+    // Caching.release()/clearCache() after every pass leaves the memos
+    // intact (checkpoint blocks are persisted RDDs, not catalog cache
     // entries), so cross-QUERY sharing is exactly what a user session sees.
     // Snapshots are taken in catalog order during the warm-up sweep, which
     // runs in the same order as each timed sweep — a query's snapshot
     // therefore reflects what the queries before it contributed, same as
     // the pre-interleaving sequential bench.
-    val memoSnaps = scala.collection.mutable.Map.empty[String, (AnyRef, AnyRef, AnyRef)]
+    val memoSnaps = scala.collection.mutable.Map.empty[String, SessionMemo.Snapshot]
     val failed = scala.collection.mutable.Set.empty[String]
     val times = scala.collection.mutable.Map.empty[String, List[Double]].withDefaultValue(Nil)
     val gcDeltas = scala.collection.mutable.Map.empty[String, List[Long]].withDefaultValue(Nil)
@@ -355,9 +356,12 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
     }
-    val lsaSnaps = () => memoSnaps.values.map(_._1)
-    val pcaSnaps = () => memoSnaps.values.map(_._2)
-    val dupSnaps = () => memoSnaps.values.map(_._3)
+    // Every query's snapshot stays live across the whole interleaved run,
+    // so a restore releases only entries no snapshot references: releasing
+    // blocks another snapshot still holds fails its later restore
+    // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, round 9), while never releasing
+    // pressured the storage layer into multi-× per-run variance.
+    def restoreMemos(q: QueryDef): Unit = SessionMemo.restore(memoSnaps(q.name), memoSnaps.values)
 
     def medianOf(name: String): Double = {
       val ts = times(name).sorted
@@ -458,27 +462,15 @@ object Bench {
     // Priming inside the slot (rather than letting pins accumulate across
     // the sweep) keeps the round-2 lesson intact: at most ONE query's pins
     // are live at any moment.
-    // restoreMemoPruned (not restoreMemo): with every query's snapshot live
-    // across the whole interleaved run, a releasing restore would unpersist
-    // checkpoint blocks other snapshots still reference
-    // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, round 9), while letting evicted
-    // components accumulate pressured the storage layer into multi-× per-run
-    // variance — pruned restore releases only components no snapshot can
-    // resurrect. The memo is restored again between prime and timed pass so
-    // the timed pass measures the query's marginal factorization work, not a
-    // free hit on its own prime.
+    // The memos are restored before the prime and again between prime and
+    // timed pass, so the timed pass measures the query's marginal
+    // factorization work, not a free hit on its own prime.
     def slot(q: QueryDef): Unit = guarded(q) {
-      val (lsaSnap, pcaSnap, dupSnap) = memoSnaps(q.name)
-      def restoreAll(): Unit = {
-        ml.Lsa.restoreMemoPruned(lsaSnap, lsaSnaps())
-        ml.Pca.restoreMemoPruned(pcaSnap, pcaSnaps())
-        operators.DupClusters.restoreMemoPruned(dupSnap, dupSnaps())
-      }
-      restoreAll()
+      restoreMemos(q)
       val skipPrime = primeSkipEnabled && pinsAfterWarm.get(q.name).contains(0)
       if (!skipPrime) {
         runOnce(q) // prime: pins + page cache for THIS slot only
-        restoreAll()
+        restoreMemos(q)
       }
       val gc0 = gcMillis()
       val t = runOnce(q)
@@ -534,7 +526,7 @@ object Bench {
     catch { case e: Throwable => System.err.println(s"[bench] init pass: ${e.getMessage}") }
     canaryPass("start")
     queries.foreach { q =>
-      memoSnaps(q.name) = (ml.Lsa.memoSnapshot(), ml.Pca.memoSnapshot(), operators.DupClusters.memoSnapshot())
+      memoSnaps(q.name) = SessionMemo.snapshot()
       val p = prior.get(q.name)
       if (!memoTouching(q.name) && p.exists(_ < skipWarmSec)) {
         warmSkipped += q.name
@@ -547,18 +539,14 @@ object Bench {
         // the smoke test). For would-be-late rows only, measure once more —
         // JIT now paid — and classify on the cheaper pass. The retry FIRST
         // restores the row's own memo snapshot: the first pass may have
-        // built a session memo entry (DupClusters for q70) that the row's
+        // built a session memo entry (the dup clusters for q70) that the row's
         // timed passes will never see — an unrestored retry reads a memo
         // hit (0.08 s vs the honest 3 s), records a warm-up no timed pass
         // can match, and trips the self-heal sweep on a healthy row. The
-        // restore is PRUNED (ADVICE r12): a shared restore would strand the
-        // first pass's own checkpoint blocks — no snapshot references them,
-        // so only pruning releases them deterministically.
+        // restore releases the first pass's own checkpoint blocks (ADVICE
+        // r12): no snapshot references them.
         warmSecs(q.name) = if (w <= lateThresholdSec) w else {
-          val (lsaSnap, pcaSnap, dupSnap) = memoSnaps(q.name)
-          ml.Lsa.restoreMemoPruned(lsaSnap, lsaSnaps())
-          ml.Pca.restoreMemoPruned(pcaSnap, pcaSnaps())
-          operators.DupClusters.restoreMemoPruned(dupSnap, dupSnaps())
+          restoreMemos(q)
           math.min(w, runOnce(q))
         }
       }
@@ -617,7 +605,7 @@ object Bench {
         s"[bench] final sweep (${lateQs.size} rows): ${lateQs.map(_.name).mkString(", ")}")
       Caching.release()
       spark.catalog.clearCache()
-      ml.Lsa.clearMemo(); ml.Pca.clearMemo(); operators.DupClusters.clearMemo()
+      SessionMemo.clear()
       memoSnaps.clear()
       spark = spark.newSession()
       canaryPass("late_open")
@@ -636,7 +624,7 @@ object Bench {
       val lateWarmQs = queries.filter(q => lateChainNames(q.name) ||
         costLateNames(q.name) || lateRerunNames(q.name))
       lateWarmQs.foreach { q => // fresh-session warm-up, memo snapshots retaken
-        memoSnaps(q.name) = (ml.Lsa.memoSnapshot(), ml.Pca.memoSnapshot(), operators.DupClusters.memoSnapshot())
+        memoSnaps(q.name) = SessionMemo.snapshot()
         guarded(q) {
           freshWarm(q.name) = runOnce(q)
           pinsAfterWarm(q.name) = Caching.pinnedCount
@@ -687,7 +675,7 @@ object Bench {
         healQs.map(q => f"${q.name} median=${committed(q.name)}%.2f warm=${honestWarm(q.name)}%.2f").mkString(", "))
       Caching.release()
       spark.catalog.clearCache()
-      ml.Lsa.clearMemo(); ml.Pca.clearMemo(); operators.DupClusters.clearMemo()
+      SessionMemo.clear()
       memoSnaps.clear()
       spark = spark.newSession()
       canaryPass("heal_open")
@@ -700,7 +688,7 @@ object Bench {
         warmChains.filter(c => healQs.exists(q => c(q.name))).flatten.toSet
       val healWarmQs = queries.filter(q => healNames(q.name) || healChainNames(q.name))
       healWarmQs.foreach { q =>
-        memoSnaps(q.name) = (ml.Lsa.memoSnapshot(), ml.Pca.memoSnapshot(), operators.DupClusters.memoSnapshot())
+        memoSnaps(q.name) = SessionMemo.snapshot()
         guarded(q) { healWarm(q.name) = runOnce(q) }
       }
       healQs.foreach(q => preHealMedian(q.name) = committed.getOrElse(q.name, -1.0))

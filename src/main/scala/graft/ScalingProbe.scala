@@ -671,9 +671,7 @@ object ScalingProbe {
       // the unpersist-all below would clear memoized components' checkpoint
       // blocks and poison surviving memo entries — and a memo hit would
       // make a repeated base measurement near-free, corrupting the ratio
-      ml.Lsa.clearMemo()
-      ml.Pca.clearMemo()
-      operators.DupClusters.clearMemo()
+      SessionMemo.clear()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       System.gc()

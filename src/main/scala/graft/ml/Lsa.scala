@@ -2,7 +2,7 @@ package graft.ml
 
 import graft.Par.ParOps
 import graft.functions.Exprs._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -44,103 +44,11 @@ import org.apache.spark.storage.StorageLevel
   * q103 (component 1), q105 (component 2) and q109 (components 1–3) share
   * one underlying factorization, so running all three in a session costs
   * three phase loops, not six. Entries are vocab-sized checkpointed frames
-  * (bounded: one vector per extracted component); [[clearMemo]] drops them.
+  * (bounded: one vector per extracted component) in a [[graft.SessionMemo]].
   */
 object Lsa {
 
-  /** Extracted component: the unit iterate v and (once a later phase needs
-    * it for deflation) its Rayleigh eigenvalue λ = ‖Av‖² as a 1-row frame.
-    * `lam` is computed lazily so the LAST requested component never pays
-    * the extra A-pass. [[release]] unpersists the checkpointed frames when
-    * the memo evicts the component (ADVICE r7: eviction must free the
-    * blocks, not strand them). */
-  private final class Comp(val v: DataFrame, lamPlan: () => DataFrame) {
-    private var lamCached: DataFrame = _
-    def lam: DataFrame = synchronized {
-      if (lamCached == null) lamCached = lamPlan().compacted.localCheckpoint(eager = true)
-      lamCached
-    }
-    def release(): Unit = synchronized {
-      Checkpoints.unpersist(v)
-      if (lamCached != null) Checkpoints.unpersist(lamCached)
-    }
-  }
-
-  private final case class Key(
-      session: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      iterations: Int)
-
-  private val memo = new java.util.concurrent.ConcurrentHashMap[Key, Vector[Comp]]()
-
-  /** Drop all memoized components (tests / long-lived sessions / probe
-    * harnesses that unpersist all RDDs — a cleared checkpoint block would
-    * otherwise poison a surviving memo entry), unpersisting their
-    * checkpointed frames. */
-  def clearMemo(): Unit = {
-    memo.values.forEach(_.foreach(_.release()))
-    memo.clear()
-  }
-
-  /** Release every Comp in the current memo that does not survive (by
-    * identity) into `surviving` — a Vector extension shares its prefix
-    * Comps with the snapshot, so membership MUST be by reference, never
-    * by key. */
-  private def releaseEvicted(surviving: java.util.Collection[Vector[Comp]]): Unit = {
-    val keep = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Comp, java.lang.Boolean]())
-    surviving.forEach(_.foreach(keep.add))
-    memo.values.forEach(_.foreach(c => if (!keep.contains(c)) c.release()))
-  }
-
-  /** Opaque snapshot of the memo for measurement harnesses: [[Bench]]
-    * restores the snapshot taken BEFORE a query's warm-up ahead of each
-    * timed pass, so the pass measures the query's MARGINAL work given the
-    * components extracted by EARLIER queries in the session — never a free
-    * memo hit from its own warm-up. */
-  def memoSnapshot(): AnyRef = new java.util.HashMap[Key, Vector[Comp]](memo)
-
-  /** Restore a [[memoSnapshot]] (see there). Components the restore evicts
-    * — extracted after the snapshot was taken — get their checkpoint blocks
-    * unpersisted, so a bench of many restore cycles never accumulates
-    * orphaned blocks (ADVICE r7). */
-  def restoreMemo(snap: AnyRef): Unit = {
-    val restored = snap.asInstanceOf[java.util.HashMap[Key, Vector[Comp]]]
-    releaseEvicted(restored.values)
-    memo.clear()
-    memo.putAll(restored)
-  }
-
-  /** [[restoreMemo]] WITHOUT releasing evicted components' checkpoint
-    * blocks — for harnesses holding MANY interleaved snapshots at once
-    * (the round-robin [[graft.Bench]]): snapshot A may reference
-    * components that snapshot B's restore would evict, so a releasing
-    * restore poisons every other snapshot's blocks (the round-9
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND failure on q105/q109/q119).
-    * Evicted components stay persisted until session end — bounded by
-    * snapshots × passes, the bench's documented trade. */
-  def restoreMemoShared(snap: AnyRef): Unit = {
-    val restored = snap.asInstanceOf[java.util.HashMap[Key, Vector[Comp]]]
-    memo.clear()
-    memo.putAll(restored)
-  }
-
-  /** [[restoreMemoShared]] plus garbage collection: before restoring,
-    * release every component in the CURRENT memo that appears in NEITHER
-    * the restored snapshot NOR any snapshot in `allSnaps` — i.e. the
-    * components prime/timed runs extracted after the warm-up sweep, which
-    * no snapshot will ever resurrect. Keeps the interleaved-safety
-    * property (nothing any snapshot references is touched) WITHOUT the
-    * unbounded snapshots × passes block accumulation that pressured the
-    * storage layer over a 124-row interleaved run. */
-  def restoreMemoPruned(snap: AnyRef, allSnaps: Iterable[AnyRef]): Unit = {
-    val keep = new java.util.ArrayList[Vector[Comp]]()
-    allSnaps.foreach { s =>
-      keep.addAll(s.asInstanceOf[java.util.HashMap[Key, Vector[Comp]]].values())
-    }
-    releaseEvicted(keep)
-    restoreMemoShared(snap)
-  }
+  private val memo = graft.SessionMemo[Vector[Component]](_.flatMap(_.frames))
 
   /** cells: (doc_id, term, w), w ≥ 0. Returns (term, weight): the
     * unit-norm top right-singular vector, rounded to 8 dp. */
@@ -187,11 +95,10 @@ object Lsa {
     * (session, cells-plan, iterations). Runs inside the memo's per-key
     * lock, so concurrent queries needing the same factorization block and
     * share instead of duplicating the Spark jobs. */
-  private def comps(cells: DataFrame, k: Int, iterations: Int): Vector[Comp] = {
+  private def comps(cells: DataFrame, k: Int, iterations: Int): Vector[Component] = {
     val sel = cells.select(col("doc_id"), col("term"), col("w"))
-    val key = Key(cells.sparkSession, sel.queryExecution.analyzed.canonicalized, iterations)
-    memo.compute(key, (_, existing) => {
-      var acc = if (existing == null) Vector.empty[Comp] else existing
+    memo.compute(sel, iterations) { existing =>
+      var acc = existing.getOrElse(Vector.empty[Component])
       if (acc.size >= k) acc
       else {
         // ONE compacted cache of the cell table, joined per round by term
@@ -209,7 +116,7 @@ object Lsa {
         val c = sel.compacted.persist(StorageLevel.MEMORY_AND_DISK)
         while (acc.size < k) {
           val v = iterate(c, iterations, acc)
-          acc :+= new Comp(v, () =>
+          acc :+= new Component(v, () =>
             c.join(v, "term")
               .groupBy(col("doc_id"))
               .agg(round(dsum(round(col("w") * col("v"), 12), 12), 12).as("u"))
@@ -218,7 +125,7 @@ object Lsa {
         c.unpersist(blocking = false)
         acc
       }
-    }).take(k)
+    }.take(k)
   }
 
   /** The shared power-iteration loop at full 12-dp precision: starts from
@@ -226,16 +133,8 @@ object Lsa {
     * where defl subtracts Σⱼ λⱼ(vⱼ·v)vⱼ over all previously extracted
     * components with the rounding ladder the oracles unroll. Returns
     * (term, v). */
-  private def iterate(c: DataFrame, iterations: Int, prev: Vector[Comp]): DataFrame = {
-    // all previous components as ONE long frame + one k-row eigenvalue
-    // frame: per-round deflation cost is independent of the component count
-    val defl = if (prev.isEmpty) None else Some((
-      prev.zipWithIndex
-        .map { case (p, j) => p.v.select(lit(j).as("comp"), col("term"), col("v").as("pv")) }
-        .reduce(_.union(_)).compacted.localCheckpoint(eager = true),
-      prev.zipWithIndex
-        .map { case (p, j) => p.lam.select(lit(j).as("comp"), col("lam")) }
-        .reduce(_.union(_)).compacted.localCheckpoint(eager = true)))
+  private def iterate(c: DataFrame, iterations: Int, prev: Vector[Component]): DataFrame = {
+    val defl = Component.deflation(prev, "term")
     var v = c.select(col("term")).distinct()
       .withColumn("v", lit(1.0d)).compacted.localCheckpoint(eager = true)
     for (_ <- 1 to iterations) {
@@ -250,16 +149,8 @@ object Lsa {
       // joins from scratch — every round paid its heavy work twice
       val vv = graft.OpsExplain.dump(s"Lsa.iterate round body (comp ${prev.size + 1})", defl match {
         case None => raw
-        case Some((pvs, lams)) =>
-          val dots = pvs.join(v.select(col("term"), col("v").as("s")), "term")
-            .groupBy(col("comp"))
-            .agg(round(dsum(round(col("pv") * col("s"), 12), 12), 12).as("dot"))
-          val coefs = dots.join(lams, "comp")
-            .select(col("comp"), round(col("lam") * col("dot"), 12).as("coef"))
-          val d = pvs.join(broadcast(coefs), "comp")
-            .groupBy(col("term"))
-            .agg(round(dsum(round(col("coef") * col("pv"), 12), 12), 12).as("d"))
-          raw.join(d, "term")
+        case Some(deflate) =>
+          raw.join(deflate(v), "term")
             .select(col("term"), round(col("vv") - col("d"), 12).as("vv"))
       }).compacted.localCheckpoint(eager = true)
       // the norm is ONE double — bounded driver state (the adjudicated

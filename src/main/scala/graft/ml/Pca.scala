@@ -2,7 +2,7 @@ package graft.ml
 
 import graft.Par.ParOps
 import graft.functions.Exprs._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.storage.StorageLevel
@@ -35,126 +35,28 @@ import org.apache.spark.storage.StorageLevel
   * and cheap.
   *
   * The covariance table and extracted components are memoized per session
-  * and input plan (the [[Lsa]] memo pattern): q116 (top component), q117
-  * (projections) and q123 (top-k) share ONE covariance pass and one
-  * component-1 loop per session. [[memoSnapshot]]/[[restoreMemo]] give
-  * measurement harnesses the same bench-honest semantics as Lsa's, and
-  * eviction unpersists the checkpointed frames it drops.
+  * and input plan in [[graft.SessionMemo]]s, as [[Lsa]]'s components are:
+  * q116 (top component), q117 (projections) and q123 (top-k) share ONE
+  * covariance pass and one component-1 loop per session.
   */
 object Pca {
 
-  /** Extracted component: the unit iterate v (pos, v) and — lazily, only
-    * once deflation for a LATER component needs it — the eigenvalue
-    * λ = vᵀCv as a 1-row frame. */
-  private final class Comp(val v: DataFrame, lamPlan: () => DataFrame) {
-    private var lamCached: DataFrame = _
-    def lam: DataFrame = synchronized {
-      if (lamCached == null) lamCached = lamPlan().compacted.localCheckpoint(eager = true)
-      lamCached
-    }
-    def release(): Unit = synchronized {
-      Checkpoints.unpersist(v)
-      if (lamCached != null) Checkpoints.unpersist(lamCached)
-    }
-  }
-
   /** Checkpointed covariance artifacts, shared by every PCA surface over
     * the same input plan. */
-  private final class Cov(val cells: DataFrame, val mu: DataFrame) {
-    def release(): Unit = { Checkpoints.unpersist(cells); Checkpoints.unpersist(mu) }
-  }
+  private final case class Cov(cells: DataFrame, mu: DataFrame)
 
-  private final case class CovKey(
-      session: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-
-  private final case class CompKey(
-      session: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      iterations: Int)
-
-  private val covMemo = new java.util.concurrent.ConcurrentHashMap[CovKey, Cov]()
-  private val compMemo = new java.util.concurrent.ConcurrentHashMap[CompKey, Vector[Comp]]()
-
-  /** Drop all memoized state, unpersisting the checkpointed frames. */
-  def clearMemo(): Unit = {
-    compMemo.values.forEach(_.foreach(_.release()))
-    compMemo.clear()
-    covMemo.values.forEach(_.release())
-    covMemo.clear()
-  }
-
-  /** Opaque snapshot for measurement harnesses — same contract as
-    * [[Lsa.memoSnapshot]]: restore before each timed pass so a query
-    * measures its marginal work given EARLIER queries' extractions, never
-    * a free hit from its own warm-up. */
-  def memoSnapshot(): AnyRef = Array[AnyRef](
-    new java.util.HashMap[CovKey, Cov](covMemo),
-    new java.util.HashMap[CompKey, Vector[Comp]](compMemo))
-
-  /** Restore a [[memoSnapshot]], unpersisting whatever the restore evicts.
-    * Survivor membership is by REFERENCE: a Vector extension shares its
-    * prefix Comps with the snapshot, so those must not be released. */
-  def restoreMemo(snap: AnyRef): Unit = {
-    val Array(cv, cm) = snap.asInstanceOf[Array[AnyRef]]
-    val rCov = cv.asInstanceOf[java.util.HashMap[CovKey, Cov]]
-    val rComp = cm.asInstanceOf[java.util.HashMap[CompKey, Vector[Comp]]]
-    val keepComp = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Comp, java.lang.Boolean]())
-    rComp.values.forEach(_.foreach(keepComp.add))
-    compMemo.values.forEach(_.foreach(c => if (!keepComp.contains(c)) c.release()))
-    val keepCov = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Cov, java.lang.Boolean]())
-    rCov.values.forEach(keepCov.add(_))
-    covMemo.values.forEach(c => if (!keepCov.contains(c)) c.release())
-    compMemo.clear(); compMemo.putAll(rComp)
-    covMemo.clear(); covMemo.putAll(rCov)
-  }
-
-  /** [[restoreMemo]] WITHOUT releasing evicted entries — see
-    * [[Lsa.restoreMemoShared]]: required when many snapshots are live at
-    * once (the interleaved Bench), where a releasing restore unpersists
-    * blocks other snapshots still reference. */
-  def restoreMemoShared(snap: AnyRef): Unit = {
-    val Array(cv, cm) = snap.asInstanceOf[Array[AnyRef]]
-    compMemo.clear()
-    compMemo.putAll(cm.asInstanceOf[java.util.HashMap[CompKey, Vector[Comp]]])
-    covMemo.clear()
-    covMemo.putAll(cv.asInstanceOf[java.util.HashMap[CovKey, Cov]])
-  }
-
-  /** [[restoreMemoShared]] plus garbage collection (the Lsa twin): before
-    * restoring, release every Comp/Cov in the CURRENT memos referenced by
-    * NO snapshot in `allSnaps` — post-warm-up extractions no snapshot can
-    * resurrect. Identity membership, never key equality (Vector
-    * extensions share prefix Comps with their snapshots). */
-  def restoreMemoPruned(snap: AnyRef, allSnaps: Iterable[AnyRef]): Unit = {
-    val keepComp = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Comp, java.lang.Boolean]())
-    val keepCov = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Cov, java.lang.Boolean]())
-    allSnaps.foreach { s =>
-      val Array(cv, cm) = s.asInstanceOf[Array[AnyRef]]
-      cm.asInstanceOf[java.util.HashMap[CompKey, Vector[Comp]]]
-        .values.forEach(_.foreach(keepComp.add))
-      cv.asInstanceOf[java.util.HashMap[CovKey, Cov]].values.forEach(keepCov.add(_))
-    }
-    compMemo.values.forEach(_.foreach(c => if (!keepComp.contains(c)) c.release()))
-    covMemo.values.forEach(c => if (!keepCov.contains(c)) c.release())
-    restoreMemoShared(snap)
-  }
+  private val covMemo = graft.SessionMemo[Cov](c => Seq(c.cells, c.mu))
+  private val compMemo = graft.SessionMemo[Vector[Component]](_.flatMap(_.frames))
 
   private def normalized(emb: DataFrame): DataFrame =
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
 
-  /** emb: (vec_id, embedding: array&lt;float|double&gt;). Returns the
-    * d²-cell covariance table (i, j, c), 1-based positions, plus the
-    * per-position means as (pos, mu) — both checkpointed, memoized per
-    * (session, input plan). */
-  private def cov(emb: DataFrame): Cov = {
-    val sel = normalized(emb)
-    val key = CovKey(emb.sparkSession, sel.queryExecution.analyzed.canonicalized)
-    covMemo.computeIfAbsent(key, _ => {
+  /** sel: (vec_id, v: array&lt;double&gt;), the [[normalized]] input.
+    * Returns the d²-cell covariance table (i, j, c), 1-based positions,
+    * plus the per-position means as (pos, mu) — both checkpointed,
+    * memoized per (session, input plan). */
+  private def cov(sel: DataFrame): Cov =
+    covMemo.computeIfAbsent(sel) {
       // repartition BEFORE the d²-per-row expansion: the product generation
       // must parallelize by available cores, not by the input's file count —
       // a single-file local read would otherwise run the whole covariance on
@@ -200,23 +102,21 @@ object Pca {
         .select(col("i"), col("j"), round(col("s") / col("n"), 12).as("c")))
         .compacted.localCheckpoint(eager = true)
       e.unpersist(blocking = false)
-      new Cov(cells, mu)
-    })
-  }
+      Cov(cells, mu)
+    }
 
   /** Extract components 1..k for this (session, input plan, iterations),
     * reusing any already memoized — the [[Lsa.comps]] contract: concurrent
     * queries needing the same factorization block on the per-key lock and
     * share instead of duplicating the jobs. */
-  private def comps(emb: DataFrame, k: Int, iterations: Int): (Cov, Vector[Comp]) = {
-    val c = cov(emb)
-    val key = CompKey(emb.sparkSession,
-      normalized(emb).queryExecution.analyzed.canonicalized, iterations)
-    val v = compMemo.compute(key, (_, existing) => {
-      var acc = if (existing == null) Vector.empty[Comp] else existing
+  private def comps(emb: DataFrame, k: Int, iterations: Int): (Cov, Vector[Component]) = {
+    val sel = normalized(emb)
+    val c = cov(sel)
+    val v = compMemo.compute(sel, iterations) { existing =>
+      var acc = existing.getOrElse(Vector.empty[Component])
       while (acc.size < k) {
         val vec = iterate(c.cells, iterations, acc)
-        acc :+= new Comp(vec, () =>
+        acc :+= new Component(vec, () =>
           c.cells.join(vec.select(col("pos").as("j"), col("v")), "j")
             .groupBy(col("i"))
             .agg(round(dsum(round(col("c") * col("v"), 12), 12), 12).as("u"))
@@ -224,7 +124,7 @@ object Pca {
             .agg(round(dsum(round(col("u") * col("v"), 12), 12), 12).as("lam")))
       }
       acc
-    })
+    }
     (c, v.take(k))
   }
 
@@ -273,16 +173,8 @@ object Pca {
     * over the long-format previous-component frame (absent for component
     * 1), and a 1-row norm broadcast — every frame here is d-, k·d- or
     * d²-sized. Returns (pos, v) at full 12-dp precision. */
-  private def iterate(cells: DataFrame, iterations: Int, prev: Vector[Comp]): DataFrame = {
-    // all previous components as ONE long frame + one k-row eigenvalue
-    // frame: per-round deflation cost is independent of the component count
-    val defl = if (prev.isEmpty) None else Some((
-      prev.zipWithIndex
-        .map { case (p, j) => p.v.select(lit(j).as("comp"), col("pos"), col("v").as("pv")) }
-        .reduce(_.union(_)).compacted.localCheckpoint(eager = true),
-      prev.zipWithIndex
-        .map { case (p, j) => p.lam.select(lit(j).as("comp"), col("lam")) }
-        .reduce(_.union(_)).compacted.localCheckpoint(eager = true)))
+  private def iterate(cells: DataFrame, iterations: Int, prev: Vector[Component]): DataFrame = {
+    val defl = Component.deflation(prev, "pos")
     var v = cells.select(col("i").as("pos")).distinct()
       .withColumn("v", lit(1.0d)).compacted.localCheckpoint(eager = true)
     for (_ <- 1 to iterations) {
@@ -291,15 +183,8 @@ object Pca {
         .agg(round(dsum(round(col("c") * col("v"), 12), 12), 12).as("u"))
       val u = (defl match {
         case None => raw
-        case Some((pvs, lams)) =>
-          val dots = pvs.join(v.select(col("pos"), col("v").as("s")), "pos")
-            .groupBy(col("comp"))
-            .agg(round(dsum(round(col("pv") * col("s"), 12), 12), 12).as("dot"))
-          val coefs = dots.join(lams, "comp")
-            .select(col("comp"), round(col("lam") * col("dot"), 12).as("coef"))
-          val d = pvs.join(broadcast(coefs), "comp")
-            .groupBy(col("pos"))
-            .agg(round(dsum(round(col("coef") * col("pv"), 12), 12), 12).as("d"))
+        case Some(deflate) =>
+          val d = deflate(v)
           raw.join(d, raw("i") === d("pos"))
             .select(col("i"), round(col("u") - col("d"), 12).as("u"))
       }).compacted.localCheckpoint(eager = true)

@@ -1,11 +1,11 @@
 package graft.operators
 
 import graft.graph.Graphs
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Session-scoped memo for the duplicate-cluster assignment — the
-  * [[graft.ml.Lsa]]/[[graft.ml.Pca]] memo discipline applied to the dedup
+  * [[graft.ml.Lsa]]/[[graft.ml.Pca]] component sharing applied to the dedup
   * family: SIX catalog deployments (q70 clusters, q72 purge, q191 soft
   * weights, q220 keep-best, q226 cluster-safe split, q232 size histogram)
   * all read the SAME connected-component labeling of the q33 capped-Jaccard
@@ -16,28 +16,16 @@ import org.apache.spark.sql.functions._
   * posture (clusters are computed once per corpus snapshot, then purge /
   * weights / split / histogram all deploy off them).
   *
-  * Memo contract (mirrors Lsa exactly — Bench restores snapshots around
-  * every timed pass so each row still measures its marginal work given
-  * components earlier SESSION queries built, never a free hit on its own
-  * prime; ScalingProbe clears the memo between measurements so probe
-  * ratios stay cold-for-cold):
-  *   - entries keyed by (session, canonicalized docs plan)
-  *   - eviction deterministically unpersists the checkpoint blocks
-  *   - snapshot/restore is identity-based (a restore must never release
-  *     blocks another live snapshot still references — the round-9
-  *     CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND lesson).
+  * The memo is a [[graft.SessionMemo]] keyed by (session, canonicalized
+  * docs plan), like the LSA/PCA ones: Bench restores snapshots around every
+  * timed pass so each row still measures its marginal work given what
+  * earlier SESSION queries built, never a free hit on its own prime;
+  * ScalingProbe clears it between measurements so probe ratios stay
+  * cold-for-cold.
   */
 object DupClusters {
 
-  private final class Entry(val df: DataFrame) {
-    def release(): Unit = graft.ml.Checkpoints.unpersist(df)
-  }
-
-  private final case class Key(
-      session: SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-
-  private val memo = new java.util.concurrent.ConcurrentHashMap[Key, Entry]()
+  private val memo = graft.SessionMemo[DataFrame](Seq(_))
 
   /** docs: (doc_id, lang, text, …). Returns (doc_id, cluster_id): every doc
     * labeled with the min doc_id of its q33-pair connected component
@@ -47,60 +35,18 @@ object DupClusters {
     * the first caller. */
   def assignment(docs: DataFrame): DataFrame = {
     val sel = docs.select(col("doc_id"), col("lang"), col("text"))
-    val key = Key(docs.sparkSession, sel.queryExecution.analyzed.canonicalized)
-    memo.computeIfAbsent(key, _ => {
+    memo.computeIfAbsent(sel) {
       import graft.Par.ParOps
       val pairs = Dedup.ngramJaccardPairs(sel, n = 3, threshold = 0.05,
           maxShingleDf = Some(64))
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val comp = Graphs.connectedComponents(pairs)
         .withColumnRenamed("v", "doc_id")
-      new Entry(sel.select(col("doc_id"))
+      sel.select(col("doc_id"))
         .join(comp, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("label"), col("doc_id")).as("cluster_id"))
-        .compacted.localCheckpoint(eager = true))
-    }).df
-  }
-
-  /** Drop all memoized assignments, unpersisting their checkpoint blocks
-    * (tests / probe harnesses that unpersist all RDDs — a cleared
-    * checkpoint block would otherwise poison a surviving memo entry). */
-  def clearMemo(): Unit = {
-    memo.values.forEach(_.release())
-    memo.clear()
-  }
-
-  /** Release every Entry in the current memo that does not survive (by
-    * IDENTITY) into `surviving` — snapshots share Entry references, so
-    * membership must be by reference, never by key. */
-  private def releaseEvicted(surviving: java.util.Collection[Entry]): Unit = {
-    val keep = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[Entry, java.lang.Boolean]())
-    surviving.forEach(e => keep.add(e))
-    memo.values.forEach(e => if (!keep.contains(e)) e.release())
-  }
-
-  /** Opaque snapshot for measurement harnesses (see [[graft.ml.Lsa]]). */
-  def memoSnapshot(): AnyRef = new java.util.HashMap[Key, Entry](memo)
-
-  /** Restore a snapshot WITHOUT releasing evicted entries' blocks — for
-    * harnesses holding many interleaved snapshots at once. */
-  def restoreMemoShared(snap: AnyRef): Unit = {
-    val restored = snap.asInstanceOf[java.util.HashMap[Key, Entry]]
-    memo.clear()
-    memo.putAll(restored)
-  }
-
-  /** [[restoreMemoShared]] plus garbage collection: release every entry in
-    * the CURRENT memo that appears in neither the restored snapshot nor any
-    * snapshot in `allSnaps` — entries no snapshot can resurrect. */
-  def restoreMemoPruned(snap: AnyRef, allSnaps: Iterable[AnyRef]): Unit = {
-    val keep = new java.util.ArrayList[Entry]()
-    allSnaps.foreach { s =>
-      keep.addAll(s.asInstanceOf[java.util.HashMap[Key, Entry]].values())
+        .compacted.localCheckpoint(eager = true)
     }
-    releaseEvicted(keep)
-    restoreMemoShared(snap)
   }
 }

@@ -301,7 +301,7 @@ object Curation {
 
   /** q123: the eigenvalue λ_c = v_cᵀ C v_c of finished component `f$c` —
     * u = C v by the j-keyed join, then the u·v fold, both on the ladder
-    * (mirrors `Pca.Comp.lam`). */
+    * (mirrors the `Component.lam` plan in `Pca.comps`). */
   private def pcaLamCtes(c: Int): String =
     s"""lu$c AS (
           SELECT c.i AS pos, round(CAST(SUM(CAST(round(c.c * f.v, 12) AS DECIMAL(30,12))) AS DOUBLE), 12) AS u
@@ -1020,8 +1020,8 @@ object Curation {
     // component 2 power-iterates on C − λ₁v₁v₁ᵀ with λ₁ = v₁ᵀCv₁, all
     // previous components flowing through one long-format frame so a
     // round's deflation cost is independent of k. The covariance pass and
-    // component 1 are memo-shared with q116/q117 in-session (the Lsa memo
-    // pattern, bench-honest via snapshot/restore). The oracle unrolls BOTH
+    // component 1 are memo-shared with q116/q117 in-session (a SessionMemo,
+    // bench-honest via snapshot/restore). The oracle unrolls BOTH
     // eigensolvers — covariance, component 1's four rounds, λ₁, and the
     // four deflated rounds — as CTEs on the standing 12-dp ladder.
     QueryDef("q123_pca_topk",
@@ -6766,11 +6766,10 @@ object Curation {
 
   /** Shared by q70/q72/q191/q220/q226/q232: every doc labeled with the min
     * doc_id of its q33-pair connected component; singleton docs label
-    * themselves. Delegates to the session-scoped
-    * [[graft.operators.DupClusters]] memo — the six deployments in one
-    * session pay the CC chain once (the Lsa/Pca memo discipline; Bench's
-    * snapshot/restore keeps each row's timed pass measuring its marginal
-    * work). */
+    * themselves. Delegates to [[graft.operators.DupClusters]], whose
+    * [[graft.SessionMemo]] makes the six deployments in one session pay the
+    * CC chain once (Bench's SessionMemo snapshot/restore keeps each row's
+    * timed pass measuring its marginal work). */
   private def dupClusterAssignment(s: org.apache.spark.sql.SparkSession,
                                    dir: String): org.apache.spark.sql.DataFrame =
     graft.operators.DupClusters.assignment(docs(s, dir))

@@ -288,9 +288,9 @@ object Text {
     // components through one long-format frame (per round: one dots
     // aggregate grouped by component, a k−1-row coefficient broadcast, one
     // apply join grouped by term), so per-round cost is independent of k.
-    // Components are memoized per (session, cells-plan, iterations):
-    // running q103+q105+q109 in one session costs three phase loops, not
-    // six. The oracle unrolls all THREE phases — 12 power-iteration rounds
+    // Components are memoized per (session, cells-plan, iterations) in a
+    // SessionMemo: running q103+q105+q109 in one session costs three phase
+    // loops, not six. The oracle unrolls all THREE phases — 12 power-iteration rounds
     // plus two eigenvalue estimates — as CTEs.
     QueryDef("q109_lsa_topk",
       (s, dir) => {

@@ -89,7 +89,7 @@ class LsaParitySpec extends SparkSpec {
   private def bits(x: Double): Long = java.lang.Double.doubleToLongBits(x)
 
   test("round-15 LSA loop is bit-equal to the pre-round-15 loop, 3 components deep") {
-    graft.ml.Lsa.clearMemo()
+    SessionMemo.clear()
     val cells = corpus(nDocs = 120, nTerms = 37, seed = 11)
       .localCheckpoint(eager = true)
     val oldRows = oldTopK(cells, k = 3, iterations = 4)
@@ -103,7 +103,7 @@ class LsaParitySpec extends SparkSpec {
         s"$k0: old=${java.lang.Double.longBitsToDouble(b)} " +
           s"new=${java.lang.Double.longBitsToDouble(newRows(k0))}")
     }
-    graft.ml.Lsa.clearMemo()
+    SessionMemo.clear()
   }
 
   test("round-15 loop schedules strictly fewer Spark jobs than the pre-round-15 loop") {
@@ -111,20 +111,20 @@ class LsaParitySpec extends SparkSpec {
     // power-iteration round plus the per-round broadcast-norm build; job
     // counts are deterministic where wall-clock medians are band-noisy
     def countJobs(body: => Unit): Int = PlanProbes.countJobs(spark)(body)
-    graft.ml.Lsa.clearMemo()
+    SessionMemo.clear()
     val cells = corpus(nDocs = 120, nTerms = 37, seed = 23)
       .localCheckpoint(eager = true)
     val oldJobs = countJobs { oldComps(cells, k = 3, iterations = 4).foreach(_.collect()) }
     val newJobs = countJobs {
       graft.ml.Lsa.topK(cells, k = 3, iterations = 4).collect(); ()
     }
-    graft.ml.Lsa.clearMemo()
+    SessionMemo.clear()
     info(s"scheduled jobs: old loop $oldJobs, round-15 loop $newJobs")
     assert(newJobs < oldJobs, s"expected fewer jobs, got old=$oldJobs new=$newJobs")
   }
 
   test("docScores over the memoized component matches the manual A·v pass bit for bit") {
-    graft.ml.Lsa.clearMemo()
+    SessionMemo.clear()
     val cells = corpus(nDocs = 80, nTerms = 23, seed = 7)
       .localCheckpoint(eager = true)
     val got = graft.ml.Lsa.docScores(cells, iterations = 4)
@@ -133,7 +133,7 @@ class LsaParitySpec extends SparkSpec {
     // component 1 (docScores contracts with the unrounded memoized v)
     val vDf = oldComps(cells, k = 1, iterations = 4).head
       .localCheckpoint(eager = true)
-    graft.ml.Lsa.clearMemo()
+    SessionMemo.clear()
     val want = cells.join(vDf, "term")
       .groupBy(col("doc_id"))
       .agg(round(round(dsum(round(col("w") * col("v"), 12), 12), 12), 8).as("score"))

@@ -132,7 +132,7 @@ class TextPipelineSpec extends SparkSpec {
   }
 
   test("PCA topK deflates to orthogonal unit components and memo-shares with topComponent") {
-    graft.ml.Pca.clearMemo()
+    SessionMemo.clear()
     // two independent axes with distinct variances: points sit ON the axes
     // (±2·e_y, ±1·e_x), so the covariance is exactly diag(0.5, 2) —
     // component 1 along y, component 2 along x after deflation
@@ -160,14 +160,14 @@ class TextPipelineSpec extends SparkSpec {
     val top = graft.ml.Pca.topComponent(emb, iterations = 6)
       .as[(Long, Double)].collect().toMap
     assert(top == comps(1L), "topComponent must reuse the memoized component 1")
-    graft.ml.Pca.clearMemo()
+    SessionMemo.clear()
   }
 
   test("LSA memoizes extracted components per (session, plan, iterations)") {
     // same cells plan → topSingular, secondSingular and topK(3) share the
     // underlying factorization: component 1 from topK must be bit-equal to
     // topSingular's result (the memo returned the SAME checkpointed frame)
-    graft.ml.Lsa.clearMemo()
+    SessionMemo.clear()
     def cells = Seq(
       (1L, "x", 3.0), (1L, "y", 1.0), (2L, "y", 2.0), (3L, "z", 1.0)
     ).toDF("doc_id", "term", "w")
@@ -179,6 +179,6 @@ class TextPipelineSpec extends SparkSpec {
     val v2 = graft.ml.Lsa.secondSingular(cells, 4).as[(String, Double)].collect().toMap
     val k2 = topk.filter(_._1 == 2L).map(r => r._2 -> r._3).toMap
     assert(k2 == v2, "secondSingular must reuse the memoized component 2")
-    graft.ml.Lsa.clearMemo()
+    SessionMemo.clear()
   }
 }
