@@ -758,7 +758,7 @@ object ScalingProbe {
       def recallAt(dir: String): (Double, Double, Long) = {
         val emb = graft.sources.Tables(spark, dir, "embeddings")
         val exact = Caching.pin(
-          graft.operators.Similarity.bruteTopKAgg(emb, emb, 10)
+          graft.operators.Similarity.bruteTopKAgg(emb, emb, 10, broadcastQueries = false)
             .select(col("q_id"), col("n_id")))
         val n = exact.count()
         def rec(approx: DataFrame): Double =

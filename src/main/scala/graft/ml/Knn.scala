@@ -90,7 +90,7 @@ object Knn {
     * Scaladoc above names, wired end-to-end: sign-LSH buckets generate the
     * candidate pairs (both sides hashed with the same deterministic
     * (rep, plane, dim) hyperplanes from [[graft.operators.Similarity]]), the
-    * bounded-heap [[TopK]] aggregator ranks them so at most k rows per query
+    * bounded-heap [[TopK.ranked]] ranks them so at most k rows per query
     * survive partial aggregation, and the same A8 majority [[vote]] picks the
     * label. Every join is equi-key (bucket, then id): nothing is broadcast or
     * replicated, so the plan holds when train is 100 TB.
@@ -110,8 +110,6 @@ object Knn {
   def classifyLsh(test: DataFrame, train: DataFrame, k: Int,
                   planes: Int = 5, reps: Int = 10): DataFrame = {
     import graft.operators.Similarity
-    val spark = test.sparkSession
-    import spark.implicits._
     // both frames feed a bucket branch and a re-rank join → pin; the caller
     // releases via graft.Caching.release() once the result is consumed
     // norms ride the pins: computed once per vector at materialization, so
@@ -148,13 +146,8 @@ object Knn {
       .join(tr.select(col("n_id"), col("n_vec"), col("n_nrm")), "n_id")
       .select(col("q_id"), col("n_id"), round(cosinePre(dot(col("q_vec"), col("n_vec")),
         col("q_nrm"), col("n_nrm")), 6).as("sim"))
-    val top = scored.as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => TopK.Scored(r._2, r._3))
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), explode(col("top")).as("s"))
-      .select(col("q_id"), col("s.id").as("n_id"))
+    val top = TopK.ranked(scored, Seq("q_id"), "n_id", "sim", k)
+      .select(col("q_id"), col("n_id"))
     vote(top.join(tr.select(col("n_id"), col("n_label")), "n_id"))
   }
 }

@@ -32,8 +32,8 @@ import org.apache.spark.storage.StorageLevel
   * m-term table-lookup sum over its CODES — O(m) adds per candidate
   * versus O(d) multiply-adds for brute force, with the corpus side
   * streaming as (vec_id, m codes) and the full vectors never touched.
-  * Top-k per query through the bounded-heap Aggregator, so the shuffle
-  * carries ≤ k·|queries| rows no matter the corpus size.
+  * Top-k per query through the bounded heap ([[TopK.ranked]]), so the
+  * shuffle carries ≤ k·|queries| rows no matter the corpus size.
   */
 object Pq {
 
@@ -109,6 +109,13 @@ object Pq {
       .select(col("vec_id"),
         transform(col("entries"), e => e.getField("centroid_id")).as("codes"))
 
+  /** The k nearest per `keys` group of (keys…, n_id, d2) pair rows, ranked
+    * by (d2 asc, n_id asc) through the bounded heap: it keeps the LARGEST
+    * scores, so d2 is negated in and out. Output: keys ++ (n_id, d2, rk). */
+  private def nearest(keys: Seq[String], k: Int)(pairs: DataFrame): DataFrame =
+    TopK.ranked(pairs.withColumn("d2", -col("d2")), keys, "n_id", "d2", k)
+      .withColumn("d2", round(-col("d2"), 6))
+
   /** Asymmetric-distance top-k: for each query vector, the k nearest CODES
     * by the lookup-table distance Σ_s d²(q_s, codebook_s[codes[s]]).
     *
@@ -123,8 +130,6 @@ object Pq {
     * training cannot shift the indexing. */
   def adcTopK(queries: DataFrame, codes: DataFrame, codebooks: DataFrame,
               m: Int, kc: Int, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     val d2 = graft.functions.Exprs.sqdist(col("sv"), col("centroid"))
     val dtab = subSlices(queries.select(col("vec_id"), col("vec")), m)
       .join(broadcast(codebooks), "sub_id")
@@ -139,16 +144,7 @@ object Pq {
     codes.crossJoin(broadcast(dtab))
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), round(dist, 6).as("d2"))
-      .as[(Long, Long, Double)]
-      // bounded heap keeps the k best (score desc, id asc); negate so the
-      // SMALLEST distances win, exactly rank-by (d2 asc, n_id asc)
-      .groupByKey(_._1)
-      .mapValues(r => TopK.Scored(r._2, -r._3))
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"), round(-col("s.score"), 6).as("d2"),
-        (col("i") + 1).cast(LongType).as("rk"))
+      .transform(nearest(Seq("q_id"), k))
   }
 
   /** Exact squared-L2 top-k — the ground-truth side of the IVF-PQ
@@ -160,21 +156,12 @@ object Pq {
     * Tie-break (d2 asc at 6 dp, n_id asc) — identical to [[ivfPqTopK]] and
     * [[adcTopK]], so recall/MRR cards comparing the two are bit-portable. */
   def bruteL2TopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     val l2 = graft.functions.Exprs.sqdist(col("q_vec"), col("n_vec"))
     corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec"))
       .crossJoin(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"), round(l2, 6).as("d2"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => TopK.Scored(r._2, -r._3))
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"), round(-col("s.score"), 6).as("d2"),
-        (col("i") + 1).cast(LongType).as("rk"))
+      .transform(nearest(Seq("q_id"), k))
   }
 
   /** ADC + exact re-rank (the paper's IVFADC+R refinement, §VII): the code
@@ -187,22 +174,13 @@ object Pq {
     * stages on the same corpus). */
   def adcRerankTopK(queries: DataFrame, codes: DataFrame, codebooks: DataFrame,
                     corpus: DataFrame, m: Int, kc: Int, shortlist: Int, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
     val l2 = graft.functions.Exprs.sqdist(col("q_vec"), col("n_vec"))
     adcTopK(queries, codes, codebooks, m, kc, shortlist)
       .select(col("q_id"), col("n_id"))
       .join(corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec")), "n_id")
       .join(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))), "q_id")
       .select(col("q_id"), col("n_id"), round(l2, 6).as("d2"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => TopK.Scored(r._2, -r._3))
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"), round(-col("s.score"), 6).as("d2"),
-        (col("i") + 1).cast(LongType).as("rk"))
+      .transform(nearest(Seq("q_id"), k))
   }
 
   /** IVF-PQ (Jégou, Douze & Schmid, "Product quantization for nearest
@@ -224,8 +202,6 @@ object Pq {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, kCoarse: Int, coarseIter: Int,
                 m: Int, kc: Int, pqIter: Int, nprobe: Int, k: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= kCoarse, s"need 1 <= nprobe <= kCoarse, got $nprobe/$kCoarse")
-    val spark = queries.sparkSession
-    import spark.implicits._
     val e = corpus.select(col("vec_id"), col("vec"))
     val coarse = KMeans.fit(e, kCoarse, coarseIter).compacted.localCheckpoint(eager = true)
     // residual corpus: one cell per vector, r = v − centroid(cell)
@@ -269,14 +245,7 @@ object Pq {
     codes.join(dtab, "cell")
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("vec_id").as("n_id"), round(dist, 6).as("d2"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => TopK.Scored(r._2, -r._3))
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"), round(-col("s.score"), 6).as("d2"),
-        (col("i") + 1).cast(LongType).as("rk"))
+      .transform(nearest(Seq("q_id"), k))
   }
 
   /** [[ivfPqTopK]] for a SWEEP of nprobe values sharing ONE index build —
@@ -293,8 +262,6 @@ object Pq {
                      nprobes: Seq[Int], k: Int): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(np => np >= 1 && np <= kCoarse),
       s"need nprobes within 1..$kCoarse, got $nprobes")
-    val spark = queries.sparkSession
-    import spark.implicits._
     val npMax = nprobes.max
     val e = corpus.select(col("vec_id"), col("vec"))
     val coarse = KMeans.fit(e, kCoarse, coarseIter).compacted.localCheckpoint(eager = true)
@@ -336,17 +303,9 @@ object Pq {
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("rn"), col("vec_id").as("n_id"), round(dist, 6).as("d2"))
       .select(col("q_id"), col("rn"), col("n_id"), col("d2"),
-        explode(array(nps: _*)).as("np"))
-      .filter(col("rn") <= col("np"))
-      .as[(Long, Long, Long, Double, Long)]
-      .groupByKey(r => (r._5, r._1))
-      .mapValues(r => TopK.Scored(r._3, -r._4))
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .toDF("key", "top")
-      .select(col("key._1").as("nprobe"), col("key._2").as("q_id"),
-        posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("nprobe"), col("q_id"), col("s.id").as("n_id"),
-        round(-col("s.score"), 6).as("d2"), (col("i") + 1).cast(LongType).as("rk"))
+        explode(array(nps: _*)).as("nprobe"))
+      .filter(col("rn") <= col("nprobe"))
+      .transform(nearest(Seq("nprobe", "q_id"), k))
   }
 
   /** IVF-PQ + exact re-rank (the TPAMI'11 §VII refinement applied to the
@@ -369,8 +328,6 @@ object Pq {
                            nprobe: Int, shortlists: Seq[Int], k: Int): DataFrame = {
     require(shortlists.nonEmpty && shortlists.forall(_ >= k),
       s"need every shortlist >= k=$k, got $shortlists")
-    val spark = queries.sparkSession
-    import spark.implicits._
     val slMax = shortlists.max
     val adc = ivfPqTopK(queries, corpus, kCoarse, coarseIter, m, kc, pqIter,
         nprobe, slMax)
@@ -382,38 +339,21 @@ object Pq {
       .join(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))), "q_id")
       .select(col("q_id"), col("adc_rk"), col("n_id"), round(l2, 6).as("d2"))
       .select(col("q_id"), col("adc_rk"), col("n_id"), col("d2"),
-        explode(array(sls: _*)).as("sl"))
-      .filter(col("adc_rk") <= col("sl"))
-      .as[(Long, Long, Long, Double, Long)]
-      .groupByKey(r => (r._5, r._1))
-      .mapValues(r => TopK.Scored(r._3, -r._4))
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .toDF("key", "top")
-      .select(col("key._1").as("shortlist"), col("key._2").as("q_id"),
-        posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("shortlist"), col("q_id"), col("s.id").as("n_id"),
-        round(-col("s.score"), 6).as("d2"), (col("i") + 1).cast(LongType).as("rk"))
+        explode(array(sls: _*)).as("shortlist"))
+      .filter(col("adc_rk") <= col("shortlist"))
+      .transform(nearest(Seq("shortlist", "q_id"), k))
   }
 
   def ivfPqRerankTopK(queries: DataFrame, corpus: DataFrame, kCoarse: Int, coarseIter: Int,
                       m: Int, kc: Int, pqIter: Int, nprobe: Int,
                       shortlist: Int, k: Int): DataFrame = {
     require(shortlist >= k, s"need shortlist >= k, got $shortlist/$k")
-    val spark = queries.sparkSession
-    import spark.implicits._
     val l2 = graft.functions.Exprs.sqdist(col("q_vec"), col("n_vec"))
     ivfPqTopK(queries, corpus, kCoarse, coarseIter, m, kc, pqIter, nprobe, shortlist)
       .select(col("q_id"), col("n_id"))
       .join(corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec")), "n_id")
       .join(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))), "q_id")
       .select(col("q_id"), col("n_id"), round(l2, 6).as("d2"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => TopK.Scored(r._2, -r._3))
-      .agg(TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"), round(-col("s.score"), 6).as("d2"),
-        (col("i") + 1).cast(LongType).as("rk"))
+      .transform(nearest(Seq("q_id"), k))
   }
 }

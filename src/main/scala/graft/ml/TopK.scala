@@ -1,17 +1,23 @@
 package graft.ml
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, functions}
 import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.functions.{col, posexplode}
+import org.apache.spark.sql.types.LongType
 
-/** Bounded top-k as a typed Aggregator (SURVEY.md §2.8 / §4 optimization 3):
-  * the scale path for grouped top-k when the rank-window form would shuffle
-  * every candidate row. The buffer holds ≤ k entries, so partial aggregation
-  * bounds both memory and shuffle volume at k·|groups| regardless of
-  * candidate count — the same algorithm as the reference's hand-maintained
-  * k-best array (KNNMapper.java:147-159), but spillable and mergeable.
+/** Bounded top-k (SURVEY.md §2.8 / §4 optimization 3): the scale path for
+  * grouped top-k when the rank-window form would shuffle every candidate
+  * row. The heap holds ≤ k entries, so partial aggregation bounds both
+  * memory and shuffle volume at k·|groups| regardless of candidate count —
+  * the same algorithm as the reference's hand-maintained k-best array
+  * (KNNMapper.java:147-159), but spillable and mergeable: the map-side
+  * combine that *MapReduce Algorithms for Big Data Analysis* (VLDB 2012)
+  * gives as the reason the heap exists.
   *
-  * Ordering: score descending, then id ascending — identical to the window
-  * form's (sim desc, n_id asc), so both paths return the same rows.
+  * Every engine top-k goes through [[ranked]]; the heap's buffer type and
+  * the position-is-rank rule stay behind it. Ordering: score descending,
+  * then id ascending — identical to the window form's (score desc, id asc),
+  * so both return the same rows.
   */
 object TopK {
 
@@ -43,4 +49,21 @@ object TopK {
       override def outputEncoder: Encoder[Seq[Scored]] =
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Scored]]()
     }
+
+  /** The k best rows of `scored` per `keys` group by (`score` desc, `id`
+    * asc): `keys ++ (id, score, rk)`, rk a 1-based LONG rank. `keys = Nil`
+    * ranks the whole frame as one group. `id` is a LONG column and `score`
+    * a DOUBLE; a caller wanting the smallest values negates its score in
+    * and out. Rejects k < 1 when the plan is built. */
+  def ranked(scored: DataFrame, keys: Seq[String], id: String, score: String,
+             k: Int): DataFrame = {
+    require(k >= 1, s"top-k needs k >= 1, got $k")
+    val heap = functions.udaf(topK(k), Encoders.product[Scored])(col(id), col(score)).as("_top")
+    val ks = keys.map(col)
+    scored.groupBy(ks: _*).agg(heap)
+      // the buffer is kept sorted (score desc, id asc), so position = rank
+      .select(ks :+ posexplode(col("_top")).as(Seq("_i", "_s")): _*)
+      .select(ks ++ Seq(col("_s.id").as(id), col("_s.score").as(score),
+        (col("_i") + 1).cast(LongType).as("rk")): _*)
+  }
 }

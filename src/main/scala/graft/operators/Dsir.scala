@@ -25,8 +25,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   *   - Resampling: Gumbel-top-k (the paper's sampling-without-replacement
   *     step): key = log w(doc) + g(doc) with g = −ln(−ln(u)) and u a
   *     deterministic 48-bit md5 coin — the Efraimidis–Spirakis shape of
-  *     q122 with Gumbel noise, drawn through the bounded-heap [[graft.ml.TopK]]
-  *     aggregate so shuffle volume is k, never corpus-sized.
+  *     q122 with Gumbel noise, drawn through the bounded heap
+  *     ([[graft.ml.TopK.ranked]]) so shuffle volume is k, never corpus-sized.
   *
   * Scale: one feature-explode scan + one (doc,b)-keyed count; both model
   * fits are map-side-combined counts onto ≤ B cells; scoring is one
@@ -95,8 +95,6 @@ object Dsir {
   def resampleTopK(docs: DataFrame, isTarget: Column, k: Int,
                    buckets: Int = 1024): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val spark = docs.sparkSession
-    import spark.implicits._
     val keyed = importanceWeights(docs, isTarget, buckets)
       .select(col("doc_id"), col("logw"),
         conv(substring(md5(concat(lit("dsir:"), col("doc_id").cast("string"))), 1, 12), 16, 10)
@@ -108,12 +106,7 @@ object Dsir {
           // a degenerate always-wins draw (oracle literal matches).
           round(-log(-log((col("h").cast(DoubleType) + lit(0.5d)) / lit(281474976710656.0d))), 10),
           8).as("key"))
-    keyed.as[(Long, Double)]
-      .groupByKey(_ => 0)
-      .mapValues(r => graft.ml.TopK.Scored(r._1, r._2))
-      .agg(graft.ml.TopK.topK(k).toColumn.name("top"))
-      .toDF("g", "top")
-      .select(explode(col("top")).as("s"))
-      .select(col("s.id").as("doc_id"), round(col("s.score"), 8).as("dsir_key"))
+    graft.ml.TopK.ranked(keyed, Nil, "doc_id", "key", k)
+      .select(col("doc_id"), round(col("key"), 8).as("dsir_key"))
   }
 }

@@ -15,10 +15,10 @@ import org.apache.spark.sql.types.DoubleType
   * Sets with fewer than k distinct hashes ARE their own sketch — the
   * estimate is exact by definition (the standard KMV exact mode).
   *
-  * Scale: the k-min sample rides the bounded-heap [[graft.ml.TopK]]
-  * aggregate (≤ k rows per partition reach the single-group shuffle — the
-  * q122 shape); membership flags come back via one broadcast join of the
-  * k-row sample against the distinct-hash frame. Exact counts ride the
+  * Scale: the k-min sample rides the bounded heap ([[graft.ml.TopK.ranked]]:
+  * ≤ k rows per partition reach the single-group shuffle — the q122
+  * shape); membership flags come back via one broadcast join of the k-row
+  * sample against the distinct-hash frame. Exact counts ride the
   * same single grouped pass. Everything downstream of the distinct is
   * k-bounded, so the whole estimator frame is constant-size at any corpus.
   */
@@ -31,19 +31,9 @@ object Kmv {
     * complete-mode query (a micro-batch boundary is a merge boundary for
     * re-minning; StreamingKmvSpec pins batch ≡ stream). Callers must
     * dedupe h first — the sketch is a synopsis of a SET. */
-  def kminSample(set: DataFrame, k: Int): DataFrame = {
-    val spark = set.sparkSession
-    import spark.implicits._
-    set
-      .select(col("h"), negate(col("h").cast(DoubleType)).as("s"))
-      .as[(Long, Double)]
-      .groupByKey(_ => 0)
-      .mapValues(r => graft.ml.TopK.Scored(r._1, r._2))
-      .agg(graft.ml.TopK.topK(k).toColumn.name("top"))
-      .toDF("g", "top")
-      .select(explode(col("top")).as("s"))
-      .select(col("s.id").as("h"))
-  }
+  def kminSample(set: DataFrame, k: Int): DataFrame =
+    graft.ml.TopK.ranked(set.select(col("h"), negate(col("h").cast(DoubleType)).as("s")),
+      Nil, "h", "s", k).select(col("h"))
 
   /** Input: one row per DISTINCT hash h (48-bit, from the md5 ladder) with
     * membership flags (h, ina, inb). Output: ONE row —

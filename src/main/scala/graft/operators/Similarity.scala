@@ -9,7 +9,10 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Similarity search over embedding columns (Array[Float] → double math).
   *
-  * `bruteTopK` is the exact baseline: broadcast the corpus, rank per query.
+  * `bruteTopK` is the exact baseline: broadcast the corpus, rank per query
+  * through a window. `bruteTopKAgg` (and `hardNegativeTopK`, `rrfFuse`)
+  * rank the same way through the bounded heap [[graft.ml.TopK.ranked]], so
+  * at most k rows per query reach the shuffle.
   * `lshTopK` is a scale path: random-hyperplane sign-LSH buckets bound the
   * candidate set, then exact cosine re-ranks within buckets — the candidate
   * join is on the bucket key, so cost is Σ bucket² instead of n².
@@ -107,97 +110,65 @@ object Similarity {
       .otherwise(transform(vec, x => round(x / s * lit(127.0d), 0).cast(LongType)))
   }
 
+  /** One side of an exact cosine top-k: (`p`_id, `p`_carry…, `p`_vec,
+    * `p`_nrm). Norms per ROW on both join inputs, so the pair kernel pays
+    * one dot instead of three; sims bit-identical (Exprs.cosinePre). */
+  private def normed(df: DataFrame, p: String, carry: String*): DataFrame =
+    df.select((col("vec_id").as(s"${p}_id") +: carry.map(c => col(c).as(s"${p}_$c")) :+
+        col("embedding").cast("array<double>").as(s"${p}_vec")): _*)
+      .withColumn(s"${p}_nrm", vnorm(col(s"${p}_vec")))
+
+  /** The 6-dp cosine of a (q_, n_) pair row built from two [[normed]] sides. */
+  private val pairSim: Column =
+    round(cosinePre(dot(col("q_vec"), col("n_vec")), col("q_nrm"), col("n_nrm")), 6)
+
   /** Exact brute-force top-k: for each query row, the k most-cosine-similar
     * corpus rows (self excluded). Corpus side is broadcast. */
   def bruteTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    // norms per ROW on both join inputs (one dot per pair instead of three;
-    // sims bit-identical — Exprs.cosinePre)
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").cast("array<double>").as("q_vec"))
-      .withColumn("q_nrm", vnorm(col("q_vec")))
-    val c = corpus.select(col("vec_id").as("n_id"), col("embedding").cast("array<double>").as("n_vec"))
-      .withColumn("n_nrm", vnorm(col("n_vec")))
     val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
-    q.crossJoin(broadcast(c))
+    normed(queries, "q").crossJoin(broadcast(normed(corpus, "n")))
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("sim", round(cosinePre(dot(col("q_vec"), col("n_vec")),
-        col("q_nrm"), col("n_nrm")), 6))
+      .withColumn("sim", pairSim)
       .withColumn("rk", row_number().over(w).cast(LongType))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("n_id"), col("sim"), col("rk"))
   }
 
-  /** [[bruteTopK]]'s scale twin via the bounded-heap [[graft.ml.TopK]]
-    * Aggregator: identical output contract (sim desc, id asc, rk ≤ k), but
-    * where the window form shuffles EVERY scored candidate row to rank it,
-    * this partial-aggregates map-side so at most k rows per query reach the
-    * shuffle — |queries|·k shuffle volume instead of |queries|·|corpus|, the
-    * difference that matters at 100 TB. Oracle-shared with q37. */
-  def bruteTopKAgg(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // norms per ROW on both join inputs (one dot per pair instead of three;
-    // sims bit-identical — Exprs.cosinePre)
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").cast("array<double>").as("q_vec"))
-      .withColumn("q_nrm", vnorm(col("q_vec")))
-    val c = corpus.select(col("vec_id").as("n_id"), col("embedding").cast("array<double>").as("n_vec"))
-      .withColumn("n_nrm", vnorm(col("n_vec")))
-    q.crossJoin(broadcast(c))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), round(cosinePre(dot(col("q_vec"), col("n_vec")),
-        col("q_nrm"), col("n_nrm")), 6).as("sim"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => graft.ml.TopK.Scored(r._2, r._3))
-      .agg(graft.ml.TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "s")))
-      // the buffer is kept sorted (score desc, id asc), so position = rank
-      .select(col("q_id"), col("s.id").as("n_id"), col("s.score").as("sim"),
-        (col("i") + 1).cast(LongType).as("rk"))
+  /** [[bruteTopK]]'s scale twin through the bounded heap
+    * ([[graft.ml.TopK.ranked]]): identical output contract (sim 6 dp, rank by
+    * sim desc / id asc, rk ≤ k), but where the window form shuffles EVERY
+    * scored candidate row to rank it, this partial-aggregates map-side so at
+    * most k rows per query reach the shuffle — |queries|·k shuffle volume
+    * instead of |queries|·|corpus|, the difference that matters at 100 TB.
+    *
+    * `broadcastQueries` picks the replicated side; the rows are the same
+    * either way. `false` broadcasts the corpus — right when the corpus IS
+    * small (q62's full-eval posture on a suite-bounded frame, q197, q153).
+    * `true` broadcasts the query panel and streams the corpus — right when
+    * the queries are a fixed-size sample and the corpus is the thing that
+    * grows (the q208 64-query panel at 100 TB: a 64-row broadcast against a
+    * streaming corpus keeps the plan corpus-linear with no O(n) replication
+    * anywhere — ADVICE r11; the [[graft.ml.Pq.bruteL2TopK]] geometry).
+    * Oracle-shared with q37. */
+  def bruteTopKAgg(queries: DataFrame, corpus: DataFrame, k: Int,
+                   broadcastQueries: Boolean): DataFrame = {
+    val (q, c) = (normed(queries, "q"), normed(corpus, "n"))
+    val pairs = if (broadcastQueries) c.crossJoin(broadcast(q)) else q.crossJoin(broadcast(c))
+    graft.ml.TopK.ranked(pairs.filter(col("q_id") =!= col("n_id"))
+      .select(col("q_id"), col("n_id"), pairSim.as("sim")), Seq("q_id"), "n_id", "sim", k)
   }
 
-  /** [[bruteTopKAgg]]'s PANEL-GEOMETRY twin: the QUERIES broadcast and the
-    * CORPUS streams through the bounded heap — the [[graft.ml.Pq.bruteL2TopK]]
-    * geometry with cosine scores. Output contract is identical to
-    * [[bruteTopKAgg]] (sim rounded 6 dp, rank by sim desc / id asc, rk ≤ k),
-    * so the two are drop-in interchangeable and share oracles; the
-    * difference is WHICH side is replicated. [[bruteTopKAgg]] broadcasts
-    * the corpus — right when the corpus IS small (q37's full-eval posture
-    * on a suite-bounded frame). This twin broadcasts the query panel —
-    * right when the queries are a fixed-size sample and the corpus is the
-    * thing that grows (the q208 64-query panel at 100 TB: a 64-row
-    * broadcast against a streaming corpus keeps the plan corpus-linear
-    * with no O(n) replication anywhere — ADVICE r11). */
-  def bruteCosTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    // norms per ROW on both join inputs (one dot per pair instead of three;
-    // sims bit-identical — Exprs.cosinePre)
-    val q = queries.select(col("vec_id").as("q_id"), col("embedding").cast("array<double>").as("q_vec"))
-      .withColumn("q_nrm", vnorm(col("q_vec")))
-    val c = corpus.select(col("vec_id").as("n_id"), col("embedding").cast("array<double>").as("n_vec"))
-      .withColumn("n_nrm", vnorm(col("n_vec")))
-    c.crossJoin(broadcast(q))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), round(cosinePre(dot(col("q_vec"), col("n_vec")),
-        col("q_nrm"), col("n_nrm")), 6).as("sim"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => graft.ml.TopK.Scored(r._2, r._3))
-      .agg(graft.ml.TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"), col("s.score").as("sim"),
-        (col("i") + 1).cast(LongType).as("rk"))
-  }
+  /** Corpus sides up to this many rows broadcast in [[hardNegativeTopK]]
+    * (≈ a few hundred MB of doubles at d=64). */
+  private val hardNegativeBroadcastMaxRows = 1000000
 
   /** Hard-negative mining for contrastive training (the batch-mining step
     * of e.g. SBERT/DPR-style encoder training): for every anchor vector,
     * the k most-cosine-similar corpus vectors whose LABEL DIFFERS — the
     * near-misses that carry the training signal, where random negatives
-    * carry none. Same bounded-heap shape as [[bruteTopKAgg]] (at most k
-    * rows per anchor reach the shuffle), with the label-mismatch predicate
-    * applied BEFORE scoring so same-label pairs never enter the heap.
+    * carry none. The bounded heap of [[bruteTopKAgg]] (at most k rows per
+    * anchor reach the shuffle), with the label-mismatch predicate applied
+    * BEFORE scoring so same-label pairs never enter the heap.
     * Output: (q_id, q_label, n_id, sim, rk). At 100 TB the
     * anchors are the current training minibatch (corpus-independent size)
     * and the corpus side routes through the IVF/PQ index family
@@ -208,43 +179,21 @@ object Similarity {
     * id-shift probe ≈ 1.4× — SCALING.md), the same discipline q208 gives
     * the retrieval-eval card.
     *
-    * CONTRACT: the corpus side is broadcast only while it fits —
-    * `broadcastMaxRows` (default 1M rows ≈ a few hundred MB of doubles at
-    * d=64) caps it via one cheap pruned count; above the cap the join
-    * degrades to a partitioned crossJoin (still bounded-heap below the
-    * shuffle) instead of OOMing the driver. Callers at index scale should
-    * route the corpus through IVF/PQ rather than raising the cap. */
-  def hardNegativeTopK(anchors: DataFrame, corpus: DataFrame, k: Int,
-                       broadcastMaxRows: Long = 1000000L): DataFrame = {
-    val spark = anchors.sparkSession
-    import spark.implicits._
-    // norms per ROW on both join inputs (one dot per pair instead of three;
-    // sims bit-identical — Exprs.cosinePre)
-    val q = anchors.select(col("vec_id").as("q_id"), col("label").as("q_label"),
-      col("embedding").cast("array<double>").as("q_vec"))
-      .withColumn("q_nrm", vnorm(col("q_vec")))
-    val c = corpus.select(col("vec_id").as("n_id"), col("label").as("n_label"),
-      col("embedding").cast("array<double>").as("n_vec"))
-      .withColumn("n_nrm", vnorm(col("n_vec")))
-    val limitN = math.min(broadcastMaxRows + 1, Int.MaxValue.toLong).toInt
+    * CONTRACT: the corpus side is broadcast only while it fits — 1M rows
+    * ([[hardNegativeBroadcastMaxRows]]) caps it via one cheap pruned count;
+    * above the cap the join degrades to a partitioned crossJoin (still
+    * bounded-heap below the shuffle) instead of OOMing the driver. Callers
+    * at index scale should route the corpus through IVF/PQ. */
+  def hardNegativeTopK(anchors: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    val c = normed(corpus, "n", "label")
     val cSide =
-      if (corpus.select(col("vec_id")).limit(limitN).count() <= broadcastMaxRows)
-        broadcast(c)
+      if (corpus.select(col("vec_id")).limit(hardNegativeBroadcastMaxRows + 1).count() <=
+          hardNegativeBroadcastMaxRows) broadcast(c)
       else c
-    q.crossJoin(cSide)
+    val pairs = normed(anchors, "q", "label").crossJoin(cSide)
       .filter(col("q_label") =!= col("n_label"))
-      .select(col("q_id"), col("q_label"), col("n_id"), col("n_label"),
-        round(cosinePre(dot(col("q_vec"), col("n_vec")),
-          col("q_nrm"), col("n_nrm")), 6).as("sim"))
-      .as[(Long, Int, Long, Int, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .mapValues(r => graft.ml.TopK.Scored(r._3, r._5))
-      .agg(graft.ml.TopK.topK(k).toColumn.name("top"))
-      .toDF("qk", "top")
-      .select(col("qk._1").as("q_id"), col("qk._2").as("q_label"),
-        posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("q_id"), col("q_label"), col("s.id").as("n_id"),
-        col("s.score").as("sim"), (col("i") + 1).cast(LongType).as("rk"))
+      .select(col("q_id"), col("q_label"), col("n_id"), pairSim.as("sim"))
+    graft.ml.TopK.ranked(pairs, Seq("q_id", "q_label"), "n_id", "sim", k)
   }
 
   /** Integer quantization of a double vector: floor(x·1e6 + 0.5) per element.
@@ -308,8 +257,7 @@ object Similarity {
         vnorm(col("vec")).as("n_nrm"), col("centroid_id")),
         "centroid_id")
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("sim", round(cosinePre(dot(col("q_vec"), col("n_vec")),
-        col("q_nrm"), col("n_nrm")), 6))
+      .withColumn("sim", pairSim)
       .withColumn("rk", row_number().over(w).cast(LongType))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("n_id"), col("sim"), col("rk"))
@@ -387,8 +335,7 @@ object Similarity {
         col("nrm").as("q_nrm")), "q_id")
       .join(q.select(col("vec_id").as("n_id"), col("vec").as("n_vec"),
         col("nrm").as("n_nrm")), "n_id")
-      .withColumn("sim", round(cosinePre(dot(col("q_vec"), col("n_vec")),
-        col("q_nrm"), col("n_nrm")), 6))
+      .withColumn("sim", pairSim)
       .withColumn("rk", row_number().over(w).cast(LongType))
       .filter(col("rk") <= k)
       .select(col("q_id"), col("n_id"), col("sim"), col("rk"))
@@ -402,26 +349,16 @@ object Similarity {
     *
     * Per-list terms round to 12 dp and sum through the exact DECIMAL
     * ladder, so fusion is list- and partition-order-independent (and
-    * replays in SQL verbatim); final top-k by the bounded-heap Aggregator
-    * — ≤ k·|queries| rows reach the last shuffle. Candidate volume is
+    * replays in SQL verbatim); final top-k by the bounded heap
+    * ([[graft.ml.TopK.ranked]]) — ≤ k·|queries| rows reach the last shuffle. Candidate volume is
     * already bounded upstream: Σ list lengths per query. */
   def rrfFuse(rankings: Seq[DataFrame], k: Int, c: Int = 60): DataFrame = {
     require(rankings.nonEmpty, "rrfFuse needs at least one ranking")
-    val spark = rankings.head.sparkSession
-    import spark.implicits._
     val scored = rankings.map(_.select(col("q_id"), col("n_id"),
         round(lit(1.0d) / (lit(c.toDouble) + col("rk").cast(DoubleType)), 12).as("t")))
       .reduce(_ unionByName _)
-    scored.groupBy(col("q_id"), col("n_id"))
-      .agg(round(dsum(col("t"), 12), 8).as("rrf"))
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => graft.ml.TopK.Scored(r._2, r._3))
-      .agg(graft.ml.TopK.topK(k).toColumn.name("top"))
-      .toDF("q_id", "top")
-      .select(col("q_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("q_id"), col("s.id").as("n_id"), col("s.score").as("rrf"),
-        (col("i") + 1).cast(LongType).as("rk"))
+    graft.ml.TopK.ranked(scored.groupBy(col("q_id"), col("n_id"))
+      .agg(round(dsum(col("t"), 12), 8).as("rrf")), Seq("q_id"), "n_id", "rrf", k)
   }
 
   /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein, "The use
@@ -448,7 +385,7 @@ object Similarity {
     val vecs = corpus.select(col("vec_id").as("n_id"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("vn", vnorm(col("v")))
-    var remaining = bruteTopKAgg(queries, corpus, n)
+    var remaining = bruteTopKAgg(queries, corpus, n, broadcastQueries = false)
       .select(col("q_id"), col("n_id"), col("sim").as("rel"))
       .join(vecs, "n_id")
       .compacted.localCheckpoint(eager = true)

@@ -110,7 +110,7 @@ object Curation {
       LEFT JOIN (SELECT a AS doc_id, MIN(b) AS mn FROM reach GROUP BY 1) m USING (doc_id))"""
 
   /** Exact ANN top-k oracle, shared by q37 (window form) and q62 (bounded-
-    * heap Aggregator form) — both must produce this same result. */
+    * heap form) — both must produce this same result. */
   private val annTopkOracle: String = """
     WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     q AS (SELECT * FROM emb WHERE vec_id % 20 = 0),
@@ -749,14 +749,15 @@ object Curation {
       oracle = Some(annTopkOracle),
       bench = true),
 
-    // The same exact top-k through the bounded-heap Aggregator (ml.TopK): at
+    // The same exact top-k through the bounded heap (TopK.ranked): at
     // most k rows per query survive partial aggregation, vs the window form
     // shuffling every candidate. Same oracle as q37 — a green row proves the
     // kNN scale path end-to-end, not just in ScalaTest.
     QueryDef("q62_ann_topk_agg",
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
-        Similarity.bruteTopKAgg(e.filter(col("vec_id") % 20 === 0), e, k = 10)
+        Similarity.bruteTopKAgg(e.filter(col("vec_id") % 20 === 0), e, k = 10,
+          broadcastQueries = false)
       },
       oracle = Some(annTopkOracle)),
 
@@ -785,7 +786,7 @@ object Curation {
         val e = Tables(s, dir, "embeddings")
         val sys = Similarity.lshTopK(e, k = 10)
           .select(col("q_id"), col("n_id"), col("rk").as("srk"))
-        val truth = Similarity.bruteTopKAgg(e, e, k = 10)
+        val truth = Similarity.bruteTopKAgg(e, e, k = 10, broadcastQueries = false)
           .select(col("q_id"), col("n_id"), col("rk").as("trk"))
         retrievalEvalCard(sys, truth, "lsh_vs_exact", k = 10)
       },
@@ -847,12 +848,12 @@ object Curation {
         val coin = col("vec_id").isin(panel: _*)
         val sys = Similarity.lshTopK(e, k = 10, queryPred = Some(coin))
           .select(col("q_id"), col("n_id"), col("rk").as("srk"))
-        // bruteCosTopK, not bruteTopKAgg: the 64-query PANEL broadcasts and
+        // broadcastQueries = true: the 64-query PANEL broadcasts and
         // the corpus streams through the bounded heap — broadcasting the
-        // corpus (bruteTopKAgg's geometry) would put an O(n) replication in
+        // corpus (q62's geometry) would put an O(n) replication in
         // the one row whose whole point is the corpus-linear posture
         // (ADVICE r11). Same output contract, same oracle.
-        val truth = Similarity.bruteCosTopK(e.filter(coin), e, k = 10)
+        val truth = Similarity.bruteTopKAgg(e.filter(coin), e, k = 10, broadcastQueries = true)
           .select(col("q_id"), col("n_id"), col("rk").as("trk"))
         retrievalEvalCard(sys, truth, "lsh_vs_exact_sampled", k = 10)
       },
@@ -1151,7 +1152,8 @@ object Curation {
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
         val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-        val cosR = Similarity.bruteTopKAgg(emb.filter(col("vec_id") % 20 === 0), emb, k = 20)
+        val cosR = Similarity.bruteTopKAgg(emb.filter(col("vec_id") % 20 === 0), emb, k = 20,
+          broadcastQueries = false)
           .select(col("q_id"), col("n_id"), col("rk"))
         val cbs = graft.ml.Pq.fit(e, m = 4, k = 8, iterations = 2)
         val codes = graft.ml.Pq.encode(e, cbs, m = 4)
@@ -1232,29 +1234,22 @@ object Curation {
     // doc id — 48 bits so the key is exactly representable as the TopK
     // aggregator's double score). q77's hash-coin Bernoulli sampler hits a
     // RATE; this row hits a COUNT, which is what a fixed-size eval-set or
-    // annotation draw needs. Scale path: the bounded-heap TopK aggregator
-    // (q62's operator) — shuffle volume is ≤ quota·|strata| regardless of
-    // corpus size, with NO per-stratum global-order window.
+    // annotation draw needs. Scale path: the bounded heap every engine
+    // top-k shares (graft.ml.TopK.ranked) — shuffle volume is ≤
+    // quota·|strata| regardless of corpus size, with NO per-stratum
+    // global-order window.
     QueryDef("q111_sample_quota",
       (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        val quota = 100
-        docs(s, dir)
+        val scored = docs(s, dir)
           .select(col("lang"), col("doc_id"),
             // score = −h48: TopK keeps largest (score desc, id asc) ≡
             // smallest (h asc, doc_id asc); 48-bit values negate exactly
             // in a double
-            -conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10)
+            negate(conv(substring(md5(col("doc_id").cast("string")), 1, 12), 16, 10)
               .cast(org.apache.spark.sql.types.LongType)
-              .cast(org.apache.spark.sql.types.DoubleType).as("score"))
-          .as[(String, Long, Double)]
-          .groupByKey(_._1)
-          .mapValues(r => graft.ml.TopK.Scored(r._2, r._3))
-          .agg(graft.ml.TopK.topK(quota).toColumn.name("top"))
-          .toDF("lang", "top")
-          .select(col("lang"), explode(col("top")).as("s"))
-          .select(col("lang"), col("s.id").as("doc_id"))
+              .cast(org.apache.spark.sql.types.DoubleType)).as("score"))
+        graft.ml.TopK.ranked(scored, Seq("lang"), "doc_id", "score", k = 100)
+          .select(col("lang"), col("doc_id"))
       },
       oracle = Some("""
         WITH h AS (
@@ -1272,14 +1267,12 @@ object Curation {
     // a double: /2^48 is a power-of-two scale) and w = its token count;
     // the 100 largest keys win. Every arithmetic step is one deterministic
     // IEEE op (ln→10 dp, the standing rule), so both engines derive
-    // identical keys. Scale path: the bounded-heap TopK aggregator again —
+    // identical keys. Scale path: the bounded heap (TopK.ranked) again —
     // ≤ 100 rows per partition reach the single-group shuffle; the oracle
     // is the global rank window the Spark plan avoids.
     QueryDef("q122_weighted_sample",
       (s, dir) => {
-        val spark = s
-        import spark.implicits._
-        docs(s, dir)
+        val keyed = docs(s, dir)
           .select(col("doc_id"),
             greatest(size(Exprs.tokens(col("text"))), lit(1)).cast("double").as("w"),
             conv(substring(md5(concat(lit("ws:"), col("doc_id").cast("string"))), 1, 12), 16, 10)
@@ -1287,13 +1280,8 @@ object Curation {
           .select(col("doc_id"),
             (round(log((col("h").cast("double") + lit(1.0d)) / lit(281474976710656.0d)), 10) /
               col("w")).as("es_key"))
-          .as[(Long, Double)]
-          .groupByKey(_ => 0)
-          .mapValues(r => graft.ml.TopK.Scored(r._1, r._2))
-          .agg(graft.ml.TopK.topK(100).toColumn.name("top"))
-          .toDF("g", "top")
-          .select(explode(col("top")).as("s"))
-          .select(col("s.id").as("doc_id"), round(col("s.score"), 8).as("es_key"))
+        graft.ml.TopK.ranked(keyed, Nil, "doc_id", "es_key", k = 100)
+          .select(col("doc_id"), round(col("es_key"), 8).as("es_key"))
       },
       oracle = Some(s"""
         WITH ${Text.toksCte},
@@ -2541,7 +2529,7 @@ object Curation {
         val emb = Tables(s, dir, "embeddings")
         val bench = emb.filter(col("vec_id") % 25 === 0)
         val corpus = emb.filter(col("vec_id") % 25 =!= 0)
-        Similarity.bruteTopKAgg(corpus, bench, k = 1)
+        Similarity.bruteTopKAgg(corpus, bench, k = 1, broadcastQueries = false)
           .filter(col("sim") >= 0.3)
           .select(col("q_id").as("doc_vec_id"), col("n_id").as("bench_vec_id"),
             col("sim"))
@@ -4805,7 +4793,7 @@ object Curation {
     // DPR batch-mining step): for every anchor in the "minibatch" (every
     // 4th vector), the 3 most-cosine-similar vectors with a DIFFERENT
     // label — the near-misses that carry training signal where random
-    // negatives carry none. Runs through the bounded-heap TopK Aggregator
+    // negatives carry none. Runs through the bounded heap (TopK.ranked)
     // (at most k rows per anchor reach the shuffle — the q62 scale shape),
     // with the label-mismatch predicate applied before scoring so
     // same-label pairs never enter the heap. At 100 TB the anchor set is

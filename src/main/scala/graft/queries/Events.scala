@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.QueryDef
 import graft.functions.Exprs._
+import graft.logs.LogAnalytics
 import graft.operators.{AsOf, Hll, RangeJoin, Sessions}
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
@@ -23,11 +24,7 @@ object Events {
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef("q12_hourly_counts",
-      (s, dir) => {
-        Tables(s, dir, "events")
-          .groupBy(epochTrunc("hour", col("ts")).as("hour_epoch"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"))
-      },
+      (s, dir) => LogAnalytics.hourlyCounts(Tables(s, dir, "events"), "event_type"),
       oracle = Some("""
         SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
           event_type, COUNT(*) AS cnt
@@ -45,11 +42,7 @@ object Events {
         FROM events GROUP BY 1""")),
 
     QueryDef("q14_hourly_avg_value",
-      (s, dir) => {
-        Tables(s, dir, "events")
-          .groupBy(epochTrunc("hour", col("ts")).as("hour_epoch"), col("event_type"))
-          .agg(count(lit(1)).as("cnt"), davg(col("value"), 8).as("avg_value"))
-      },
+      (s, dir) => LogAnalytics.hourlyAvg(Tables(s, dir, "events"), "event_type", "value"),
       oracle = Some("""
         SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
           event_type, COUNT(*) AS cnt,
@@ -73,24 +66,10 @@ object Events {
           CAST(epoch(date_trunc('second', MAX(ts))) AS BIGINT) AS last_sec
         FROM events GROUP BY 1""")),
 
+    // Mean model: per (event_type, hour-of-day), avg hourly count over train
+    // days predicts each test-day cell; RMSE per event_type (PDF1 p.3).
     QueryDef("q16_forecast_rmse",
-      (s, dir) => {
-        // Mean model: per (event_type, hour-of-day), avg hourly count over train
-        // days predicts each test-day cell; RMSE per event_type (PDF1 p.3).
-        val cells = Tables(s, dir, "events")
-          .groupBy(col("event_type"), col("ts").cast(DateType).as("d"),
-            hour(col("ts")).cast(LongType).as("h"))
-          .agg(count(lit(1)).as("cnt"))
-        val train = cells.filter(col("d") < lit(splitDate).cast(DateType))
-        val test = cells.filter(col("d") >= lit(splitDate).cast(DateType))
-        val model = train.groupBy(col("event_type"), col("h"))
-          .agg((sum(col("cnt")).cast(DoubleType) / count(lit(1)).cast(DoubleType)).as("pred"))
-        val diffs = test.join(model, Seq("event_type", "h"))
-          .select(col("event_type"), (col("pred") - col("cnt").cast(DoubleType)).as("diff"))
-        diffs.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n_cells"),
-            sqrt(dsum(col("diff") * col("diff"), 10) / count(lit(1)).cast(DoubleType)).as("rmse"))
-      },
+      (s, dir) => LogAnalytics.forecastRmse(Tables(s, dir, "events"), "event_type", splitDate),
       oracle = Some(s"""
         WITH cells AS (
           SELECT event_type, CAST(ts AS DATE) AS d, CAST(hour(ts) AS BIGINT) AS h, COUNT(*) AS cnt

@@ -289,8 +289,9 @@ class CurationPlanSpec extends SparkSpec {
   }
 
   test("q208 truth kernel broadcasts the PANEL side, streams the corpus") {
-    // bruteCosTopK's contract (ADVICE r11): the bounded query panel is the
-    // replicated side and the corpus streams through the bounded heap — the
+    // bruteTopKAgg's broadcastQueries = true contract (ADVICE r11): the
+    // bounded query panel is the replicated side and the corpus streams
+    // through the bounded heap — the
     // inverse (corpus broadcast) computes the same answer but plants an
     // O(n) replication in the one row whose point is corpus-linearity, and
     // a "some Broadcast exists" assertion can't tell the two apart. This
@@ -301,7 +302,8 @@ class CurationPlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val e = sources.Tables(spark, dir, "embeddings")
     val coin = col("vec_id").isin(0L to 63L: _*)
-    val truth = operators.Similarity.bruteCosTopK(e.filter(coin), e, k = 10)
+    val truth = operators.Similarity.bruteTopKAgg(e.filter(coin), e, k = 10,
+      broadcastQueries = true)
     val plan = truth.queryExecution.sparkPlan
     val joins = plan.collect { case b: BroadcastNestedLoopJoinExec => b }
     assert(joins.nonEmpty, plan.toString.take(2000))

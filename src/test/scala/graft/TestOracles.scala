@@ -148,6 +148,29 @@ object TestOracles {
       .select(col("q_id"), col("n_id"), col("n_label"), col("sim"), col("rk"))
   }
 
+  /** The typed pipeline every engine top-k wrote out before
+    * [[graft.ml.TopK.ranked]]: `groupByKey → mapValues(Scored) →
+    * agg(topK) → posexplode`. The typed key needs one static type, so keys
+    * travel as strings: output is (keys as strings…, id, score, rk). */
+  def topKTyped(scored: DataFrame, keys: Seq[String], id: String, score: String,
+                k: Int): DataFrame = {
+    val spark = scored.sparkSession
+    import spark.implicits._
+    val key =
+      if (keys.isEmpty) typedLit(Seq.empty[String])
+      else array(keys.map(c => col(c).cast("string")): _*)
+    scored.select(key, col(id).cast(LongType), col(score).cast(DoubleType))
+      .as[(Seq[String], Long, Double)]
+      .groupByKey(_._1)
+      .mapValues(r => graft.ml.TopK.Scored(r._2, r._3))
+      .agg(graft.ml.TopK.topK(k).toColumn.name("top"))
+      .toDF("key", "top")
+      .select(col("key"), posexplode(col("top")).as(Seq("i", "s")))
+      .select(keys.indices.map(j => col("key").getItem(j).as(keys(j))) ++
+        Seq(col("s.id").as(id), col("s.score").as(score),
+          (col("i") + 1).cast(LongType).as("rk")): _*)
+  }
+
   /** `Knn`'s majority vote over [[knnNeighbors]] output. */
   def knnVote(nbrs: DataFrame): DataFrame = {
     val votes = nbrs.groupBy(col("q_id"), col("n_label")).agg(count(lit(1)).as("votes"))

@@ -1,8 +1,9 @@
 package graft
 
 import graft.ml.TopK
-import graft.ml.TopK.Scored
 import graft.operators.Bucketing
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
@@ -10,25 +11,51 @@ class TopKBucketingSpec extends SparkSpec {
   import spark.implicits._
 
   test("top-k Aggregator equals the rank-window form") {
+    // TopK.ranked against the rank window (and the typed pipeline it
+    // replaced) over 0, 1 and 2 grouping keys, tied scores (one decimal
+    // digit), k past a group's size, empty input, and a negated-distance
+    // score ranked smallest-first the way Pq does
     val rnd = new scala.util.Random(7)
-    val rows = (1 to 500).map { i =>
-      (s"g${i % 5}", i.toLong, math.floor(rnd.nextDouble() * 1000) / 1000)
+    val df = (1 to 500).map { i =>
+      (s"g${i % 5}", (i % 3).toLong, i.toLong, math.floor(rnd.nextDouble() * 10) / 10)
+    }.toDF("g", "h", "id", "score")
+    def window(in: DataFrame, keys: Seq[String], score: Column, k: Int): DataFrame = {
+      val w = Window.partitionBy(keys.map(col): _*).orderBy(score, $"id".asc)
+      in.withColumn("rk", row_number().over(w).cast("long")).filter($"rk" <= k)
+        .select(keys.map(col) ++ Seq($"id", $"score", $"rk"): _*)
     }
-    val df = rows.toDF("g", "id", "score")
-    // window form
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"g").orderBy($"score".desc, $"id".asc)
-    val windowed = df.withColumn("rk", row_number().over(w)).filter($"rk" <= 7)
-      .select($"g", $"id", $"score")
-      .as[(String, Long, Double)].collect().toSet
-    // aggregator form
-    val agged = df.as[(String, Long, Double)]
-      .groupByKey(_._1)
-      .mapValues(r => Scored(r._2, r._3))
-      .agg(TopK.topK(7).toColumn)
-      .flatMap { case (g, top) => top.map(s => (g, s.id, s.score)) }
-      .collect().toSet
-    assert(agged == windowed)
+    // keys compared as strings: the typed oracle's key type
+    def rows(out: DataFrame, keys: Seq[String]): Set[Seq[Any]] =
+      out.select(keys.map(c => col(c).cast("string")) ++ Seq($"id", $"score", $"rk"): _*)
+        .collect().map(_.toSeq).toSet
+    for {
+      (in, what) <- Seq(df -> "rows", df.filter(lit(false)) -> "empty")
+      keys <- Seq(Nil, Seq("g"), Seq("g", "h"))
+      k <- Seq(7, 200)
+    } {
+      val clue = s"$what keys=$keys k=$k"
+      val want = rows(window(in, keys, $"score".desc, k), keys)
+      assert(rows(TopK.ranked(in, keys, "id", "score", k), keys) == want, clue)
+      assert(rows(TestOracles.topKTyped(in, keys, "id", "score", k), keys) == want, clue)
+      assert(want.nonEmpty == (what == "rows"), clue)
+      // negated in, negated back out: (score asc, id asc)
+      val nearest = TopK.ranked(in.withColumn("score", -$"score"), keys, "id", "score", k)
+        .withColumn("score", round(-$"score", 6))
+      assert(rows(nearest, keys) == rows(window(in, keys, $"score".asc, k), keys), clue)
+    }
+    // k = 200 exceeds every group (≤ 100 rows at one key): all rows come back
+    assert(TopK.ranked(df, Seq("g"), "id", "score", 200).count() == 500L)
+  }
+
+  test("TopK.ranked rejects k < 1 when the plan is built") {
+    val df = Seq((1L, 0.5d), (2L, 0.25d)).toDF("id", "score")
+    Seq(0, -1).foreach { k =>
+      intercept[IllegalArgumentException](TopK.ranked(df, Nil, "id", "score", k))
+    }
+    // the heap kernel's callers inherit the check instead of failing in a task
+    val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException](
+      graft.operators.Similarity.bruteTopKAgg(emb, emb, 0, broadcastQueries = false))
   }
 
   test("bucketed join on the bucket key plans with zero shuffle exchanges") {
