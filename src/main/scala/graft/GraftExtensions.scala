@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{BpeEncode, DotProduct, GreedySegment, MinHashBandSigs, SimHashBits, SpaceSavingTopK}
+import graft.functions.{ArrayFold, BpeEncode, GreedySegment, MinHashBandSigs, SimHashBits, SpaceSavingTopK}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -31,8 +31,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftExtensions {
   private val dotFunction = (
     FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-    (children: Seq[Expression]) => DotProduct(children(0), children(1)))
+    new ExpressionInfo(classOf[ArrayFold].getName, "graft_dot"),
+    (children: Seq[Expression]) => ArrayFold(children(0), children(1), ArrayFold.Dot))
 
   /** SQL surface for dictionary segmentation:
     * `graft_segment(text, array('w1', 'w2', …))`. The dictionary argument

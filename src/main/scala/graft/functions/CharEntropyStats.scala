@@ -15,9 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * 300-char document, 39 s for the sf0.1 corpus — measured in the round-12
   * ×10 probe). One interpreted call per ROW (CodegenFallback), identical
   * arithmetic contract: per-char counts folded in sorted-char order, each
-  * c·ln c term rounded at 12 dp through scala BigDecimal HALF_UP (the same
-  * path Spark's Round takes, so the doubles stay bit-equal to the HOF twin
-  * and the DuckDB oracle — asserted in TextStatsSpec).
+  * c·ln c term rounded at 12 dp through [[SparkRound]] (Spark's Round
+  * path, so the doubles stay bit-equal to the HOF twin and the DuckDB
+  * oracle — asserted in TextStatsSpec).
   *
   * Returns struct(n_alphabet BIGINT, entropy DOUBLE);
   * H = round(round(ln L, 12) − Σ round(c·ln c, 12) / L, 6).
@@ -29,9 +29,6 @@ case class CharEntropyStats(child: Expression)
     StructField("n_alphabet", LongType, nullable = false),
     StructField("entropy", DoubleType, nullable = false)))
   override def prettyName: String = "graft_char_entropy"
-
-  private def r(x: Double, scale: Int): Double =
-    BigDecimal(x).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   override def nullSafeEval(input: Any): Any = {
     val s = input.asInstanceOf[UTF8String].toString
@@ -47,10 +44,10 @@ case class CharEntropyStats(child: Expression)
     val it = counts.values().iterator()
     while (it.hasNext) {
       val c = it.next().toDouble
-      sum += r(c * math.log(c), 12)
+      sum += SparkRound(c * math.log(c), 12)
     }
     val l = s.length.toDouble
-    val h = r(r(math.log(l), 12) - sum / l, 6)
+    val h = SparkRound(SparkRound(math.log(l), 12) - sum / l, 6)
     new GenericInternalRow(Array[Any](counts.size.toLong, h)): InternalRow
   }
 

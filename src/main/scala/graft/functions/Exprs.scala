@@ -26,17 +26,21 @@ object Exprs {
     dsum(c, scale) / count(lit(1)).cast(DoubleType)
 
   /** Sequential left-fold dot product over two double-array columns — the
-    * codegen [[DotProduct]] expression (same fold order as the HOF
+    * codegen [[ArrayFold]] `Dot` kernel (same fold order as the HOF
     * formulation and DuckDB's list_dot_product, so results stay bit-equal;
     * ~10× faster in the kNN/ANN kernels). */
-  def dot(a: Column, b: Column): Column = DotProduct(a, b)
+  def dot(a: Column, b: Column): Column = ArrayFold(a, b, ArrayFold.Dot)
+
+  /** [[dot]] over two long-array columns — the [[ArrayFold]] `DotLong`
+    * kernel, exact 64-bit arithmetic (the sign-LSH bucket kernel). */
+  def dotLong(a: Column, b: Column): Column = ArrayFold(a, b, ArrayFold.DotLong)
 
   /** Sequential left-fold squared L2 distance over two double-array columns —
-    * the codegen [[SqDist]] expression (same fold order as the HOF
+    * the codegen [[ArrayFold]] `SqDist` kernel (same fold order as the HOF
     * formulation the L2 kernels previously inlined, so results stay
     * bit-equal; removes the interpreted-lambda tax from the k-means / PQ /
     * brute-L2 hot paths). */
-  def sqdist(a: Column, b: Column): Column = SqDist(a, b)
+  def sqdist(a: Column, b: Column): Column = ArrayFold(a, b, ArrayFold.SqDist)
 
   /** Cosine similarity between two double-array columns (0.0 for zero vectors —
     * the reference emits a guard value for those, KNNMapper.java:139-143). */

@@ -8,13 +8,13 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, MapType}
 
 /** Native codegen sparse cosine over two MapType(long → double) feature
-  * columns — [[DotProduct]]/[[SqDist]]'s sibling for the sparse kNN kernel
+  * columns — the dense [[ArrayFold]] kernels' sibling for the sparse kNN kernel
   * (the reference's own vector representation, KNNMapper.java:118-143).
   *
   * [[Exprs.mapCosine]] spelled this as three interpreted HOF folds per pair
   * (`aggregate(map_values(map_zip_with(...)))` for the dot plus one
   * `aggregate` per norm) — the last interpreted-lambda hot kernel after the
-  * round-14 SqDist/DotProduct sweep. This expression computes the whole
+  * round-14 dense-fold ([[ArrayFold]]) sweep. This expression computes the whole
   * cosine in one compiled evaluation.
   *
   * Bit-parity with the HOF form (MapCosineSpec pins it): the dot folds a's

@@ -50,9 +50,9 @@ object KMeans {
 
   /** Nearest centroid per vector (squared L2, ties on centroid id). */
   def assign(emb: DataFrame, centroids: DataFrame): DataFrame = {
-    // codegen SqDist — bit-equal to the former HOF fold (the test-scope
-    // TestOracles.sqdistHof), without the interpreted-lambda tax on the
-    // n·k assignment rows
+    // the codegen ArrayFold SqDist kernel — bit-equal to the former HOF
+    // fold (the test-scope TestOracles.sqdistHof), without the
+    // interpreted-lambda tax on the n·k assignment rows
     val dist2 = graft.functions.Exprs.sqdist(col("vec"), col("centroid"))
     // argmin as min(struct(d2, centroid_id, vec)): lexicographic struct
     // ordering IS (d2 asc, ties on centroid id) — centroid ids are unique

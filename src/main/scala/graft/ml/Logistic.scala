@@ -30,21 +30,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Logistic {
 
-  /** Spark's `round(col, 12)` on a finite double, replicated for the
-    * driver-side weight update: java.math.BigDecimal.valueOf (the
-    * Double.toString-exact value scala.math.BigDecimal(d) wraps), setScale
-    * HALF_UP, back to double. NaN/Infinity pass through, as Round's do.
-    * VecDsumSpec pins parity against the Spark expression. */
-  private[graft] def round12(v: Double): Double =
-    if (v.isNaN || v.isInfinite) v
-    else java.math.BigDecimal.valueOf(v)
-      .setScale(12, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** data: (id, x: array<double> — bias feature included by the caller,
     * y: double 0/1). Returns (pos, weight), pos 0-based over x.
     *
     * Contract: `data` is non-empty and every `x` has the same length (the
-    * dimension is read from one row; [[graft.functions.DotProduct]]
+    * dimension is read from one row; [[graft.functions.ArrayFold]]
     * min-truncates a ragged vector rather than erroring, so a violation
     * surfaces as a silently misfit model, not an exception). */
   def train(data: DataFrame, lr: Double, iterations: Int): DataFrame = {
@@ -77,8 +67,8 @@ object Logistic {
     // is produced by the same arithmetic as before: p by the identical
     // column expression over a literal weight vector (same doubles as the
     // broadcast-join form), terms by the identical round((p−y)·x[j], 12),
-    // sums by the identical decimal ladder, updates by round12 — Spark's
-    // own Round arithmetic — applied to the same double products.
+    // sums by the identical decimal ladder, updates by SparkRound(·, 12) —
+    // Spark's own Round arithmetic — applied to the same double products.
     val dim = {
       val r = e.select(size(col("x")).as("d")).head(1)
       if (r.isEmpty) 0 else r.head.getInt(0)
@@ -89,10 +79,10 @@ object Logistic {
         val wv = typedLit(w.toSeq)
         val p = round(lit(1.0d) / (lit(1.0d) + exp(-round(dot(col("x"), wv), 12))), 10)
         val sums = graft.OpsExplain.dump("Logistic.train GD round body",
-            e.agg(graft.functions.VecDsum(col("x"), p - col("y"), 12).as("s")))
+            e.agg(graft.functions.VecDsum(col("x"), p - col("y")).as("s")))
           .head().getSeq[Double](0)
         w = Array.tabulate(dim) { j =>
-          round12(w(j) - lr * (sums(j) / n))
+          graft.functions.SparkRound(w(j) - lr * (sums(j) / n), 12)
         }
       }
     }

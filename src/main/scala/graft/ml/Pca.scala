@@ -92,7 +92,7 @@ object Pca {
       }
       val cells = graft.OpsExplain.dump("Pca.cov cells body", e.crossJoin(broadcast(muArr))
         .select(zip_with(col("v"), col("mu_arr"), (x, m) => round(x - m, 12)).as("cv"))
-        .agg(graft.functions.OuterDsum(col("cv"), 12).as("sv"))
+        .agg(graft.functions.OuterDsum(col("cv")).as("sv"))
         .select(posexplode(col("sv")).as(Seq("k", "sraw")))
         .filter(col("sraw").isNotNull)
         .select((floor(col("k") / lit(math.max(dim, 1))) + 1).cast(LongType).as("i"),

@@ -225,7 +225,7 @@ object Similarity {
       val signs = array((0 until dim).map(d => lit(planeSign(rep, p, d))): _*)
       // codegen integer dot — bit-equal to the HOF fold (exact 64-bit
       // arithmetic), evaluated planes·reps times per row in the bucket scan
-      val dot = graft.functions.DotProductLong(qvec, signs)
+      val dot = graft.functions.Exprs.dotLong(qvec, signs)
       when(dot >= 0L, lit(1L << p)).otherwise(lit(0L))
     }.reduce(_ + _)
   }

@@ -6202,8 +6202,7 @@ object Curation {
         import graft.Par.ParOps
         val dbl = org.apache.spark.sql.types.DoubleType
         def l2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-          round(aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)),
-            lit(0.0d), (acc, v) => acc + v), 6)
+          round(Exprs.sqdist(a, b), 6)
         val e = graft.Caching.pin(Tables(s, dir, "embeddings")
           .select(col("vec_id"),
             col("embedding").cast(org.apache.spark.sql.types.ArrayType(dbl)).as("v")))

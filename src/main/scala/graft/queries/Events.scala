@@ -1263,13 +1263,10 @@ object Events {
   /** q140's 24 truncated-EWMA weights α(1−α)^j, α = 0.3, 12-dp — computed
     * ONCE here and embedded as literals in both the Spark plan and the
     * DuckDB oracle, so no transcendental runs in either engine. */
-  private lazy val ewmaWeights: Seq[Double] = (0 until 24).map { j =>
-    BigDecimal(0.3 * math.pow(0.7, j))
-      .setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
-  }
+  private lazy val ewmaWeights: Seq[Double] =
+    (0 until 24).map(j => graft.functions.SparkRound(0.3 * math.pow(0.7, j), 12))
 
   /** Σ of the rounded weights, the shared normalizer literal. */
   private lazy val ewmaNorm: Double =
-    BigDecimal(ewmaWeights.map(BigDecimal(_)).sum.toDouble)
-      .setScale(12, BigDecimal.RoundingMode.HALF_UP).toDouble
+    graft.functions.SparkRound(ewmaWeights.map(BigDecimal(_)).sum.toDouble, 12)
 }

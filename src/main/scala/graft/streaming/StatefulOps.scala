@@ -44,8 +44,7 @@ object StatefulOps {
             st =
               if (st.n == 0L) EwmaState(key, r.seq, 1L, r.value)
               else EwmaState(key, r.seq, st.n + 1,
-                BigDecimal(alpha * r.value + (1.0d - alpha) * st.ewma)
-                  .setScale(10, BigDecimal.RoundingMode.HALF_UP).toDouble)
+                graft.functions.SparkRound(alpha * r.value + (1.0d - alpha) * st.ewma, 10))
           }
           state.update(st)
           Iterator.single(st)

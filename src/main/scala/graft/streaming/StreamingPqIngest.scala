@@ -17,7 +17,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *   - cell assignment and PQ encoding are ROW-LOCAL expressions over the
   *     plan-embedded model (coarse k + m·k sub-centroids — KB-sized by
   *     contract, the same bounded-model stance as the q84 merge map): the
-  *     same sequential `aggregate(zip_with(...))` squared-L2 fold and
+  *     same codegen squared-L2 fold ([[graft.functions.Exprs.sqdist]]) and
   *     (d2 asc, id asc) tie rule as [[graft.ml.KMeans.assign]] /
   *     [[graft.ml.Pq.assignCodes]], so stream codes are bit-equal to what
   *     the batch encode produces on the same rows (the spec's parity
@@ -46,8 +46,7 @@ object StreamingPqIngest {
     require(coarse.nonEmpty, "coarse centroid list must be non-empty")
     val entries = coarse.map { case (cid, c) =>
       struct(
-        aggregate(zip_with(vec, typedLit(c), (x, y) => (x - y) * (x - y)),
-          lit(0.0d), (acc, v) => acc + v).as("d2"),
+        graft.functions.Exprs.sqdist(vec, typedLit(c)).as("d2"),
         lit(cid).as("cid"))
     }
     element_at(array_sort(array(entries: _*)), 1).getField("cid")
@@ -72,8 +71,7 @@ object StreamingPqIngest {
       val sv = slice(vec, s * sub + 1, sub)
       val entries = bySub(s).sortBy(_._2).map { case (_, cid, c) =>
         struct(
-          aggregate(zip_with(sv, typedLit(c), (x, y) => (x - y) * (x - y)),
-            lit(0.0d), (acc, v) => acc + v).as("d2"),
+          graft.functions.Exprs.sqdist(sv, typedLit(c)).as("d2"),
           lit(cid).as("cid"))
       }
       element_at(array_sort(array(entries: _*)), 1).getField("cid")

@@ -44,14 +44,6 @@ object StreamingRetrievalEval {
     * (d2 asc, n_id asc) order — the standing ANN tie rule. */
   case class PanelState(epoch: Long, top: Seq[(Long, Double)])
 
-  /** Catalyst `round(_, 6)` for doubles, replicated exactly (HALF_UP over
-    * the shortest-decimal representation): the streamed d2 must land on
-    * the identical 6-dp grid as [[graft.ml.Pq.adcTopK]]'s output or rank
-    * ties would resolve differently across the batch/stream pair. */
-  private def round6(d: Double): Double =
-    new java.math.BigDecimal(java.lang.Double.toString(d))
-      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-
   /** Maintain each panel query's ADC top-k over the growing index and emit
     * a full snapshot per epoch (per-query micro-batch counter). Distances
     * replicate [[graft.ml.Pq.adcTopK]] bit-for-bit: per-sub cells are the
@@ -97,7 +89,10 @@ object StreamingRetrievalEval {
             var dist = table(cs(0))
             var s = 1
             while (s < m) { dist = dist + table(s.toLong * kc + cs(s)); s += 1 }
-            (nId, round6(dist))
+            // Catalyst's round(_, 6): the streamed d2 must land on the
+            // identical 6-dp grid as adcTopK's output or rank ties would
+            // resolve differently across the batch/stream pair
+            (nId, graft.functions.SparkRound(dist, 6))
           }.toVector
           val top = (prev.top ++ fresh).distinct
             .sortBy { case (id, d2) => (d2, id) }

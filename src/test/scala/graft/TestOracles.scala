@@ -13,12 +13,13 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * these. */
 object TestOracles {
 
-  /** Interpreted HOF twin of `Exprs.dot` ([[graft.functions.DotProduct]]). */
+  /** Interpreted HOF twin of `Exprs.dot` ([[graft.functions.ArrayFold]] `Dot`). */
   def dotHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
 
-  /** Interpreted HOF twin of `Exprs.sqdist` ([[graft.functions.SqDist]]) —
-    * the exact expression the L2 kernels used before the codegen swap. */
+  /** Interpreted HOF twin of `Exprs.sqdist` ([[graft.functions.ArrayFold]]
+    * `SqDist`) — the exact expression the L2 kernels used before the
+    * codegen swap. */
   def sqdistHof(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, c) => (x - c) * (x - c)),
       lit(0.0d), (acc, v) => acc + v)

@@ -4,28 +4,55 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** Source lint: every engine top-k goes through `TopK.ranked`. The heap's
+/** Source lints over `src/main`, one test per single-mechanism rule.
+  *
+  * Top-k: every engine top-k goes through `TopK.ranked`. The heap's
   * Aggregator (`TopK.topK(`) and its buffer type (`TopK.Scored(`) may be
   * named in `src/main` only inside `graft/ml/TopK.scala`, so no other file
   * knows the buffer layout or that array position is the rank. A hit here
   * means a hand-written `groupByKey → agg(topK)` pipeline came back: route
   * it through `TopK.ranked` instead of pinning it.
+  *
+  * Array folds: every pairwise array fold goes through the codegen
+  * `ArrayFold` kernel (`Exprs.dot` / `dotLong` / `sqdist`). No code line may
+  * spell an interpreted `aggregate(zip_with(` fold, and the per-kernel
+  * classes it replaced (`DotProduct(`, `DotProductLong(`, `SqDist(`) may not
+  * be named outside `graft/functions/ArrayFold.scala`.
   */
 class TopKLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
-  private val home = root.resolve("graft/ml/TopK.scala")
+
+  /** (file, 1-based line number, line) for every engine source line. */
+  private def sourceLines(home: Path): List[(Path, Int, String)] = {
+    assert(Files.isRegularFile(home), s"run from the repo root: $home not found")
+    Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+      .flatMap { (p: Path) =>
+        Files.readAllLines(p).asScala.zipWithIndex.map { case (line, i) => (p, i + 1, line) }
+      }
+  }
 
   test("only TopK.scala names the heap Aggregator or its buffer type") {
-    assert(Files.isRegularFile(home), s"run from the repo root: $home not found")
-    val files = Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && p != home).toList
-    val offenders = files.flatMap { (p: Path) =>
-      Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if line.contains("TopK.topK(") || line.contains("TopK.Scored(") =>
-          s"$p:${i + 1}"
-      }
+    val home = root.resolve("graft/ml/TopK.scala")
+    val offenders = sourceLines(home).collect {
+      case (p, n, line) if p != home &&
+          (line.contains("TopK.topK(") || line.contains("TopK.Scored(")) => s"$p:$n"
     }
     assert(offenders.isEmpty, s"top-k heap used outside TopK.ranked: $offenders")
+  }
+
+  test("pairwise array folds go through the ArrayFold kernel") {
+    val home = root.resolve("graft/functions/ArrayFold.scala")
+    def isComment(line: String): Boolean = {
+      val t = line.trim
+      t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")
+    }
+    val oldKernels = Seq("DotProduct(", "DotProductLong(", "SqDist(")
+    val offenders = sourceLines(home).collect {
+      case (p, n, line) if !isComment(line) && (line.contains("aggregate(zip_with(") ||
+          (p != home && oldKernels.exists(line.contains))) => s"$p:$n"
+    }
+    assert(offenders.isEmpty, s"array fold outside the ArrayFold kernel: $offenders")
   }
 }

@@ -1,11 +1,13 @@
 package graft
 
-import graft.functions.{Exprs, VecDsum}
+import graft.functions.{DecimalSlots, Exprs, SparkRound, VecDsum}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 
 /** Bit-parity of the element-wise gradient aggregate against the
   * posexplode + dsum formulation [[graft.ml.Logistic.train]] used before
-  * round 14, and of the driver-side round12 against Spark's Round. */
+  * round 14, of [[graft.functions.SparkRound]] against Spark's Round, and
+  * of the shared exact-decimal slot buffer's serde and merge. */
 class VecDsumSpec extends SparkSpec {
   import spark.implicits._
 
@@ -29,7 +31,7 @@ class VecDsumSpec extends SparkSpec {
       .agg(Exprs.dsum(round((col("p") - col("y")) * col("xj"), 12), 12).as("s"))
       .orderBy(col("pos"))
       .as[(Int, Double)].collect()
-    val vec = df.agg(VecDsum(col("x"), coef, 12).as("s"))
+    val vec = df.agg(VecDsum(col("x"), coef).as("s"))
       .select(posexplode(col("s")).as(Seq("pos", "v")))
       .orderBy(col("pos"))
       .as[(Int, Double)].collect()
@@ -42,14 +44,14 @@ class VecDsumSpec extends SparkSpec {
   test("VecDsum over zero rows is null; null coef rows contribute nothing") {
     val empty = Seq.empty[(Long, Array[Double], Double, Double)]
       .toDF("id", "x", "y", "p")
-    assert(empty.agg(VecDsum(col("x"), col("p") - col("y"), 12).as("s"))
+    assert(empty.agg(VecDsum(col("x"), col("p") - col("y")).as("s"))
       .collect().head.isNullAt(0))
     // one real row + one null-coef row == just the real row
     val one = Seq((1L, Array(1.5, 2.5), 0.0, 0.75)).toDF("id", "x", "y", "p")
     val withNull = Seq((1L, Array(1.5, 2.5), Some(0.0), Some(0.75)),
       (2L, Array(9.0, 9.0), None, None)).toDF("id", "x", "y", "p")
-    val a = one.agg(VecDsum(col("x"), col("p") - col("y"), 12)).as[Seq[Double]].head()
-    val b = withNull.agg(VecDsum(col("x"), col("p") - col("y"), 12)).as[Seq[Double]].head()
+    val a = one.agg(VecDsum(col("x"), col("p") - col("y"))).as[Seq[Double]].head()
+    val b = withNull.agg(VecDsum(col("x"), col("p") - col("y"))).as[Seq[Double]].head()
     assert(a == b)
   }
 
@@ -71,7 +73,7 @@ class VecDsumSpec extends SparkSpec {
       .agg(round(Exprs.dsum(col("p"), 12), 12).as("s"))
       .orderBy(col("i"), col("j"))
       .as[(Long, Long, Double)].collect()
-    val outer = df.agg(graft.functions.OuterDsum(col("cv"), 12).as("sv"))
+    val outer = df.agg(graft.functions.OuterDsum(col("cv")).as("sv"))
       .select(posexplode(col("sv")).as(Seq("k", "sraw")))
       .filter(col("sraw").isNotNull)
       .select((floor(col("k") / lit(d)) + 1).cast(LongType).as("i"),
@@ -85,15 +87,62 @@ class VecDsumSpec extends SparkSpec {
     }
   }
 
-  test("driver-side round12 matches Spark's round(col, 12) on random doubles") {
+  test("SparkRound matches Spark's round(col, s) at scales 6-12 and on NaN, Inf, -0.0") {
     val rnd = new scala.util.Random(11)
     val vals = Array.fill(4000)((rnd.nextDouble() - 0.5) * math.pow(10, rnd.nextInt(8) - 3)) ++
-      Array(0.0, -0.0, 1.0000000000005, -1.0000000000005, 2.5e-13, -2.5e-13)
-    val sparkSide = vals.toSeq.toDF("v").select(round(col("v"), 12)).as[Double].collect()
-    vals.zip(sparkSide).foreach { case (v, s) =>
-      val d = graft.ml.Logistic.round12(v)
-      assert(java.lang.Double.doubleToLongBits(d) == java.lang.Double.doubleToLongBits(s),
-        s"round12($v): driver=$d spark=$s")
+      Array(0.0, -0.0, 1.0000000000005, -1.0000000000005, 2.5e-13, -2.5e-13,
+        1.0000005, -2.5e-7, 1.000000005, 2.5e-9, 1.00000000005, 2.5e-11,
+        Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    for (scale <- Seq(6, 8, 10, 12)) {
+      val sparkSide = vals.toSeq.toDF("v").select(round(col("v"), scale)).as[Double].collect()
+      vals.zip(sparkSide).foreach { case (v, s) =>
+        val d = SparkRound(v, scale)
+        assert(java.lang.Double.doubleToLongBits(d) == java.lang.Double.doubleToLongBits(s),
+          s"SparkRound($v, $scale): driver=$d spark=$s")
+      }
+    }
+  }
+
+  test("DecimalSlots serde round-trips every slot state; merge spans widths") {
+    def cells(b: DecimalSlots): Option[Seq[Any]] =
+      Option(b.result()).map(_.asInstanceOf[GenericArrayData].array.toSeq)
+    def roundTrip(b: DecimalSlots, square: Boolean): DecimalSlots = {
+      val back = DecimalSlots.fromBytes(b.toBytes, square)
+      assert(back.toBytes.sameElements(b.toBytes) && cells(back) == cells(b))
+      back
+    }
+    for (square <- Seq(false, true)) assert(cells(roundTrip(new DecimalSlots(square), square)).isEmpty)
+    // null slots, and an addend past decimal(30, 12) (1e19: 32 digits) skipped
+    val row = new DecimalSlots(square = false)
+    row.grow(4)
+    row.add(0, 0, 1.5)
+    row.add(0, 2, 1e19)
+    row.add(0, 3, Double.NaN)
+    assert(cells(roundTrip(row, square = false)) == Some(Seq(1.5, null, null, null)))
+    // a sum past decimal(38, 12) is null: 9e17 doubled by self-merges
+    val big = new DecimalSlots(square = false)
+    big.grow(1)
+    big.add(0, 0, 9e17)
+    (1 to 20).foreach(_ => big.mergeWith(big))
+    assert(cells(roundTrip(big, square = false)) == Some(Seq(9e17 * (1 << 20))))
+    (1 to 15).foreach(_ => big.mergeWith(big))
+    assert(cells(roundTrip(big, square = false)) == Some(Seq(null)))
+    // merging a narrower buffer into a wider one and the reverse agree: each
+    // old row keeps its cells when the narrow side grows
+    for (square <- Seq(false, true)) {
+      def filled(w: Int, f: (Int, Int) => Double): DecimalSlots = {
+        val b = new DecimalSlots(square)
+        b.grow(w)
+        for (i <- 0 until (if (square) w else 1); j <- 0 until w) b.add(i, j, f(i, j))
+        b
+      }
+      val narrow = (i: Int, j: Int) => i * 10.0 + j + 1
+      val wide = (i: Int, j: Int) => 100.0 * (i + 1) + j
+      val expected = for (i <- 0 until (if (square) 3 else 1); j <- 0 until 3)
+        yield wide(i, j) + (if (i < 2 && j < 2) narrow(i, j) else 0.0)
+      val a = filled(2, narrow).mergeWith(roundTrip(filled(3, wide), square))
+      val b = filled(3, wide).mergeWith(roundTrip(filled(2, narrow), square))
+      assert(cells(a) == Some(expected) && cells(b) == Some(expected), s"square=$square")
     }
   }
 
