@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, DecimalBridge}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Exact-decimal slot buffer behind [[VecDsum]] and [[OuterDsum]]: one slot
@@ -22,18 +23,26 @@ import org.apache.spark.sql.types._
   * its new offset, so earlier sums keep their cells. A null slot has had no
   * addend yet (sum-over-empty semantics).
   *
-  * Arithmetic fidelity, step by step against the Spark expression ladder:
+  * Arithmetic fidelity, step by step against the Spark expression ladder.
+  * `ansi` is `spark.sql.ansi.enabled` as the plan was built (the aggregates
+  * capture it the way Spark's `Sum` does):
   *   - round(v, 12): [[SparkRound]]; NaN/Infinity pass through and are then
-  *     skipped, as the non-ansi cast to decimal nulls them;
+  *     skipped: Spark's cast of NaN or ±Infinity to decimal is null in both
+  *     modes;
   *   - cast(double as decimal(30, 12)): valueOf, setScale(12, HALF_UP);
-  *     precision > 30 → null, skipped — Spark's non-ansi overflow-to-null;
+  *     precision > 30 is Spark's overflow: the addend is skipped (null), or
+  *     under ANSI the cast's `NUMERIC_VALUE_OUT_OF_RANGE` is thrown;
   *   - sum: exact BigDecimal addition (order-independent, so partial
   *     aggregates merge in any order);
   *   - final cast to double: BigDecimal.doubleValue — Decimal.toDouble;
   *   - sum-result overflow past decimal(38, 12) (sum's widened result type)
-  *     nulls the slot, mirroring the non-ansi sum.
+  *     nulls the slot, or under ANSI throws `NUMERIC_VALUE_OUT_OF_RANGE` as
+  *     the sum does.
+  * Both overflow checks are Spark's own `Decimal.toPrecision`
+  * ([[org.apache.spark.sql.graft.DecimalBridge]]), so the error
+  * class is the one the expression ladder raises.
   */
-private[graft] final class DecimalSlots(square: Boolean) {
+private[graft] final class DecimalSlots(square: Boolean, ansi: Boolean = false) {
   import DecimalSlots.Scale
 
   private var width = 0
@@ -60,7 +69,15 @@ private[graft] final class DecimalSlots(square: Boolean) {
     if (!t.isNaN && !t.isInfinite) {
       val d = JBigDecimal.valueOf(t).setScale(Scale, RoundingMode.HALF_UP)
       if (d.precision() <= 30) addAt(row * width + col, d)
+      else overflow(d, 30)
     }
+  }
+
+  /** Spark's decimal overflow of `d` at `precision`: null, or the ANSI
+    * error. */
+  private def overflow(d: JBigDecimal, precision: Int): Null = {
+    DecimalBridge.toPrecision(Decimal(d), precision, Scale, nullOnOverflow = !ansi)
+    null
   }
 
   private def addAt(k: Int, d: JBigDecimal): Unit =
@@ -82,12 +99,14 @@ private[graft] final class DecimalSlots(square: Boolean) {
   }
 
   /** null when no row ever reached the buffer (a global sum over zero rows
-    * is null); per slot: null when no addend, null when the exact sum
-    * overflows decimal(38, 12), else the double value. */
+    * is null); per slot: null when no addend, null (ANSI: the error) when
+    * the exact sum overflows decimal(38, 12), else the double value. */
   def result(): Any =
     if (width == 0) null
     else new GenericArrayData(sums.map[Any] { s =>
-      if (s == null || s.precision() > 38) null else java.lang.Double.valueOf(s.doubleValue())
+      if (s == null) null
+      else if (s.precision() > 38) overflow(s, 38)
+      else java.lang.Double.valueOf(s.doubleValue())
     })
 
   def toBytes: Array[Byte] = {
@@ -112,9 +131,9 @@ private[graft] object DecimalSlots {
   /** The decimal scale of every addend and sum. */
   val Scale = 12
 
-  def fromBytes(bytes: Array[Byte], square: Boolean): DecimalSlots = {
+  def fromBytes(bytes: Array[Byte], square: Boolean, ansi: Boolean = false): DecimalSlots = {
     val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    val b = new DecimalSlots(square)
+    val b = new DecimalSlots(square, ansi)
     b.width = in.readInt()
     b.sums = Array.fill(b.rows(b.width) * b.width) {
       val len = in.readInt()
@@ -135,15 +154,17 @@ private[graft] object DecimalSlots {
 private[functions] trait DecimalSlotsAggregate extends TypedImperativeAggregate[DecimalSlots] {
   /** One row of slots (false) or a width × width square (true). */
   protected def square: Boolean
+  /** `spark.sql.ansi.enabled` when the plan was built. */
+  def ansi: Boolean
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
   override def nullable: Boolean = true
-  override def createAggregationBuffer(): DecimalSlots = new DecimalSlots(square)
+  override def createAggregationBuffer(): DecimalSlots = new DecimalSlots(square, ansi)
   override def merge(buf: DecimalSlots, other: DecimalSlots): DecimalSlots =
     buf.mergeWith(other)
   override def eval(buf: DecimalSlots): Any = buf.result()
   override def serialize(buf: DecimalSlots): Array[Byte] = buf.toBytes
   override def deserialize(bytes: Array[Byte]): DecimalSlots =
-    DecimalSlots.fromBytes(bytes, square)
+    DecimalSlots.fromBytes(bytes, square, ansi)
 }
 
 /** Element-wise weighted [[Exprs.dsum]] over an array<double> column: slot j
@@ -166,7 +187,7 @@ private[functions] trait DecimalSlotsAggregate extends TypedImperativeAggregate[
   * shorter rows simply contribute no addend at the tail positions.
   */
 case class VecDsum(
-    left: Expression, right: Expression,
+    left: Expression, right: Expression, ansi: Boolean = SQLConf.get.ansiEnabled,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
   extends DecimalSlotsAggregate with BinaryLike[Expression] {
 
@@ -231,7 +252,7 @@ object VecDsum {
   * i, j < len — exactly the groups the exploded form would emit.
   */
 case class OuterDsum(
-    child: Expression,
+    child: Expression, ansi: Boolean = SQLConf.get.ansiEnabled,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
   extends DecimalSlotsAggregate with UnaryLike[Expression] {
 

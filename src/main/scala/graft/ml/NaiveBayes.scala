@@ -2,19 +2,26 @@ package graft.ml
 
 import scala.jdk.CollectionConverters._
 
+import graft.functions.TermClassCounts
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{InSet, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Multinomial Naive Bayes as aggregations (SURVEY.md §2.4 A6/A9).
   *
   * Training is one aggregation query over the token stream whose small result
   * (per-(label, term) counts, per-label token totals and document counts) is
-  * collected to the driver; the model is three local tables that broadcast
-  * into scoring. This is the reference's shape: TrainModelReducer writes the
-  * same sums once (TrainModelReducer.java:22-41) and PredictMapper loads them
-  * as a side input.
+  * collected to the driver. Scoring takes the model from that driver copy,
+  * as literals in the plan: the vocabulary an `InSet` filter, the classes a
+  * literal array, the term counts a hash lookup
+  * ([[graft.functions.TermClassCounts]]). So scoring runs no broadcast job
+  * and builds no hashed relation. This is the reference's shape:
+  * TrainModelReducer writes the same sums once (TrainModelReducer.java:22-41)
+  * and PredictMapper loads them as a side input (PredictMapper.java:66-86).
   *
   * Scoring (standard, log-space): score(d, c) = ln P(c) + Σ_t n_t(d)·ln p(t|c)
   * with Laplace smoothing p(t|c) = (cnt(c,t)+1)/(total(c)+V) — the smoothing
@@ -26,23 +33,29 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType
 object NaiveBayes {
 
   /** A fitted model. Every frame is a `LocalRelation` over driver-held
-    * rows, so scoring re-reads no training data: [[predict]] broadcasts each
-    * one from the driver.
+    * rows, so nothing re-reads training data:
     *  - `termCounts` (label, term, tcnt): one row per training (label, term);
     *  - `classes` (label, total, prior, v): one row per non-null label, with
     *    its token total, its document share and the vocabulary size;
     *  - `vocab` (term): the distinct non-null training terms, `vocabSize` of
-    *    them (a term seen only under a null label still counts). */
-  case class Model(termCounts: DataFrame, classes: DataFrame, vocab: DataFrame, vocabSize: Long)
+    *    them (a term seen only under a null label still counts).
+    * [[scores]] reads the same rows from the driver-side fields: `classRows`
+    * (the `classes` rows, in order), `terms` (the vocabulary as catalyst
+    * strings) and `counts` (each term's count under each of `classRows`). */
+  case class Model(termCounts: DataFrame, classes: DataFrame, vocab: DataFrame, vocabSize: Long)(
+      private[ml] val classRows: Seq[Row],
+      private[ml] val terms: Set[Any],
+      private[ml] val counts: TermClassCounts.Table)
 
-  /** A6: fit from a labeled token stream (doc_id, label, term). One Spark
-    * query: a grouping-sets scan counts (label, term) and (label, doc_id)
-    * groups, and a second aggregate folds the latter into per-label token
-    * totals and document counts. The driver computes each prior as
-    * `n_d.toDouble / n_docs.toDouble`; every log stays in the scoring plan,
-    * so no score depends on where the model was fitted. */
+  /** A6: fit from a labeled token stream (doc_id, label, term) with a string
+    * `term`. One Spark query: a grouping-sets scan counts (label, term) and
+    * (label, doc_id) groups, and a second aggregate folds the latter into
+    * per-label token totals and document counts. The driver computes each
+    * prior as `n_d.toDouble / n_docs.toDouble`; every log stays in the
+    * scoring plan, so no score depends on where the model was fitted. */
   def train(toks: DataFrame): Model = {
     val spark = toks.sparkSession
+    require(toks.schema("term").dataType == StringType, "NaiveBayes.train needs a string term column")
     // grouping_id over (label, term, doc_id): 1 for a (label, term) group,
     // 2 for a (label, doc_id) group, whose term is then null
     val (termSet, docSet) = (1L, 2L)
@@ -56,8 +69,11 @@ object NaiveBayes {
     val terms = fit.filter(_.getLong(0) == termSet)
     val labels = fit.filter(_.getLong(0) == docSet)
     val nDocs = labels.map(_.getLong(4)).sum
-    val vocab = terms.filterNot(_.isNullAt(2)).map(_.get(2)).distinct
+    val vocab = terms.filterNot(_.isNullAt(2)).map(_.getString(2)).distinct
     val v = vocab.length.toLong
+    val classRows = labels.filterNot(_.isNullAt(1))
+      .map(r => Row(r.get(1), r.getLong(3), r.getLong(4).toDouble / nDocs.toDouble, v)).toSeq
+    val classIdx = classRows.map(_.get(0)).zipWithIndex.toMap
 
     val labelF = toks.schema("label")
     val termF = toks.schema("term")
@@ -67,11 +83,14 @@ object NaiveBayes {
       termCounts = local(Seq(labelF, termF, StructField("tcnt", LongType, nullable = false)),
         terms.map(r => Row(r.get(1), r.get(2), r.getLong(3))).toSeq),
       classes = local(Seq(labelF, StructField("total", LongType), StructField("prior", DoubleType),
-          StructField("v", LongType, nullable = false)),
-        labels.filterNot(_.isNullAt(1))
-          .map(r => Row(r.get(1), r.getLong(3), r.getLong(4).toDouble / nDocs.toDouble, v)).toSeq),
+          StructField("v", LongType, nullable = false)), classRows),
       vocab = local(Seq(termF), vocab.map(Row(_)).toSeq),
-      vocabSize = v)
+      vocabSize = v)(
+      classRows,
+      vocab.map(UTF8String.fromString).toSet,
+      TermClassCounts.Table(classRows.size, terms.toSeq.flatMap { r =>
+        classIdx.get(r.get(1)).map(c => (c, r.getString(2), r.getLong(3)))
+      }))
   }
 
   /** A9: score + argmax. Input: test tokens (doc_id, term). Output (doc_id, pred). */
@@ -86,16 +105,17 @@ object NaiveBayes {
   /** Every test document's score under every class: (doc_id, label, score).
     * A document with no in-vocabulary term has no row. */
   def scores(testToks: DataFrame, model: Model, referenceCompat: Boolean = false): DataFrame = {
-    val testCounts = testToks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("cnt"))
-      // vocabulary restriction: J2 inner-join semantics (out-of-vocab dropped)
-      .join(broadcast(model.vocab), "term")
+    val classLit = Literal.create(model.classRows, ArrayType(model.classes.schema, containsNull = false))
+    // vocabulary restriction: J2 inner-join semantics (out-of-vocab dropped)
+    val inVocab = InSet(ColumnBridge.expression(col("term")), model.terms)
+    val testCounts = testToks.filter(ColumnBridge.column(inVocab))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("cnt"))
     val scored = testCounts
-      .crossJoin(broadcast(model.classes))
-      .join(broadcast(model.termCounts), Seq("label", "term"), "left")
-      .na.fill(0L, Seq("tcnt"))
-      .withColumn("logp",
-        log((col("tcnt").cast(DoubleType) + lit(1.0d)) /
-          (col("total").cast(DoubleType) + col("v").cast(DoubleType))))
+      .select(col("doc_id"), col("term"), col("cnt"),
+        posexplode(ColumnBridge.column(classLit)).as(Seq("ci", "c")))
+      .select(col("doc_id"), col("c.label").as("label"), col("cnt"), col("c.prior").as("prior"),
+        log((TermClassCounts(col("term"), col("ci"), model.counts).cast(DoubleType) + lit(1.0d)) /
+          (col("c.total").cast(DoubleType) + col("c.v").cast(DoubleType))).as("logp"))
     val score =
       if (referenceCompat)
         // Π of logs over terms (count-weighted by pow), × log prior, abs,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.Exprs._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 /** The reference's text-corpus pipeline (SURVEY.md §2.2 P1-P4, §2.4 A1-A5)
   * re-expressed as composable DataFrame transforms:
   *
-  *   tokenize → term counts → TF (window ratio) → DF/IDF → TF-IDF (broadcast
-  *   join) → per-doc sparse-vector assembly.
+  *   tokenize → term counts → TF (window ratio) → DF (window count) → TF-IDF
+  *   → per-doc sparse-vector assembly.
   *
   * Differences from the reference, by design (SURVEY.md §7 risk register):
   * the TF denominator is an order-independent window sum (not a combiner
@@ -22,10 +22,11 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
   * kernel (one byte loop per ASCII row; no lambda, which would keep the
   * projection out of whole-stage codegen), so tokenize, filter and explode
   * fuse into one WholeStageCodegen stage over the scan; term counting
-  * partial-aggregates map-side; the IDF table is vocabulary-sized and
-  * always broadcast; only two shuffles survive (term counts, vector
-  * assembly) — at 100 TB both hash-partition on high-cardinality keys
-  * (doc_id, term) with no skew hot-spots.
+  * partial-aggregates map-side. [[tfidfOf]] derives TF, DF and the document
+  * count from that one count frame: TF and DF are windows over it
+  * (hash-partitioned on `doc_id`, then on `term`), and only the one-row
+  * document count is broadcast. No vocabulary-sized side table is built, and
+  * every shuffle hash-partitions on a high-cardinality key (doc_id, term).
   */
 object TextPipeline {
 
@@ -50,19 +51,40 @@ object TextPipeline {
   /** A3: document frequency and IDF per term. `noLog = true` preserves the
     * reference's `idf = N/df` semantics (TF_IDF_Compute.java:232, no
     * logarithm); false gives the standard ln(N/df). Emits both columns. */
-  def idf(toks: DataFrame): DataFrame = {
-    val n = toks.agg(countDistinct(col("doc_id")).as("n_docs"))
+  def idf(toks: DataFrame): DataFrame =
     toks.groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"))
-      .crossJoin(broadcast(n))
-      .withColumn("idf_ref", col("n_docs").cast(DoubleType) / col("df").cast(DoubleType))
-      // rounded: ln() differs by 1 ulp between JVM and libm implementations
-      .withColumn("idf_log", round(log(col("idf_ref")), 10))
-  }
+      .crossJoin(broadcast(toks.agg(countDistinct(col("doc_id")).as("n_docs"))))
+      .withColumn("idf_ref", idfOf(ref = true))
+      .withColumn("idf_log", idfOf(ref = false))
 
-  /** J1: TF ⋈ broadcast IDF → tfidf = tf * idf (vocabulary-sized right side). */
+  /** J1: TF ⋈ broadcast IDF → tfidf = tf * idf (vocabulary-sized right side).
+    * The catalog's rows use [[tfidfOf]], which builds no such side table. */
   def tfidf(tfDF: DataFrame, idfDF: DataFrame, ref: Boolean = true): DataFrame =
     tfDF.join(broadcast(idfDF.select(col("term"), col(if (ref) "idf_ref" else "idf_log").as("idf"))), "term")
       .select(col("doc_id"), col("term"), (col("tf") * col("idf")).as("tfidf"))
+
+  /** A2 + A3 + J1 in one plan: (doc_id, term, tfidf) equal, double for
+    * double, to `tfidf(tf(termCounts(toks)), idf(toks), ref)`. Everything
+    * comes from the one (doc_id, term, cnt) count frame: `tf` is its
+    * `doc_id` window; `df` is a `term` window counting its rows (one row per
+    * (doc, term) pair, so no distinct count); `n_docs` counts its distinct
+    * `doc_id`s and is the only broadcast (one row). A duplicated `doc_id`
+    * is one document and a token-less document is none, as in the oracle's
+    * `COUNT(DISTINCT doc_id) FROM toks`. */
+  def tfidfOf(toks: DataFrame, ref: Boolean = true): DataFrame = {
+    val counts = termCounts(toks)
+    tf(counts)
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
+      .crossJoin(broadcast(counts.agg(countDistinct(col("doc_id")).as("n_docs"))))
+      .select(col("doc_id"), col("term"), (col("tf") * idfOf(ref)).as("tfidf"))
+  }
+
+  /** N/df, or its natural log rounded to 10 dp (ln() differs by 1 ulp
+    * between JVM and libm implementations), over `n_docs` and `df`. */
+  private def idfOf(ref: Boolean): Column = {
+    val ratio = col("n_docs").cast(DoubleType) / col("df").cast(DoubleType)
+    if (ref) ratio else round(log(ratio), 10)
+  }
 
   /** A4: stable vocabulary — (term, idx), idx fixed by lexicographic order.
     *
@@ -111,7 +133,7 @@ object TextPipeline {
     val docLen = counts.groupBy(col("doc_id")).agg(sum(col("cnt")).as("dl"))
     val stats = docLen.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
     val dfT = counts.filter(col("term").isInCollection(queryTerms))
-      .groupBy(col("term")).agg(countDistinct(col("doc_id")).as("df"))
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
     counts.filter(col("term").isInCollection(queryTerms))
       .join(broadcast(dfT), "term")
       .join(docLen, "doc_id")

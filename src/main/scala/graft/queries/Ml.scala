@@ -1,9 +1,11 @@
 package graft.queries
 
 import graft.QueryDef
+import graft.functions.Exprs.tokens
 import graft.ml.{Evaluate, Knn, NaiveBayes}
 import graft.operators.TextPipeline
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -78,10 +80,27 @@ object Ml {
         FROM scored) t
       WHERE rn = 1)"""
 
-  private def nbParts(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val toks = TextPipeline.tokenize(Tables(s, dir, "documents"), keep = Seq("doc_id", "lang"))
-      .withColumnRenamed("lang", "label")
-    (toks.filter(col("doc_id") % 10 =!= 0), toks.filter(col("doc_id") % 10 === 0))
+  /** The naive-Bayes rows' inputs, `doc_id % 10 = 0` the test split:
+    * training tokens (doc_id, label, term), test tokens (doc_id, term), and
+    * the oracle's `truth` (`DISTINCT doc_id, lang FROM test_toks`) read from
+    * the test documents that have at least one token, with no explode. */
+  private case class NbParts(train: DataFrame, test: DataFrame, truth: DataFrame)
+
+  private def nbParts(s: org.apache.spark.sql.SparkSession, dir: String): NbParts = {
+    val docs = Tables(s, dir, "documents")
+    val isTest = col("doc_id") % 10 === 0
+    NbParts(
+      train = TextPipeline.tokenize(docs.filter(!isTest), keep = Seq("doc_id", "lang"))
+        .withColumnRenamed("lang", "label"),
+      test = TextPipeline.tokenize(docs.filter(isTest)),
+      truth = docs.filter(isTest && size(tokens(col("text"))) > 0)
+        .select(col("doc_id"), col("lang").as("truth")).distinct())
+  }
+
+  /** (doc_id, pred, truth): the standard predictions joined to `truth`. */
+  private def nbScored(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
+    val p = nbParts(s, dir)
+    NaiveBayes.predict(p.test, NaiveBayes.train(p.train)).join(p.truth, "doc_id")
   }
 
   val defs: Seq[QueryDef] = Seq(
@@ -122,9 +141,8 @@ object Ml {
 
     QueryDef("q30_nb_predict",
       (s, dir) => {
-        val (train, test) = nbParts(s, dir)
-        val model = NaiveBayes.train(train)
-        NaiveBayes.predict(test.drop("label"), model)
+        val p = nbParts(s, dir)
+        NaiveBayes.predict(p.test, NaiveBayes.train(p.train))
       },
       oracle = Some(s"""
         WITH $nbCte
@@ -134,12 +152,7 @@ object Ml {
     // Evaluation beyond accuracy: the confusion matrix and per-class
     // precision/recall/F1 — the metrics a classifier user actually reads.
     QueryDef("q65_nb_confusion",
-      (s, dir) => {
-        val (train, test) = nbParts(s, dir)
-        val truth = test.select(col("doc_id"), col("label").as("truth")).distinct()
-        Evaluate.confusion(
-          NaiveBayes.predict(test.drop("label"), NaiveBayes.train(train)).join(truth, "doc_id"))
-      },
+      (s, dir) => Evaluate.confusion(nbScored(s, dir)),
       oracle = Some(s"""
         WITH $nbCte,
         truth AS (SELECT DISTINCT doc_id, lang FROM test_toks)
@@ -148,12 +161,7 @@ object Ml {
         GROUP BY 1, 2""")),
 
     QueryDef("q66_nb_class_metrics",
-      (s, dir) => {
-        val (train, test) = nbParts(s, dir)
-        val truth = test.select(col("doc_id"), col("label").as("truth")).distinct()
-        Evaluate.classMetrics(
-          NaiveBayes.predict(test.drop("label"), NaiveBayes.train(train)).join(truth, "doc_id"))
-      },
+      (s, dir) => Evaluate.classMetrics(nbScored(s, dir)),
       oracle = Some(s"""
         WITH $nbCte,
         truth AS (SELECT DISTINCT doc_id, lang FROM test_toks),
@@ -227,8 +235,8 @@ object Ml {
     // oracle row instead of living only behind a flag + ScalaTest.
     QueryDef("q68_nb_reference_compat",
       (s, dir) => {
-        val (train, test) = nbParts(s, dir)
-        NaiveBayes.predict(test.drop("label"), NaiveBayes.train(train), referenceCompat = true)
+        val p = nbParts(s, dir)
+        NaiveBayes.predict(p.test, NaiveBayes.train(p.train), referenceCompat = true)
       },
       oracle = Some(s"""
         WITH $nbCte,
@@ -251,12 +259,7 @@ object Ml {
         SELECT doc_id, pred FROM rc_pred""")),
 
     QueryDef("q31_nb_accuracy",
-      (s, dir) => {
-        val (train, test) = nbParts(s, dir)
-        val model = NaiveBayes.train(train)
-        val truth = test.select(col("doc_id"), col("label").as("truth")).distinct()
-        Evaluate.accuracy(NaiveBayes.predict(test.drop("label"), model).join(truth, "doc_id"))
-      },
+      (s, dir) => Evaluate.accuracy(nbScored(s, dir)),
       oracle = Some(s"""
         WITH $nbCte,
         truth AS (SELECT DISTINCT doc_id, lang FROM test_toks)
@@ -389,11 +392,7 @@ object Ml {
     QueryDef("q192_accuracy_ci",
       (s, dir) => {
         import graft.functions.Exprs
-        val (train, test) = nbParts(s, dir)
-        val model = NaiveBayes.train(train)
-        val truth = test.select(col("doc_id"), col("label").as("truth")).distinct()
-        val scored = NaiveBayes.predict(test.drop("label"), model)
-          .join(truth, "doc_id")
+        val scored = nbScored(s, dir)
           .select(col("doc_id"), (col("truth") === col("pred")).as("ok"))
         val full = scored.agg(
           expr("(1000000 * sum(case when ok then 1 else 0 end)) div count(1)")
@@ -459,11 +458,7 @@ object Ml {
     // throughout. One grouped count + a |groups|-sized array fold.
     QueryDef("q193_worst_group",
       (s, dir) => {
-        val (train, test) = nbParts(s, dir)
-        val model = NaiveBayes.train(train)
-        val truth = test.select(col("doc_id"), col("label").as("truth")).distinct()
-        val scored = NaiveBayes.predict(test.drop("label"), model)
-          .join(truth, "doc_id")
+        val scored = nbScored(s, dir)
           .select(col("truth").as("grp"), (col("truth") === col("pred")).as("ok"))
         val per = scored.groupBy(col("grp"))
           .agg(count(lit(1)).as("n"),

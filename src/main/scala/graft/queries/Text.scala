@@ -25,6 +25,10 @@ object Text {
   private def toks(s: org.apache.spark.sql.SparkSession, dir: String) =
     TextPipeline.tokenize(Tables(s, dir, "documents"))
 
+  /** q21's TF-IDF as the LSA rows' (doc_id, term, w) cell table. */
+  private def lsaCells(s: org.apache.spark.sql.SparkSession, dir: String) =
+    TextPipeline.tfidfOf(toks(s, dir)).select(col("doc_id"), col("term"), col("tfidf").as("w"))
+
   /** Name dictionary for q61 (P11): corpus words incl. nested/overlapping
     * entries ("spark" ⊃ "a", "sort"/"scan" share prefixes) so the query
     * genuinely exercises longest-match precedence — plus the PDF2 workload's
@@ -199,10 +203,7 @@ object Text {
         FROM toks GROUP BY 1""")),
 
     QueryDef("q21_tfidf",
-      (s, dir) => {
-        val t = toks(s, dir)
-        TextPipeline.tfidf(TextPipeline.tf(TextPipeline.termCounts(t)), TextPipeline.idf(t))
-      },
+      (s, dir) => TextPipeline.tfidfOf(toks(s, dir)),
       oracle = Some(s"""
         WITH $toksCte,
         counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -228,13 +229,7 @@ object Text {
     // The oracle unrolls all four rounds as CTEs on top of q21's TF-IDF
     // chain.
     QueryDef("q103_lsa_component",
-      (s, dir) => {
-        val t = toks(s, dir)
-        val cells = TextPipeline.tfidf(
-          TextPipeline.tf(TextPipeline.termCounts(t)), TextPipeline.idf(t))
-          .select(col("doc_id"), col("term"), col("tfidf").as("w"))
-        graft.ml.Lsa.topSingular(cells, iterations = 4)
-      },
+      (s, dir) => graft.ml.Lsa.topSingular(lsaCells(s, dir), iterations = 4),
       oracle = Some(s"""
         WITH $toksCte,
         counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -258,13 +253,7 @@ object Text {
     // across engines (all-ones start + the 12-dp ladder), so no sign
     // canonicalization is needed — the oracle replays the sign too.
     QueryDef("q105_lsa_second",
-      (s, dir) => {
-        val t = toks(s, dir)
-        val cells = TextPipeline.tfidf(
-          TextPipeline.tf(TextPipeline.termCounts(t)), TextPipeline.idf(t))
-          .select(col("doc_id"), col("term"), col("tfidf").as("w"))
-        graft.ml.Lsa.secondSingular(cells, iterations = 4)
-      },
+      (s, dir) => graft.ml.Lsa.secondSingular(lsaCells(s, dir), iterations = 4),
       oracle = Some(s"""
         WITH $toksCte,
         counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -293,13 +282,7 @@ object Text {
     // loops, not six. The oracle unrolls all THREE phases — 12 power-iteration rounds
     // plus two eigenvalue estimates — as CTEs.
     QueryDef("q109_lsa_topk",
-      (s, dir) => {
-        val t = toks(s, dir)
-        val cells = TextPipeline.tfidf(
-          TextPipeline.tf(TextPipeline.termCounts(t)), TextPipeline.idf(t))
-          .select(col("doc_id"), col("term"), col("tfidf").as("w"))
-        graft.ml.Lsa.topK(cells, k = 3, iterations = 4)
-      },
+      (s, dir) => graft.ml.Lsa.topK(lsaCells(s, dir), k = 3, iterations = 4),
       oracle = Some(s"""
         WITH $toksCte,
         counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -328,13 +311,7 @@ object Text {
     // matrix) — one term-keyed join + doc-grouped sum, component reused
     // from the session memo. The oracle appends one CTE to q103's chain.
     QueryDef("q119_lsa_doc_scores",
-      (s, dir) => {
-        val t = toks(s, dir)
-        val cells = TextPipeline.tfidf(
-          TextPipeline.tf(TextPipeline.termCounts(t)), TextPipeline.idf(t))
-          .select(col("doc_id"), col("term"), col("tfidf").as("w"))
-        graft.ml.Lsa.docScores(cells, iterations = 4)
-      },
+      (s, dir) => graft.ml.Lsa.docScores(lsaCells(s, dir), iterations = 4),
       oracle = Some(s"""
         WITH $toksCte,
         counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -357,8 +334,7 @@ object Text {
     QueryDef("q22_doc_vectors",
       (s, dir) => {
         val t = toks(s, dir)
-        val tfidf = TextPipeline.tfidf(TextPipeline.tf(TextPipeline.termCounts(t)), TextPipeline.idf(t))
-        TextPipeline.docVectors(tfidf, TextPipeline.vocab(t))
+        TextPipeline.docVectors(TextPipeline.tfidfOf(t), TextPipeline.vocab(t))
       },
       oracle = Some(s"""
         WITH $toksCte,
@@ -446,14 +422,10 @@ object Text {
 
     // The standard ln(N/df) IDF variant, driver-visible next to q21's
     // reference-compat N/df semantics (TF_IDF_Compute.java:232 omits the
-    // log; both live behind TextPipeline.idf's two columns). ln is rounded
+    // log; both live behind TextPipeline.tfidfOf's `ref`). ln is rounded
     // to 10 dp on both engines — the determinism contract for transcendentals.
     QueryDef("q69_tfidf_log",
-      (s, dir) => {
-        val t = toks(s, dir)
-        TextPipeline.tfidf(TextPipeline.tf(TextPipeline.termCounts(t)),
-          TextPipeline.idf(t), ref = false)
-      },
+      (s, dir) => TextPipeline.tfidfOf(toks(s, dir), ref = false),
       oracle = Some(s"""
         WITH $toksCte,
         counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),

@@ -51,11 +51,15 @@ class JobBudgetSpec extends SparkSpec {
     assert(n <= max, s"$name scheduled $n jobs, budget $max")
   }
 
-  test("q21_tfidf stays within its job budget") { budget("q21_tfidf", 9) }
+  test("q21_tfidf stays within its job budget") { budget("q21_tfidf", 7) }
 
   test("q29_knn_accuracy stays within its job budget") { budget("q29_knn_accuracy", 6) }
 
-  test("q30_nb_predict stays within its job budget") { budget("q30_nb_predict", 10) }
+  test("q30_nb_predict stays within its job budget") { budget("q30_nb_predict", 7) }
+
+  test("q31_nb_accuracy stays within its job budget") { budget("q31_nb_accuracy", 10) }
+
+  test("q65_nb_confusion stays within its job budget") { budget("q65_nb_confusion", 10) }
 
   test("q66_nb_class_metrics stays within its job budget, below the join form") {
     // q66 with the class metrics computed by the former union/join form
@@ -71,6 +75,6 @@ class JobBudgetSpec extends SparkSpec {
     val n = row("q66_nb_class_metrics")
     info(s"q66_nb_class_metrics: $n jobs (join form: $joinForm)")
     assert(n < joinForm, s"q66 scheduled $n jobs, the join form $joinForm")
-    assert(n <= 15, s"q66_nb_class_metrics scheduled $n jobs, budget 15")
+    assert(n <= 11, s"q66_nb_class_metrics scheduled $n jobs, budget 11")
   }
 }

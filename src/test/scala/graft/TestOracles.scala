@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Exprs.{cosinePre, dot, h60, mapCosine, shingles, tokens, vnorm}
-import graft.operators.{Dedup, Segment}
+import graft.operators.{Dedup, Segment, TextPipeline}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -70,6 +70,22 @@ object TestOracles {
         when(col("precision") + col("recall") === 0.0d, 0.0d)
           .otherwise(lit(2.0d) * col("precision") * col("recall") /
             (col("precision") + col("recall"))))
+  }
+
+  /** The catalog's TF-IDF before [[TextPipeline.tfidfOf]]: TF ⋈ broadcast
+    * IDF, the IDF from the token stream by distinct counts. */
+  def tfidfJoin(toks: DataFrame, ref: Boolean = true): DataFrame =
+    TextPipeline.tfidf(TextPipeline.tf(TextPipeline.termCounts(toks)), TextPipeline.idf(toks), ref)
+
+  /** The naive-Bayes rows' (train, test, truth) before `truth` left the
+    * token stream: all three from one labeled token frame over `docs`,
+    * `truth` its distinct (doc_id, label) test pairs. */
+  def nbPartsJoin(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
+    val toks = TextPipeline.tokenize(docs, keep = Seq("doc_id", "lang"))
+      .withColumnRenamed("lang", "label")
+    val test = toks.filter(col("doc_id") % 10 === 0)
+    (toks.filter(col("doc_id") % 10 =!= 0), test.drop("label"),
+      test.select(col("doc_id"), col("label").as("truth")).distinct())
   }
 
   /** `NaiveBayes`' model before it was fitted on the driver: lazy frames,

@@ -55,6 +55,65 @@ class VecDsumSpec extends SparkSpec {
     assert(a == b)
   }
 
+  /** `body` with `spark.sql.ansi.enabled` set to `ansi`, restored after. */
+  private def withAnsi[T](ansi: Boolean)(body: => T): T = {
+    val key = "spark.sql.ansi.enabled"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, ansi)
+    try body finally spark.conf.set(key, prev)
+  }
+
+  /** Slot values of VecDsum and of the posexplode + dsum form over one row
+    * `xs` with coef 1 (null slots as None), or the error class each threw. */
+  private def bothForms(xs: Seq[Double]): (Either[String, Seq[Option[Double]]], Either[String, Seq[Option[Double]]]) = {
+    def run(f: => Seq[Option[Double]]): Either[String, Seq[Option[Double]]] =
+      try Right(f) catch {
+        case e: Exception =>
+          val errs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          Left(errs.collectFirst { case t: org.apache.spark.SparkThrowable => t.getCondition }
+            .getOrElse(e.toString))
+      }
+    val df = Seq(Tuple1(xs.toArray)).toDF("x")
+    val dsumForm = run(df.select(posexplode(col("x")).as(Seq("pos", "xj")))
+      .groupBy(col("pos")).agg(Exprs.dsum(round(col("xj") * lit(1.0d), 12), 12).as("s"))
+      .orderBy(col("pos")).select(col("s")).as[Option[Double]].collect().toSeq)
+    val vec = run(df.agg(VecDsum(col("x"), lit(1.0d)).as("s"))
+      .select(posexplode(col("s"))).select(col("col")).as[Option[Double]].collect().toSeq)
+    (dsumForm, vec)
+  }
+
+  test("VecDsum and the dsum form agree on x = [1.0, 1e19] with ANSI off and on") {
+    val off = withAnsi(false)(bothForms(Seq(1.0, 1e19)))
+    assert(off == ((Right(Seq(Some(1.0), None)), Right(Seq(Some(1.0), None)))))
+    val on = withAnsi(true)(bothForms(Seq(1.0, 1e19)))
+    assert(on._1 == on._2 && on._1.left.exists(_.startsWith("NUMERIC_VALUE_OUT_OF_RANGE")), on)
+  }
+
+  test("VecDsum and the dsum form skip NaN and Infinity addends with ANSI off and on") {
+    for (ansi <- Seq(false, true)) {
+      val (dsumForm, vec) =
+        withAnsi(ansi)(bothForms(Seq(1.0, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)))
+      assert(dsumForm == Right(Seq(Some(1.0), None, None, None)), s"ansi=$ansi")
+      assert(vec == dsumForm, s"ansi=$ansi")
+    }
+  }
+
+  test("the slot buffer throws the ANSI error on a sum past decimal(38, 12)") {
+    val big = new DecimalSlots(square = false, ansi = true)
+    big.grow(1)
+    big.add(0, 0, 9e17)
+    (1 to 20).foreach(_ => big.mergeWith(big))
+    assert(big.result() != null)
+    (1 to 15).foreach(_ => big.mergeWith(big))
+    val e = intercept[ArithmeticException](big.result())
+    assert(e.asInstanceOf[org.apache.spark.SparkThrowable].getCondition
+      .startsWith("NUMERIC_VALUE_OUT_OF_RANGE"))
+    // the aggregate captures the mode when the plan is built
+    val x = Seq(Tuple1(Array(1.0, 1e19))).toDF("x")
+    val built = withAnsi(false)(x.agg(VecDsum(col("x"), lit(1.0d))))
+    assert(withAnsi(true)(built.as[Seq[Option[Double]]].head()) == Seq(Some(1.0), None))
+  }
+
   test("OuterDsum equals the exploded (i, j, p) covariance form, slot by slot") {
     import org.apache.spark.sql.types.LongType
     val rnd = new scala.util.Random(5)
