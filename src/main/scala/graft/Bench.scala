@@ -211,13 +211,10 @@ object Bench {
     // SPARK_GRAFT_SHUFFLE_PARTITIONS: cluster-shape probe knob (SCALING.md
     // partition-count section) — the driver's runs keep the default 32.
     val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", shufflePartitions)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+    // NB: driver heap can't be set here (the JVM is already running in
+    // local mode) — pass -J-Xmx/JAVA_OPTS at launch instead
+    def newSession(): SparkSession =
+      Session.local(cpus, shufflePartitions, conf = Map(
         // Codegen class cache sized to the catalog (static conf, default
         // 100): with ~170 interleaved queries, a row's generated classes
         // evict between its own slots, so without a same-query prime every
@@ -227,13 +224,7 @@ object Bench {
         // numbers were codegen-warm by construction (each timed pass ran
         // right after its prime); sizing the cache to hold every row's
         // classes preserves those semantics with the prime skipped.
-        .config("spark.sql.codegen.cache.maxEntries", "4096")
-        // NB: driver heap can't be set here (the JVM is already running in
-        // local mode) — pass -J-Xmx/JAVA_OPTS at launch instead
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
+        "spark.sql.codegen.cache.maxEntries" -> "4096"))
     var spark = newSession()
 
     def runOnce(q: QueryDef): Double = {

@@ -124,14 +124,7 @@ object ScalingProbe {
       s"/tmp/graft_scale_probe_${new java.io.File(baseDir).getName}_x$factor")
     val vgDir = s"${outDir}_vocabgrow"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus, "32")
     replicate(spark, baseDir, outDir, factor)
     replicateVocabGrow(spark, baseDir, vgDir, factor)
 
@@ -758,7 +751,7 @@ object ScalingProbe {
       def recallAt(dir: String): (Double, Double, Long) = {
         val emb = graft.sources.Tables(spark, dir, "embeddings")
         val exact = Caching.pin(
-          graft.operators.Similarity.bruteTopKAgg(emb, emb, 10, broadcastQueries = false)
+          graft.operators.Similarity.bruteTopK(emb, emb, 10)
             .select(col("q_id"), col("n_id")))
         val n = exact.count()
         def rec(approx: DataFrame): Double =

@@ -4,7 +4,6 @@ import graft.functions.Exprs._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** kNN classifier (SURVEY.md §2.3 J3 + §2.5 T2 + §2.4 A8): broadcast
   * cross-join similarity kernel → per-query top-k → majority vote.
@@ -13,14 +12,15 @@ import org.apache.spark.sql.types.LongType
   * (KNNMapper.java:52-74) and hand-maintains a k-best array (:147-159).
   * Here the train side is an explicit `broadcast` (Spark plans a
   * BroadcastNestedLoopJoin — the same replicated-join shape, but spillable
-  * and columnar), and top-k is a rank window partitioned by query. The test
-  * side streams through the join on every core: it is hash-partitioned on
-  * the query id into `defaultParallelism` partitions first (see [[spread]]);
-  * a one-row-group parquet file would otherwise be one task.
+  * and columnar), and top-k is the engine's bounded heap ([[TopK.topK]]),
+  * which carries each neighbor's label through the ranking. The test side
+  * streams through the join on every core: it is hash-partitioned on the
+  * query id into `defaultParallelism` partitions first (see [[spread]]); a
+  * one-row-group parquet file would otherwise be one task.
   *
   * Scale path: for train sets beyond broadcast size, swap the kernel for the
-  * LSH-bucketed candidate join in [[graft.operators.Similarity]] — same
-  * downstream top-k/vote plan.
+  * LSH-bucketed candidate join ([[classifyLsh]]) — same downstream
+  * top-k/vote plan.
   *
   * Similarities are rounded to 6 dp *before* ranking so that rank order (and
   * therefore the result set) is identical across engines and run-to-run; ties
@@ -30,49 +30,34 @@ object Knn {
 
   /** Top-k neighbors of each test row among train rows by cosine similarity
     * over double-array `vec` columns. Output: (q_id, n_id, n_label, sim, rk). */
-  def neighbors(test: DataFrame, train: DataFrame, k: Int): DataFrame = {
-    // norms per ROW on both join inputs (one dot per pair instead of three;
-    // sims bit-identical — Exprs.cosinePre)
-    val t = spread(test.select(col("id").as("q_id"), col("vec").as("q_vec")))
-      .withColumn("q_nrm", vnorm(col("q_vec")))
-    val tr = train.select(col("id").as("n_id"), col("label").as("n_label"), col("vec").as("n_vec"))
-      .withColumn("n_nrm", vnorm(col("n_vec")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
-    t.crossJoin(broadcast(tr))
-      .withColumn("sim", round(cosinePre(dot(col("q_vec"), col("n_vec")),
-        col("q_nrm"), col("n_nrm")), 6))
-      .withColumn("rk", row_number().over(w).cast(LongType))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("n_id"), col("n_label"), col("sim"), col("rk"))
-  }
+  def neighbors(test: DataFrame, train: DataFrame, k: Int): DataFrame =
+    TopK.topK(spread(test.select(col("id").as("q_id"), col("vec").as("q_vec"))),
+      train.select(col("id").as("n_id"), col("label").as("n_label"), col("vec").as("n_vec")),
+      k, TopK.Cosine)
 
   /** Top-k neighbors over sparse MapType(idx → weight) feature columns — the
     * reference's own vector representation (KNNMapper.java:20). Same plan
-    * shape as [[neighbors]], kernel swapped for [[mapCosine]]. */
-  def neighborsSparse(test: DataFrame, train: DataFrame, k: Int): DataFrame = {
-    val t = spread(test.select(col("id").as("q_id"), col("features").as("q_f")))
-    val tr = train.select(col("id").as("n_id"), col("label").as("n_label"), col("features").as("n_f"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
-    t.crossJoin(broadcast(tr))
-      .withColumn("sim", round(mapCosine(col("q_f"), col("n_f")), 6))
-      .withColumn("rk", row_number().over(w).cast(LongType))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("n_id"), col("n_label"), col("sim"), col("rk"))
-  }
+    * shape as [[neighbors]], score swapped for [[TopK.SparseCosine]]. */
+  def neighborsSparse(test: DataFrame, train: DataFrame, k: Int): DataFrame =
+    TopK.topK(spread(test.select(col("id").as("q_id"), col("features").as("q_vec"))),
+      train.select(col("id").as("n_id"), col("label").as("n_label"), col("features").as("n_vec")),
+      k, TopK.SparseCosine)
 
   /** The query side of a broadcast cross-join, spread over all cores. The
     * join does |test|×|train| work in the tasks of the test side's stage, so
     * the test side is hash-partitioned on `q_id` into `defaultParallelism`
     * partitions: the shuffle moves |test| rows, and the per-query top-k
-    * window and the vote, both clustered on `q_id`, need no further
+    * heap and the vote, both clustered on `q_id`, need no further
     * exchange. AQE does not coalesce a repartition by number. */
   private def spread(t: DataFrame): DataFrame =
     t.repartition(t.sparkSession.sparkContext.defaultParallelism, col("q_id"))
 
+  /** The engine's one kNN rank window: it ranks string labels by vote
+    * count, not LONG ids, so the heap's (score, id) order does not apply. */
   private def vote(nbrs: DataFrame): DataFrame = {
     val votes = nbrs.groupBy(col("q_id"), col("n_label")).agg(count(lit(1)).as("votes"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("votes").desc, col("n_label").asc)
-    votes.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+    val byVotes = Window.partitionBy(col("q_id")).orderBy(col("votes").desc, col("n_label").asc)
+    votes.withColumn("rn", row_number().over(byVotes)).filter(col("rn") === 1)
       .select(col("q_id"), col("n_label").as("pred"))
   }
 
@@ -124,30 +109,18 @@ object Knn {
     val first = tr.select(size(col("n_vec")).as("d")).head(1)
     require(first.nonEmpty, "classifyLsh: empty train set")
     val dim = first.head.getInt(0)
-    // flip masks for multi-probing: 0 (the exact bucket) plus each single bit
-    val probeMasks = array((lit(0L) +: (0 until planes).map(p => lit(1L << p))): _*)
-    def buckets(df: DataFrame, idCol: String, vecCol: String, probe: Boolean): DataFrame = {
-      val q = df.select(col(idCol), Similarity.quantize(col(vecCol)).as("qv"))
-      (0 until reps).map { r =>
-        val base = q.select(col(idCol), Similarity.lshBucket(col("qv"), planes, r, dim).as("b0"))
-        val b =
-          if (!probe) base.select(col(idCol), col("b0").as("b"))
-          else base.select(col(idCol), col("b0"), explode(probeMasks).as("m"))
-            .select(col(idCol), col("b0").bitwiseXOR(col("m")).as("b"))
-        b.select(col(idCol), (col("b") + lit(r.toLong << planes)).as("bucket"))
-      }.reduce(_ unionByName _)
-    }
+    def buckets(df: DataFrame, idCol: String, vecCol: String, probe: Boolean): DataFrame =
+      Similarity.lshBuckets(df.select(col(idCol), Similarity.quantize(col(vecCol)).as("qv")),
+        idCol, planes, reps, dim, probe)
     val cand = buckets(t, "q_id", "q_vec", probe = true)
       .join(buckets(tr, "n_id", "n_vec", probe = false), "bucket")
       // ids only through the distinct shuffle — vectors re-attach below
       .select(col("q_id"), col("n_id")).distinct()
+    // the label rides the heap to the vote: no join after ranking
     val scored = cand
       .join(t, "q_id")
-      .join(tr.select(col("n_id"), col("n_vec"), col("n_nrm")), "n_id")
-      .select(col("q_id"), col("n_id"), round(cosinePre(dot(col("q_vec"), col("n_vec")),
-        col("q_nrm"), col("n_nrm")), 6).as("sim"))
-    val top = TopK.ranked(scored, Seq("q_id"), "n_id", "sim", k)
-      .select(col("q_id"), col("n_id"))
-    vote(top.join(tr.select(col("n_id"), col("n_label")), "n_id"))
+      .join(tr, "n_id")
+      .select(col("q_id"), col("n_id"), col("n_label"), TopK.Cosine.ranking.as("sim"))
+    vote(TopK.ranked(scored, Seq("q_id"), "n_id", "sim", k))
   }
 }

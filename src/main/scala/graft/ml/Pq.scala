@@ -2,9 +2,8 @@ package graft.ml
 
 import graft.Par.ParOps
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.apache.spark.storage.StorageLevel
 
 /** Product quantization (Jégou, Douze, Schmid 2011, "Product Quantization
@@ -75,14 +74,13 @@ object Pq {
     require(iterations >= 0, s"Pq iterations must be >= 0, got $iterations")
     val sv = subSlices(emb.select(col("vec_id"), col("vec")), m)
       .compacted.persist(StorageLevel.MEMORY_AND_DISK)
-    // k·m seed rows through the per-sub rank window (the corpus never does)
-    val seedW = Window.partitionBy(col("sub_id")).orderBy(col("vec_id").asc)
-    var codebooks: DataFrame =
-      subSlices(emb.select(col("vec_id"), col("vec")).orderBy(col("vec_id").asc).limit(k), m)
-        .select(col("sub_id"),
-          row_number().over(seedW).cast(LongType).as("centroid_id"),
-          col("sv").as("centroid"))
-        .compacted.localCheckpoint(eager = true)
+    // k·m seed rows numbered per sub through the heap (the corpus never
+    // is): rank by −vec_id, exact in a double below 2^53
+    val seeds = subSlices(emb.select(col("vec_id"), col("vec")).orderBy(col("vec_id").asc).limit(k), m)
+      .select(col("sub_id"), col("vec_id"), negate(col("vec_id").cast(DoubleType)).as("s"), col("sv"))
+    var codebooks: DataFrame = TopK.ranked(seeds, Seq("sub_id"), "vec_id", "s", k)
+      .select(col("sub_id"), col("rk").as("centroid_id"), col("sv").as("centroid"))
+      .compacted.localCheckpoint(eager = true)
     for (_ <- 1 to iterations) {
       codebooks = assignCodes(sv, codebooks)
         .select(col("sub_id"), col("centroid_id"), posexplode(col("sv")).as(Seq("pos", "x")))
@@ -111,9 +109,11 @@ object Pq {
 
   /** The k nearest per `keys` group of (keys…, n_id, d2) pair rows, ranked
     * by (d2 asc, n_id asc) through the bounded heap: it keeps the LARGEST
-    * scores, so d2 is negated in and out. Output: keys ++ (n_id, d2, rk). */
+    * scores, so d2 is negated in and out. Other pair columns are dropped.
+    * Output: keys ++ (n_id, d2, rk). */
   private def nearest(keys: Seq[String], k: Int)(pairs: DataFrame): DataFrame =
-    TopK.ranked(pairs.withColumn("d2", -col("d2")), keys, "n_id", "d2", k)
+    TopK.ranked(pairs.select(keys.map(col) :+ col("n_id") :+ (-col("d2")).as("d2"): _*),
+        keys, "n_id", "d2", k)
       .withColumn("d2", round(-col("d2"), 6))
 
   /** Asymmetric-distance top-k: for each query vector, the k nearest CODES
@@ -155,14 +155,10 @@ object Pq {
     * fixed query sample at any corpus scale — here the q164 1 % sample).
     * Tie-break (d2 asc at 6 dp, n_id asc) — identical to [[ivfPqTopK]] and
     * [[adcTopK]], so recall/MRR cards comparing the two are bit-portable. */
-  def bruteL2TopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val l2 = graft.functions.Exprs.sqdist(col("q_vec"), col("n_vec"))
-    corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec"))
-      .crossJoin(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))))
-      .filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), round(l2, 6).as("d2"))
-      .transform(nearest(Seq("q_id"), k))
-  }
+  def bruteL2TopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    TopK.topK(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec")),
+      corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec")), k, TopK.L2,
+      col("q_id") =!= col("n_id"), TopK.Queries)
 
   /** ADC + exact re-rank (the paper's IVFADC+R refinement, §VII): the code
     * table prunes the corpus to a `shortlist`-size candidate set per query,
@@ -174,14 +170,28 @@ object Pq {
     * stages on the same corpus). */
   def adcRerankTopK(queries: DataFrame, codes: DataFrame, codebooks: DataFrame,
                     corpus: DataFrame, m: Int, kc: Int, shortlist: Int, k: Int): DataFrame = {
-    val l2 = graft.functions.Exprs.sqdist(col("q_vec"), col("n_vec"))
-    adcTopK(queries, codes, codebooks, m, kc, shortlist)
-      .select(col("q_id"), col("n_id"))
-      .join(corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec")), "n_id")
-      .join(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))), "q_id")
-      .select(col("q_id"), col("n_id"), round(l2, 6).as("d2"))
-      .transform(nearest(Seq("q_id"), k))
+    trueL2(adcTopK(queries, codes, codebooks, m, kc, shortlist).select(col("q_id"), col("n_id")),
+      queries, corpus).transform(nearest(Seq("q_id"), k))
   }
+
+  /** Candidate (q_id, n_id, …) rows with their true squared-L2 distance
+    * `d2` at 6 dp: the full vectors re-attach by id, the queries broadcast. */
+  private def trueL2(cands: DataFrame, queries: DataFrame, corpus: DataFrame): DataFrame =
+    cands.join(corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec")), "n_id")
+      .join(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))), "q_id")
+      .withColumn("d2", round(graft.functions.Exprs.sqdist(col("q_vec"), col("n_vec")), 6))
+
+  /** Each query's `nprobe` nearest coarse cells by (squared L2 asc,
+    * centroid_id asc) through the heap: (q_id, vec, centroid_id, rk,
+    * centroid). The query vector is a grouping key, so it rides along; the
+    * centroid re-attaches from the broadcast coarse table. */
+  private def probes(queries: DataFrame, coarse: DataFrame, nprobe: Int): DataFrame =
+    TopK.ranked(queries.select(col("vec_id").as("q_id"), col("vec"))
+        .crossJoin(broadcast(coarse))
+        .select(col("q_id"), col("vec"), col("centroid_id"),
+          negate(graft.functions.Exprs.sqdist(col("vec"), col("centroid"))).as("nd2")),
+        Seq("q_id", "vec"), "centroid_id", "nd2", nprobe)
+      .join(broadcast(coarse), "centroid_id")
 
   /** IVF-PQ (Jégou, Douze & Schmid, "Product quantization for nearest
     * neighbor search", TPAMI 2011, §V — the IVFADC system): a coarse
@@ -202,49 +212,7 @@ object Pq {
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, kCoarse: Int, coarseIter: Int,
                 m: Int, kc: Int, pqIter: Int, nprobe: Int, k: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= kCoarse, s"need 1 <= nprobe <= kCoarse, got $nprobe/$kCoarse")
-    val e = corpus.select(col("vec_id"), col("vec"))
-    val coarse = KMeans.fit(e, kCoarse, coarseIter).compacted.localCheckpoint(eager = true)
-    // residual corpus: one cell per vector, r = v − centroid(cell)
-    val res = KMeans.assign(e, coarse)
-      .join(broadcast(coarse), "centroid_id")
-      .select(col("vec_id"), col("centroid_id").as("cell"),
-        zip_with(col("vec"), col("centroid"), (x, c) => x - c).as("vec"))
-      .compacted.localCheckpoint(eager = true)
-    val codebooks = fit(res.select(col("vec_id"), col("vec")), m, kc, pqIter)
-    val codes = encode(res.select(col("vec_id"), col("vec")), codebooks, m)
-      .join(res.select(col("vec_id"), col("cell")), "vec_id")
-      .compacted.localCheckpoint(eager = true)
-    // probe list: each query's nprobe nearest coarse cells + residual query
-    val qd2 = graft.functions.Exprs.sqdist(col("vec"), col("centroid"))
-    val qw = Window.partitionBy(col("q_id")).orderBy(col("d2").asc, col("centroid_id").asc)
-    val qr = queries.select(col("vec_id").as("q_id"), col("vec"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("d2", qd2)
-      .withColumn("rn", row_number().over(qw))
-      .filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("centroid_id").as("cell"),
-        zip_with(col("vec"), col("centroid"), (x, c) => x - c).as("rv"))
-    // per-(query, cell) ADC lookup tables over the residual query's slices
-    val sd2 = graft.functions.Exprs.sqdist(col("sv"), col("centroid"))
-    val dtab = qr
-      .select(col("q_id"), col("cell"), col("rv"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub_id"))
-      .select(col("q_id"), col("cell"), col("sub_id"),
-        expr(s"slice(rv, sub_id * (size(rv) DIV $m) + 1, size(rv) DIV $m)").as("sv"))
-      .join(broadcast(codebooks), "sub_id")
-      .select(col("q_id"), col("cell"), col("sub_id"), col("centroid_id"), sd2.as("d2"))
-      .groupBy(col("q_id"), col("cell"))
-      .agg(map_from_entries(array_sort(collect_list(struct(
-        (col("sub_id").cast(LongType) * kc + col("centroid_id")).cast("int").as("key"),
-        col("d2").as("value"))))).as("dt"))
-    val dist = (0 until m).map { s =>
-      element_at(col("dt"), (lit(s.toLong * kc) + element_at(col("codes"), s + 1)).cast("int"))
-    }.reduce(_ + _)
-    // the IVF win: codes meet probe lists by CELL — an equi join, never a
-    // full-index scan; ~nprobe/kCoarse of the codes are touched per query
-    codes.join(dtab, "cell")
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("n_id"), round(dist, 6).as("d2"))
+    ivfPqCandidates(queries, corpus, kCoarse, coarseIter, m, kc, pqIter, nprobe)
       .transform(nearest(Seq("q_id"), k))
   }
 
@@ -262,9 +230,23 @@ object Pq {
                      nprobes: Seq[Int], k: Int): DataFrame = {
     require(nprobes.nonEmpty && nprobes.forall(np => np >= 1 && np <= kCoarse),
       s"need nprobes within 1..$kCoarse, got $nprobes")
-    val npMax = nprobes.max
+    val nps = nprobes.map(np => lit(np.toLong))
+    ivfPqCandidates(queries, corpus, kCoarse, coarseIter, m, kc, pqIter, nprobes.max)
+      .select(col("q_id"), col("rn"), col("n_id"), col("d2"),
+        explode(array(nps: _*)).as("nprobe"))
+      .filter(col("rn") <= col("nprobe"))
+      .transform(nearest(Seq("nprobe", "q_id"), k))
+  }
+
+  /** The IVF-PQ candidates of [[ivfPqTopK]] at `nprobe`: (q_id, rn, n_id,
+    * d2), rn the candidate's cell rank among the query's probes and d2 the
+    * 6-dp ADC distance over the residual query. */
+  private def ivfPqCandidates(queries: DataFrame, corpus: DataFrame, kCoarse: Int,
+                              coarseIter: Int, m: Int, kc: Int, pqIter: Int,
+                              nprobe: Int): DataFrame = {
     val e = corpus.select(col("vec_id"), col("vec"))
     val coarse = KMeans.fit(e, kCoarse, coarseIter).compacted.localCheckpoint(eager = true)
+    // residual corpus: one cell per vector, r = v − centroid(cell)
     val res = KMeans.assign(e, coarse)
       .join(broadcast(coarse), "centroid_id")
       .select(col("vec_id"), col("centroid_id").as("cell"),
@@ -274,15 +256,11 @@ object Pq {
     val codes = encode(res.select(col("vec_id"), col("vec")), codebooks, m)
       .join(res.select(col("vec_id"), col("cell")), "vec_id")
       .compacted.localCheckpoint(eager = true)
-    val qd2 = graft.functions.Exprs.sqdist(col("vec"), col("centroid"))
-    val qw = Window.partitionBy(col("q_id")).orderBy(col("d2").asc, col("centroid_id").asc)
-    val qr = queries.select(col("vec_id").as("q_id"), col("vec"))
-      .crossJoin(broadcast(coarse))
-      .withColumn("d2", qd2)
-      .withColumn("rn", row_number().over(qw))
-      .filter(col("rn") <= npMax)
-      .select(col("q_id"), col("centroid_id").as("cell"), col("rn").cast(LongType).as("rn"),
+    // probe list: each query's nprobe nearest coarse cells + residual query
+    val qr = probes(queries, coarse, nprobe)
+      .select(col("q_id"), col("centroid_id").as("cell"), col("rk").as("rn"),
         zip_with(col("vec"), col("centroid"), (x, c) => x - c).as("rv"))
+    // per-(query, cell) ADC lookup tables over the residual query's slices
     val sd2 = graft.functions.Exprs.sqdist(col("sv"), col("centroid"))
     val dtab = qr
       .select(col("q_id"), col("cell"), col("rn"), col("rv"),
@@ -298,14 +276,11 @@ object Pq {
     val dist = (0 until m).map { s =>
       element_at(col("dt"), (lit(s.toLong * kc) + element_at(col("codes"), s + 1)).cast("int"))
     }.reduce(_ + _)
-    val nps = nprobes.map(np => lit(np.toLong))
+    // the IVF win: codes meet probe lists by CELL — an equi join, never a
+    // full-index scan; ~nprobe/kCoarse of the codes are touched per query
     codes.join(dtab, "cell")
       .filter(col("q_id") =!= col("vec_id"))
       .select(col("q_id"), col("rn"), col("vec_id").as("n_id"), round(dist, 6).as("d2"))
-      .select(col("q_id"), col("rn"), col("n_id"), col("d2"),
-        explode(array(nps: _*)).as("nprobe"))
-      .filter(col("rn") <= col("nprobe"))
-      .transform(nearest(Seq("nprobe", "q_id"), k))
   }
 
   /** IVF-PQ + exact re-rank (the TPAMI'11 §VII refinement applied to the
@@ -332,12 +307,8 @@ object Pq {
     val adc = ivfPqTopK(queries, corpus, kCoarse, coarseIter, m, kc, pqIter,
         nprobe, slMax)
       .select(col("q_id"), col("n_id"), col("rk").as("adc_rk"))
-    val l2 = graft.functions.Exprs.sqdist(col("q_vec"), col("n_vec"))
     val sls = shortlists.map(s => lit(s.toLong))
-    adc
-      .join(corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec")), "n_id")
-      .join(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))), "q_id")
-      .select(col("q_id"), col("adc_rk"), col("n_id"), round(l2, 6).as("d2"))
+    trueL2(adc, queries, corpus)
       .select(col("q_id"), col("adc_rk"), col("n_id"), col("d2"),
         explode(array(sls: _*)).as("shortlist"))
       .filter(col("adc_rk") <= col("shortlist"))
@@ -348,12 +319,7 @@ object Pq {
                       m: Int, kc: Int, pqIter: Int, nprobe: Int,
                       shortlist: Int, k: Int): DataFrame = {
     require(shortlist >= k, s"need shortlist >= k, got $shortlist/$k")
-    val l2 = graft.functions.Exprs.sqdist(col("q_vec"), col("n_vec"))
-    ivfPqTopK(queries, corpus, kCoarse, coarseIter, m, kc, pqIter, nprobe, shortlist)
-      .select(col("q_id"), col("n_id"))
-      .join(corpus.select(col("vec_id").as("n_id"), col("vec").as("n_vec")), "n_id")
-      .join(broadcast(queries.select(col("vec_id").as("q_id"), col("vec").as("q_vec"))), "q_id")
-      .select(col("q_id"), col("n_id"), round(l2, 6).as("d2"))
-      .transform(nearest(Seq("q_id"), k))
+    trueL2(ivfPqTopK(queries, corpus, kCoarse, coarseIter, m, kc, pqIter, nprobe, shortlist)
+      .select(col("q_id"), col("n_id")), queries, corpus).transform(nearest(Seq("q_id"), k))
   }
 }

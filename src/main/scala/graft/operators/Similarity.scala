@@ -2,17 +2,20 @@ package graft.operators
 
 import graft.Par.ParOps
 import graft.functions.Exprs._
+import graft.ml.TopK
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Similarity search over embedding columns (Array[Float] → double math).
   *
-  * `bruteTopK` is the exact baseline: broadcast the corpus, rank per query
-  * through a window. `bruteTopKAgg` (and `hardNegativeTopK`, `rrfFuse`)
-  * rank the same way through the bounded heap [[graft.ml.TopK.ranked]], so
-  * at most k rows per query reach the shuffle.
+  * `bruteTopK` is the exact baseline and `hardNegativeTopK` its label-
+  * filtered twin: both are one call of the exact top-k operator
+  * [[graft.ml.TopK.topK]], which broadcasts one side and ranks through the
+  * bounded heap, so at most k rows per query reach the shuffle. Every other
+  * ranking here (`ivfTopK`, `lshTopK`, `rrfFuse`, `mmrRerank`, the
+  * `nearDupPairs` block cap) goes through the same heap,
+  * [[graft.ml.TopK.ranked]]; none is a rank window.
   * `lshTopK` is a scale path: random-hyperplane sign-LSH buckets bound the
   * candidate set, then exact cosine re-ranks within buckets — the candidate
   * join is on the bucket key, so cost is Σ bucket² instead of n².
@@ -43,11 +46,14 @@ object Similarity {
                    maxBlock: Int = 10000): DataFrame = {
     val e = emb.select(col("vec_id"), col(blockCol).as("block"),
       col("embedding").cast("array<double>").as("vec"))
-    val w = Window.partitionBy(col("block")).orderBy(col("vec_id").asc)
+    // each block's maxBlock lowest ids through the heap: score −vec_id is
+    // exact in a double below 2^53
+    val members = TopK.ranked(e.select(col("block"), col("vec_id"),
+        negate(col("vec_id").cast(DoubleType)).as("s")), Seq("block"), "vec_id", "s", maxBlock)
+      .select(col("block"), col("vec_id"))
     // norm per ROW before the self-join: the pair kernel then computes one
     // dot instead of three — bit-identical sims (Exprs.cosinePre contract)
-    val capped = e.withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= maxBlock).drop("rn")
+    val capped = e.join(members, Seq("block", "vec_id"), "left_semi")
       .withColumn("nrm", vnorm(col("vec")))
     capped.as("a").join(capped.as("b"),
       col("a.block") === col("b.block") && col("a.vec_id") < col("b.vec_id"))
@@ -110,53 +116,29 @@ object Similarity {
       .otherwise(transform(vec, x => round(x / s * lit(127.0d), 0).cast(LongType)))
   }
 
-  /** One side of an exact cosine top-k: (`p`_id, `p`_carry…, `p`_vec,
-    * `p`_nrm). Norms per ROW on both join inputs, so the pair kernel pays
-    * one dot instead of three; sims bit-identical (Exprs.cosinePre). */
-  private def normed(df: DataFrame, p: String, carry: String*): DataFrame =
+  /** One side of an exact cosine top-k over an embeddings frame:
+    * (`p`_id, `p`_carry…, `p`_vec). */
+  private def side(df: DataFrame, p: String, carry: String*): DataFrame =
     df.select((col("vec_id").as(s"${p}_id") +: carry.map(c => col(c).as(s"${p}_$c")) :+
         col("embedding").cast("array<double>").as(s"${p}_vec")): _*)
-      .withColumn(s"${p}_nrm", vnorm(col(s"${p}_vec")))
-
-  /** The 6-dp cosine of a (q_, n_) pair row built from two [[normed]] sides. */
-  private val pairSim: Column =
-    round(cosinePre(dot(col("q_vec"), col("n_vec")), col("q_nrm"), col("n_nrm")), 6)
 
   /** Exact brute-force top-k: for each query row, the k most-cosine-similar
-    * corpus rows (self excluded). Corpus side is broadcast. */
-  def bruteTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
-    normed(queries, "q").crossJoin(broadcast(normed(corpus, "n")))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("sim", pairSim)
-      .withColumn("rk", row_number().over(w).cast(LongType))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"), col("rk"))
-  }
-
-  /** [[bruteTopK]]'s scale twin through the bounded heap
-    * ([[graft.ml.TopK.ranked]]): identical output contract (sim 6 dp, rank by
-    * sim desc / id asc, rk ≤ k), but where the window form shuffles EVERY
-    * scored candidate row to rank it, this partial-aggregates map-side so at
-    * most k rows per query reach the shuffle — |queries|·k shuffle volume
-    * instead of |queries|·|corpus|, the difference that matters at 100 TB.
+    * corpus rows (self excluded), ranked (sim desc at 6 dp, n_id asc).
+    * Output: (q_id, n_id, sim, rk).
     *
-    * `broadcastQueries` picks the replicated side; the rows are the same
-    * either way. `false` broadcasts the corpus — right when the corpus IS
-    * small (q62's full-eval posture on a suite-bounded frame, q197, q153).
-    * `true` broadcasts the query panel and streams the corpus — right when
-    * the queries are a fixed-size sample and the corpus is the thing that
-    * grows (the q208 64-query panel at 100 TB: a 64-row broadcast against a
-    * streaming corpus keeps the plan corpus-linear with no O(n) replication
-    * anywhere — ADVICE r11; the [[graft.ml.Pq.bruteL2TopK]] geometry).
-    * Oracle-shared with q37. */
-  def bruteTopKAgg(queries: DataFrame, corpus: DataFrame, k: Int,
-                   broadcastQueries: Boolean): DataFrame = {
-    val (q, c) = (normed(queries, "q"), normed(corpus, "n"))
-    val pairs = if (broadcastQueries) c.crossJoin(broadcast(q)) else q.crossJoin(broadcast(c))
-    graft.ml.TopK.ranked(pairs.filter(col("q_id") =!= col("n_id"))
-      .select(col("q_id"), col("n_id"), pairSim.as("sim")), Seq("q_id"), "n_id", "sim", k)
-  }
+    * `replicate` picks the broadcast side; the rows are the same either
+    * way. `Corpus` — right when the corpus IS small (q37's full-eval
+    * posture on a suite-bounded frame, q197, q153). `Queries` broadcasts the
+    * query panel and streams the corpus — right when the queries are a
+    * fixed-size sample and the corpus is the thing that grows (the q208
+    * 64-query panel at 100 TB: a 64-row broadcast against a streaming corpus
+    * keeps the plan corpus-linear with no O(n) replication anywhere —
+    * ADVICE r11; the [[graft.ml.Pq.bruteL2TopK]] geometry). q37 and q62 run
+    * the two sides against one oracle. */
+  def bruteTopK(queries: DataFrame, corpus: DataFrame, k: Int,
+                replicate: TopK.Side = TopK.Corpus): DataFrame =
+    TopK.topK(side(queries, "q"), side(corpus, "n"), k, TopK.Cosine,
+      col("q_id") =!= col("n_id"), replicate)
 
   /** Corpus sides up to this many rows broadcast in [[hardNegativeTopK]]
     * (≈ a few hundred MB of doubles at d=64). */
@@ -166,10 +148,9 @@ object Similarity {
     * of e.g. SBERT/DPR-style encoder training): for every anchor vector,
     * the k most-cosine-similar corpus vectors whose LABEL DIFFERS — the
     * near-misses that carry the training signal, where random negatives
-    * carry none. The bounded heap of [[bruteTopKAgg]] (at most k rows per
-    * anchor reach the shuffle), with the label-mismatch predicate applied
-    * BEFORE scoring so same-label pairs never enter the heap.
-    * Output: (q_id, q_label, n_id, sim, rk). At 100 TB the
+    * carry none. [[bruteTopK]]'s operator with the label-mismatch predicate
+    * as its pair filter, applied BEFORE scoring so same-label pairs never
+    * enter the heap. Output: (q_id, q_label, n_id, sim, rk). At 100 TB the
     * anchors are the current training minibatch (corpus-independent size)
     * and the corpus side routes through the IVF/PQ index family
     * (q50/q164) instead of the broadcast — this operator is the exact
@@ -185,15 +166,10 @@ object Similarity {
     * bounded-heap below the shuffle) instead of OOMing the driver. Callers
     * at index scale should route the corpus through IVF/PQ. */
   def hardNegativeTopK(anchors: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val c = normed(corpus, "n", "label")
-    val cSide =
-      if (corpus.select(col("vec_id")).limit(hardNegativeBroadcastMaxRows + 1).count() <=
-          hardNegativeBroadcastMaxRows) broadcast(c)
-      else c
-    val pairs = normed(anchors, "q", "label").crossJoin(cSide)
-      .filter(col("q_label") =!= col("n_label"))
-      .select(col("q_id"), col("q_label"), col("n_id"), pairSim.as("sim"))
-    graft.ml.TopK.ranked(pairs, Seq("q_id", "q_label"), "n_id", "sim", k)
+    val fits = corpus.select(col("vec_id")).limit(hardNegativeBroadcastMaxRows + 1).count() <=
+      hardNegativeBroadcastMaxRows
+    TopK.topK(side(anchors, "q", "label"), side(corpus, "n", "label"), k, TopK.Cosine,
+      col("q_label") =!= col("n_label"), if (fits) TopK.Corpus else TopK.Neither).drop("n_label")
   }
 
   /** Integer quantization of a double vector: floor(x·1e6 + 0.5) per element.
@@ -230,6 +206,24 @@ object Similarity {
     }.reduce(_ + _)
   }
 
+  /** The sign-LSH bucket rows (`id`, bucket) of a frame's [[quantize]]d
+    * `qv` column, one per repetition. `probe` adds each row's `planes`
+    * Hamming-1 buckets — the query side of a multi-probe join (Lv et al.,
+    * "Multi-Probe LSH", VLDB'07) — flipping bits BEFORE the rep offset folds
+    * in. */
+  private[graft] def lshBuckets(df: DataFrame, id: String, planes: Int, reps: Int, dim: Int,
+                                probe: Boolean): DataFrame = {
+    val probeMasks = array((lit(0L) +: (0 until planes).map(p => lit(1L << p))): _*)
+    (0 until reps).map { r =>
+      val base = df.select(col(id), lshBucket(col("qv"), planes, r, dim).as("b0"))
+      val b =
+        if (!probe) base.select(col(id), col("b0").as("b"))
+        else base.select(col(id), col("b0"), explode(probeMasks).as("m"))
+          .select(col(id), col("b0").bitwiseXOR(col("m")).as("b"))
+      b.select(col(id), (col("b") + lit(r.toLong << planes)).as("bucket"))
+    }.reduce(_ unionByName _)
+  }
+
   /** IVF (inverted-file) approximate top-k: a deterministic k-means coarse
     * quantizer buckets the corpus; each query probes its `nprobe` nearest
     * centroids and exact-ranks only those buckets' vectors. The other scale
@@ -242,25 +236,22 @@ object Similarity {
     val buckets = graft.ml.KMeans.assign(e, centroids)
     // each query probes its nprobe nearest centroid buckets
     val dist2 = graft.functions.Exprs.sqdist(col("vec"), col("centroid"))
-    val pw = Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("centroid_id").asc)
-    val probes = e.crossJoin(broadcast(centroids))
-      .withColumn("d2", dist2)
-      .withColumn("rn", row_number().over(pw))
-      .filter(col("rn") <= nprobe)
+    // nearest first: the heap ranks −d2 (exact), ties on centroid_id; the
+    // vector is a grouping key, so it rides along without a join
+    val probes = TopK.ranked(e.crossJoin(broadcast(centroids))
+        .select(col("vec_id"), col("vec"), col("centroid_id"), negate(dist2).as("nd2")),
+        Seq("vec_id", "vec"), "centroid_id", "nd2", nprobe)
       .select(col("vec_id").as("q_id"), col("vec").as("q_vec"),
         vnorm(col("vec")).as("q_nrm"), col("centroid_id"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
     // norms per ROW before the bucket join — one dot per candidate pair
     // instead of three; sims bit-identical (Exprs.cosinePre)
-    probes
+    TopK.ranked(probes
       .join(buckets.select(col("vec_id").as("n_id"), col("vec").as("n_vec"),
         vnorm(col("vec")).as("n_nrm"), col("centroid_id")),
         "centroid_id")
       .filter(col("q_id") =!= col("n_id"))
-      .withColumn("sim", pairSim)
-      .withColumn("rk", row_number().over(w).cast(LongType))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"), col("rk"))
+      .select(col("q_id"), col("n_id"), TopK.Cosine.ranking.as("sim")),
+      Seq("q_id"), "n_id", "sim", k)
   }
 
   /** Approximate top-k via sign-LSH buckets + exact re-rank inside each
@@ -307,20 +298,10 @@ object Similarity {
           lit(s"lshTopK requires fixed dim=$dim embeddings; got dim "),
           size(col("vec")).cast("string"), lit(" for vec_id "), col("vec_id").cast("string")))))
       .withColumn("nrm", vnorm(col("vec"))))
-    // flip masks for query-side multi-probing: 0 (the exact bucket) plus
-    // each single bit — applied BEFORE the rep offset folds in
-    val probeMasks = array((lit(0L) +: (0 until planes).map(p => lit(1L << p))): _*)
-    def bucketed(probing: Boolean): DataFrame = (0 until reps).map { r =>
-      val base = q.select(col("vec_id"), lshBucket(col("qv"), planes, r, dim).as("b0"))
-      val b =
-        if (!probing) base.select(col("vec_id"), col("b0").as("b"))
-        else base.select(col("vec_id"), col("b0"), explode(probeMasks).as("m"))
-          .select(col("vec_id"), col("b0").bitwiseXOR(col("m")).as("b"))
-      b.select(col("vec_id"), (col("b") + lit(r.toLong << planes)).as("bucket"))
-    }.reduce(_ unionByName _)
+    def bucketed(probing: Boolean): DataFrame = lshBuckets(q, "vec_id", planes, reps, dim, probing)
     // queryPred (on vec_id) restricts the QUERY side only — the fixed-
     // query-sample eval posture (q208): the corpus/index side stays full,
-    // candidate volume and the rank window shrink to the sample. Each
+    // candidate volume and the heap's input shrink to the sample. Each
     // query's ranking is independent, so the restricted run returns
     // exactly the full run's rows for the sampled q_ids.
     val qSide = queryPred.fold(bucketed(probing = probe))(p =>
@@ -329,16 +310,13 @@ object Similarity {
         col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
       .select(col("a.vec_id").as("q_id"), col("b.vec_id").as("n_id"))
       .distinct()
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
-    cand
+    TopK.ranked(cand
       .join(q.select(col("vec_id").as("q_id"), col("vec").as("q_vec"),
         col("nrm").as("q_nrm")), "q_id")
       .join(q.select(col("vec_id").as("n_id"), col("vec").as("n_vec"),
         col("nrm").as("n_nrm")), "n_id")
-      .withColumn("sim", pairSim)
-      .withColumn("rk", row_number().over(w).cast(LongType))
-      .filter(col("rk") <= k)
-      .select(col("q_id"), col("n_id"), col("sim"), col("rk"))
+      .select(col("q_id"), col("n_id"), TopK.Cosine.ranking.as("sim")),
+      Seq("q_id"), "n_id", "sim", k)
   }
 
   /** Reciprocal rank fusion (Cormack, Clarke & Buettcher 2009): fuse
@@ -357,7 +335,7 @@ object Similarity {
     val scored = rankings.map(_.select(col("q_id"), col("n_id"),
         round(lit(1.0d) / (lit(c.toDouble) + col("rk").cast(DoubleType)), 12).as("t")))
       .reduce(_ unionByName _)
-    graft.ml.TopK.ranked(scored.groupBy(col("q_id"), col("n_id"))
+    TopK.ranked(scored.groupBy(col("q_id"), col("n_id"))
       .agg(round(dsum(col("t"), 12), 8).as("rrf")), Seq("q_id"), "n_id", "rrf", k)
   }
 
@@ -385,7 +363,7 @@ object Similarity {
     val vecs = corpus.select(col("vec_id").as("n_id"),
       col("embedding").cast("array<double>").as("v"))
       .withColumn("vn", vnorm(col("v")))
-    var remaining = bruteTopKAgg(queries, corpus, n, broadcastQueries = false)
+    var remaining = bruteTopK(queries, corpus, n)
       .select(col("q_id"), col("n_id"), col("sim").as("rel"))
       .join(vecs, "n_id")
       .compacted.localCheckpoint(eager = true)
@@ -401,12 +379,11 @@ object Similarity {
             round(cosinePre(dot(col("v"), col("sv")), col("vn"), col("svn")), 6).as("cs"))
           .groupBy(col("q_id"), col("n_id"), col("rel"))
           .agg(coalesce(max(col("cs")), lit(0.0d)).as("ms"))
-      val pick = graft.OpsExplain.dump(s"Similarity.mmrRerank round $r pick", withSim
-        .select(col("q_id"), col("n_id"), col("rel"),
-          round(lit(lambda) * col("rel") - lit(1.0d - lambda) * col("ms"), 8).as("score"))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id").asc)))
-        .filter(col("rn") === 1)
+      // per-query argmax: a k = 1 heap over ≤ |queries|·n rows
+      val pick = graft.OpsExplain.dump(s"Similarity.mmrRerank round $r pick", TopK.ranked(
+          withSim.select(col("q_id"), col("n_id"),
+            round(lit(lambda) * col("rel") - lit(1.0d - lambda) * col("ms"), 8).as("score")),
+          Seq("q_id"), "n_id", "score", 1)
         .select(col("q_id"), col("n_id"), lit(r.toLong).as("mmr_rank"), col("score").as("mmr_score"))
         .join(vecs, "n_id"))
         .compacted.localCheckpoint(eager = true)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.QueryDef
 import graft.functions.Exprs
+import graft.ml.TopK
 import graft.operators.{Bloom, Bpe, Dedup, LineDedup, Similarity, TextPipeline, TextStats}
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
@@ -744,20 +745,21 @@ object Curation {
     QueryDef("q37_ann_brute_topk",
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
-        Similarity.bruteTopK(e.filter(col("vec_id") % 20 === 0), e, k = 10)
+        Similarity.bruteTopK(e.filter(col("vec_id") % 20 === 0), e, k = 10,
+          replicate = TopK.Corpus)
       },
       oracle = Some(annTopkOracle),
       bench = true),
 
-    // The same exact top-k through the bounded heap (TopK.ranked): at
-    // most k rows per query survive partial aggregation, vs the window form
-    // shuffling every candidate. Same oracle as q37 — a green row proves the
-    // kNN scale path end-to-end, not just in ScalaTest.
+    // q37 with the other side replicated: the query panel is broadcast and
+    // the corpus streams through the bounded heap (the q208 geometry). Same
+    // oracle as q37, so the two rows cover both replicated sides of the one
+    // exact top-k operator.
     QueryDef("q62_ann_topk_agg",
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
-        Similarity.bruteTopKAgg(e.filter(col("vec_id") % 20 === 0), e, k = 10,
-          broadcastQueries = false)
+        Similarity.bruteTopK(e.filter(col("vec_id") % 20 === 0), e, k = 10,
+          replicate = TopK.Queries)
       },
       oracle = Some(annTopkOracle)),
 
@@ -786,7 +788,7 @@ object Curation {
         val e = Tables(s, dir, "embeddings")
         val sys = Similarity.lshTopK(e, k = 10)
           .select(col("q_id"), col("n_id"), col("rk").as("srk"))
-        val truth = Similarity.bruteTopKAgg(e, e, k = 10, broadcastQueries = false)
+        val truth = Similarity.bruteTopK(e, e, k = 10)
           .select(col("q_id"), col("n_id"), col("rk").as("trk"))
         retrievalEvalCard(sys, truth, "lsh_vs_exact", k = 10)
       },
@@ -848,12 +850,12 @@ object Curation {
         val coin = col("vec_id").isin(panel: _*)
         val sys = Similarity.lshTopK(e, k = 10, queryPred = Some(coin))
           .select(col("q_id"), col("n_id"), col("rk").as("srk"))
-        // broadcastQueries = true: the 64-query PANEL broadcasts and
+        // replicate = Queries: the 64-query PANEL broadcasts and
         // the corpus streams through the bounded heap — broadcasting the
-        // corpus (q62's geometry) would put an O(n) replication in
+        // corpus (q37's geometry) would put an O(n) replication in
         // the one row whose whole point is the corpus-linear posture
         // (ADVICE r11). Same output contract, same oracle.
-        val truth = Similarity.bruteTopKAgg(e.filter(coin), e, k = 10, broadcastQueries = true)
+        val truth = Similarity.bruteTopK(e.filter(coin), e, k = 10, replicate = TopK.Queries)
           .select(col("q_id"), col("n_id"), col("rk").as("trk"))
         retrievalEvalCard(sys, truth, "lsh_vs_exact_sampled", k = 10)
       },
@@ -1152,8 +1154,7 @@ object Curation {
       (s, dir) => {
         val emb = Tables(s, dir, "embeddings")
         val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-        val cosR = Similarity.bruteTopKAgg(emb.filter(col("vec_id") % 20 === 0), emb, k = 20,
-          broadcastQueries = false)
+        val cosR = Similarity.bruteTopK(emb.filter(col("vec_id") % 20 === 0), emb, k = 20)
           .select(col("q_id"), col("n_id"), col("rk"))
         val cbs = graft.ml.Pq.fit(e, m = 4, k = 8, iterations = 2)
         val codes = graft.ml.Pq.encode(e, cbs, m = 4)
@@ -2519,8 +2520,8 @@ object Curation {
     // Embedding-space decontamination — the q73/q92 semantics a third way:
     // instead of shingle overlap (q73) or Bloom membership (q92), a corpus
     // item is contaminated when its EMBEDDING sits near a benchmark vector —
-    // the paraphrase-leak case n-gram overlap misses. Composes the bounded-
-    // heap top-k kernel (q62's scale path): the benchmark side is broadcast
+    // the paraphrase-leak case n-gram overlap misses. Composes the exact
+    // top-k operator (q37's geometry): the benchmark side is broadcast
     // (eval-suite-sized, the q73 posture) and the per-doc best match partial-
     // aggregates map-side, so |corpus|·1 rows reach the shuffle, never
     // |corpus|·|bench|.
@@ -2529,7 +2530,7 @@ object Curation {
         val emb = Tables(s, dir, "embeddings")
         val bench = emb.filter(col("vec_id") % 25 === 0)
         val corpus = emb.filter(col("vec_id") % 25 =!= 0)
-        Similarity.bruteTopKAgg(corpus, bench, k = 1, broadcastQueries = false)
+        Similarity.bruteTopK(corpus, bench, k = 1)
           .filter(col("sim") >= 0.3)
           .select(col("q_id").as("doc_vec_id"), col("n_id").as("bench_vec_id"),
             col("sim"))

@@ -289,7 +289,7 @@ class CurationPlanSpec extends SparkSpec {
   }
 
   test("q208 truth kernel broadcasts the PANEL side, streams the corpus") {
-    // bruteTopKAgg's broadcastQueries = true contract (ADVICE r11): the
+    // bruteTopK's replicate = Queries contract (ADVICE r11): the
     // bounded query panel is the replicated side and the corpus streams
     // through the bounded heap — the
     // inverse (corpus broadcast) computes the same answer but plants an
@@ -302,8 +302,8 @@ class CurationPlanSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val e = sources.Tables(spark, dir, "embeddings")
     val coin = col("vec_id").isin(0L to 63L: _*)
-    val truth = operators.Similarity.bruteTopKAgg(e.filter(coin), e, k = 10,
-      broadcastQueries = true)
+    val truth = operators.Similarity.bruteTopK(e.filter(coin), e, k = 10,
+      replicate = ml.TopK.Queries)
     val plan = truth.queryExecution.sparkPlan
     val joins = plan.collect { case b: BroadcastNestedLoopJoinExec => b }
     assert(joins.nonEmpty, plan.toString.take(2000))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ml.TopK
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.functions._
 
@@ -371,10 +372,10 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(top.map(_._2).toSeq == Seq(4L, 2L)) // cos(1,4)≈0.99995 > cos(1,2)=0.8
   }
 
-  test("query-broadcast bruteTopKAgg equals corpus-broadcast and window forms") {
+  test("query-broadcast bruteTopK equals corpus-broadcast and window forms") {
     // the q208 truth-side swap (ADVICE r11) rests on drop-in
     // interchangeability: the two heap geometries replicate OPPOSITE sides
-    // (broadcastQueries = false broadcasts the corpus, = true the queries)
+    // (replicate = Corpus broadcasts the corpus, Queries the queries)
     // but must emit the exact same (q_id, n_id, sim, rk) rows —
     // including 6-dp rounding and (sim desc, id asc) tie resolution. The
     // fixture forces ties: vectors at repeated angles give several
@@ -386,9 +387,9 @@ class DedupSimilaritySpec extends SparkSpec {
     val queries = emb.filter($"vec_id" < 7L)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long, Double, Long)].collect().toSet
-    val agg = rows(Similarity.bruteTopKAgg(queries, emb, k = 5, broadcastQueries = false))
-    val cos = rows(Similarity.bruteTopKAgg(queries, emb, k = 5, broadcastQueries = true))
-    val win = rows(Similarity.bruteTopK(queries, emb, k = 5))
+    val agg = rows(Similarity.bruteTopK(queries, emb, k = 5, replicate = TopK.Corpus))
+    val cos = rows(Similarity.bruteTopK(queries, emb, k = 5, replicate = TopK.Queries))
+    val win = rows(TestOracles.bruteTopKWindow(queries, emb, k = 5))
     assert(agg.nonEmpty && agg == cos && agg == win)
   }
 

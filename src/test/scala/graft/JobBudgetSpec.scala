@@ -57,6 +57,12 @@ class JobBudgetSpec extends SparkSpec {
 
   test("q30_nb_predict stays within its job budget") { budget("q30_nb_predict", 7) }
 
+  test("q37_ann_brute_topk stays within its job budget") { budget("q37_ann_brute_topk", 3) }
+
+  test("q62_ann_topk_agg stays within its job budget") { budget("q62_ann_topk_agg", 3) }
+
+  test("q179_hard_negatives stays within its job budget") { budget("q179_hard_negatives", 5) }
+
   test("q31_nb_accuracy stays within its job budget") { budget("q31_nb_accuracy", 10) }
 
   test("q65_nb_confusion stays within its job budget") { budget("q65_nb_confusion", 10) }

@@ -3,6 +3,7 @@ package graft
 import graft.graph.Graphs
 import graft.ml.{Evaluate, Knn}
 import graft.operators.TextPipeline
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -64,17 +65,21 @@ class PropertySpec extends SparkSpec {
     // sort's take(k). Scores draw from a small discrete set to force ties
     // (the (score desc, id asc) rule is the part a heap bug would break).
     // Driver-side property — no Spark job per case, so 50 cases are cheap.
+    // Entries are whole rows (id, score, tag): the tag must ride with them.
+    val entry = new org.apache.spark.sql.types.StructType()
+      .add("id", "long").add("score", "double").add("tag", "string")
     val caseGen = for {
       n <- Gen.choose(1, 60)
       scores <- Gen.listOfN(n, Gen.choose(0, 4).map(_ * 0.25))
       k <- Gen.choose(1, 8)
       cuts <- Gen.listOfN(6, Gen.choose(0, n))
-    } yield (scores.zipWithIndex.map { case (s, i) => graft.ml.TopK.Scored(i.toLong, s) }, k, cuts)
+    } yield (scores.zipWithIndex.map { case (s, i) => Row(i.toLong, s, s"t$i") }, k, cuts)
     for (seed <- 1L to 50L) {
       val (rows, k, cuts) = sample(caseGen, seed)
-      val agg = graft.ml.TopK.topK(k)
-      val expected = rows.sortWith((a, b) =>
-        a.score > b.score || (a.score == b.score && a.id < b.id)).take(k)
+      val agg = new graft.ml.TopK.Heap(k, entry, id = 0, score = 1)
+      def top(buf: Row): Seq[Row] = agg.finish(buf).getSeq[Row](0).toList
+      val expected = rows.sortWith((a, b) => a.getDouble(1) > b.getDouble(1) ||
+        (a.getDouble(1) == b.getDouble(1) && a.getLong(0) < b.getLong(0))).take(k)
       // arbitrary chunking: fold each chunk with reduce, then merge the
       // partial buffers left-to-right (one merge order; order invariance of
       // the INPUT is covered by also folding the reversed stream)
@@ -83,9 +88,9 @@ class PropertySpec extends SparkSpec {
       val merged = chunks.map(_.foldLeft(agg.zero)(agg.reduce)).reduce(agg.merge)
       val single = rows.foldLeft(agg.zero)(agg.reduce)
       val reversed = rows.reverse.foldLeft(agg.zero)(agg.reduce)
-      assert(merged == expected, s"seed=$seed (chunked)")
-      assert(single == expected, s"seed=$seed (sequential)")
-      assert(reversed == expected, s"seed=$seed (reversed)")
+      assert(top(merged) == expected, s"seed=$seed (chunked)")
+      assert(top(single) == expected, s"seed=$seed (sequential)")
+      assert(top(reversed) == expected, s"seed=$seed (reversed)")
     }
   }
 

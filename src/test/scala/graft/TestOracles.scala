@@ -1,9 +1,11 @@
 package graft
 
-import graft.functions.Exprs.{cosinePre, dot, h60, mapCosine, shingles, tokens, vnorm}
+import graft.functions.Exprs.{cosinePre, dot, h60, mapCosine, shingles, sqdist, tokens, vnorm}
+import graft.ml.TopK
 import graft.operators.{Dedup, Segment, TextPipeline}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -139,36 +141,90 @@ object TestOracles {
       .select(col("doc_id"), col("label").as("pred"))
   }
 
-  /** `Knn.neighbors` before its query side was spread over the cores. */
-  def knnNeighbors(test: DataFrame, train: DataFrame, k: Int): DataFrame = {
-    val t = test.select(col("id").as("q_id"), col("vec").as("q_vec"))
-      .withColumn("q_nrm", vnorm(col("q_vec")))
-    val tr = train.select(col("id").as("n_id"), col("label").as("n_label"), col("vec").as("n_vec"))
-      .withColumn("n_nrm", vnorm(col("n_vec")))
-    knnTopK(t.crossJoin(broadcast(tr))
-      .withColumn("sim", round(cosinePre(dot(col("q_vec"), col("n_vec")),
-        col("q_nrm"), col("n_nrm")), 6)), k)
-  }
-
-  /** `Knn.neighborsSparse` before its query side was spread over the cores. */
-  def knnNeighborsSparse(test: DataFrame, train: DataFrame, k: Int): DataFrame = {
-    val t = test.select(col("id").as("q_id"), col("features").as("q_f"))
-    val tr = train.select(col("id").as("n_id"), col("label").as("n_label"), col("features").as("n_f"))
-    knnTopK(t.crossJoin(broadcast(tr))
-      .withColumn("sim", round(mapCosine(col("q_f"), col("n_f")), 6)), k)
-  }
-
-  private def knnTopK(pairs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("n_id").asc)
-    pairs.withColumn("rk", row_number().over(w).cast(LongType))
+  /** The exact top-k window form that [[graft.ml.TopK.topK]] replaced: the
+    * same sides, pair filter and 6-dp scores, ranked by a `row_number()`
+    * window per query over (score desc, n_id asc) — ascending for
+    * [[graft.ml.TopK.L2]] — with the corpus broadcast. Output columns in
+    * the operator's order: query columns, corpus columns, score, rk. */
+  def topKWindow(queries: DataFrame, corpus: DataFrame, k: Int, score: TopK.Score,
+                 pairFilter: Column = lit(true)): DataFrame = {
+    def normed(df: DataFrame, p: String): DataFrame =
+      if (score == TopK.Cosine) df.withColumn(s"${p}_nrm", vnorm(col(s"${p}_vec"))) else df
+    val (q, n) = (col("q_vec"), col("n_vec"))
+    val (value, order) = score match {
+      case TopK.Cosine =>
+        (round(cosinePre(dot(q, n), col("q_nrm"), col("n_nrm")), 6), col(score.name).desc)
+      case TopK.SparseCosine => (round(mapCosine(q, n), 6), col(score.name).desc)
+      case TopK.L2 => (round(sqdist(q, n), 6), col(score.name).asc)
+    }
+    val keys = queries.columns.toSeq.filter(_ != "q_vec")
+    val carried = corpus.columns.toSeq.filter(_ != "n_vec")
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(order, col("n_id").asc)
+    normed(queries, "q").crossJoin(broadcast(normed(corpus, "n")))
+      .filter(pairFilter)
+      .withColumn(score.name, value)
+      .withColumn("rk", row_number().over(w).cast(LongType))
       .filter(col("rk") <= k)
-      .select(col("q_id"), col("n_id"), col("n_label"), col("sim"), col("rk"))
+      .select((keys ++ carried :+ score.name :+ "rk").map(col): _*)
   }
+
+  /** One side of `Similarity.bruteTopK` over an embeddings frame. */
+  private def embSide(df: DataFrame, p: String, carry: String*): DataFrame =
+    df.select((col("vec_id").as(s"${p}_id") +: carry.map(c => col(c).as(s"${p}_$c")) :+
+      col("embedding").cast("array<double>").as(s"${p}_vec")): _*)
+
+  /** `Similarity.bruteTopK` as a rank window: (q_id, n_id, sim, rk). */
+  def bruteTopKWindow(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    topKWindow(embSide(queries, "q"), embSide(corpus, "n"), k, TopK.Cosine,
+      col("q_id") =!= col("n_id"))
+
+  /** `Similarity.hardNegativeTopK` as a rank window: (q_id, q_label, n_id,
+    * sim, rk). */
+  def hardNegativeWindow(anchors: DataFrame, corpus: DataFrame, k: Int): DataFrame =
+    topKWindow(embSide(anchors, "q", "label"), embSide(corpus, "n", "label"), k, TopK.Cosine,
+      col("q_label") =!= col("n_label")).drop("n_label")
+
+  /** `Knn.neighbors` as a rank window, its query side not spread over the
+    * cores: (q_id, n_id, n_label, sim, rk). */
+  def knnNeighbors(test: DataFrame, train: DataFrame, k: Int): DataFrame =
+    topKWindow(test.select(col("id").as("q_id"), col("vec").as("q_vec")),
+      train.select(col("id").as("n_id"), col("label").as("n_label"), col("vec").as("n_vec")),
+      k, TopK.Cosine)
+
+  /** `Knn.neighborsSparse` as a rank window, its query side not spread. */
+  def knnNeighborsSparse(test: DataFrame, train: DataFrame, k: Int): DataFrame =
+    topKWindow(test.select(col("id").as("q_id"), col("features").as("q_vec")),
+      train.select(col("id").as("n_id"), col("label").as("n_label"), col("features").as("n_vec")),
+      k, TopK.SparseCosine)
+
+  /** The id-only heap entry [[graft.ml.TopK]] kept before its entries
+    * became whole rows. */
+  case class Scored(id: Long, score: Double)
+
+  /** The id-only heap: an Aggregator keeping the k best (score desc, id
+    * asc) entries per group, re-sorting its buffer on every insert. */
+  def scoredTopK(k: Int): Aggregator[Scored, Seq[Scored], Seq[Scored]] =
+    new Aggregator[Scored, Seq[Scored], Seq[Scored]] {
+      private def better(a: Scored, b: Scored): Boolean =
+        a.score > b.score || (a.score == b.score && a.id < b.id)
+      override def zero: Seq[Scored] = Vector.empty
+      override def reduce(buf: Seq[Scored], a: Scored): Seq[Scored] = insert(buf, a)
+      override def merge(b1: Seq[Scored], b2: Seq[Scored]): Seq[Scored] =
+        b2.foldLeft(b1)(insert)
+      private def insert(buf: Seq[Scored], a: Scored): Seq[Scored] =
+        if (buf.size < k) (buf :+ a).sortWith(better)
+        else if (better(a, buf.last)) (buf.init :+ a).sortWith(better)
+        else buf
+      override def finish(buf: Seq[Scored]): Seq[Scored] = buf
+      override def bufferEncoder: Encoder[Seq[Scored]] = ExpressionEncoder[Seq[Scored]]()
+      override def outputEncoder: Encoder[Seq[Scored]] = ExpressionEncoder[Seq[Scored]]()
+    }
 
   /** The typed pipeline every engine top-k wrote out before
     * [[graft.ml.TopK.ranked]]: `groupByKey → mapValues(Scored) →
-    * agg(topK) → posexplode`. The typed key needs one static type, so keys
-    * travel as strings: output is (keys as strings…, id, score, rk). */
+    * agg(topK) → posexplode` over the id-only heap. The typed key needs one
+    * static type, so keys travel as strings: output is (keys as strings…,
+    * id, score, rk). */
   def topKTyped(scored: DataFrame, keys: Seq[String], id: String, score: String,
                 k: Int): DataFrame = {
     val spark = scored.sparkSession
@@ -179,8 +235,8 @@ object TestOracles {
     scored.select(key, col(id).cast(LongType), col(score).cast(DoubleType))
       .as[(Seq[String], Long, Double)]
       .groupByKey(_._1)
-      .mapValues(r => graft.ml.TopK.Scored(r._2, r._3))
-      .agg(graft.ml.TopK.topK(k).toColumn.name("top"))
+      .mapValues(r => Scored(r._2, r._3))
+      .agg(scoredTopK(k).toColumn.name("top"))
       .toDF("key", "top")
       .select(col("key"), posexplode(col("top")).as(Seq("i", "s")))
       .select(keys.indices.map(j => col("key").getItem(j).as(keys(j))) ++

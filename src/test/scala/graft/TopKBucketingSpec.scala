@@ -54,8 +54,31 @@ class TopKBucketingSpec extends SparkSpec {
     }
     // the heap kernel's callers inherit the check instead of failing in a task
     val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    intercept[IllegalArgumentException](graft.operators.Similarity.bruteTopK(emb, emb, 0))
+    // and a non-LONG id or non-DOUBLE score
     intercept[IllegalArgumentException](
-      graft.operators.Similarity.bruteTopKAgg(emb, emb, 0, broadcastQueries = false))
+      TopK.ranked(df.withColumn("id", $"id".cast("int")), Nil, "id", "score", 1))
+    intercept[IllegalArgumentException](
+      TopK.ranked(df.withColumn("score", $"score".cast("float")), Nil, "id", "score", 1))
+  }
+
+  test("TopK.ranked carries string and array columns through the heap") {
+    // every non-key column rides with its entry: a string and an array
+    // column come out on the row they went in with, as the rank window
+    // over the same rows keeps them; tied scores, a null string, an empty
+    // array and k past a group's size included
+    val rnd = new scala.util.Random(11)
+    val df = (1 to 300).map { i =>
+      (s"g${i % 4}", i.toLong, math.floor(rnd.nextDouble() * 5) / 5,
+        if (i % 17 == 0) null else s"label-$i", Seq.tabulate(i % 4)(j => (i * j).toDouble))
+    }.toDF("g", "id", "score", "tag", "xs")
+    for (k <- Seq(1, 6, 100)) {
+      val w = Window.partitionBy($"g").orderBy($"score".desc, $"id".asc)
+      val want = df.withColumn("rk", row_number().over(w).cast("long")).filter($"rk" <= k)
+      val got = TopK.ranked(df, Seq("g"), "id", "score", k)
+      assert(got.columns.toSeq == want.columns.toSeq, s"k=$k")
+      assert(got.collect().map(_.toString).toSet == want.collect().map(_.toString).toSet, s"k=$k")
+    }
   }
 
   test("bucketed join on the bucket key plans with zero shuffle exchanges") {

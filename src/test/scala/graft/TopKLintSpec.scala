@@ -7,11 +7,16 @@ import scala.jdk.CollectionConverters._
 /** Source lints over `src/main`, one test per single-mechanism rule.
   *
   * Top-k: every engine top-k goes through `TopK.ranked`. The heap's
-  * Aggregator (`TopK.topK(`) and its buffer type (`TopK.Scored(`) may be
-  * named in `src/main` only inside `graft/ml/TopK.scala`, so no other file
-  * knows the buffer layout or that array position is the rank. A hit here
-  * means a hand-written `groupByKey → agg(topK)` pipeline came back: route
-  * it through `TopK.ranked` instead of pinning it.
+  * Aggregator and buffer (`TopK.Heap`) may be named in `src/main` only
+  * inside `graft/ml/TopK.scala`, so no other file knows the buffer layout
+  * or that array position is the rank. A hit here means a hand-written
+  * `groupBy → agg(heap)` pipeline came back: route it through `TopK.ranked`
+  * instead of pinning it.
+  *
+  * Exact top-k: the similarity files (`Knn.scala`, `Similarity.scala`,
+  * `Pq.scala`) rank through the heap, never a `row_number()` window. The
+  * one allowed window is `Knn.vote`'s (`over(byVotes)`): it ranks string
+  * labels by vote count, not LONG ids.
   *
   * Array folds: every pairwise array fold goes through the codegen
   * `ArrayFold` kernel (`Exprs.dot` / `dotLong` / `sqdist`). No code line may
@@ -36,10 +41,20 @@ class TopKLintSpec extends AnyFunSuite {
   test("only TopK.scala names the heap Aggregator or its buffer type") {
     val home = root.resolve("graft/ml/TopK.scala")
     val offenders = sourceLines(home).collect {
-      case (p, n, line) if p != home &&
-          (line.contains("TopK.topK(") || line.contains("TopK.Scored(")) => s"$p:$n"
+      case (p, n, line) if p != home && (line.contains("TopK.Heap") || line.contains("new Heap(")) =>
+        s"$p:$n"
     }
     assert(offenders.isEmpty, s"top-k heap used outside TopK.ranked: $offenders")
+  }
+
+  test("the similarity files rank through the heap, not a row_number window") {
+    val files = Seq("graft/ml/Knn.scala", "graft/operators/Similarity.scala", "graft/ml/Pq.scala")
+      .map(root.resolve)
+    val offenders = sourceLines(files.head).collect {
+      case (p, n, line) if files.contains(p) && line.contains("row_number()") &&
+          !(p == files.head && line.contains("over(byVotes)")) => s"$p:$n"
+    }
+    assert(offenders.isEmpty, s"row_number window in a similarity file: $offenders")
   }
 
   test("pairwise array folds go through the ArrayFold kernel") {
