@@ -20,7 +20,9 @@ import org.apache.spark.storage.StorageLevel
   * [[ScalingProbe]] release between queries; a user session would release
   * between pipeline runs. Frames whose lifetime IS operator-scoped (e.g.
   * [[graft.graph.Graphs.pageRank]]'s edge cache, dead once the final iteration
-  * is checkpointed) unpersist themselves and never touch the registry.
+  * is checkpointed) are pinned inside the operator's own [[scoped]] block:
+  * they release when the operator returns, and the refcount keeps a
+  * plan-identical entry another query still holds.
   */
 object Caching {
 

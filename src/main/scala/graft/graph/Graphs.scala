@@ -1,22 +1,89 @@
 package graft.graph
 
+import graft.Caching
 import graft.Par.ParOps
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Graph analytics from the character-network spec (SURVEY.md §2.4 A11-A12,
   * §2.7 G1-G2): pairwise co-occurrence, out-edge normalization, and iterative
   * PageRank / Label Propagation as driver-controlled DataFrame loops.
   *
   * Iterations localCheckpoint() every few rounds to truncate plan growth
-  * (SURVEY.md §7 risk 3); edges persist across iterations. At cluster scale
-  * the edge table would be pre-partitioned on src so every iteration's join
-  * reuses one shuffle-free partitioning.
+  * (SURVEY.md §7 risk 3). An edge table re-read across broadcast rounds is
+  * pinned through [[graft.Caching]] for the operator's duration; the other
+  * loops checkpoint it. At cluster scale the edge table would be
+  * pre-partitioned on src so every iteration's join reuses one shuffle-free
+  * partitioning.
+  *
+  * Each graph step is written once here and shared: [[undirected]],
+  * [[degrees]], [[triangles]], [[scaledSum]], the random walk behind both
+  * general PageRank forms and the peel loop behind [[kCore]] and [[kTruss]]
+  * (the round structure of *MapReduce Algorithms for Big Data Analysis*,
+  * VLDB 2012: each round is a few equi-joins and grouped counts).
   */
 object Graphs {
+
+  /** The simple undirected graph of (src, dst) edges: one (a, b) row per
+    * unordered pair, a < b, self-loops and duplicates dropped. */
+  private[graft] def undirected(edges: DataFrame): DataFrame =
+    edges.select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
+  /** (v, deg) for every endpoint of an [[undirected]] edge set. */
+  private[graft] def degrees(und: DataFrame): DataFrame =
+    und.select(col("a").as("v")).union(und.select(col("b").as("v")))
+      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+
+  /** Every triangle of an [[undirected]] edge set, once, as (t1, t2, t3):
+    * degree orientation + wedge closure (Cohen, "Graph Twiddling in a
+    * MapReduce World", CiSE 2009; Suri & Vassilvitskii, WWW'11). Every edge
+    * is oriented from the endpoint SMALLER in the total order (degree, id)
+    * to the larger; each triangle then has exactly one apex t1 with two
+    * out-edges, so it is found exactly once by joining the apex's
+    * out-neighbor pairs (wedges, t2 before t3 in the same order) against
+    * the oriented edge set.
+    *
+    * Scale: orientation bounds each vertex's out-degree by O(√m) on any
+    * graph (arboricity argument), so the wedge fan-out — the only
+    * super-linear term in the naive formulation — is capped without
+    * sampling or loss; a degree-10⁶ hub produces wedges only as the CLOSING
+    * side, never as the apex. Every step is an equi-shuffle join or grouped
+    * count over edge-keyed frames; nothing vertex- or wedge-sized is
+    * broadcast or collected. */
+  private[graft] def triangles(und: DataFrame): DataFrame = {
+    val deg = degrees(und)
+    val up = col("da") < col("db") || (col("da") === col("db") && col("a") < col("b"))
+    // orient low (deg, id) → high; carry the head's order key for the
+    // wedge-side comparison below
+    val ori = und
+      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
+      .select(when(up, col("a")).otherwise(col("b")).as("u"),
+        when(up, col("b")).otherwise(col("a")).as("w"),
+        when(up, col("db")).otherwise(col("da")).as("dw"))
+    val e1 = ori.select(col("u"), col("w").as("w1"), col("dw").as("d1"))
+    val e2 = ori.select(col("u"), col("w").as("w2"), col("dw").as("d2"))
+    // the closing edge {w1, w2}, if present, is oriented exactly w1 → w2
+    e1.join(e2, Seq("u"))
+      .filter(col("d1") < col("d2") || (col("d1") === col("d2") && col("w1") < col("w2")))
+      .join(ori.select(col("u").as("w1"), col("w").as("w2")), Seq("w1", "w2"), "left_semi")
+      .select(col("u").as("t1"), col("w1").as("t2"), col("w2").as("t3"))
+  }
+
+  /** Exact sum of `x` at `scale` units per 1: each term rounds half up to an
+    * integer count of 1/scale units (pure IEEE ops, bit-identical in any
+    * engine), the counts sum as a primitive long, and the long returns as a
+    * double divided by `scale` — a SCALED-LONG accumulator whose result does
+    * not depend on partial-aggregation order. The caller keeps Σ|x| ≤ 1 at
+    * scale 1e18 (or the terms at 12 dp at scale 1e12), so the sum stays
+    * below 2^63. Every exact mass sum of the rank operators goes through
+    * here. */
+  private def scaledSum(x: Column, scale: Double): Column =
+    sum(floor(x * lit(scale) + lit(0.5d)).cast(LongType)).cast(DoubleType) / lit(scale)
 
   /** A11: directed co-occurrence counts — for each group (paragraph/document),
     * every ordered pair of distinct items that appear together, counted over
@@ -43,20 +110,22 @@ object Graphs {
     * The co-occurrence graph is symmetric, so no dangling-mass handling is
     * needed (every vertex has in- and out-edges).
     *
-    * Determinism: the per-iteration sum is an exact SCALED-LONG accumulator —
-    * each product is rounded half-up to 18 dp as an integer micro-unit
-    * (floor(rank·w·1e18 + 0.5), pure IEEE ops, bit-identical in any engine)
-    * and summed as a primitive long. Exactness holds at any graph size: a
-    * vertex's incoming mass Σ rank(u)·w(u,v) ≤ Σ rank(u) = 1, so the long
+    * Determinism: the per-iteration sum is an exact [[scaledSum]] at 1e18 —
+    * each product rounds half up to an integer count of 1e-18 units and
+    * the counts sum as a primitive long. Exactness holds at any graph size:
+    * a vertex's incoming mass Σ rank(u)·w(u,v) ≤ Σ rank(u) = 1, so the long
     * sum stays < 2^63. The new rank is then rounded to 12 dp, so every
     * iteration is bit-identical regardless of partial-aggregation order —
     * the unrolled-CTE oracle re-syncs at each round instead of relying on
     * the final round(6) to mask drift. (A DECIMAL(38,18) accumulator has the
     * same semantics; the long form keeps the hot aggregate in primitive
     * codegen instead of Decimal128 adds — the r3 verdict's q25 follow-up.) */
-  def pageRank(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w")).compacted.persist(StorageLevel.MEMORY_AND_DISK)
-    val verts = e.select(col("src").as("v")).distinct().compacted.persist(StorageLevel.MEMORY_AND_DISK)
+  def pageRank(edges: DataFrame, iterations: Int = 10, damping: Double = 0.85): DataFrame = Caching.scoped {
+    // refcounted pins, released when the scope closes: a plan-identical
+    // edge frame another query holds (q25 and q43 build the same one) stays
+    // cached for that holder
+    val e = Caching.pin(edges.select(col("src"), col("dst"), col("w")))
+    val verts = Caching.pin(e.select(col("src").as("v")).distinct())
     val n = verts.count()
     var ranks = verts.withColumn("rank", lit(1.0d / n))
     for (i <- 1 to iterations) {
@@ -65,9 +134,7 @@ object Graphs {
       ranks = e.join(broadcast(ranks), e("src") === ranks("v"))
         .groupBy(col("dst").as("v2"))
         .agg(round(lit((1.0d - damping) / n) +
-          lit(damping) * (sum(floor(col("rank") * col("w") * lit(1.0e18d) + lit(0.5d))
-            .cast(org.apache.spark.sql.types.LongType)).cast(DoubleType) / lit(1.0e18d)),
-          12).as("rank"))
+          lit(damping) * scaledSum(col("rank") * col("w"), 1.0e18d), 12).as("rank"))
         .withColumnRenamed("v2", "v")
       // Checkpoint every 4 rounds: broadcasting ranks executes its plan, so
       // lineage must be truncated periodically — but between checkpoints the
@@ -79,12 +146,9 @@ object Graphs {
       if (i < iterations && i % 4 == 0) ranks = ranks.compacted.localCheckpoint(eager = true)
     }
     // the result is vertex-sized: materialize it eagerly (cheap) so the pinned
-    // edge/vertex caches can be released HERE instead of leaking for the rest
-    // of the session (round-2 bench pollution)
-    ranks = ranks.compacted.localCheckpoint(eager = true)
-    e.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    ranks
+    // edge/vertex caches can be released as the scope closes instead of
+    // leaking for the rest of the session (round-2 bench pollution)
+    ranks.compacted.localCheckpoint(eager = true)
   }
 
   /** PageRank for GENERAL directed graphs — the flagged variant of
@@ -100,51 +164,16 @@ object Graphs {
     *     the cost of shuffling ranks each round where [[pageRank]] reuses
     *     the cached edge partitioning.
     *
-    * Determinism matches [[pageRank]]: incoming mass via the exact
-    * scaled-long (1e18) accumulator; D_k summed the same way at 1e12 (ranks
-    * are 12-dp, so floor(rank·1e12+0.5) is exact) — every iteration is
-    * bit-identical across engines and partitionings, and the q81 oracle
-    * unrolls it round by round. Per round: one shuffle join + grouped sum,
-    * one vertex-sized left join, and a cross-join of the 1-ROW D_k
-    * aggregate — the dangling mass stays in the plan (no per-round driver
-    * action: at cluster scale, 10 extra job launches per query are pure
-    * scheduler chatter; the identical long→double→/1e12→/n ladder runs as
-    * Column arithmetic instead, so the oracle unrolls unchanged). */
+    * Determinism matches [[pageRank]]; see [[randomWalk]] for the round
+    * plan. The q81 oracle unrolls it round by round. */
   def pageRankGeneral(edges: DataFrame, iterations: Int = 10,
-                      damping: Double = 0.85): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val e = edges.select(col("src"), col("dst"), col("w")).compacted.localCheckpoint(eager = true)
-    val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
-      .distinct().compacted.localCheckpoint(eager = true)
-    val n = verts.count()
-    val dangling = verts.join(e.select(col("src").as("v")).distinct(),
-      Seq("v"), "left_anti").compacted.localCheckpoint(eager = true)
-    var ranks = verts.withColumn("rank", lit(1.0d / n))
-    for (_ <- 1 to iterations) {
-      // D_k as a 1-ROW FRAME cross-joined into the update, not a collect():
-      // the mass aggregate executes inside the same job as the round's
-      // checkpoint, eliminating a per-round driver barrier
-      val dmDf = ranks.join(dangling, "v")
-        .agg(coalesce(sum(floor(col("rank") * lit(1.0e12d) + lit(0.5d)).cast(LongType)),
-          lit(0L)).as("dm"))
-      // same operation ORDER as the oracle: dm/1e12, then /n, then d*(inc+·)
-      val dmTerm = col("dm").cast(DoubleType) / lit(1.0e12d) / lit(n.toDouble)
-      val inc = e.join(ranks, e("src") === ranks("v"))
-        .groupBy(col("dst").as("v2"))
-        .agg((sum(floor(col("rank") * col("w") * lit(1.0e18d) + lit(0.5d))
-          .cast(LongType)).cast(DoubleType) / lit(1.0e18d)).as("inc"))
-      // LEFT join from verts: a vertex with no in-edges still receives the
-      // teleport + dangling share (the plain variant never meets this case)
-      ranks = verts.join(inc, verts("v") === inc("v2"), "left")
-        .crossJoin(dmDf)
-        .select(col("v"), round(lit((1.0d - damping) / n) +
-          lit(damping) * (coalesce(col("inc"), lit(0.0d)) + dmTerm), 12).as("rank"))
-        // eager checkpoint keeps the next round's two consumers (dm agg +
-        // join) off a growing plan
-        .compacted.localCheckpoint(eager = true)
+                      damping: Double = 0.85): DataFrame =
+    randomWalk(edges, iterations) { verts =>
+      val n = verts.count()
+      // same operation ORDER as the oracle: dm/n, then d*(inc+·)
+      (verts, verts.withColumn("rank", lit(1.0d / n)),
+        (inc, dm) => lit((1.0d - damping) / n) + lit(damping) * (inc + dm / lit(n.toDouble)))
     }
-    ranks
-  }
 
   /** Personalized PageRank (Page et al. 1999 §6; Jeh & Widom, "Scaling
     * Personalized Web Search", WWW'03): [[pageRankGeneral]] with the teleport — and the
@@ -157,43 +186,66 @@ object Graphs {
     * distribution. Seeds absent from the graph are ignored; at least one
     * must be present. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame, iterations: Int = 10,
-                           damping: Double = 0.85): DataFrame = {
-    import org.apache.spark.sql.types.LongType
+                           damping: Double = 0.85): DataFrame =
+    randomWalk(edges, iterations) { verts =>
+      val sd = verts.join(seeds.select(col("v")), Seq("v"), "left_semi")
+        .compacted.localCheckpoint(eager = true)
+      val nS = sd.count()
+      require(nS > 0, "personalizedPageRank needs at least one seed present in the graph")
+      // sm ∈ {0,1}: seed-membership as a multiplier (1·x = x and 0·x = 0
+      // exactly, so the arithmetic matches the oracle's CASE form bit-for-bit)
+      val seedMark = verts.join(sd.select(col("v"), lit(1.0d).as("sm")), Seq("v"), "left")
+        .select(col("v"), coalesce(col("sm"), lit(0.0d)).as("sm"))
+        .compacted.localCheckpoint(eager = true)
+      val start = seedMark
+        .select(col("v"), (col("sm") * lit(1.0d / nS)).as("rank"))
+        .compacted.localCheckpoint(eager = true)
+      // the whole seed share — teleport + dangling return — in the same
+      // operation order the oracle mirrors: dm/nS, ·d, +(1-d)/nS
+      (seedMark, start, (inc, dm) =>
+        col("sm") * (lit((1.0d - damping) / nS) + lit(damping) * (dm / lit(nS.toDouble))) +
+          lit(damping) * inc)
+    }
+
+  /** The random walk behind [[pageRankGeneral]] and [[personalizedPageRank]]
+    * over weighted edges (src, dst, w). `setup` receives the checkpointed
+    * vertex set and returns the frame each round's ranks are built on (v
+    * plus whatever columns the update reads), the round-0 ranks (v, rank)
+    * and the update: the new rank from a vertex's incoming mass `inc` and
+    * the round's dangling mass `dm`, before the 12-dp re-sync.
+    *
+    * Both masses are exact [[scaledSum]]s: `inc` at 1e18, `dm` at 1e12
+    * (ranks are 12-dp, so that scaling is exact) — every round is
+    * bit-identical across engines and partitionings. Per round: one shuffle
+    * join + grouped sum, one vertex-sized left join, and a cross-join of
+    * the 1-ROW dangling-mass aggregate — the mass stays in the plan (no
+    * per-round driver action: at cluster scale, 10 extra job launches per
+    * query are pure scheduler chatter). */
+  private def randomWalk(edges: DataFrame, iterations: Int)(
+      setup: DataFrame => (DataFrame, DataFrame, (Column, Column) => Column)): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w")).compacted.localCheckpoint(eager = true)
     val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
       .distinct().compacted.localCheckpoint(eager = true)
-    val sd = verts.join(seeds.select(col("v")), Seq("v"), "left_semi")
-      .compacted.localCheckpoint(eager = true)
-    val nS = sd.count()
-    require(nS > 0, "personalizedPageRank needs at least one seed present in the graph")
     val dangling = verts.join(e.select(col("src").as("v")).distinct(),
       Seq("v"), "left_anti").compacted.localCheckpoint(eager = true)
-    // sm ∈ {0,1}: seed-membership as a multiplier (1·x = x and 0·x = 0
-    // exactly, so the arithmetic matches the oracle's CASE form bit-for-bit)
-    val seedMark = verts.join(sd.select(col("v"), lit(1.0d).as("sm")), Seq("v"), "left")
-      .select(col("v"), coalesce(col("sm"), lit(0.0d)).as("sm"))
-      .compacted.localCheckpoint(eager = true)
-    var ranks = seedMark
-      .select(col("v"), (col("sm") * lit(1.0d / nS)).as("rank"))
-      .compacted.localCheckpoint(eager = true)
+    val (base, start, update) = setup(verts)
+    var ranks = start
     for (_ <- 1 to iterations) {
-      // plan-side D_k, as in [[pageRankGeneral]]: 1-row aggregate
-      // cross-joined, no per-round driver action
-      val dmDf = ranks.join(dangling, "v")
-        .agg(coalesce(sum(floor(col("rank") * lit(1.0e12d) + lit(0.5d)).cast(LongType)),
-          lit(0L)).as("dm"))
-      // the whole seed share — teleport + dangling return — in the same
-      // operation order the oracle mirrors: dm/1e12, /nS, ·d, +(1-d)/nS
-      val seedShare = lit((1.0d - damping) / nS) +
-        lit(damping) * (col("dm").cast(DoubleType) / lit(1.0e12d) / lit(nS.toDouble))
+      // D_k as a 1-ROW FRAME cross-joined into the update, not a collect():
+      // the mass aggregate executes inside the same job as the round's
+      // checkpoint, eliminating a per-round driver barrier
+      val dm = ranks.join(dangling, "v")
+        .agg(coalesce(scaledSum(col("rank"), 1.0e12d), lit(0.0d)).as("dm"))
       val inc = e.join(ranks, e("src") === ranks("v"))
         .groupBy(col("dst").as("v2"))
-        .agg((sum(floor(col("rank") * col("w") * lit(1.0e18d) + lit(0.5d))
-          .cast(LongType)).cast(DoubleType) / lit(1.0e18d)).as("inc"))
-      ranks = seedMark.join(inc, seedMark("v") === inc("v2"), "left")
-        .crossJoin(dmDf)
-        .select(col("v"), round(col("sm") * seedShare +
-          lit(damping) * coalesce(col("inc"), lit(0.0d)), 12).as("rank"))
+        .agg(scaledSum(col("rank") * col("w"), 1.0e18d).as("inc"))
+      // LEFT join from the base: a vertex with no in-edges still receives
+      // its teleport + dangling share
+      ranks = base.join(inc, base("v") === inc("v2"), "left")
+        .crossJoin(dm)
+        .select(col("v"), round(update(coalesce(col("inc"), lit(0.0d)), col("dm")), 12).as("rank"))
+        // eager checkpoint keeps the next round's two consumers (dm agg +
+        // join) off a growing plan
         .compacted.localCheckpoint(eager = true)
     }
     ranks
@@ -329,8 +381,9 @@ object Graphs {
   /** G2: synchronous Label Propagation with deterministic tie-breaking
     * (max total *integer* edge weight, then smallest label — integer weights
     * keep the argmax engine-portable). Labels start as the vertex id. */
-  def labelPropagation(edges: DataFrame, iterations: Int = 5): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("cnt")).compacted.persist(StorageLevel.MEMORY_AND_DISK)
+  def labelPropagation(edges: DataFrame, iterations: Int = 5): DataFrame = Caching.scoped {
+    // refcounted like [[pageRank]]'s: q26, q44 and q149 pin the same plan
+    val e = Caching.pin(edges.select(col("src"), col("dst"), col("cnt")))
     var labels = e.select(col("src").as("v")).distinct().withColumn("label", col("v"))
     for (i <- 1 to iterations) {
       val byLabel = e.join(broadcast(labels), e("dst") === labels("v"))
@@ -341,10 +394,10 @@ object Graphs {
         .filter(col("rn") === 1)
         .select(col("v2").as("v"), col("label"))
       // checkpoint every round INCLUDING the last: the final materialization
-      // (vertex-sized, cheap) is what lets the edge cache release below
+      // (vertex-sized, cheap) is what lets the edge cache release as the
+      // scope closes
       labels = labels.compacted.localCheckpoint(eager = true)
     }
-    e.unpersist(blocking = false)
     labels
   }
 
@@ -352,70 +405,57 @@ object Graphs {
     * directed edge list (src, dst) — canonicalized and deduplicated here.
     * Extends the character-network family (co-occurrence → PageRank/LPA)
     * with the classic cohesion statistic: how many closed wedges each
-    * vertex participates in (the numerator of local clustering).
-    *
-    * Algorithm: degree orientation + wedge closure (Cohen, "Graph Twiddling
-    * in a MapReduce World", CiSE 2009; Suri & Vassilvitskii, WWW'11). Every
-    * undirected edge is oriented from the endpoint that is SMALLER in the
-    * total order (degree, id) to the larger; each triangle then has exactly
-    * one apex with two out-edges, so it is found exactly once by joining
-    * the apex's out-neighbor pairs (wedges) against the oriented edge set.
-    *
-    * Scale: orientation bounds each vertex's out-degree by O(√m) on any
-    * graph (arboricity argument), so the wedge fan-out — the only
-    * super-linear term in the naive formulation — is capped without
-    * sampling or loss; a degree-10⁶ hub produces wedges only as the CLOSING
-    * side, never as the apex. Every step is an equi-shuffle join or grouped
-    * count over edge-keyed frames; nothing vertex- or wedge-sized is
-    * broadcast or collected. Output: (v, triangles) for every vertex
-    * incident to an edge, zeros included. */
+    * vertex participates in (the numerator of local clustering). Each
+    * [[triangles]] row counts once at each of its three corners. Output:
+    * (v, triangles) for every vertex incident to an edge, zeros included. */
   def triangleCounts(edges: DataFrame): DataFrame = {
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-    val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val withDeg = und
-      .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-    // orient low (deg, id) → high; carry the head's order key for the
-    // wedge-side comparison below
-    val oriented = withDeg.select(
-      when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("u"), col("b").as("w"), col("db").as("dw")))
-        .otherwise(struct(col("b").as("u"), col("a").as("w"), col("da").as("dw"))).as("e"))
-      .select(col("e.u").as("u"), col("e.w").as("w"), col("e.dw").as("dw"))
-      .compacted.persist(StorageLevel.MEMORY_AND_DISK)
-    // wedges at apex u, pair ordered by the SAME (deg, id) order — so the
-    // closing edge {x, y}, if present, is oriented exactly x → y
-    val e1 = oriented.as("e1")
-    val e2 = oriented.as("e2")
-    val wedges = e1.join(e2, col("e1.u") === col("e2.u") &&
-        (col("e1.dw") < col("e2.dw") ||
-          (col("e1.dw") === col("e2.dw") && col("e1.w") < col("e2.w"))))
-      .select(col("e1.u").as("t1"), col("e1.w").as("t2"), col("e2.w").as("t3"))
-    val tris = wedges.join(oriented.select(col("u").as("t2"), col("w").as("t3")),
-      Seq("t2", "t3"))
-    val perVertex = tris.select(explode(array(col("t1"), col("t2"), col("t3"))).as("v"))
+    val und = undirected(edges)
+    val perVertex = triangles(und).select(explode(array(col("t1"), col("t2"), col("t3"))).as("v"))
       .groupBy(col("v")).agg(count(lit(1)).as("tri"))
-    val out = deg.join(perVertex, Seq("v"), "left")
+    degrees(und).join(perVertex, Seq("v"), "left")
       .select(col("v"), coalesce(col("tri"), lit(0L)).as("triangles"))
-    oriented.unpersist(blocking = false)
-    out
+  }
+
+  /** Synchronous peeling to a fixpoint, shared by [[kCore]] and [[kTruss]]:
+    * `round` returns the subset of its edge frame that survives one
+    * simultaneous removal, and the loop repeats until a round removes
+    * nothing. Removal cascades, so the round count is the peel DEPTH of the
+    * input, not its size. Returns the fixpoint and the number of rounds
+    * that removed something.
+    *
+    * DELIBERATE deviation from the catalog's otherwise action-free plan
+    * discipline: the fixpoint test is a driver-side `count()` per round
+    * (the `localCheckpoint` already materializes each round's edge set, so
+    * the count is a cached-RDD fold, not a recompute). A declared-horizon
+    * variant (the [[bfsHops]]/[[shortestPathsBounded]] stance) would trade
+    * the exact fixpoint for a caller-supplied round bound; peel depth is
+    * data-dependent, so the exact test is kept and the cost — one
+    * O(partitions) job per round beyond the checkpoint — is accepted. */
+  private def peel(start: DataFrame)(round: DataFrame => DataFrame): (DataFrame, Int) = {
+    var e = start.compacted.localCheckpoint(eager = true)
+    var n = e.count()
+    var rounds = 0
+    var changed = n > 0
+    while (changed) {
+      val e2 = round(e).compacted.localCheckpoint(eager = true)
+      val n2 = e2.count()
+      changed = n2 != n
+      if (changed) rounds += 1
+      e = e2
+      n = n2
+    }
+    (e, rounds)
   }
 
   /** k-core (Seidman, "Network structure and minimum degree", Social
     * Networks 1983): the unique maximal subgraph in which every vertex has
-    * degree ≥ k, by parallel peeling — each round simultaneously removes every
-    * vertex whose current degree is < k, until fixpoint. Removal cascades
-    * (dropping a vertex lowers its neighbors' degrees), so the round count
-    * is the peel DEPTH of the input, not its size; each round is one
-    * grouped degree count + two semi joins — equi-shuffles only, nothing
-    * vertex-sized broadcast or collected. The result is unique regardless
-    * of peel order (the k-core is a closure), which is what makes the
-    * unrolled oracle engine-portable: extra no-op rounds past the fixpoint
-    * change nothing.
+    * degree ≥ k, by parallel [[peel]]ing — each round simultaneously removes
+    * every vertex whose current degree is < k (dropping a vertex lowers its
+    * neighbors' degrees). Each round is one grouped degree count + two semi
+    * joins — equi-shuffles only, nothing vertex-sized broadcast or
+    * collected. The result is unique regardless of peel order (the k-core
+    * is a closure), which is what makes the unrolled oracle
+    * engine-portable: extra no-op rounds past the fixpoint change nothing.
     *
     * Output: (v, core_deg) for every vertex of the k-core, with its degree
     * INSIDE the core (≥ k by definition). */
@@ -424,31 +464,12 @@ object Graphs {
   /** [[kCore]] plus the peel-round count (spec: cascade-depth bound). */
   private[graft] def kCoreWithRounds(edges: DataFrame, k: Int): (DataFrame, Int) = {
     require(k >= 1, s"kCore k must be >= 1, got $k")
-    var e = edges
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .compacted.localCheckpoint(eager = true)
-    var n = e.count()
-    var rounds = 0
-    var changed = n > 0
-    while (changed) {
-      val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select(col("v"))
-      val e2 = e
-        .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
+    val (core, rounds) = peel(undirected(edges)) { e =>
+      val keep = degrees(e).filter(col("deg") >= k).select(col("v"))
+      e.join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-        .compacted.localCheckpoint(eager = true)
-      val n2 = e2.count()
-      changed = n2 != n
-      if (changed) rounds += 1
-      e = e2
-      n = n2
     }
-    val core = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("core_deg"))
-    (core, rounds)
+    (degrees(core).select(col("v"), col("deg").as("core_deg")), rounds)
   }
 
   /** Adamic–Adar link prediction (Adamic & Adar, "Friends and neighbors
@@ -470,11 +491,7 @@ object Graphs {
     * lossless. Pair volume itself is the operator's output, as with q33. */
   def adamicAdar(edges: DataFrame, maxDegree: Option[Int] = None): DataFrame = {
     import graft.functions.Exprs.dsum
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .compacted.persist(StorageLevel.MEMORY_AND_DISK)
+    val und = undirected(edges)
     val nbrs = und.select(col("a").as("v"), col("b").as("n"))
       .union(und.select(col("b").as("v"), col("a").as("n")))
     val deg = nbrs.groupBy(col("n")).agg(count(lit(1)).as("degn"))
@@ -485,13 +502,11 @@ object Graphs {
       .select(col("z1.v").as("x"), col("z2.v").as("y"), col("z1.degn").as("degz"))
     val cand = wedges.join(und.select(col("a").as("x"), col("b").as("y")),
       Seq("x", "y"), "left_anti")
-    val out = cand
+    cand
       .select(col("x"), col("y"),
         round(lit(1.0d) / round(log(col("degz").cast(DoubleType)), 10), 12).as("t"))
       .groupBy(col("x"), col("y"))
       .agg(count(lit(1)).as("n_common"), round(dsum(col("t"), 12), 8).as("aa_score"))
-    und.unpersist(blocking = false)
-    out
   }
 
   /** Multi-source BFS: minimum hop distance from any seed over the
@@ -511,10 +526,7 @@ object Graphs {
     * semantic horizon, not a convergence guess. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"bfsHops maxHops must be >= 0, got $maxHops")
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = undirected(edges)
     val adj = und.union(und.select(col("b").as("a"), col("a").as("b")))
       .compacted.localCheckpoint(eager = true)
     var dist = seeds.select(col("v")).distinct()
@@ -535,84 +547,37 @@ object Graphs {
     * analysis", NSA TR 2008): the maximal subgraph in which every EDGE
     * participates in ≥ k−2 triangles — the edge-granular sibling of
     * [[kCore]]'s vertex peel, and a stricter cohesion filter (every
-    * k-truss is inside a (k−1)-core). Synchronous edge peeling: each round
-    * enumerates triangles on the surviving edges (the [[triangleCounts]]
-    * degree-oriented wedge join — m^1.5-bounded), counts per-EDGE support
-    * (each triangle supports its three edges), and drops every edge below
-    * k−2 simultaneously; dropping an edge kills its triangles, so removal
-    * cascades and the round count is the peel DEPTH. The truss is unique
-    * (a closure), so extra no-op rounds change nothing — the q114 property
-    * that makes a fixed-depth oracle unroll portable.
+    * k-truss is inside a (k−1)-core). Synchronous edge [[peel]]ing: each
+    * round enumerates the surviving edges' [[triangles]] (m^1.5-bounded),
+    * counts per-EDGE support (each triangle supports its three edges), and
+    * drops every edge below k−2 simultaneously; dropping an edge kills its
+    * triangles, so removal cascades. The truss is unique (a closure), so
+    * extra no-op rounds change nothing — the q114 property that makes a
+    * fixed-depth oracle unroll portable.
     *
     * Output: (a, b, support) for every surviving edge with its triangle
     * support INSIDE the truss (≥ k−2 by definition). */
   def kTruss(edges: DataFrame, k: Int): DataFrame = kTrussWithRounds(edges, k)._1
 
-  /** [[kTruss]] plus the peel-round count (spec: cascade-depth bound).
-    *
-    * DELIBERATE deviation from the catalog's otherwise action-free plan
-    * discipline: the peel loop's fixpoint test is a driver-side `count()`
-    * per round (the `localCheckpoint` already materializes each round's
-    * edge set, so the count is a cached-RDD fold, not a recompute). A
-    * declared-horizon variant (the [[bfsHops]]/[[shortestPathsBounded]]
-    * stance) would trade the exact fixpoint for a caller-supplied round
-    * bound; k-truss convergence depth is data-dependent (peel cascades),
-    * so the exact test is kept and the cost — one O(partitions) job per
-    * round beyond the checkpoint — is accepted and documented here. */
+  /** [[kTruss]] plus the peel-round count (spec: cascade-depth bound). Each
+    * round carries the supports it filtered on: the last round removed
+    * nothing, so its supports are the ones inside the truss and no final
+    * support pass is needed. (The start frame's zero supports are output
+    * only for an empty graph, where the loop never runs.) */
   private[graft] def kTrussWithRounds(edges: DataFrame, k: Int): (DataFrame, Int) = {
     require(k >= 2, s"kTruss k must be >= 2, got $k")
-    def supports(e: DataFrame): DataFrame = {
-      // degree-oriented triangle enumeration on the current edge set
-      val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val ori = e
-        .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
-        .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
-        .select(
-          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-            col("a")).otherwise(col("b")).as("u"),
-          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-            col("b")).otherwise(col("a")).as("w"),
-          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-            col("db")).otherwise(col("da")).as("dw"))
-      val e1 = ori.select(col("u"), col("w").as("w1"), col("dw").as("d1"))
-      val e2 = ori.select(col("u"), col("w").as("w2"), col("dw").as("d2"))
-      val tri = e1.join(e2, Seq("u"))
-        .filter(col("d1") < col("d2") || (col("d1") === col("d2") && col("w1") < col("w2")))
-        .join(ori.select(col("u").as("w1"), col("w").as("w2")), Seq("w1", "w2"), "left_semi")
-        .select(col("u").as("t1"), col("w1").as("t2"), col("w2").as("t3"))
+    peel(undirected(edges).withColumn("support", lit(0L))) { e =>
+      val und = e.select(col("a"), col("b"))
+      def edge(x: String, y: String): Column =
+        struct(least(col(x), col(y)).as("a"), greatest(col(x), col(y)).as("b"))
       // each triangle supports its three canonical edges
-      tri.select(explode(array(
-          struct(least(col("t1"), col("t2")).as("a"), greatest(col("t1"), col("t2")).as("b")),
-          struct(least(col("t1"), col("t3")).as("a"), greatest(col("t1"), col("t3")).as("b")),
-          struct(least(col("t2"), col("t3")).as("a"), greatest(col("t2"), col("t3")).as("b"))))
-          .as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
+      val support = triangles(und)
+        .select(explode(array(edge("t1", "t2"), edge("t1", "t3"), edge("t2", "t3"))).as("e"))
+        .groupBy(col("e.a").as("a"), col("e.b").as("b")).agg(count(lit(1)).as("support"))
+      und.join(support, Seq("a", "b"), "left")
+        .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
+        .filter(col("support") >= (k - 2).toLong)
     }
-    var e = edges
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .compacted.localCheckpoint(eager = true)
-    var n = e.count()
-    var rounds = 0
-    var changed = n > 0
-    while (changed) {
-      val sup = supports(e)
-      val e2 = e.join(sup, Seq("a", "b"), "left")
-        .filter(coalesce(col("support"), lit(0L)) >= (k - 2).toLong)
-        .select(col("a"), col("b"))
-        .compacted.localCheckpoint(eager = true)
-      val n2 = e2.count()
-      changed = n2 != n
-      if (changed) rounds += 1
-      e = e2
-      n = n2
-    }
-    val out = e.join(supports(e), Seq("a", "b"), "left")
-      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
-    (out, rounds)
   }
 
   /** Newman modularity Q of a vertex partition over the SIMPLE undirected
@@ -630,18 +595,13 @@ object Graphs {
   def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(38, 0)
-    val und = edges
-      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct().compacted.localCheckpoint(eager = true)
+    val und = undirected(edges).compacted.localCheckpoint(eager = true)
     val la = labels.select(col("v").as("a"), col("label").as("la"))
     val lb = labels.select(col("v").as("b"), col("label").as("lb"))
     val intra = und.join(la, "a").join(lb, "b")
       .filter(col("la") === col("lb"))
       .groupBy(col("la").as("label")).agg(count(lit(1)).as("ec"))
-    val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val dcs = deg.join(labels, "v").groupBy(col("label")).agg(sum(col("deg")).as("dcs"))
+    val dcs = degrees(und).join(labels, "v").groupBy(col("label")).agg(sum(col("deg")).as("dcs"))
     val m = und.agg(count(lit(1)).as("m"))
     val terms = dcs.join(intra, Seq("label"), "left")
       .select(col("label"), coalesce(col("ec"), lit(0L)).as("ec"), col("dcs"))
@@ -683,7 +643,7 @@ object Graphs {
     val maxCost = (Long.MaxValue / K - 1) / math.max(maxHops, 1).toLong
     val und = edges
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"),
-        col("cost").cast(org.apache.spark.sql.types.LongType).as("cost"))
+        col("cost").cast(LongType).as("cost"))
       .withColumn("cost",
         when(col("cost").between(0L, maxCost), col("cost"))
           .otherwise(raise_error(concat(
@@ -715,18 +675,16 @@ object Graphs {
     * an exact cross-engine ladder needs sums, not square roots.
     *
     * Determinism is the PageRank contract: with Σh = 1 every raw authority
-    * mass is ≤ 1, so each term floor(h·1e18 + 0.5) is an exact long, the
-    * longs sum exactly, and the normalizer re-enters through a second
-    * scaled-long pass at 1e12 before the 12-dp re-sync — bit-identical
-    * across engines and partition orders, so the oracle unrolls round by
-    * round. Per round: two equi-shuffle join+sum passes over the
+    * mass is ≤ 1, so its [[scaledSum]] at 1e18 is exact, and the normalizer
+    * re-enters through a second scaled-long pass at 1e12 before the 12-dp
+    * re-sync — bit-identical across engines and partition orders, so the
+    * oracle unrolls round by round. Per round: two equi-shuffle join+sum passes over the
     * checkpointed edge table + two 1-row total cross-joins (the plan-side
     * dangling-mass pattern — no per-round driver action).
     *
     * Output: (v, auth, hub) over all vertices, 12-dp; vertices with no
     * in-edges score auth = 0, no out-edges hub = 0. */
   def hits(edges: DataFrame, iterations: Int = 4): DataFrame = {
-    import org.apache.spark.sql.types.LongType
     val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
       .distinct().compacted.localCheckpoint(eager = true)
     val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
@@ -736,10 +694,9 @@ object Graphs {
     var auth = verts.withColumn("auth", lit(0.0d))
     def renorm(raw: DataFrame, cName: String): DataFrame = {
       // raw is (v, raw) with every value in [0, 1]; total via the exact
-      // 1e12 ladder as a 1-ROW frame (values are 12-dp so floor(·1e12+0.5)
-      // is exact), then the 12-dp re-sync both engines share
-      val tot = raw.agg((sum(floor(col("raw") * lit(1.0e12d) + lit(0.5d)).cast(LongType))
-        .cast(DoubleType) / lit(1.0e12d)).as("tot"))
+      // 1e12 ladder as a 1-ROW frame (values are 12-dp so the scaling is
+      // exact), then the 12-dp re-sync both engines share
+      val tot = raw.agg(scaledSum(col("raw"), 1.0e12d).as("tot"))
       val scored = raw.crossJoin(tot)
         .select(col("v"), round(col("raw") / col("tot"), 12).as(cName))
       verts.join(scored, Seq("v"), "left")
@@ -750,13 +707,11 @@ object Graphs {
       // partial below 1e18 so the long accumulator cannot overflow
       val aRaw = e.join(hub, e("src") === hub("v"))
         .groupBy(e("dst").as("v"))
-        .agg(round(sum(floor(col("hub") * lit(1.0e18d) + lit(0.5d)).cast(LongType))
-          .cast(DoubleType) / lit(1.0e18d), 12).as("raw"))
+        .agg(round(scaledSum(col("hub"), 1.0e18d), 12).as("raw"))
       auth = renorm(aRaw, "auth").compacted.localCheckpoint(eager = true)
       val hRaw = e.join(auth, e("dst") === auth("v"))
         .groupBy(e("src").as("v"))
-        .agg(round(sum(floor(col("auth") * lit(1.0e18d) + lit(0.5d)).cast(LongType))
-          .cast(DoubleType) / lit(1.0e18d), 12).as("raw"))
+        .agg(round(scaledSum(col("auth"), 1.0e18d), 12).as("raw"))
       hub = renorm(hRaw, "hub").compacted.localCheckpoint(eager = true)
     }
     auth.join(hub, "v")

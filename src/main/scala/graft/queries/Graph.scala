@@ -4,6 +4,7 @@ import graft.QueryDef
 import graft.graph.Graphs
 import graft.operators.TextPipeline
 import graft.sources.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph-mining queries (PDF2 workload): co-occurrence network of terms over
@@ -13,19 +14,56 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  private def edgesCte: String = s"""
-    WITH ${Text.toksCte},
+  /** `toks`, then the co-occurrence counts cooc(src, dst, cnt) over each
+    * document's distinct terms — the oracle of [[cooc]]. Follows a `WITH`. */
+  private val coocCte: String = s"""${Text.toksCte},
     dt AS (SELECT DISTINCT doc_id, term FROM toks),
     cooc AS (
       SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
       FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
-      GROUP BY 1, 2),
+      GROUP BY 1, 2)"""
+
+  private def edgesCte: String = s"""
+    WITH $coocCte,
     edges AS (
       SELECT src, dst, cnt,
         CAST(cnt AS DOUBLE)/CAST(SUM(cnt) OVER (PARTITION BY src) AS DOUBLE) AS w
       FROM cooc),
     verts AS (SELECT DISTINCT src AS v FROM cooc),
     nv AS (SELECT COUNT(*) AS n FROM verts)"""
+
+  /** The triangle oracle q104 and q156 share: the undirected co-occurrence
+    * graph und(a, b), its degrees deg(v, deg) and per-vertex triangle
+    * counts pv(v, tri), by the same degree orientation and wedge closure as
+    * [[Graphs.triangles]]. */
+  private val triangleCte: String = s"""
+        WITH ${Text.toksCte},
+        dt AS (SELECT DISTINCT doc_id, term FROM toks),
+        cooc AS (
+          SELECT DISTINCT a.term AS src, b.term AS dst
+          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term),
+        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM cooc),
+        deg AS (SELECT v, COUNT(*) AS deg FROM (
+          SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und) ends GROUP BY 1),
+        ori AS (
+          SELECT
+            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+              THEN u.a ELSE u.b END AS u,
+            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+              THEN u.b ELSE u.a END AS w,
+            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
+              THEN db.deg ELSE da.deg END AS dw
+          FROM und u JOIN deg da ON u.a = da.v JOIN deg db ON u.b = db.v),
+        wed AS (
+          SELECT e1.u AS t1, e1.w AS t2, e2.w AS t3
+          FROM ori e1 JOIN ori e2 ON e1.u = e2.u AND
+            (e1.dw < e2.dw OR (e1.dw = e2.dw AND e1.w < e2.w))),
+        tri AS (
+          SELECT t1, t2, t3 FROM wed JOIN ori ON wed.t2 = ori.u AND wed.t3 = ori.w),
+        pv AS (SELECT v, COUNT(*) AS tri FROM (
+          SELECT t1 AS v FROM tri UNION ALL
+          SELECT t2 AS v FROM tri UNION ALL
+          SELECT t3 AS v FROM tri) corners GROUP BY 1)"""
 
   /** Unrolled PageRank oracle: r0 … r{iters} as chained aggregating CTEs;
     * `finalSelect` runs over the last round aliased as (term, rank).
@@ -36,20 +74,23 @@ object Graph {
     * SUM(BIGINT) yields HUGEINT — the exact sum — cast straight to DOUBLE,
     * matching Spark's long→double cast bit-for-bit since the value < 2^63.) */
   private def pageRankSql(iters: Int, d: Double,
-                          finalSelect: String = "SELECT term, rank FROM result"): String = {
-    val rounds = (1 to iters).map { i =>
+                          finalSelect: String = "SELECT term, rank FROM result"): String =
+    s"""$edgesCte,
+    r0 AS (SELECT v, CAST(1.0 AS DOUBLE)/(SELECT n FROM nv) AS rank FROM verts),
+    ${pageRankRounds(iters, d)},
+    result AS (SELECT v AS term, round(rank, 6) AS rank FROM r$iters)
+    $finalSelect"""
+
+  /** The rounds r1 … r{iters} of the unrolled PageRank oracles over `edges`
+    * (src, dst, w), `nv` and r0 (q25, q43 and q138). */
+  private def pageRankRounds(iters: Int, d: Double): String =
+    (1 to iters).map { i =>
       s"""r$i AS (
         SELECT e.dst AS v,
           round((SELECT CAST(1.0-$d AS DOUBLE)/n FROM nv) +
             $d*(CAST(SUM(CAST(floor(r.rank*e.w*1e18 + 0.5) AS BIGINT)) AS DOUBLE)/1e18), 12) AS rank
         FROM edges e JOIN r${i - 1} r ON e.src = r.v GROUP BY e.dst)"""
     }.mkString(",\n")
-    s"""$edgesCte,
-    r0 AS (SELECT v, CAST(1.0 AS DOUBLE)/(SELECT n FROM nv) AS rank FROM verts),
-    $rounds,
-    result AS (SELECT v AS term, round(rank, 6) AS rank FROM r$iters)
-    $finalSelect"""
-  }
 
   /** Unrolled synchronous LPA oracle with (max integer weight, min label)
     * tie-breaking — bit-exact across engines because weights stay integral. */
@@ -68,15 +109,58 @@ object Graph {
     result AS (SELECT v AS term, label FROM l$iters)"""
   }
 
-  private def termEdges(s: org.apache.spark.sql.SparkSession, dir: String) =
-    Graphs.normalizeEdges(
-      Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents"))))
+  /** The term co-occurrence network (src, dst, cnt) of `documents`. */
+  private def cooc(s: SparkSession, dir: String): DataFrame =
+    Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
+
+  /** Its frequent pairs (cnt ≥ 20) as (src, dst): the thresholded network
+    * the cohesion and path rows run on. */
+  private def strongEdges(s: SparkSession, dir: String): DataFrame =
+    cooc(s, dir).filter(col("cnt") >= 20).select(col("src"), col("dst"))
+
+  private def termEdges(s: SparkSession, dir: String): DataFrame = Graphs.normalizeEdges(cooc(s, dir))
+
+  /** The nation→region membership digraph of q81 and q121 (regions shifted
+    * by +100 out of the nation key range). Out-degree is exactly 1, so the
+    * weights are pre-normalized. */
+  private def nationEdges(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "nation").select(
+      col("n_nationkey").cast("long").as("src"),
+      (col("n_regionkey") + 100).cast("long").as("dst"),
+      lit(1.0d).as("w"))
+
+  // Fixture subgraphs the rows union onto the corpus graph, shared by each
+  // row's frame and its oracle's VALUES list (see the rows for their roles).
+  private val kCoreFixture = (1 to 7).map(i => (s"kcfix$i", s"kcfix${i + 1}")) ++
+    Seq(("ktfix1", "ktfix2"), ("ktfix2", "ktfix3"), ("ktfix1", "ktfix3"))
+  private val kTrussFixture = Seq(
+    ("ktfx1", "ktfx2"), ("ktfx1", "ktfx3"), ("ktfx2", "ktfx3"),
+    ("ktfx2", "ktfx4"), ("ktfx3", "ktfx4"),
+    ("ktfx3", "ktfx5"), ("ktfx4", "ktfx5"),
+    ("kqfx1", "kqfx2"), ("kqfx1", "kqfx3"), ("kqfx1", "kqfx4"),
+    ("kqfx2", "kqfx3"), ("kqfx2", "kqfx4"), ("kqfx3", "kqfx4"))
+  private val assortFixture = (1 to 5).map(i => ("asfix_hub", s"asfix_leaf$i")) ++
+    Seq(("asfix_leaf1", "asfix_p1"), ("asfix_p1", "asfix_p2"))
+  private val bfsChain = (1 to 7).map(i => (s"bffix$i", s"bffix${i + 1}"))
+  private val hitsFixture = Seq(
+    ("hhfix1", "hafix1"), ("hhfix1", "hafix2"), ("hhfix1", "hafix3"),
+    ("hhfix2", "hafix1"), ("hhfix2", "hafix2"))
+  private val pathFixture = Seq(
+    ("spfix_s", "spfix_x", 10L), ("spfix_s", "spfix_y", 1L),
+    ("spfix_y", "spfix_z", 1L), ("spfix_z", "spfix_x", 1L),
+    ("spfix_s", "spfix_t", 2L), ("spfix_y", "spfix_t", 1L))
+
+  /** Fixture rows as a SQL VALUES list: strings quoted, numbers bare. */
+  private def sqlValues(rows: Seq[Product]): String =
+    rows.map(_.productIterator.map {
+      case v: String => s"'$v'"
+      case v => v.toString
+    }.mkString("(", ", ", ")")).mkString(", ")
 
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef("q23_cooccurrence",
-      (s, dir) => Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-        .select(col("src"), col("dst"), col("cnt")),
+      (s, dir) => cooc(s, dir).select(col("src"), col("dst"), col("cnt")),
       oracle = Some(s"""
         ${Text.toksCte.replaceFirst("^\\s*", "WITH ")},
         dt AS (SELECT DISTINCT doc_id, term FROM toks)
@@ -97,8 +181,7 @@ object Graph {
       bench = true),
 
     QueryDef("q26_label_propagation",
-      (s, dir) => Graphs.labelPropagation(
-        Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents"))), iterations = 5)
+      (s, dir) => Graphs.labelPropagation(cooc(s, dir), iterations = 5)
         .select(col("v").as("term"), col("label")),
       oracle = Some(lpaSql(5) + "\n    SELECT term, label FROM result")),
 
@@ -113,8 +196,7 @@ object Graph {
 
     // T5: group-by-label collation of community members (PDF2 p.6 task 6)
     QueryDef("q44_communities",
-      (s, dir) => Graphs.labelPropagation(
-        Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents"))), iterations = 5)
+      (s, dir) => Graphs.labelPropagation(cooc(s, dir), iterations = 5)
         .groupBy(col("label"))
         .agg(count(lit(1)).as("size"),
           array_join(array_sort(collect_list(col("v"))), ",").as("members")),
@@ -160,14 +242,8 @@ object Graph {
     // dangling every round and the redistribution term is load-bearing —
     // drop it and every rank is wrong in the 3rd decimal.
     QueryDef("q81_pagerank_dangling",
-      (s, dir) => {
-        val e = Tables(s, dir, "nation").select(
-          col("n_nationkey").cast("long").as("src"),
-          (col("n_regionkey") + 100).cast("long").as("dst"),
-          lit(1.0d).as("w")) // out-degree is exactly 1: weights pre-normalized
-        Graphs.pageRankGeneral(e, iterations = 10)
-          .select(col("v"), round(col("rank"), 6).as("rank"))
-      },
+      (s, dir) => Graphs.pageRankGeneral(nationEdges(s, dir), iterations = 10)
+        .select(col("v"), round(col("rank"), 6).as("rank")),
       oracle = Some(pageRankDanglingSql(10, 0.85))),
 
     // Personalized PageRank (random walk with restart): the q81 digraph
@@ -179,12 +255,8 @@ object Graph {
     // computed in the same operation order.
     QueryDef("q121_personalized_pagerank",
       (s, dir) => {
-        val e = Tables(s, dir, "nation").select(
-          col("n_nationkey").cast("long").as("src"),
-          (col("n_regionkey") + 100).cast("long").as("dst"),
-          lit(1.0d).as("w"))
         val seeds = { import s.implicits._; Seq(0L, 5L, 10L).toDF("v") }
-        Graphs.personalizedPageRank(e, seeds, iterations = 10)
+        Graphs.personalizedPageRank(nationEdges(s, dir), seeds, iterations = 10)
           .select(col("v"), round(col("rank"), 6).as("rank"))
       },
       oracle = Some(personalizedPageRankSql(10, 0.85, Seq(0L, 5L, 10L))),
@@ -196,38 +268,9 @@ object Graph {
     // oracle replays the SAME orientation and closure joins, so counts are
     // exact integers — hash-match needs no rounding ladder.
     QueryDef("q104_triangle_counts",
-      (s, dir) => Graphs.triangleCounts(
-        Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-          .select(col("src"), col("dst")))
+      (s, dir) => Graphs.triangleCounts(cooc(s, dir).select(col("src"), col("dst")))
         .select(col("v").as("term"), col("triangles")),
-      oracle = Some(s"""
-        WITH ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT DISTINCT a.term AS src, b.term AS dst
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term),
-        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM cooc),
-        deg AS (SELECT v, COUNT(*) AS deg FROM (
-          SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und) ends GROUP BY 1),
-        ori AS (
-          SELECT
-            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-              THEN u.a ELSE u.b END AS u,
-            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-              THEN u.b ELSE u.a END AS w,
-            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-              THEN db.deg ELSE da.deg END AS dw
-          FROM und u JOIN deg da ON u.a = da.v JOIN deg db ON u.b = db.v),
-        wed AS (
-          SELECT e1.u AS t1, e1.w AS t2, e2.w AS t3
-          FROM ori e1 JOIN ori e2 ON e1.u = e2.u AND
-            (e1.dw < e2.dw OR (e1.dw = e2.dw AND e1.w < e2.w))),
-        tri AS (
-          SELECT t1, t2, t3 FROM wed JOIN ori ON wed.t2 = ori.u AND wed.t3 = ori.w),
-        pv AS (SELECT v, COUNT(*) AS tri FROM (
-          SELECT t1 AS v FROM tri UNION ALL
-          SELECT t2 AS v FROM tri UNION ALL
-          SELECT t3 AS v FROM tri) corners GROUP BY 1)
+      oracle = Some(s"""$triangleCte
         SELECT deg.v AS term, CAST(COALESCE(pv.tri, 0) AS BIGINT) AS triangles
         FROM deg LEFT JOIN pv ON deg.v = pv.v"""),
       bench = true),
@@ -240,14 +283,8 @@ object Graph {
     // of the already-benched wedge machinery.
     QueryDef("q156_clustering_coeff",
       (s, dir) => {
-        val cooc = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-          .select(col("src"), col("dst"))
-        val und = cooc
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .filter(col("a") =!= col("b")).distinct()
-        val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        deg.join(Graphs.triangleCounts(cooc), "v")
+        val edges = cooc(s, dir).select(col("src"), col("dst"))
+        Graphs.degrees(Graphs.undirected(edges)).join(Graphs.triangleCounts(edges), "v")
           .select(col("v").as("term"), col("deg"), col("triangles"),
             when(col("deg") < 2, lit(0.0d))
               .otherwise(round((lit(2L) * col("triangles"))
@@ -256,34 +293,7 @@ object Graph {
                   .cast(org.apache.spark.sql.types.DoubleType), 8))
               .as("clustering"))
       },
-      oracle = Some(s"""
-        WITH ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT DISTINCT a.term AS src, b.term AS dst
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term),
-        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM cooc),
-        deg AS (SELECT v, COUNT(*) AS deg FROM (
-          SELECT a AS v FROM und UNION ALL SELECT b AS v FROM und) ends GROUP BY 1),
-        ori AS (
-          SELECT
-            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-              THEN u.a ELSE u.b END AS u,
-            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-              THEN u.b ELSE u.a END AS w,
-            CASE WHEN da.deg < db.deg OR (da.deg = db.deg AND u.a < u.b)
-              THEN db.deg ELSE da.deg END AS dw
-          FROM und u JOIN deg da ON u.a = da.v JOIN deg db ON u.b = db.v),
-        wed AS (
-          SELECT e1.u AS t1, e1.w AS t2, e2.w AS t3
-          FROM ori e1 JOIN ori e2 ON e1.u = e2.u AND
-            (e1.dw < e2.dw OR (e1.dw = e2.dw AND e1.w < e2.w))),
-        tri AS (
-          SELECT t1, t2, t3 FROM wed JOIN ori ON wed.t2 = ori.u AND wed.t3 = ori.w),
-        pv AS (SELECT v, COUNT(*) AS tri FROM (
-          SELECT t1 AS v FROM tri UNION ALL
-          SELECT t2 AS v FROM tri UNION ALL
-          SELECT t3 AS v FROM tri) corners GROUP BY 1)
+      oracle = Some(s"""$triangleCte
         SELECT deg.v AS term, CAST(deg.deg AS BIGINT) AS deg,
           CAST(COALESCE(pv.tri, 0) AS BIGINT) AS triangles,
           CASE WHEN deg.deg < 2 THEN CAST(0.0 AS DOUBLE)
@@ -345,16 +355,7 @@ object Graph {
     QueryDef("q171_ktruss",
       (s, dir) => {
         import s.implicits._
-        val real = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-          .filter(col("cnt") >= 20).select(col("src"), col("dst"))
-        val fixture = Seq(
-          ("ktfx1", "ktfx2"), ("ktfx1", "ktfx3"), ("ktfx2", "ktfx3"),
-          ("ktfx2", "ktfx4"), ("ktfx3", "ktfx4"),
-          ("ktfx3", "ktfx5"), ("ktfx4", "ktfx5"),
-          ("kqfx1", "kqfx2"), ("kqfx1", "kqfx3"), ("kqfx1", "kqfx4"),
-          ("kqfx2", "kqfx3"), ("kqfx2", "kqfx4"), ("kqfx3", "kqfx4"))
-          .toDF("src", "dst")
-        Graphs.kTruss(real.union(fixture), k = 4)
+        Graphs.kTruss(strongEdges(s, dir).union(kTrussFixture.toDF("src", "dst")), k = 4)
           .select(col("a").as("term_a"), col("b").as("term_b"), col("support"))
       },
       oracle = Some(kTrussSql(4, 4)),
@@ -376,17 +377,8 @@ object Graph {
         // the raw corpus graph is near-complete (constant degree → zero
         // variance → r undefined): threshold to the q114 edge set and
         // union a star+path fixture so endpoint degrees genuinely vary
-        val real = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-          .filter(col("cnt") >= 20).select(col("src"), col("dst"))
-        val fixture = (
-          (1 to 5).map(i => ("asfix_hub", s"asfix_leaf$i")) ++
-            Seq(("asfix_leaf1", "asfix_p1"), ("asfix_p1", "asfix_p2"))
-          ).toDF("src", "dst")
-        val und = real.union(fixture)
-          .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-          .filter(col("a") =!= col("b")).distinct()
-        val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+        val und = Graphs.undirected(strongEdges(s, dir).union(assortFixture.toDF("src", "dst")))
+        val deg = Graphs.degrees(und)
         val pairs = und.select(col("a"), col("b"))
           .union(und.select(col("b").as("a"), col("a").as("b")))
           .join(deg.select(col("v").as("a"), col("deg").as("dx")), "a")
@@ -402,19 +394,10 @@ object Graph {
               col("sx").cast(dec) * col("sx").cast(dec)).cast(dbl), 8).as("assortativity"))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
-          GROUP BY 1, 2),
+        WITH $coocCte,
         alle AS (
           SELECT src, dst FROM cooc WHERE cnt >= 20
-          UNION ALL SELECT * FROM (VALUES
-            ('asfix_hub', 'asfix_leaf1'), ('asfix_hub', 'asfix_leaf2'),
-            ('asfix_hub', 'asfix_leaf3'), ('asfix_hub', 'asfix_leaf4'),
-            ('asfix_hub', 'asfix_leaf5'), ('asfix_leaf1', 'asfix_p1'),
-            ('asfix_p1', 'asfix_p2')) fx(src, dst)),
+          UNION ALL SELECT * FROM (VALUES ${sqlValues(assortFixture)}) fx(src, dst)),
         und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
                 FROM alle WHERE src <> dst),
         deg AS (SELECT v, COUNT(*) AS deg FROM (
@@ -446,19 +429,10 @@ object Graph {
     QueryDef("q114_kcore",
       (s, dir) => {
         import s.implicits._
-        val real = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-          .filter(col("cnt") >= 20).select(col("src"), col("dst"))
-        val fixture = (
-          (1 to 7).map(i => (s"kcfix$i", s"kcfix${i + 1}")) ++
-            Seq(("ktfix1", "ktfix2"), ("ktfix2", "ktfix3"), ("ktfix1", "ktfix3"))
-          ).toDF("src", "dst")
-        Graphs.kCore(real.union(fixture), k = 2)
+        Graphs.kCore(strongEdges(s, dir).union(kCoreFixture.toDF("src", "dst")), k = 2)
           .select(col("v").as("term"), col("core_deg"))
       },
       oracle = Some {
-        val chain = (1 to 7).map(i => s"('kcfix$i', 'kcfix${i + 1}')")
-        val tri = Seq("('ktfix1', 'ktfix2')", "('ktfix2', 'ktfix3')", "('ktfix1', 'ktfix3')")
-        val fixtureVals = (chain ++ tri).mkString(", ")
         // MATERIALIZED is load-bearing (the q81 lesson): every round reads
         // e{r-1} three times — DuckDB's default inlining would expand
         // exponentially many copies of the whole upstream chain
@@ -470,15 +444,10 @@ object Graph {
               SELECT e.a, e.b FROM e${r - 1} e JOIN k$r x ON e.a = x.v JOIN k$r y ON e.b = y.v)"""
         }.mkString(",\n        ")
         s"""
-        WITH ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
-          GROUP BY 1, 2),
+        WITH $coocCte,
         alle AS (
           SELECT src, dst FROM cooc WHERE cnt >= 20
-          UNION ALL SELECT * FROM (VALUES $fixtureVals) fx(src, dst)),
+          UNION ALL SELECT * FROM (VALUES ${sqlValues(kCoreFixture)}) fx(src, dst)),
         e0 AS MATERIALIZED (
           SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
           FROM alle WHERE src <> dst),
@@ -496,17 +465,10 @@ object Graph {
     // DECIMAL sum→8 dp, so the score is bit-portable.
     QueryDef("q115_adamic_adar",
       (s, dir) => {
-        val edges = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-          .filter(col("cnt") >= 20).select(col("src"), col("dst"))
-        Graphs.adamicAdar(edges, maxDegree = Some(64))
+        Graphs.adamicAdar(strongEdges(s, dir), maxDegree = Some(64))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
-          GROUP BY 1, 2),
+        WITH $coocCte,
         und AS (
           SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
           FROM cooc WHERE cnt >= 20),
@@ -536,10 +498,10 @@ object Graph {
     // engines.
     QueryDef("q118_pmi",
       (s, dir) => {
-        val cooc = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-        val marg = cooc.groupBy(col("src")).agg(sum(col("cnt")).as("m"))
-        val tot = cooc.agg(sum(col("cnt")).as("t"))
-        cooc
+        val c = cooc(s, dir)
+        val marg = c.groupBy(col("src")).agg(sum(col("cnt")).as("m"))
+        val tot = c.agg(sum(col("cnt")).as("t"))
+        c
           .join(marg.select(col("src"), col("m").as("ma")), "src")
           .join(marg.select(col("src").as("dst"), col("m").as("mb")), "dst")
           .crossJoin(broadcast(tot))
@@ -549,12 +511,7 @@ object Graph {
           .filter(col("pmi") > 0)
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
-          GROUP BY 1, 2),
+        WITH $coocCte,
         marg AS (SELECT src, SUM(cnt) AS m FROM cooc GROUP BY 1),
         tot AS (SELECT SUM(cnt) AS t FROM cooc)
         SELECT c.src, c.dst, c.cnt,
@@ -579,28 +536,19 @@ object Graph {
     QueryDef("q127_bfs_hops",
       (s, dir) => {
         import s.implicits._
-        val real = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-          .filter(col("cnt") >= 20).select(col("src"), col("dst"))
-        val chain = (1 to 7).map(i => (s"bffix$i", s"bffix${i + 1}")).toDF("src", "dst")
+        val real = strongEdges(s, dir)
         val seeds = real.select(explode(array(col("src"), col("dst"))).as("v"))
           .distinct().orderBy(col("v").asc).limit(3)
           .union(Seq("bffix1").toDF("v"))
-        Graphs.bfsHops(real.union(chain), seeds, maxHops = 6)
+        Graphs.bfsHops(real.union(bfsChain.toDF("src", "dst")), seeds, maxHops = 6)
           .select(col("v").as("term"), col("hops"))
       },
-      oracle = Some {
-        val chainVals = (1 to 7).map(i => s"('bffix$i', 'bffix${i + 1}')").mkString(", ")
-        s"""
-        WITH RECURSIVE ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
-          GROUP BY 1, 2),
+      oracle = Some(s"""
+        WITH RECURSIVE $coocCte,
         rc AS MATERIALIZED (SELECT src, dst FROM cooc WHERE cnt >= 20),
         alle AS (
           SELECT src, dst FROM rc
-          UNION ALL SELECT * FROM (VALUES $chainVals) fx(src, dst)),
+          UNION ALL SELECT * FROM (VALUES ${sqlValues(bfsChain)}) fx(src, dst)),
         und AS (
           SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
           FROM alle WHERE src <> dst),
@@ -616,8 +564,7 @@ object Graph {
           UNION
           SELECT adj.b, walk.hop + 1 FROM walk JOIN adj ON adj.a = walk.v
           WHERE walk.hop < 6)
-        SELECT v AS term, CAST(MIN(hop) AS BIGINT) AS hops FROM walk GROUP BY 1"""
-      },
+        SELECT v AS term, CAST(MIN(hop) AS BIGINT) AS hops FROM walk GROUP BY 1"""),
       bench = true),
 
     // HITS hubs/authorities (Kleinberg 1999) over the word-ADJACENCY
@@ -638,10 +585,7 @@ object Graph {
           .select(explode(expr(
             "transform(sequence(1, size(tk) - 1), i -> struct(tk[i - 1] AS src, tk[i] AS dst))")).as("e"))
           .select(col("e.src"), col("e.dst"))
-        val fixture = Seq(
-          ("hhfix1", "hafix1"), ("hhfix1", "hafix2"), ("hhfix1", "hafix3"),
-          ("hhfix2", "hafix1"), ("hhfix2", "hafix2")).toDF("src", "dst")
-        Graphs.hits(big.union(fixture), iterations = 4)
+        Graphs.hits(big.union(hitsFixture.toDF("src", "dst")), iterations = 4)
           .select(col("v").as("term"),
             round(col("auth"), 6).as("auth"), round(col("hub"), 6).as("hub"))
       },
@@ -688,18 +632,14 @@ object Graph {
     QueryDef("q147_shortest_paths",
       (s, dir) => {
         import s.implicits._
-        val real = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
+        val real = cooc(s, dir)
           .filter(col("cnt") >= 20)
           .select(col("src"), col("dst"), (expr("1000000 div cnt") + lit(1L)).as("cost"))
-        val fixture = Seq(
-          ("spfix_s", "spfix_x", 10L), ("spfix_s", "spfix_y", 1L),
-          ("spfix_y", "spfix_z", 1L), ("spfix_z", "spfix_x", 1L),
-          ("spfix_s", "spfix_t", 2L), ("spfix_y", "spfix_t", 1L))
-          .toDF("src", "dst", "cost")
         val seeds = real.select(explode(array(col("src"), col("dst"))).as("v"))
           .distinct().orderBy(col("v").asc).limit(3)
           .union(Seq("spfix_s").toDF("v"))
-        Graphs.shortestPathsBounded(real.union(fixture), seeds, maxHops = 6)
+        Graphs.shortestPathsBounded(real.union(pathFixture.toDF("src", "dst", "cost")), seeds,
+          maxHops = 6)
           .select(col("v").as("term"), col("cost"), col("hops"))
       },
       oracle = Some(shortestPathsSql(6)),
@@ -713,9 +653,8 @@ object Graph {
     // arithmetic through DECIMAL(38,0) until one final division.
     QueryDef("q149_modularity",
       (s, dir) => {
-        val cooc = Graphs.coOccurrence(TextPipeline.tokenize(Tables(s, dir, "documents")))
-        Graphs.modularity(cooc.select(col("src"), col("dst")),
-          Graphs.labelPropagation(cooc, iterations = 5))
+        val c = cooc(s, dir)
+        Graphs.modularity(c.select(col("src"), col("dst")), Graphs.labelPropagation(c, iterations = 5))
       },
       oracle = Some(lpaSql(5) + """,
         und AS MATERIALIZED (
@@ -751,11 +690,6 @@ object Graph {
     * with a grouped MIN over the packed cost·1024+hops key — all-integer,
     * so the min is order-independent and each round replays exactly. */
   private def shortestPathsSql(maxHops: Int): String = {
-    val fixtureVals = Seq(
-      ("spfix_s", "spfix_x", 10L), ("spfix_s", "spfix_y", 1L),
-      ("spfix_y", "spfix_z", 1L), ("spfix_z", "spfix_x", 1L),
-      ("spfix_s", "spfix_t", 2L), ("spfix_y", "spfix_t", 1L))
-      .map { case (a, b, c) => s"('$a', '$b', $c)" }.mkString(", ")
     val rounds = (1 to maxHops).map { r =>
       s"""d$r AS MATERIALIZED (
         SELECT v, MIN(pk) AS pk FROM (
@@ -766,17 +700,12 @@ object Graph {
         GROUP BY v)"""
     }.mkString(",\n        ")
     s"""
-        WITH ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
-          GROUP BY 1, 2),
+        WITH $coocCte,
         rc AS MATERIALIZED (
           SELECT src, dst, (1000000 // cnt) + 1 AS cost FROM cooc WHERE cnt >= 20),
         alle AS (
           SELECT src, dst, cost FROM rc
-          UNION ALL SELECT * FROM (VALUES $fixtureVals) fx(src, dst, cost)),
+          UNION ALL SELECT * FROM (VALUES ${sqlValues(pathFixture)}) fx(src, dst, cost)),
         und AS (
           SELECT least(src, dst) AS a, greatest(src, dst) AS b, MIN(cost) AS cost
           FROM alle WHERE src <> dst GROUP BY 1, 2),
@@ -794,15 +723,8 @@ object Graph {
 
   /** Unrolled TextRank oracle: the q58-window graph built row-locally
     * (lateral series over each token list), symmetrized and out-normalized,
-    * then [[pageRankSql]]'s exact scaled-long round template verbatim. */
-  private def textrankSql(iters: Int, d: Double): String = {
-    val rounds = (1 to iters).map { i =>
-      s"""r$i AS (
-        SELECT e.dst AS v,
-          round((SELECT CAST(1.0-$d AS DOUBLE)/n FROM nv) +
-            $d*(CAST(SUM(CAST(floor(r.rank*e.w*1e18 + 0.5) AS BIGINT)) AS DOUBLE)/1e18), 12) AS rank
-        FROM edges e JOIN r${i - 1} r ON e.src = r.v GROUP BY e.dst)"""
-    }.mkString(",\n")
+    * then the exact scaled-long rounds of [[pageRankSql]]. */
+  private def textrankSql(iters: Int, d: Double): String =
     s"""
     WITH seq AS (
       SELECT list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
@@ -823,10 +745,9 @@ object Graph {
     verts AS (SELECT DISTINCT src AS v FROM cooc),
     nv AS (SELECT COUNT(*) AS n FROM verts),
     r0 AS (SELECT v, CAST(1.0 AS DOUBLE)/(SELECT n FROM nv) AS rank FROM verts),
-    $rounds,
+    ${pageRankRounds(iters, d)},
     result AS (SELECT v AS term, round(rank, 6) AS rank FROM r$iters)
     SELECT term, rank FROM result ORDER BY rank DESC, term ASC LIMIT 20"""
-  }
 
   /** Unrolled k-truss oracle ([[Graphs.kTruss]], `rounds` peel rounds +
     * one final support pass): per round the q104 degree-oriented triangle
@@ -835,13 +756,6 @@ object Graph {
     * canonical edges), and the simultaneous drop of every edge below
     * k−2. MATERIALIZED throughout — every frame feeds two successors. */
   private def kTrussSql(k: Int, rounds: Int): String = {
-    val fixtureVals = Seq(
-      ("ktfx1", "ktfx2"), ("ktfx1", "ktfx3"), ("ktfx2", "ktfx3"),
-      ("ktfx2", "ktfx4"), ("ktfx3", "ktfx4"),
-      ("ktfx3", "ktfx5"), ("ktfx4", "ktfx5"),
-      ("kqfx1", "kqfx2"), ("kqfx1", "kqfx3"), ("kqfx1", "kqfx4"),
-      ("kqfx2", "kqfx3"), ("kqfx2", "kqfx4"), ("kqfx3", "kqfx4"))
-      .map { case (a, b) => s"('$a', '$b')" }.mkString(", ")
     def supportBlock(r: Int, src: String): String =
       s"""dg$r AS (SELECT v, COUNT(*) AS deg FROM (
           SELECT a AS v FROM $src UNION ALL SELECT b FROM $src) u GROUP BY 1),
@@ -874,15 +788,10 @@ object Graph {
           WHERE s.support >= ${k - 2})"""
     }.mkString(",\n        ")
     s"""
-        WITH ${Text.toksCte},
-        dt AS (SELECT DISTINCT doc_id, term FROM toks),
-        cooc AS (
-          SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
-          FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
-          GROUP BY 1, 2),
+        WITH $coocCte,
         alle AS (
           SELECT src, dst FROM cooc WHERE cnt >= 20
-          UNION ALL SELECT * FROM (VALUES $fixtureVals) fx(src, dst)),
+          UNION ALL SELECT * FROM (VALUES ${sqlValues(kTrussFixture)}) fx(src, dst)),
         e0 AS MATERIALIZED (
           SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
           FROM alle WHERE src <> dst),
@@ -900,10 +809,6 @@ object Graph {
     * edge-less sides score literal 0. MATERIALIZED per round — each frame
     * is read twice (normalizer subquery + join), the q81 lesson. */
   private def hitsSql(iters: Int): String = {
-    val fixtureVals = Seq(
-      ("hhfix1", "hafix1"), ("hhfix1", "hafix2"), ("hhfix1", "hafix3"),
-      ("hhfix2", "hafix1"), ("hhfix2", "hafix2"))
-      .map { case (a, b) => s"('$a', '$b')" }.mkString(", ")
     val rounds = (1 to iters).map { i =>
       s"""ar$i AS MATERIALIZED (
         SELECT e.dst AS v,
@@ -933,7 +838,7 @@ object Graph {
           FROM (SELECT tk, UNNEST(generate_series(1, len(tk) - 1)) AS i FROM seq WHERE len(tk) > 1) z),
         alle AS (
           SELECT src, dst FROM bg
-          UNION ALL SELECT * FROM (VALUES $fixtureVals) fx(src, dst)),
+          UNION ALL SELECT * FROM (VALUES ${sqlValues(hitsFixture)}) fx(src, dst)),
         edges AS MATERIALIZED (SELECT DISTINCT src, dst FROM alle WHERE src <> dst),
         verts AS MATERIALIZED (
           SELECT DISTINCT v FROM (SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges) u),
@@ -943,73 +848,62 @@ object Graph {
         FROM a$iters a JOIN h$iters h ON a.v = h.v"""
   }
 
-  /** Unrolled general-graph PageRank oracle ([[Graphs.pageRankGeneral]]):
-    * per round, d{i-1} sums dangling mass as exact 1e-12 micro-units (ranks
-    * are 12-dp, so the scaling is lossless), r{i} left-joins the incoming
-    * scaled-long sums onto ALL vertices (no-inbound vertices still get
-    * teleport + dangling share), with the same operation order as the Spark
-    * expression so every double is bit-identical. MATERIALIZED is
-    * load-bearing: unlike [[pageRankSql]]'s single chain, each round here
-    * reads the previous rank frame twice (dangling sum + join), and
-    * DuckDB's default CTE inlining would expand 2^rounds plans (the q79
-    * lesson). */
+  /** Unrolled general-graph PageRank oracle ([[Graphs.pageRankGeneral]] on
+    * the q81 nation digraph): the walk of [[walkSql]] with a uniform
+    * teleport and dangling share over all n vertices, in the Spark
+    * expression's operation order: (1−d)/n + d·(inc + dm/1e12/n). */
+  private def pageRankDanglingSql(iters: Int, d: Double): String =
+    walkSql(iters, """nv AS (SELECT COUNT(*) AS n FROM verts),
+    r0 AS (SELECT v, CAST(1.0 AS DOUBLE)/(SELECT n FROM nv) AS rank FROM verts)""", "") { i =>
+      s"""round((SELECT CAST(1.0-$d AS DOUBLE)/n FROM nv) +
+            $d*(COALESCE(a.inc, CAST(0.0 AS DOUBLE)) +
+                (SELECT CAST(dm AS DOUBLE)/1e12/(SELECT n FROM nv) FROM d${i - 1})), 12)"""
+    }
+
   /** Unrolled personalized-PageRank oracle ([[Graphs.personalizedPageRank]]
-    * on the q81 digraph): identical scaled-long accumulators, with the
-    * teleport + dangling share gated on seed membership via a CASE whose
-    * arithmetic matches the Spark side's {0,1}-multiplier form exactly
-    * (1·x = x, 0·x = 0), and the share computed in the same operation
-    * order: (1−d)/ns + d·(dm/1e12/ns). */
+    * on the q81 digraph): the walk of [[walkSql]] with the teleport +
+    * dangling share gated on seed membership via a CASE whose arithmetic
+    * matches the Spark side's {0,1}-multiplier form exactly (1·x = x,
+    * 0·x = 0), and the share computed in the same operation order:
+    * (1−d)/ns + d·(dm/1e12/ns). */
   private def personalizedPageRankSql(iters: Int, d: Double, seeds: Seq[Long]): String = {
     val seedVals = seeds.map(s => s"($s)").mkString(", ")
-    val rounds = (1 to iters).map { i =>
-      s"""d${i - 1} AS MATERIALIZED (
-        SELECT COALESCE(SUM(CAST(floor(r.rank*1e12 + 0.5) AS BIGINT)), 0) AS dm
-        FROM r${i - 1} r LEFT JOIN srcs s ON r.v = s.v WHERE s.v IS NULL),
-      r$i AS MATERIALIZED (
-        SELECT vt.v,
-          round(CASE WHEN sd.v IS NOT NULL THEN
-              (SELECT CAST(1.0-$d AS DOUBLE)/ns FROM nsd) +
-              $d*(SELECT CAST(dm AS DOUBLE)/1e12/(SELECT ns FROM nsd) FROM d${i - 1})
-            ELSE CAST(0.0 AS DOUBLE) END +
-            $d*COALESCE(a.inc, CAST(0.0 AS DOUBLE)), 12) AS rank
-        FROM verts vt
-        LEFT JOIN seeds sd ON vt.v = sd.v
-        LEFT JOIN (
-          SELECT e.dst AS v,
-            CAST(SUM(CAST(floor(r.rank*e.w*1e18 + 0.5) AS BIGINT)) AS DOUBLE)/1e18 AS inc
-          FROM edges e JOIN r${i - 1} r ON e.src = r.v GROUP BY e.dst) a ON vt.v = a.v)"""
-    }.mkString(",\n")
-    s"""
-    WITH edges AS (
-      SELECT CAST(n_nationkey AS BIGINT) AS src,
-             CAST(n_regionkey + 100 AS BIGINT) AS dst,
-             CAST(1.0 AS DOUBLE) AS w
-      FROM nation),
-    verts AS (SELECT DISTINCT v FROM (SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges) u),
-    srcs AS (SELECT DISTINCT src AS v FROM edges),
-    seeds AS (SELECT CAST(s.v AS BIGINT) AS v FROM (VALUES $seedVals) s(v)
+    walkSql(iters, s"""seeds AS (SELECT CAST(s.v AS BIGINT) AS v FROM (VALUES $seedVals) s(v)
               WHERE s.v IN (SELECT v FROM verts)),
     nsd AS (SELECT COUNT(*) AS ns FROM seeds),
     r0 AS (
       SELECT vt.v,
         CASE WHEN sd.v IS NOT NULL THEN CAST(1.0 AS DOUBLE)/(SELECT ns FROM nsd)
              ELSE CAST(0.0 AS DOUBLE) END AS rank
-      FROM verts vt LEFT JOIN seeds sd ON vt.v = sd.v),
-    $rounds
-    SELECT v, round(rank, 6) AS rank FROM r$iters"""
+      FROM verts vt LEFT JOIN seeds sd ON vt.v = sd.v)""",
+      "\n        LEFT JOIN seeds sd ON vt.v = sd.v") { i =>
+      s"""round(CASE WHEN sd.v IS NOT NULL THEN
+              (SELECT CAST(1.0-$d AS DOUBLE)/ns FROM nsd) +
+              $d*(SELECT CAST(dm AS DOUBLE)/1e12/(SELECT ns FROM nsd) FROM d${i - 1})
+            ELSE CAST(0.0 AS DOUBLE) END +
+            $d*COALESCE(a.inc, CAST(0.0 AS DOUBLE)), 12)"""
+    }
   }
 
-  private def pageRankDanglingSql(iters: Int, d: Double): String = {
+  /** The unrolled random walk both nation-digraph oracles share: per round,
+    * d{i-1} sums the dangling mass as exact 1e-12 micro-units (ranks are
+    * 12-dp, so the scaling is lossless) and r{i} left-joins the incoming
+    * scaled-long sums onto ALL vertices (no-inbound vertices still get their
+    * teleport + dangling share). `ctes` defines r0 and whatever the update
+    * reads, `joins` adds joins onto `verts vt`, and `rank(i)` is round i's
+    * rank expression over `a.inc` and d{i-1}. MATERIALIZED is load-bearing:
+    * unlike [[pageRankSql]]'s single chain, each round reads the previous
+    * rank frame twice (dangling sum + join), and DuckDB's default CTE
+    * inlining would expand 2^rounds plans (the q79 lesson). */
+  private def walkSql(iters: Int, ctes: String, joins: String)(rank: Int => String): String = {
     val rounds = (1 to iters).map { i =>
       s"""d${i - 1} AS MATERIALIZED (
         SELECT COALESCE(SUM(CAST(floor(r.rank*1e12 + 0.5) AS BIGINT)), 0) AS dm
         FROM r${i - 1} r LEFT JOIN srcs s ON r.v = s.v WHERE s.v IS NULL),
       r$i AS MATERIALIZED (
         SELECT vt.v,
-          round((SELECT CAST(1.0-$d AS DOUBLE)/n FROM nv) +
-            $d*(COALESCE(a.inc, CAST(0.0 AS DOUBLE)) +
-                (SELECT CAST(dm AS DOUBLE)/1e12/(SELECT n FROM nv) FROM d${i - 1})), 12) AS rank
-        FROM verts vt LEFT JOIN (
+          ${rank(i)} AS rank
+        FROM verts vt$joins LEFT JOIN (
           SELECT e.dst AS v,
             CAST(SUM(CAST(floor(r.rank*e.w*1e18 + 0.5) AS BIGINT)) AS DOUBLE)/1e18 AS inc
           FROM edges e JOIN r${i - 1} r ON e.src = r.v GROUP BY e.dst) a ON vt.v = a.v)"""
@@ -1022,8 +916,7 @@ object Graph {
       FROM nation),
     verts AS (SELECT DISTINCT v FROM (SELECT src AS v FROM edges UNION ALL SELECT dst FROM edges) u),
     srcs AS (SELECT DISTINCT src AS v FROM edges),
-    nv AS (SELECT COUNT(*) AS n FROM verts),
-    r0 AS (SELECT v, CAST(1.0 AS DOUBLE)/(SELECT n FROM nv) AS rank FROM verts),
+    $ctes,
     $rounds
     SELECT v, round(rank, 6) AS rank FROM r$iters"""
   }

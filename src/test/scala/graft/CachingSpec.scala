@@ -1,5 +1,6 @@
 package graft
 
+import graft.graph.Graphs
 import org.apache.spark.sql.functions._
 
 /** Stress guard for the refcounted pin registry — the two concurrency bugs
@@ -78,5 +79,24 @@ class CachingSpec extends SparkSpec {
       assert(twice.count() == 3131)
     }
     assert(Caching.refCountOf(raw) == 0)
+  }
+
+  test("pageRank keeps a caller's pin of a plan-identical edge frame cached") {
+    // pageRank caches its edge table as select(src, dst, w) compacted: the
+    // caller below pins the same plan, so both hold one CacheManager entry.
+    // A raw unpersist inside the operator would drop it from under the
+    // caller; the refcounted pin only releases the operator's own count.
+    import spark.implicits._
+    val edges = Graphs.normalizeEdges(Seq(
+      (71L, 72L, 3L), (72L, 71L, 3L), (72L, 73L, 1L), (73L, 72L, 1L), (71L, 73L, 2L), (73L, 71L, 2L))
+      .toDF("src", "dst", "cnt"))
+    Caching.scoped {
+      val held = Caching.pin(edges.select(col("src"), col("dst"), col("w")))
+      assert(held.count() == 6)
+      assert(Graphs.pageRank(edges, iterations = 2).count() == 3)
+      // storageLevel is the CacheManager's lookup: NONE once the entry is gone
+      assert(held.storageLevel == org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      assert(Caching.refCountOf(held) == 1)
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.Par.ParOps
 import graft.functions.Exprs.{cosinePre, dot, h60, mapCosine, shingles, sqdist, tokens, vnorm}
 import graft.ml.TopK
 import graft.operators.{Dedup, Segment, TextPipeline}
@@ -350,5 +351,128 @@ object TestOracles {
       length(col("clean")).cast(LongType).as("n_chars"),
       size(dist).cast(LongType).as("n_alphabet"),
       round(round(log(L), 12) - s / L, 6).as("entropy"))
+  }
+
+  /** General PageRank as written before [[graft.graph.Graphs]] shared one
+    * random-walk body: its own set-up, dangling mass summed as a long and
+    * scaled in the update. */
+  def pageRankGeneralLoop(edges: DataFrame, iterations: Int = 10,
+                          damping: Double = 0.85): DataFrame = {
+    val e = edges.select(col("src"), col("dst"), col("w")).compacted.localCheckpoint(eager = true)
+    val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
+      .distinct().compacted.localCheckpoint(eager = true)
+    val n = verts.count()
+    val dangling = verts.join(e.select(col("src").as("v")).distinct(),
+      Seq("v"), "left_anti").compacted.localCheckpoint(eager = true)
+    var ranks = verts.withColumn("rank", lit(1.0d / n))
+    for (_ <- 1 to iterations) {
+      val dmDf = ranks.join(dangling, "v")
+        .agg(coalesce(sum(floor(col("rank") * lit(1.0e12d) + lit(0.5d)).cast(LongType)),
+          lit(0L)).as("dm"))
+      val dmTerm = col("dm").cast(DoubleType) / lit(1.0e12d) / lit(n.toDouble)
+      val inc = e.join(ranks, e("src") === ranks("v"))
+        .groupBy(col("dst").as("v2"))
+        .agg((sum(floor(col("rank") * col("w") * lit(1.0e18d) + lit(0.5d))
+          .cast(LongType)).cast(DoubleType) / lit(1.0e18d)).as("inc"))
+      ranks = verts.join(inc, verts("v") === inc("v2"), "left")
+        .crossJoin(dmDf)
+        .select(col("v"), round(lit((1.0d - damping) / n) +
+          lit(damping) * (coalesce(col("inc"), lit(0.0d)) + dmTerm), 12).as("rank"))
+        .compacted.localCheckpoint(eager = true)
+    }
+    ranks
+  }
+
+  /** Personalized PageRank as written before the shared random-walk body. */
+  def personalizedPageRankLoop(edges: DataFrame, seeds: DataFrame, iterations: Int = 10,
+                               damping: Double = 0.85): DataFrame = {
+    val e = edges.select(col("src"), col("dst"), col("w")).compacted.localCheckpoint(eager = true)
+    val verts = e.select(col("src").as("v")).union(e.select(col("dst").as("v")))
+      .distinct().compacted.localCheckpoint(eager = true)
+    val sd = verts.join(seeds.select(col("v")), Seq("v"), "left_semi")
+      .compacted.localCheckpoint(eager = true)
+    val nS = sd.count()
+    require(nS > 0, "personalizedPageRank needs at least one seed present in the graph")
+    val dangling = verts.join(e.select(col("src").as("v")).distinct(),
+      Seq("v"), "left_anti").compacted.localCheckpoint(eager = true)
+    val seedMark = verts.join(sd.select(col("v"), lit(1.0d).as("sm")), Seq("v"), "left")
+      .select(col("v"), coalesce(col("sm"), lit(0.0d)).as("sm"))
+      .compacted.localCheckpoint(eager = true)
+    var ranks = seedMark
+      .select(col("v"), (col("sm") * lit(1.0d / nS)).as("rank"))
+      .compacted.localCheckpoint(eager = true)
+    for (_ <- 1 to iterations) {
+      val dmDf = ranks.join(dangling, "v")
+        .agg(coalesce(sum(floor(col("rank") * lit(1.0e12d) + lit(0.5d)).cast(LongType)),
+          lit(0L)).as("dm"))
+      val seedShare = lit((1.0d - damping) / nS) +
+        lit(damping) * (col("dm").cast(DoubleType) / lit(1.0e12d) / lit(nS.toDouble))
+      val inc = e.join(ranks, e("src") === ranks("v"))
+        .groupBy(col("dst").as("v2"))
+        .agg((sum(floor(col("rank") * col("w") * lit(1.0e18d) + lit(0.5d))
+          .cast(LongType)).cast(DoubleType) / lit(1.0e18d)).as("inc"))
+      ranks = seedMark.join(inc, seedMark("v") === inc("v2"), "left")
+        .crossJoin(dmDf)
+        .select(col("v"), round(col("sm") * seedShare +
+          lit(damping) * coalesce(col("inc"), lit(0.0d)), 12).as("rank"))
+        .compacted.localCheckpoint(eager = true)
+    }
+    ranks
+  }
+
+  /** k-truss as written before the shared triangle enumeration and peel
+    * loop: its own degree-oriented triangle pass, and a final support pass
+    * over the fixpoint. Returns the truss and the peel-round count. */
+  def kTrussFinalPass(edges: DataFrame, k: Int): (DataFrame, Int) = {
+    require(k >= 2, s"kTruss k must be >= 2, got $k")
+    def supports(e: DataFrame): DataFrame = {
+      val deg = e.select(col("a").as("v")).union(e.select(col("b").as("v")))
+        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
+      val ori = e
+        .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
+        .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
+        .select(
+          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
+            col("a")).otherwise(col("b")).as("u"),
+          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
+            col("b")).otherwise(col("a")).as("w"),
+          when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
+            col("db")).otherwise(col("da")).as("dw"))
+      val e1 = ori.select(col("u"), col("w").as("w1"), col("dw").as("d1"))
+      val e2 = ori.select(col("u"), col("w").as("w2"), col("dw").as("d2"))
+      val tri = e1.join(e2, Seq("u"))
+        .filter(col("d1") < col("d2") || (col("d1") === col("d2") && col("w1") < col("w2")))
+        .join(ori.select(col("u").as("w1"), col("w").as("w2")), Seq("w1", "w2"), "left_semi")
+        .select(col("u").as("t1"), col("w1").as("t2"), col("w2").as("t3"))
+      tri.select(explode(array(
+          struct(least(col("t1"), col("t2")).as("a"), greatest(col("t1"), col("t2")).as("b")),
+          struct(least(col("t1"), col("t3")).as("a"), greatest(col("t1"), col("t3")).as("b")),
+          struct(least(col("t2"), col("t3")).as("a"), greatest(col("t2"), col("t3")).as("b"))))
+          .as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("support"))
+    }
+    var e = edges
+      .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+      .compacted.localCheckpoint(eager = true)
+    var n = e.count()
+    var rounds = 0
+    var changed = n > 0
+    while (changed) {
+      val e2 = e.join(supports(e), Seq("a", "b"), "left")
+        .filter(coalesce(col("support"), lit(0L)) >= (k - 2).toLong)
+        .select(col("a"), col("b"))
+        .compacted.localCheckpoint(eager = true)
+      val n2 = e2.count()
+      changed = n2 != n
+      if (changed) rounds += 1
+      e = e2
+      n = n2
+    }
+    val out = e.join(supports(e), Seq("a", "b"), "left")
+      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
+    (out, rounds)
   }
 }

@@ -23,6 +23,14 @@ import scala.jdk.CollectionConverters._
   * spell an interpreted `aggregate(zip_with(` fold, and the per-kernel
   * classes it replaced (`DotProduct(`, `DotProductLong(`, `SqDist(`) may not
   * be named outside `graft/functions/ArrayFold.scala`.
+  *
+  * Graphs: every graph cache goes through `Caching`, so `Graphs.scala`
+  * holds no raw `.persist(` (a raw unpersist drops a plan-identical entry
+  * another query still reads). Every exact mass sum goes through the one
+  * scaled-long helper `Graphs.scaledSum`, so `floor(` appears in
+  * `Graphs.scala` only there. The graph catalog builds its undirected edge
+  * set with `Graphs.undirected`, so `queries/Graph.scala` never spells the
+  * canonical pair `least(col("src"), col("dst"))`.
   */
 class TopKLintSpec extends AnyFunSuite {
 
@@ -69,5 +77,34 @@ class TopKLintSpec extends AnyFunSuite {
           (p != home && oldKernels.exists(line.contains))) => s"$p:$n"
     }
     assert(offenders.isEmpty, s"array fold outside the ArrayFold kernel: $offenders")
+  }
+
+  test("Graphs.scala caches only through Caching") {
+    val home = root.resolve("graft/graph/Graphs.scala")
+    val offenders = sourceLines(home).collect {
+      case (p, n, line) if p == home && line.contains(".persist(") => s"$p:$n"
+    }
+    assert(offenders.isEmpty, s"raw persist in Graphs.scala: $offenders")
+  }
+
+  test("Graphs.scala spells floor( only inside the scaled-long sum helper") {
+    val home = root.resolve("graft/graph/Graphs.scala")
+    val lines = sourceLines(home).filter(_._1 == home)
+    val helper = lines.collectFirst { case (_, n, line) if line.contains("def scaledSum(") => n }
+    assert(helper.isDefined, s"no scaledSum helper in $home")
+    // the helper is a one-expression def: its body is the line after it
+    val offenders = lines.collect {
+      case (p, n, line) if line.contains("floor(") && !helper.contains(n - 1) => s"$p:$n"
+    }
+    assert(offenders.isEmpty, s"floor( outside Graphs.scaledSum: $offenders")
+  }
+
+  test("the graph catalog builds undirected edges with Graphs.undirected") {
+    val home = root.resolve("graft/queries/Graph.scala")
+    val offenders = sourceLines(home).collect {
+      case (p, n, line) if p == home && line.contains("""least(col("src"), col("dst"))""") =>
+        s"$p:$n"
+    }
+    assert(offenders.isEmpty, s"inline canonical edge pair in the graph catalog: $offenders")
   }
 }
