@@ -15,11 +15,29 @@ import org.apache.spark.sql.functions._
   * every query here is oracle-checked; the one approximation without a SQL
   * mirror (IVF's float k-means) is verified through an oracle-checked recall
   * invariant instead (q50).
+  *
+  * Each step is written once and shared by every row that runs it: the
+  * DuckDB spelling of an engine step (tokenizer, embeddings input, cosine,
+  * top-k rank, n-grams, char LM, eval card) lives in [[OracleSql]]; the
+  * steps only this catalog composes (shingle pairs and their clusters, the
+  * planted corpora, term statistics, packing, the image fixture) are the
+  * private fragments below, each a frame helper next to its SQL twin. A
+  * fragment that an oracle reads while [[defs]] is built is a `def` or is
+  * declared before [[defs]]; a `val` after it would interpolate as `null`.
   */
 object Curation {
 
   private def docs(s: org.apache.spark.sql.SparkSession, dir: String) =
     Tables(s, dir, "documents")
+
+  /** The embedding column as `array<double>`: the vector every embedding
+    * row reads (the frame side of [[OracleSql.vec]]). */
+  private def embVec = col("embedding").cast("array<double>")
+
+  /** The embeddings table as `(vec_id, vec)`: the k-means, PQ and IVF
+    * rows' input (the frame side of [[OracleSql.embCte]]). */
+  private def emb(s: org.apache.spark.sql.SparkSession, dir: String) =
+    Tables(s, dir, "embeddings").select(col("vec_id"), embVec.as("vec"))
 
   /** q213's blocklist: phrases over the synthetic corpus vocabulary chosen
     * to exercise every automaton path — "table table" self-overlaps via its
@@ -33,28 +51,34 @@ object Curation {
 
   /** Shared DuckDB trigram-shingle CTE body (mirrors Dedup.shingleSet(n=3)).
     * Kept separate from the WITH keyword so q70/q72 can prepend RECURSIVE. */
-  private val shCteBody = s"""seq AS (
-      SELECT doc_id, lang,
-        list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-      FROM documents),
+  private val shCteBody = s"""${OracleSql.tokenLists("seq", "doc_id", "lang")},
     sh AS (
       SELECT DISTINCT doc_id, lang AS block,
-        tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS shingle
-      FROM (SELECT doc_id, lang, tk, unnest(generate_series(1, len(tk) - 2)) AS i FROM seq) g),
+        ${OracleSql.ngram(3)} AS shingle
+      FROM ${OracleSql.ngramSql(3, "seq", "doc_id, lang")} g),
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY 1)"""
 
   private val shCte = s"WITH $shCteBody"
 
-  /** The q34 portable MinHash+LSH pipeline as reusable CTE bodies over
-    * [[shCteBody]], ending in `mh_pairs(doc_a, doc_b, jaccard)` — q112
-    * builds duplicate clusters on exactly these pairs, so its oracle
-    * composes these CTEs with a recursive transitive closure (the q70/q72
-    * pattern on the Jaccard pair set). */
-  private val minhashPairsCtes = """
+  /** The shingle document-frequency cap of the pair-join rows (q33 and its
+    * clusters, q183, q185, q187, q222, q229, q236): a shingle held by more
+    * documents than this is dropped before the self-join, in the frame and
+    * the oracle alike. */
+  private val MaxShingleDf = 64
+
+  /** The LSH bucket cap of the banded rows (q34, q35, q88, q112, q175,
+    * q229): a band bucket with more members than this generates no
+    * candidates, in the frame and the oracle alike. */
+  private val MaxBucketSize = 64
+
+  /** q34's signature banding over [[shCteBody]]: 32 md5-60 MinHash seeds,
+    * 8 bands of 4, and the bucket census capped at [[MaxBucketSize]],
+    * ending in `kept(doc_id, band, band_sig)`. */
+  private val minhashBandCtes = s"""
     seeds AS (SELECT unnest(range(0, 32)) AS seed),
     sig AS (
       SELECT doc_id, seed,
-        MIN(CAST('0x' || substr(md5(seed || ':' || shingle),1,15) AS BIGINT)) AS mh
+        MIN(${OracleSql.h60("seed || ':' || shingle")}) AS mh
       FROM sh CROSS JOIN seeds GROUP BY 1, 2),
     banded AS (
       SELECT doc_id, seed // 4 AS band,
@@ -62,71 +86,110 @@ object Curation {
       FROM sig GROUP BY 1, 2),
     kept AS (
       SELECT * FROM banded
-      QUALIFY COUNT(*) OVER (PARTITION BY band, band_sig) <= 64),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-      FROM kept a JOIN kept b
-        ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
-    pc AS (
+      QUALIFY COUNT(*) OVER (PARTITION BY band, band_sig) <= $MaxBucketSize)"""
+
+  /** The exact shared-shingle count `pc(doc_a, doc_b, n_common)` of every
+    * candidate pair in `cand(doc_a, doc_b)`. */
+  private val candCommonCte = """pc AS (
       SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
       FROM cand c
       JOIN sh sa ON sa.doc_id = c.doc_a
       JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-      GROUP BY 1, 2),
+      GROUP BY 1, 2)"""
+
+  /** The q34 portable MinHash+LSH pipeline as reusable CTE bodies over
+    * [[shCteBody]], ending in `mh_pairs(doc_a, doc_b, jaccard)` — q112
+    * builds duplicate clusters on exactly these pairs, so its oracle
+    * composes these CTEs with [[componentCtes]] (the q70/q72 pattern on
+    * the Jaccard pair set). */
+  private val minhashPairsCtes = s"""$minhashBandCtes,
+    cand AS (
+      SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      FROM kept a JOIN kept b
+        ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id < b.doc_id),
+    $candCommonCte,
     mh_pairs AS (
       SELECT doc_a, doc_b,
-        CAST(n_common AS DOUBLE)/CAST(za.sz + zb.sz - n_common AS DOUBLE) AS jaccard
+        ${jaccardOf("za", "zb")} AS jaccard
       FROM pc JOIN sizes za ON za.doc_id = doc_a JOIN sizes zb ON zb.doc_id = doc_b
-      WHERE CAST(n_common AS DOUBLE)/CAST(za.sz + zb.sz - n_common AS DOUBLE) >= 0.05)"""
+      WHERE ${jaccardOf("za", "zb")} >= 0.05)"""
 
-  /** The q33 capped-Jaccard pair set as reusable CTEs over [[shCteBody]] —
-    * q70/q72 build duplicate clusters on exactly these pairs, so their
-    * oracles compose these CTEs with a recursive transitive closure. */
-  private val jaccardPairsCtes = """
+  /** The Jaccard ratio of a pair from its shared count `n_common` and the
+    * set sizes `a.sz` and `b.sz`. */
+  private def jaccardOf(a: String, b: String): String =
+    s"CAST(n_common AS DOUBLE)/CAST($a.sz + $b.sz - n_common AS DOUBLE)"
+
+  /** `cols` of every `common` pair whose Jaccard over `csizes` reaches
+    * `threshold` (the pair join q33 and its clusters run). */
+  private def jaccardPairsSql(cols: String, threshold: String = "0.05"): String =
+    s"""SELECT $cols
+      FROM common
+      JOIN csizes sa ON sa.doc_id = doc_a
+      JOIN csizes sb ON sb.doc_id = doc_b
+      WHERE ${jaccardOf("sa", "sb")} >= $threshold"""
+
+  /** q33's shared-shingle counts over [[shCteBody]]: shingles capped at
+    * [[MaxShingleDf]], per-doc set sizes `csizes`, and the same-block pair
+    * counts `common(doc_a, doc_b, n_common)`. */
+  private val jaccardCommonCtes = s"""
     dfreq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1),
-    shc AS (SELECT sh.* FROM sh JOIN dfreq USING (shingle) WHERE df <= 64),
+    shc AS (SELECT sh.* FROM sh JOIN dfreq USING (shingle) WHERE df <= $MaxShingleDf),
     csizes AS (SELECT doc_id, COUNT(*) AS sz FROM shc GROUP BY 1),
     common AS (
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
       FROM shc a JOIN shc b
         ON a.shingle = b.shingle AND a.block = b.block AND a.doc_id < b.doc_id
-      GROUP BY 1, 2),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM common
-      JOIN csizes sa ON sa.doc_id = doc_a
-      JOIN csizes sb ON sb.doc_id = doc_b
-      WHERE CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
-    und AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-            UNION SELECT doc_b, doc_a FROM pairs),
-    reach(a, b) AS (
-      SELECT a, b FROM und
+      GROUP BY 1, 2)"""
+
+  /** The connected components of the undirected pair graph `pairs(doc_a,
+    * doc_b)` by recursive transitive closure: `out(doc_id, cluster_id)`
+    * labels every document with the min doc_id it reaches, singletons
+    * themselves — the fixpoint [[graft.graph.Graphs.connectedComponents]]
+    * converges to. `sfx` names the closure CTEs apart. */
+  private def componentCtes(pairs: String, sfx: String, out: String): String =
+    s"""und$sfx AS (SELECT doc_a AS a, doc_b AS b FROM $pairs
+            UNION SELECT doc_b, doc_a FROM $pairs),
+    reach$sfx(a, b) AS (
+      SELECT a, b FROM und$sfx
       UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a),
-    clusters AS (
+      SELECT r.a, u.b FROM reach$sfx r JOIN und$sfx u ON r.b = u.a),
+    $out AS (
       SELECT d.doc_id,
         CAST(CASE WHEN m.mn IS NULL OR d.doc_id < m.mn THEN d.doc_id ELSE m.mn END AS BIGINT)
           AS cluster_id
       FROM documents d
-      LEFT JOIN (SELECT a AS doc_id, MIN(b) AS mn FROM reach GROUP BY 1) m USING (doc_id))"""
+      LEFT JOIN (SELECT a AS doc_id, MIN(b) AS mn FROM reach$sfx GROUP BY 1) m USING (doc_id))"""
+
+  /** The q33 capped-Jaccard pair set as reusable CTEs over [[shCteBody]] —
+    * q70/q72 build duplicate clusters on exactly these pairs, so their
+    * oracles compose these CTEs with [[componentCtes]], ending in
+    * `clusters(doc_id, cluster_id)`. */
+  private val jaccardPairsCtes = s"""$jaccardCommonCtes,
+    pairs AS (${jaccardPairsSql("doc_a, doc_b")}),
+    ${componentCtes("pairs", "", "clusters")}"""
+
+  /** `ej(doc_a, doc_b, j)`: q33's pairs with their Jaccard, for the rows
+    * that audit the clusters built on them (q229, q236). */
+  private val jaccardEdgesCte =
+    s"""ej AS (${jaccardPairsSql(s"doc_a, doc_b, ${jaccardOf("sa", "sb")} AS j")})"""
+
+  /** q112's MinHash duplicate clusters: [[minhashPairsCtes]] closed by
+    * [[componentCtes]] into `mclusters(doc_id, cluster_id)`; q175's first
+    * stage. Follows `WITH RECURSIVE`. */
+  private val minhashClusterCtes = s"""$shCteBody,
+        $minhashPairsCtes,
+        ${componentCtes("mh_pairs", "2", "mclusters")}"""
 
   /** Exact ANN top-k oracle, shared by q37 (window form) and q62 (bounded-
     * heap form) — both must produce this same result. */
-  private val annTopkOracle: String = """
-    WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+  private val annTopkOracle: String = s"""
+    WITH ${OracleSql.embCte("emb", "e")},
     q AS (SELECT * FROM emb WHERE vec_id % 20 = 0),
     sims AS (
       SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-        round(CASE WHEN sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e)) = 0
-          THEN 0.0
-          ELSE list_dot_product(q.e, c.e) /
-               (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))) END, 6) AS sim
+        ${OracleSql.cosine("q.e", "c.e")} AS sim
       FROM q CROSS JOIN emb c WHERE q.vec_id <> c.vec_id)
-    SELECT q_id, n_id, sim, rk FROM (
-      SELECT q_id, n_id, sim,
-        CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-      FROM sims) s
-    WHERE rk <= 10"""
+    ${OracleSql.topK("q_id, n_id, sim", "sim DESC", "sims", 10, "s")}"""
 
   /** The full sign-LSH top-k replay ([[graft.operators.Similarity.lshTopK]]
     * with k=10, planes=8, reps=4, Hamming-1 multi-probing) as a CTE chain
@@ -135,8 +198,8 @@ object Curation {
     * exhaustive ground truth). Buckets are exact integer arithmetic over
     * 1e6-quantized vectors with md5-derived ±1 planes, so the chain is
     * bit-portable end to end. */
-  private val lshTopkCtes: String = """
-        WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+  private val lshTopkCtes: String = s"""
+        WITH ${OracleSql.embCte("emb", "e")},
         qv AS (SELECT vec_id, e,
                  list_transform(e, x -> CAST(floor(x*1000000.0 + 0.5) AS BIGINT)) AS q
                FROM emb),
@@ -144,7 +207,7 @@ object Curation {
           SELECT vec_id, r, p,
             list_sum(list_transform(range(0, CAST(len(q) AS BIGINT)), d ->
               q[CAST(d AS INT) + 1] *
-              (CASE WHEN CAST('0x' || substr(md5(r || ':' || p || ':' || d),1,15) AS BIGINT) & 1 = 1
+              (CASE WHEN ${OracleSql.h60("r || ':' || p || ':' || d")} & 1 = 1
                     THEN 1 ELSE -1 END))) AS dot
           FROM qv,
                (SELECT unnest(range(0,4)) AS r) reps,
@@ -163,17 +226,10 @@ object Curation {
           FROM probed a JOIN exact b ON a.bucket = b.bucket AND a.vec_id <> b.vec_id),
         sims AS (
           SELECT c.q_id, c.n_id,
-            round(CASE WHEN sqrt(list_dot_product(qa.e,qa.e))*sqrt(list_dot_product(qb.e,qb.e)) = 0
-              THEN 0.0
-              ELSE list_dot_product(qa.e,qb.e) /
-                   (sqrt(list_dot_product(qa.e,qa.e))*sqrt(list_dot_product(qb.e,qb.e))) END, 6) AS sim
+            ${OracleSql.cosine("qa.e", "qb.e")} AS sim
           FROM cand c JOIN emb qa ON qa.vec_id = c.q_id JOIN emb qb ON qb.vec_id = c.n_id),
         lsh_topk AS (
-          SELECT q_id, n_id, sim, rk FROM (
-            SELECT q_id, n_id, sim,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-            FROM sims) s
-          WHERE rk <= 10)"""
+          ${OracleSql.topK("q_id, n_id, sim", "sim DESC", "sims", 10, "s")})"""
 
   /** Unrolled DuckDB replay of the deterministic k-means chain
     * ([[graft.ml.KMeans.fit]] + a final [[graft.ml.KMeans.assign]]), for the
@@ -192,8 +248,7 @@ object Curation {
           SELECT vec_id, v, cid FROM (
             SELECT e.vec_id, e.v, c.cid,
               row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                list_reduce(list_transform(range(1, len(e.v) + 1),
-                  i -> (e.v[i] - c.c[i]) * (e.v[i] - c.c[i])), (x, y) -> x + y) ASC,
+                ${OracleSql.sqdist("e.v", "c.c")} ASC,
                 c.cid ASC) AS rn
             FROM ${p}e e CROSS JOIN $from c) z
           WHERE rn = 1)"""
@@ -242,8 +297,7 @@ object Curation {
     val ts = (0 until m).map { s0 =>
       s"""t$s0 AS MATERIALIZED (
           SELECT qs.vec_id AS q_id, c.cid,
-            list_reduce(list_transform(range(1, len(qs.sv) + 1),
-              i -> (qs.sv[i] - c.c[i]) * (qs.sv[i] - c.c[i])), (x, y) -> x + y) AS d2
+            ${OracleSql.sqdist("qs.sv", "c.c")} AS d2
           FROM (SELECT vec_id, v[${s0 * sub + 1}:${(s0 + 1) * sub}] AS sv FROM q) qs
           CROSS JOIN s${s0}c$iterations c)"""
     }
@@ -371,10 +425,9 @@ object Curation {
     * rounds are bit-equal across engines. `lr` is passed as SQL text to keep
     * the literal exactly as written. */
   private def lrCtes(dims: Int, lr: String, iterations: Int): String = {
-    val stopList = graft.operators.TextStats.stopwords.map(w => s"'$w'").mkString(", ")
     val head = s"""per_doc AS (
           SELECT doc_id, lang, COUNT(*) AS n_tokens, COUNT(DISTINCT term) AS n_distinct,
-            CAST(SUM(CASE WHEN term IN ($stopList) THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
+            $nStopSql
           FROM toks GROUP BY doc_id, lang),
         feat AS MATERIALIZED (
           SELECT doc_id AS id,
@@ -457,8 +510,7 @@ object Curation {
     * corpus side routes through the IVF/PQ index exactly as q164 evidences. */
   private def tripletMining(s: org.apache.spark.sql.SparkSession, dir: String,
                             anchorPred: org.apache.spark.sql.Column): org.apache.spark.sql.DataFrame = {
-    val e = Tables(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+    val e = emb(s, dir)
     val cents = graft.ml.KMeans.fit(e, k = 8, iterations = 3)
     // norm rides the pin: one dot per (anchor, candidate) pair instead of
     // three — sims bit-identical (Exprs.cosinePre)
@@ -488,12 +540,14 @@ object Curation {
         round(col("pos_sim") - col("neg_sim"), 6).as("margin"))
   }
 
-  /** Shared retrieval-quality card (q197/q207): a system ranking
-    * (q_id, n_id, srk) scored against exhaustive ground truth
-    * (q_id, n_id, trk) — recall@k, MRR of the true top-1 inside the system
-    * list, and hit@1, all as integer millionths (1e6 DIV — no float ratio
-    * touches the ladder). Both rankings must share the tie-break discipline
-    * (metric at 6 dp, then n_id ASC) for the card to be bit-portable. */
+  /** Shared retrieval-quality card (q197, q207, q208, q235, q237): a
+    * system ranking (q_id, n_id, srk) scored against exhaustive ground
+    * truth (q_id, n_id, trk) — recall@k, MRR of the true top-1 inside the
+    * system list, and hit@1, all as integer millionths (1e6 DIV — no float
+    * ratio touches the ladder). Both rankings must share the tie-break
+    * discipline (metric at 6 dp, then n_id ASC) for the card to be
+    * bit-portable. Its SQL twin is [[OracleSql.evalCard]] (one system) or
+    * [[OracleSql.evalCardCtes]] + [[OracleSql.evalCardRow]] (a sweep). */
   private def retrievalEvalCard(sys: org.apache.spark.sql.DataFrame,
                                 truth: org.apache.spark.sql.DataFrame,
                                 label: String, k: Int): org.apache.spark.sql.DataFrame = {
@@ -520,17 +574,14 @@ object Curation {
   /** DuckDB replay of [[hashedLrFeats]] — tokenize, unigram+bigram hashing
     * into 256 buckets, ×256 frequency normalization, bias slot — ending in
     * the `feat` CTE (id, x LIST<DOUBLE>[257], y). Shared by q176/q195. */
-  private val hashedFeatCtes = """hfs AS (
-          SELECT doc_id, lang,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+  private val hashedFeatCtes = s"""${OracleSql.tokenLists("hfs", "doc_id", "lang")},
         hfr AS (
           SELECT doc_id, UNNEST(list_concat(
             list_transform(tk, w -> 'u:' || w),
             list_transform(generate_series(1, len(tk) - 1), i -> 'b:' || tk[i] || ' ' || tk[i + 1]))) AS f
           FROM hfs WHERE len(tk) > 0),
         hfh AS MATERIALIZED (
-          SELECT doc_id, CAST('0x' || substr(md5(f), 1, 12) AS BIGINT) % 256 AS b
+          SELECT doc_id, ${OracleSql.h48("f")} % 256 AS b
           FROM hfr),
         hb AS MATERIALIZED (SELECT doc_id, b, COUNT(*) AS c FROM hfh GROUP BY 1, 2),
         hdense AS (
@@ -572,6 +623,349 @@ object Curation {
     * into five identical width-8 chunks. Declared before [[defs]]. */
   private val RepSentence = "the quick brown fox jumps over the lazy"
 
+  /** q86's markup fixture: every 5th doc wrapped in tags, a script block
+    * and entities, so the strip demonstrably fires. q100 reuses it. */
+  private val MarkupHead = """<html><body class="c"><p>"""
+  private val MarkupTail = "</p><script>var a = 1;</script>&amp; more &lt;raw&gt; text</body></html>"
+  private def markupWrapped: org.apache.spark.sql.Column =
+    when(col("doc_id") % 5 === 0, concat(lit(MarkupHead), col("text"), lit(MarkupTail)))
+      .otherwise(col("text"))
+  private val markupWrappedSql = s"""CASE WHEN doc_id % 5 = 0
+              THEN '$MarkupHead' || text ||
+                   '$MarkupTail'
+              ELSE text END"""
+
+  /** q74's PII fixture: a synthetic email and phone number appended to
+    * every 7th doc, so the redaction path fires. q100 reuses it. */
+  private def piiSuffix: org.apache.spark.sql.Column =
+    when(col("doc_id") % 7 === 0,
+      concat(lit(" contact user"), col("doc_id"), lit("@example.com or call 555"),
+        col("doc_id"), lit("0100"))).otherwise(lit(""))
+  private val piiSuffixSql = """CASE WHEN doc_id % 7 = 0
+              THEN ' contact user' || doc_id || '@example.com or call 555' || doc_id || '0100'
+              ELSE '' END"""
+
+  /** The two eval sentences the decontamination rows (q199, q233, q238,
+    * q239) plant into the corpus, which has no natural cross-doc 8-gram
+    * repeats: each lands in the benchmark slice (doc_id % 97 = 0) and in
+    * training docs alike. Declared before [[defs]]. */
+  private val EvalSentence1 = "held out benchmark question answer pairs must never leak into training"
+  private val EvalSentence2 = "the standardized test prompt appears verbatim in this document for evaluation"
+
+  /** The decontamination rows' corpus: [[EvalSentence2]] appended to every
+    * 7th doc, and [[EvalSentence1]] appended to every 13th — or, with
+    * `splice` (q239), inserted after its 120th character, the interior cut
+    * that welds tokens. */
+  private def plantedDocs(s: org.apache.spark.sql.SparkSession, dir: String,
+                          splice: Boolean = false): org.apache.spark.sql.DataFrame = {
+    val withE1 =
+      if (splice) Seq(when(col("doc_id") % 13 === 0,
+          concat(expr("substr(text, 1, 120)"), lit(s" $EvalSentence1 "), expr("substr(text, 121)")))
+        .otherwise(col("text")))
+      else Seq(col("text"), when(col("doc_id") % 13 === 0, lit(s" $EvalSentence1")).otherwise(lit("")))
+    docs(s, dir).withColumn("text", concat(withE1 :+
+      when(col("doc_id") % 7 === 0, lit(s" $EvalSentence2")).otherwise(lit("")): _*))
+  }
+
+  /** `seq(doc_id, tk)`: the token lists of [[plantedDocs]]. */
+  private def plantedSeqCte(splice: Boolean = false): String = {
+    val withE1 =
+      if (splice) s"""CASE WHEN doc_id % 13 = 0
+                THEN substr(text, 1, 120) || ' $EvalSentence1 ' || substr(text, 121)
+                ELSE text END"""
+      else s"text || CASE WHEN doc_id % 13 = 0 THEN ' $EvalSentence1' ELSE '' END"
+    val text = s"$withE1 || CASE WHEN doc_id % 7 = 0 THEN ' $EvalSentence2' ELSE '' END"
+    s"""seq AS (
+          SELECT doc_id,
+            ${OracleSql.tokens(text)} AS tk
+          FROM documents)"""
+  }
+
+  /** The surgery rows' cut (q238, q239) over a planted corpus: the pinned
+    * token lists `tk(doc_id, toks)`, the benchmark slice's 8-grams `bench`,
+    * and per training doc the sorted 1-based positions its benchmark
+    * 8-grams cover, `cut(doc_id, cut)`. */
+  private def surgeryCut(d: org.apache.spark.sql.DataFrame) = {
+    val lng = org.apache.spark.sql.types.LongType
+    val tk = graft.Caching.pin(
+      d.select(col("doc_id"), Exprs.tokens(col("text")).as("toks")))
+    val sp = tk.select(col("doc_id"),
+        posexplode(Exprs.shingles(col("toks"), 8)).as(Seq("p0", "g")))
+      .select(col("doc_id"), (col("p0") + 1).cast(lng).as("p"), col("g"))
+    val bench = sp.filter(col("doc_id") % 97 === 0).select(col("g")).distinct()
+    val cut = sp.filter(col("doc_id") % 97 =!= 0).join(broadcast(bench), "g")
+      .select(col("doc_id"), explode(sequence(col("p"), col("p") + 7)).as("pos"))
+      .groupBy(col("doc_id"))
+      .agg(array_sort(collect_set(col("pos"))).as("cut"))
+    (tk, bench, cut)
+  }
+
+  /** The SQL twin of [[surgeryCut]], after [[plantedSeqCte]]: the 8-grams
+    * `g8(doc_id, p, g)`, the benchmark grams `bg`, the flagged training
+    * grams `fl`, and the positions they cover, `pos(doc_id, pos)`. */
+  private val surgeryCutCtes = s"""g8 AS (
+          SELECT doc_id, CAST(i AS BIGINT) AS p,
+            ${OracleSql.ngram(8)} AS g
+          FROM ${OracleSql.ngramSql(8, "seq")} u),
+        bg AS (SELECT DISTINCT g FROM g8 WHERE doc_id % 97 = 0),
+        fl AS (SELECT g8.* FROM g8 JOIN bg USING (g) WHERE doc_id % 97 <> 0),
+        pos AS (
+          SELECT DISTINCT doc_id, p + o AS pos
+          FROM (SELECT doc_id, p, unnest(generate_series(0, 7)) AS o FROM fl) z)"""
+
+  /** Per-doc term statistics of a `(doc_id, term)` token stream — token
+    * count `n`, distinct terms `ndis`, top-term count `topc`, hapax count
+    * `hapax` and summed token length `sumlen`: the Gopher rule inputs
+    * (q184, q194, q201, q203, q204). */
+  private def termStats(toks: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    toks.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
+      .groupBy(col("doc_id"))
+      .agg(sum(col("c")).as("n"), count(lit(1)).as("ndis"),
+        max(col("c")).as("topc"),
+        sum(when(col("c") === 1, 1L).otherwise(0L)).as("hapax"),
+        sum(length(col("term")) * col("c")).as("sumlen"))
+
+  /** q184's conjunctive Gopher keep rule over [[termStats]], every bound an
+    * integer cross-multiplication. */
+  private def gopherKeep: org.apache.spark.sql.Column =
+    col("n") >= 30 &&
+      col("sumlen") >= lit(4L) * col("n") &&
+      col("sumlen") <= lit(5L) * col("n") &&
+      lit(100L) * col("topc") <= lit(15L) * col("n") &&
+      lit(5L) * col("hapax") >= col("ndis")
+
+  /** The SQL twins of [[termStats]] (`pc`, then `st`, over `toks`) and of
+    * [[gopherKeep]]. */
+  private val termStatsCtes = """pc AS (SELECT doc_id, term, COUNT(*) AS c FROM toks GROUP BY 1, 2),
+        st AS (
+          SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, COUNT(*) AS ndis,
+            CAST(MAX(c) AS BIGINT) AS topc,
+            CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
+            CAST(SUM(LEN(term) * c) AS BIGINT) AS sumlen
+          FROM pc GROUP BY 1)"""
+  private val gopherKeepSql =
+    "(n >= 30 AND sumlen >= 4 * n AND sumlen <= 5 * n AND 100 * topc <= 15 * n AND 5 * hapax >= ndis)"
+
+  /** The image rows' fixture (q177, q189, q190): every document's 16×16
+    * synthetic photo through the real BMP writer. Groups of 5 docs share a
+    * base image; members 1–4 carry a 3-pixel perturbation. */
+  private def synthMedia(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    import s.implicits._
+    import graft.operators.Multimodal
+    docs(s, dir).select(col("doc_id")).as[Long].map { id =>
+      val g = id / 5; val m = id % 5
+      val rgb: Int => Int = { i =>
+        val p = i / 3; val c = i % 3; val x = p % 16; val y = p / 16
+        val v0 = ((g * 37 + x * 13 + y * 29 + c * 71 +
+          g * (x + 2 * y + c)) % 256).toInt
+        if (m > 0 && (x + 16 * y) % 97 == m) (v0 + 128) % 256 else v0
+      }
+      Multimodal.MediaRecord(id, "bmp",
+        Multimodal.encodeBmp(16, 16, rgb), Map.empty)
+    }
+  }
+
+  /** The four 16-bit aHash bands of every image, `(media_id, t, bv)`: the
+    * keys of the image rows' band join. */
+  private def aHashBands(hv: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    hv.select(col("media_id"), explode(array(
+        struct(lit(0L).as("t"), col("b0").as("bv")),
+        struct(lit(1L).as("t"), col("b1").as("bv")),
+        struct(lit(2L).as("t"), col("b2").as("bv")),
+        struct(lit(3L).as("t"), col("b3").as("bv")))).as("b"))
+      .select(col("media_id"), col("b.t").as("t"), col("b.bv").as("bv"))
+
+  /** The RGB channels `(id, x, y, v0, v1, v2)` of every pixel in `src(id, g,
+    * m, x, y)`: [[synthMedia]]'s pixel formula in SQL. */
+  private def rgbSql(src: String, alias: String): String =
+    s"""SELECT id, x, y,
+              MAX(CASE WHEN c = 0 THEN v END) AS v0,
+              MAX(CASE WHEN c = 1 THEN v END) AS v1,
+              MAX(CASE WHEN c = 2 THEN v END) AS v2
+            FROM (
+              SELECT id, x, y, c,
+                CASE WHEN m > 0 AND (x + 16 * y) % 97 = m
+                  THEN ((g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 + 128) % 256
+                  ELSE (g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 END AS v
+              FROM $src, UNNEST([0, 1, 2]) AS tc(c)) $alias
+            GROUP BY id, x, y"""
+
+  /** The SQL twin of [[synthMedia]] hashed and banded: `ids(id, g, m)`, the
+    * 64-bit average hash `halves(id, h_lo, h_hi)` (8×8 block luma against
+    * the image mean) and its bands `bands(id, t, bv)`. Follows a `WITH`. */
+  private val aHashBandCtes = s"""ids AS (SELECT doc_id AS id, doc_id // 5 AS g, doc_id % 5 AS m FROM documents),
+        px AS (
+          SELECT id, g, m, p % 16 AS x, p // 16 AS y
+          FROM ids, UNNEST(range(256)) AS tp(p)),
+        lum AS (
+          SELECT id, (x // 2) + 8 * (y // 2) AS bp,
+            (299 * v0 + 587 * v1 + 114 * v2) // 1000 AS l
+          FROM (${rgbSql("px", "ch")}) pix),
+        blocks AS (SELECT id, bp, CAST(SUM(l) AS BIGINT) AS bsum FROM lum GROUP BY 1, 2),
+        tot AS (SELECT id, CAST(SUM(l) AS BIGINT) AS tsum FROM lum GROUP BY 1),
+        bits AS (
+          SELECT b.id, b.bp, CASE WHEN b.bsum * 64 > t.tsum THEN 1 ELSE 0 END AS bit
+          FROM blocks b JOIN tot t ON b.id = t.id),
+        halves AS (
+          SELECT id,
+            CAST(SUM(CASE WHEN bp < 32 THEN bit * (1::BIGINT << bp) ELSE 0 END) AS BIGINT) AS h_lo,
+            CAST(SUM(CASE WHEN bp >= 32 THEN bit * (1::BIGINT << (bp - 32)) ELSE 0 END) AS BIGINT) AS h_hi
+          FROM bits GROUP BY 1),
+        bands AS (
+          SELECT id, t, CASE t WHEN 0 THEN h_lo % 65536 WHEN 1 THEN h_lo // 65536
+            WHEN 2 THEN h_hi % 65536 ELSE h_hi // 65536 END AS bv
+          FROM halves, UNNEST([0, 1, 2, 3]) AS tt(t))"""
+
+  /** [[TextStats.quality]]'s stopword count over `toks`, as `n_stop`. */
+  private val nStopSql =
+    s"CAST(SUM(CASE WHEN term IN (${OracleSql.stopwords}) THEN 1 ELSE 0 END) AS BIGINT) AS n_stop"
+
+  /** `per_doc(doc_id, n_tokens, n_distinct, n_stop)`: [[TextStats.quality]]'s
+    * counts over `toks`. */
+  private val qualityCountsCte = s"""per_doc AS (
+          SELECT doc_id, COUNT(*) AS n_tokens, COUNT(DISTINCT term) AS n_distinct,
+            $nStopSql
+          FROM toks GROUP BY 1)"""
+
+  /** [[TextStats.quality]]'s blended score over `per_doc`'s counts. */
+  private val qualitySql = """CAST(n_distinct AS DOUBLE)/CAST(n_tokens AS DOUBLE) * 0.4 +
+              CAST(least(n_tokens, 100) AS DOUBLE)/100.0 * 0.4 +
+              (1.0 - CAST(n_stop AS DOUBLE)/CAST(n_tokens AS DOUBLE)) * 0.2"""
+
+  /** [[TextStats.languageId]] over `toks`: `scored(doc_id, s_<lang>…)`
+    * counts every language's marker words; [[langBestSql]] adds the best
+    * count; [[langPredSql]] names its language, `und` when no marker hits;
+    * [[langPredCte]] is `pred(doc_id, pred_lang)`. */
+  private val langScoredCte = {
+    val scoreCols = TextStats.langMarkers.map { case (lang, words) =>
+      val list = words.map(w => s"'$w'").mkString(", ")
+      s"CAST(SUM(CASE WHEN term IN ($list) THEN 1 ELSE 0 END) AS BIGINT) AS s_$lang"
+    }.mkString(",\n          ")
+    s"""scored AS (
+          SELECT doc_id,
+          $scoreCols
+          FROM toks GROUP BY 1)"""
+  }
+  private val langBestSql = TextStats.langMarkers.map { case (l, _) => s"s_$l" }
+    .mkString("(SELECT *, greatest(", ", ", ") AS best FROM scored) b")
+  private val langPredSql = TextStats.langMarkers.map { case (l, _) =>
+    s"WHEN s_$l = best AND best > 0 THEN '$l'"
+  }.mkString("CASE ", " ", " ELSE 'und' END")
+  private val langPredCte = s"""pred AS (
+          SELECT doc_id, $langPredSql AS pred_lang
+          FROM $langBestSql)"""
+
+  /** `toks(doc_id, word)`, materialized: the word stream the tokenizer
+    * trainers count (q79–q84, q180, q188). */
+  private val wordToksCte = s"""toks AS MATERIALIZED (
+          SELECT doc_id, t AS word FROM (
+            SELECT doc_id, unnest(${OracleSql.tokens(x = "t")}) AS t FROM documents))"""
+
+  /** The packing rows' shard (q75, q82, q175, q202): 64 consecutive doc
+    * ids, the bounded partition of the packing window. */
+  private def shardCol = floor(col("doc_id") / 64).cast("long").as("shard")
+
+  /** Greedy 256-token sequence packing of `d(lang, shard, doc_id, n_tok)`:
+    * in doc_id order within each (lang, shard), a doc joins the bin its
+    * running token sum starts in; per bin the doc count and token count. */
+  private def packBins(d: org.apache.spark.sql.DataFrame, nDocs: String = "n_docs",
+                       nTokens: String = "bin_tokens"): org.apache.spark.sql.DataFrame = {
+    val w = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    d.withColumn("bin", floor((sum(col("n_tok")).over(w) - col("n_tok")) / 256.0).cast("long"))
+      .groupBy(col("lang"), col("shard"), col("bin"))
+      .agg(count(lit(1)).as(nDocs), sum(col("n_tok")).as(nTokens))
+  }
+
+  /** The SQL twin of [[packBins]] over `from(lang, shard, doc_id, n_tok)`,
+    * ending the query; `withDocId` keeps doc_id in the running-sum CTE. */
+  private def packBinsSql(from: String, withDocId: Boolean): String =
+    s"""cum AS (
+          SELECT lang, shard, ${if (withDocId) "doc_id, " else ""}n_tok,
+            SUM(n_tok) OVER (PARTITION BY lang, shard ORDER BY doc_id
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
+          FROM $from)
+        SELECT lang, shard, CAST(floor((c - n_tok) / 256.0) AS BIGINT) AS bin,
+          COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS bin_tokens
+        FROM cum GROUP BY 1, 2, 3"""
+
+  /** Every band-colliding image pair `(doc_a < doc_b)`: the candidates of
+    * q177 and q190. */
+  private def bandPairs(bands: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    bands.as("ba").join(bands.as("bb"), Seq("t", "bv"))
+      .filter(col("ba.media_id") < col("bb.media_id"))
+      .select(col("ba.media_id").as("doc_a"), col("bb.media_id").as("doc_b"))
+      .distinct()
+
+  /** Candidate pairs `cand(doc_a, doc_b)` with both images' aHash halves
+    * (`hi_a`, `lo_a`, `hi_b`, `lo_b`) joined on. */
+  private def withPairHashes(cand: org.apache.spark.sql.DataFrame,
+                             hv: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    cand
+      .join(hv.select(col("media_id").as("doc_a"),
+        col("h_hi").as("hi_a"), col("h_lo").as("lo_a")), "doc_a")
+      .join(hv.select(col("media_id").as("doc_b"),
+        col("h_hi").as("hi_b"), col("h_lo").as("lo_b")), "doc_b")
+
+  /** The SQL twins of [[bandPairs]] (`cand`, after [[aHashBandCtes]]) and of
+    * [[withPairHashes]] (`FROM $candHalvesSql`), and the pair's Hamming
+    * distance over those halves. */
+  private val bandPairsCte = """cand AS (
+          SELECT DISTINCT a.id AS doc_a, b.id AS doc_b
+          FROM bands a JOIN bands b ON a.t = b.t AND a.bv = b.bv AND a.id < b.id)"""
+  private val candHalvesSql = "cand c JOIN halves ha ON ha.id = c.doc_a JOIN halves hb ON hb.id = c.doc_b"
+  private val hammingSql = "bit_count(xor(ha.h_hi, hb.h_hi)) + bit_count(xor(ha.h_lo, hb.h_lo))"
+
+  /** Per-source keep-rate sampling (q98, q196): every source's ppm `rate`
+    * from its doc count `n_docs` and the scarcest source's `min_docs`, then
+    * a doc kept when its md5 coin (salted `salt`) falls under its source's
+    * rate; per source the rate, the sample size and the first kept doc. */
+  private def mixSample(s: org.apache.spark.sql.SparkSession, dir: String,
+                        rate: org.apache.spark.sql.Column, salt: String): org.apache.spark.sql.DataFrame = {
+    val d = docs(s, dir).select(col("source"), col("doc_id"))
+    val agg = d.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
+    val tot = agg.agg(min(col("n_docs")).as("min_docs"))
+    val rates = agg.crossJoin(broadcast(tot))
+      .select(col("source"), col("n_docs"), rate.as("rate_ppm"))
+    val sampled = d.join(broadcast(rates), "source")
+      .filter(Exprs.h60(concat(lit(salt), col("doc_id"))) % 1000000L < col("rate_ppm"))
+    sampled.groupBy(col("source"))
+      .agg(count(lit(1)).as("n_sampled"), min(col("doc_id")).as("first_doc"))
+      .join(rates, "source")
+      .select(col("source"), col("n_docs"), col("rate_ppm"),
+        col("n_sampled"), col("first_doc"))
+  }
+
+  /** The SQL twin of [[mixSample]], with the rate spelled as `rate`. */
+  private def mixSampleSql(rate: String, salt: String): String =
+    s"""
+        WITH agg AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1),
+        tot AS (SELECT MIN(n_docs) AS min_docs FROM agg),
+        rates AS (SELECT source, n_docs,
+            $rate AS rate_ppm
+          FROM agg, tot),
+        sampled AS (
+          SELECT d.source, d.doc_id FROM documents d JOIN rates r ON d.source = r.source
+          WHERE ${OracleSql.h60(s"'$salt' || doc_id")} % 1000000
+                < r.rate_ppm)
+        SELECT r.source, r.n_docs, r.rate_ppm,
+          COUNT(*) AS n_sampled, MIN(s.doc_id) AS first_doc
+        FROM sampled s JOIN rates r ON s.source = r.source
+        GROUP BY r.source, r.n_docs, r.rate_ppm"""
+
+  /** q229's analytic banding recall per Jaccard bucket b (0–9): the 8×4
+    * band S-curve 1−(1−j⁴)⁸ at the bucket midpoint, as ppm. Computed once
+    * in Scala and embedded identically in the frame and the oracle. */
+  private val bandingExpectPpm: Seq[(Long, Long)] = (0 to 9).map { b =>
+    val lo = math.max(0.05, b / 10.0); val hi = (b + 1) / 10.0
+    val m = (lo + hi) / 2
+    b.toLong -> math.round(1e6 * (1 - math.pow(1 - math.pow(m, 4), 8)))
+  }
+
+  /** q231's per-doc signals, by the column letter both engines use. */
+  private val signalNames = Map("a" -> "n_tokens", "b" -> "mean_word_len",
+    "c" -> "distinct_ratio", "d" -> "n_chars")
+
   /** q92 Bloom geometry: 2^18 bits = 32 KiB bitmap, 3 hashes. */
   private val BloomBits = 1 << 18
   private val BloomK = 3
@@ -580,10 +974,10 @@ object Curation {
 
     QueryDef("q32_dedup_exact",
       (s, dir) => Dedup.exact(docs(s, dir)),
-      oracle = Some("""
+      oracle = Some(s"""
         WITH norm AS (
           SELECT doc_id,
-            md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS text_hash
+            md5(${OracleSql.clean()}) AS text_hash
           FROM documents)
         SELECT text_hash, MIN(doc_id) AS rep_doc_id, COUNT(*) AS n_copies
         FROM norm GROUP BY 1""")),
@@ -597,22 +991,9 @@ object Curation {
     // is what keeps join work linear (SCALING.md).
     QueryDef("q33_ngram_jaccard_pairs",
       (s, dir) => Dedup.ngramJaccardPairs(docs(s, dir), n = 3, threshold = 0.05,
-        maxShingleDf = Some(64)),
-      oracle = Some(s"""$shCte,
-        dfreq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1),
-        shc AS (SELECT sh.* FROM sh JOIN dfreq USING (shingle) WHERE df <= 64),
-        csizes AS (SELECT doc_id, COUNT(*) AS sz FROM shc GROUP BY 1),
-        common AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-          FROM shc a JOIN shc b
-            ON a.shingle = b.shingle AND a.block = b.block AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-        SELECT doc_a, doc_b, n_common,
-          CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) AS jaccard
-        FROM common
-        JOIN csizes sa ON sa.doc_id = doc_a
-        JOIN csizes sb ON sb.doc_id = doc_b
-        WHERE CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05"""),
+        maxShingleDf = Some(MaxShingleDf)),
+      oracle = Some(s"""$shCte, $jaccardCommonCtes
+        ${jaccardPairsSql(s"doc_a, doc_b, n_common, ${jaccardOf("sa", "sb")} AS jaccard")}"""),
       bench = true),
 
     // MinHash+LSH in portable-hash mode: the oracle replays the ENTIRE
@@ -621,7 +1002,7 @@ object Curation {
     // rows-only check. h60(x) ≡ CAST('0x' || substr(md5(x),1,15) AS BIGINT).
     QueryDef("q34_minhash_lsh_pairs",
       (s, dir) => Dedup.minhashLshPairs(docs(s, dir), threshold = 0.05, portable = true,
-        maxBucketSize = Some(64)),
+        maxBucketSize = Some(MaxBucketSize)),
       bench = true, // native per-row signing + bucket join in the headline run
       oracle = Some(s"""$shCte,
         $minhashPairsCtes
@@ -638,12 +1019,12 @@ object Curation {
     // also still equals the all-pairs answer there.)
     QueryDef("q35_simhash_pairs",
       (s, dir) => Dedup.simhashPairs(docs(s, dir), maxDist = 4, portable = true,
-        maxBucketSize = Some(64)),
+        maxBucketSize = Some(MaxBucketSize)),
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         tc AS (SELECT doc_id, lang, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2, 3),
         th AS (SELECT doc_id, lang, cnt,
-                 CAST('0x' || substr(md5(term),1,15) AS BIGINT) AS h FROM tc),
+                 ${OracleSql.h60("term")} AS h FROM tc),
         bits AS (
           SELECT doc_id, lang, j, SUM(CASE WHEN (h >> j) & 1 = 1 THEN cnt ELSE -cnt END) AS s
           FROM (SELECT *, unnest(range(0,60)) AS j FROM th) g GROUP BY 1, 2, 3),
@@ -655,7 +1036,7 @@ object Curation {
           FROM fp, (SELECT unnest(range(0,5)) AS b) bands),
         kept AS (
           SELECT * FROM banded
-          QUALIFY COUNT(*) OVER (PARTITION BY lang, band, bits) <= 64),
+          QUALIFY COUNT(*) OVER (PARTITION BY lang, band, bits) <= $MaxBucketSize),
         cand AS (
           SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
           FROM kept a JOIN kept b
@@ -680,42 +1061,25 @@ object Curation {
         val d = docs(s, dir)
         val isBatch = col("doc_id") % 10 === 7
         Dedup.incrementalMinhashPairs(d.filter(!isBatch), d.filter(isBatch),
-            threshold = 0.05, portable = true, maxBucketSize = Some(64))
+            threshold = 0.05, portable = true, maxBucketSize = Some(MaxBucketSize))
           .withColumn("pair_type",
             when(col("doc_a") % 10 === 7 && col("doc_b") % 10 === 7,
               lit("batch_batch")).otherwise(lit("batch_corpus")))
       },
-      oracle = Some(s"""$shCte,
-        seeds AS (SELECT unnest(range(0, 32)) AS seed),
-        sig AS (
-          SELECT doc_id, seed,
-            MIN(CAST('0x' || substr(md5(seed || ':' || shingle),1,15) AS BIGINT)) AS mh
-          FROM sh CROSS JOIN seeds GROUP BY 1, 2),
-        banded AS (
-          SELECT doc_id, seed // 4 AS band,
-            string_agg(seed || ':' || mh, ',' ORDER BY seed || ':' || mh) AS band_sig
-          FROM sig GROUP BY 1, 2),
-        kept AS (
-          SELECT * FROM banded
-          QUALIFY COUNT(*) OVER (PARTITION BY band, band_sig) <= 64),
+      oracle = Some(s"""$shCte, $minhashBandCtes,
         cand AS (
           SELECT DISTINCT least(a.doc_id, b.doc_id) AS doc_a,
             greatest(a.doc_id, b.doc_id) AS doc_b
           FROM kept a JOIN kept b
             ON a.band = b.band AND a.band_sig = b.band_sig AND a.doc_id <> b.doc_id
           WHERE a.doc_id % 10 = 7),
-        pc AS (
-          SELECT c.doc_a, c.doc_b, COUNT(*) AS n_common
-          FROM cand c
-          JOIN sh sa ON sa.doc_id = c.doc_a
-          JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-          GROUP BY 1, 2)
+        $candCommonCte
         SELECT doc_a, doc_b,
-          CAST(n_common AS DOUBLE)/CAST(za.sz + zb.sz - n_common AS DOUBLE) AS jaccard,
+          ${jaccardOf("za", "zb")} AS jaccard,
           CASE WHEN doc_a % 10 = 7 AND doc_b % 10 = 7
             THEN 'batch_batch' ELSE 'batch_corpus' END AS pair_type
         FROM pc JOIN sizes za ON za.doc_id = doc_a JOIN sizes zb ON zb.doc_id = doc_b
-        WHERE CAST(n_common AS DOUBLE)/CAST(za.sz + zb.sz - n_common AS DOUBLE) >= 0.05"""),
+        WHERE ${jaccardOf("za", "zb")} >= 0.05"""),
       bench = true), // the asymmetric-probe ingest path in the headline run
 
     // The oracle mirrors the operator's deterministic block cap (row_number
@@ -724,23 +1088,17 @@ object Curation {
     QueryDef("q36_embedding_neardup",
       (s, dir) => Similarity.nearDupPairs(Tables(s, dir, "embeddings"), threshold = 0.3,
         maxBlock = 10000),
-      oracle = Some("""
+      oracle = Some(s"""
         WITH emb AS (
           SELECT vec_id, block, e FROM (
-            SELECT vec_id, CAST(label AS BIGINT) AS block, CAST(embedding AS DOUBLE[]) AS e,
+            SELECT vec_id, CAST(label AS BIGINT) AS block, ${OracleSql.vec} AS e,
               row_number() OVER (PARTITION BY label ORDER BY vec_id ASC) AS rn
             FROM embeddings) capped
           WHERE rn <= 10000)
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-          round(CASE WHEN sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)) = 0
-            THEN 0.0
-            ELSE list_dot_product(a.e, b.e) /
-                 (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) END, 6) AS sim
+          ${OracleSql.cosine("a.e", "b.e")} AS sim
         FROM emb a JOIN emb b ON a.block = b.block AND a.vec_id < b.vec_id
-        WHERE round(CASE WHEN sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e)) = 0
-            THEN 0.0
-            ELSE list_dot_product(a.e, b.e) /
-                 (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))) END, 6) >= 0.3""")),
+        WHERE ${OracleSql.cosine("a.e", "b.e")} >= 0.3""")),
 
     QueryDef("q37_ann_brute_topk",
       (s, dir) => {
@@ -792,36 +1150,14 @@ object Curation {
           .select(col("q_id"), col("n_id"), col("rk").as("trk"))
         retrievalEvalCard(sys, truth, "lsh_vs_exact", k = 10)
       },
-      oracle = Some(lshTopkCtes + """,
+      oracle = Some(lshTopkCtes + s""",
         tsims AS (
           SELECT a.vec_id AS q_id, b.vec_id AS n_id,
-            round(CASE WHEN sqrt(list_dot_product(a.e,a.e))*sqrt(list_dot_product(b.e,b.e)) = 0
-              THEN 0.0
-              ELSE list_dot_product(a.e,b.e) /
-                   (sqrt(list_dot_product(a.e,a.e))*sqrt(list_dot_product(b.e,b.e))) END, 6) AS sim
+            ${OracleSql.cosine("a.e", "b.e")} AS sim
           FROM emb a JOIN emb b ON a.vec_id <> b.vec_id),
         truth AS (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-            FROM tsims) t
-          WHERE rk <= 10),
-        nq AS (SELECT COUNT(DISTINCT q_id) AS n_queries FROM truth),
-        hits AS (
-          SELECT s.q_id, s.n_id, s.rk AS srk, t.rk AS trk
-          FROM lsh_topk s JOIN truth t ON s.q_id = t.q_id AND s.n_id = t.n_id),
-        nhits AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits FROM hits),
-        rr AS (
-          SELECT CAST(COALESCE(SUM(COALESCE(1000000 // s.rk, 0)), 0) AS BIGINT) AS rr_sum
-          FROM truth t LEFT JOIN lsh_topk s ON s.q_id = t.q_id AND s.n_id = t.n_id
-          WHERE t.rk = 1),
-        h1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit1 FROM hits WHERE trk = 1 AND srk = 1)
-        SELECT 'lsh_vs_exact' AS system, n_queries, n_hits,
-          (1000000 * n_hits) // (n_queries * 10) AS recall_ppm,
-          rr_sum // n_queries AS mrr_ppm,
-          n_hit1,
-          (1000000 * n_hit1) // n_queries AS hit1_ppm
-        FROM nq, nhits, rr, h1"""),
+          ${OracleSql.topK("q_id, n_id", "sim DESC", "tsims", 10, "t")}),
+        ${OracleSql.evalCard("lsh_topk", "lsh_vs_exact", 10)}"""),
       bench = true),
 
     // The q197 card in its 100 TB deployment shape (VERDICT r10 #5 — the
@@ -859,43 +1195,21 @@ object Curation {
           .select(col("q_id"), col("n_id"), col("rk").as("trk"))
         retrievalEvalCard(sys, truth, "lsh_vs_exact_sampled", k = 10)
       },
-      oracle = Some(lshTopkCtes + """,
+      oracle = Some(lshTopkCtes + s""",
         sq AS (SELECT vec_id FROM emb
-          ORDER BY CAST('0x' || substr(md5('rq:' || vec_id), 1, 15) AS BIGINT) ASC,
+          ORDER BY ${OracleSql.h60("'rq:' || vec_id")} ASC,
             vec_id ASC
           LIMIT 64),
         sys AS (SELECT q_id, n_id, rk FROM lsh_topk
           WHERE q_id IN (SELECT vec_id FROM sq)),
         tsims AS (
           SELECT a.vec_id AS q_id, b.vec_id AS n_id,
-            round(CASE WHEN sqrt(list_dot_product(a.e,a.e))*sqrt(list_dot_product(b.e,b.e)) = 0
-              THEN 0.0
-              ELSE list_dot_product(a.e,b.e) /
-                   (sqrt(list_dot_product(a.e,a.e))*sqrt(list_dot_product(b.e,b.e))) END, 6) AS sim
+            ${OracleSql.cosine("a.e", "b.e")} AS sim
           FROM emb a JOIN emb b ON a.vec_id <> b.vec_id
           WHERE a.vec_id IN (SELECT vec_id FROM sq)),
         truth AS (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-            FROM tsims) t
-          WHERE rk <= 10),
-        nq AS (SELECT COUNT(DISTINCT q_id) AS n_queries FROM truth),
-        hits AS (
-          SELECT s.q_id, s.n_id, s.rk AS srk, t.rk AS trk
-          FROM sys s JOIN truth t ON s.q_id = t.q_id AND s.n_id = t.n_id),
-        nhits AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits FROM hits),
-        rr AS (
-          SELECT CAST(COALESCE(SUM(COALESCE(1000000 // s.rk, 0)), 0) AS BIGINT) AS rr_sum
-          FROM truth t LEFT JOIN sys s ON s.q_id = t.q_id AND s.n_id = t.n_id
-          WHERE t.rk = 1),
-        h1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit1 FROM hits WHERE trk = 1 AND srk = 1)
-        SELECT 'lsh_vs_exact_sampled' AS system, n_queries, n_hits,
-          (1000000 * n_hits) // (n_queries * 10) AS recall_ppm,
-          rr_sum // n_queries AS mrr_ppm,
-          n_hit1,
-          (1000000 * n_hit1) // n_queries AS hit1_ppm
-        FROM nq, nhits, rr, h1"""),
+          ${OracleSql.topK("q_id, n_id", "sim DESC", "tsims", 10, "t")}),
+        ${OracleSql.evalCard("sys", "lsh_vs_exact_sampled", 10)}"""),
       bench = true),
     // IVF top-k quality gate: k-means float iterations aren't portably
     // mirrorable in SQL (summation-order–dependent centroids), so the row is
@@ -938,7 +1252,7 @@ object Curation {
       (s, dir) => Similarity.semanticDedup(Tables(s, dir, "embeddings"),
         k = 8, iterations = 3, threshold = 0.3, maxBlock = 10000),
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${kmeansCtes(8, 3)},
         capped AS (
           SELECT vec_id, v, cid FROM (
@@ -949,11 +1263,7 @@ object Curation {
         dropped AS (
           SELECT DISTINCT b.vec_id
           FROM capped a JOIN capped b ON a.cid = b.cid AND a.vec_id < b.vec_id
-          WHERE round(CASE WHEN sqrt(list_dot_product(a.v, a.v)) *
-                                sqrt(list_dot_product(b.v, b.v)) = 0 THEN 0.0
-            ELSE list_dot_product(a.v, b.v) /
-                 (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
-            END, 6) >= 0.3)
+          WHERE ${OracleSql.cosine("a.v", "b.v")} >= 0.3)
         SELECT af.vec_id, af.cid AS cluster FROM af
         WHERE af.vec_id NOT IN (SELECT vec_id FROM dropped)"""),
       bench = true),
@@ -968,8 +1278,7 @@ object Curation {
     // shuffle; the summary is a k-row aggregate.
     QueryDef("q110_kmeans_clusters",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         val cents = graft.ml.KMeans.fit(e, k = 8, iterations = 3)
         graft.ml.KMeans.assign(e, cents)
           .groupBy(col("centroid_id"))
@@ -979,10 +1288,10 @@ object Curation {
             round(sqrt(Exprs.dot(col("centroid"), col("centroid"))), 6).as("centroid_norm"))
       },
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${kmeansCtes(8, 3)}
         SELECT a.cid AS cluster, a.n_vectors,
-          round(sqrt(list_dot_product(c.c, c.c)), 6) AS centroid_norm
+          round(${OracleSql.norm("c.c")}, 6) AS centroid_norm
         FROM (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vectors FROM af GROUP BY 1) a
         JOIN c3 c USING (cid)"""),
       bench = true),
@@ -997,7 +1306,7 @@ object Curation {
     QueryDef("q116_pca_component",
       (s, dir) => graft.ml.Pca.topComponent(Tables(s, dir, "embeddings"), iterations = 4),
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${pcaCtes(4)}
         SELECT pos, round(v, 8) AS weight FROM pv4"""),
       bench = true),
@@ -1010,7 +1319,7 @@ object Curation {
     QueryDef("q117_pca_scores",
       (s, dir) => graft.ml.Pca.projectTop(Tables(s, dir, "embeddings"), iterations = 4),
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${pcaCtes(4)},
         varr AS (SELECT list(v ORDER BY pos) AS w FROM pv4)
         SELECT vec_id,
@@ -1030,7 +1339,7 @@ object Curation {
     QueryDef("q123_pca_topk",
       (s, dir) => graft.ml.Pca.topK(Tables(s, dir, "embeddings"), k = 2, iterations = 4),
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${pcaCtes(4)},
         f1 AS MATERIALIZED (SELECT pos, v FROM pv4),
         ${pcaLamCtes(1)},
@@ -1053,15 +1362,14 @@ object Curation {
     // unroll, prefixed per subspace.
     QueryDef("q124_pq_codes",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         val cbs = graft.ml.Pq.fit(e, m = 4, k = 8, iterations = 2)
         graft.ml.Pq.encode(e, cbs, m = 4)
           .select(col("vec_id") +:
             (0 until 4).map(s0 => element_at(col("codes"), s0 + 1).as(s"c${s0 + 1}")): _*)
       },
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${pqCtes(4, 16, 8, 2)},
         ${pqCodesCte(4)}
         SELECT vec_id, k1 AS c1, k2 AS c2, k3 AS c3, k4 AS c4 FROM codes"""),
@@ -1078,24 +1386,19 @@ object Curation {
     // joins and the left-associated 4-term sum exactly; rank ties on n_id.
     QueryDef("q125_pq_adc_topk",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         val cbs = graft.ml.Pq.fit(e, m = 4, k = 8, iterations = 2)
         val codes = graft.ml.Pq.encode(e, cbs, m = 4)
         graft.ml.Pq.adcTopK(e.filter(col("vec_id") % 20 === 0), codes, cbs,
           m = 4, kc = 8, k = 10)
       },
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${pqCtes(4, 16, 8, 2)},
         ${pqCodesCte(4)},
         q AS (SELECT vec_id, v FROM e WHERE vec_id % 20 = 0),
         ${pqDistCtes(4, 16, 2)}
-        SELECT q_id, n_id, d2, rk FROM (
-          SELECT q_id, n_id, d2,
-            CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-          FROM dist) z
-        WHERE rk <= 10"""),
+        ${OracleSql.topK("q_id, n_id, d2", "d2 ASC", "dist", 10)}"""),
       bench = true),
 
     // ADC + exact re-rank (Jégou et al. §VII, the IVFADC+R refinement) in
@@ -1108,15 +1411,14 @@ object Curation {
     // The oracle replays shortlist AND re-rank; both rank ties on n_id.
     QueryDef("q126_pq_rerank",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         val cbs = graft.ml.Pq.fit(e, m = 8, k = 16, iterations = 2)
         val codes = graft.ml.Pq.encode(e, cbs, m = 8)
         graft.ml.Pq.adcRerankTopK(e.filter(col("vec_id") % 20 === 0), codes, cbs, e,
           m = 8, kc = 16, shortlist = 50, k = 10)
       },
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${pqCtes(8, 8, 16, 2)},
         ${pqCodesCte(8)},
         q AS (SELECT vec_id, v FROM e WHERE vec_id % 20 = 0),
@@ -1124,21 +1426,16 @@ object Curation {
         short AS (
           SELECT q_id, n_id FROM (
             SELECT q_id, n_id,
-              row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS rk
+              ${OracleSql.rank("d2 ASC", cast = false)} AS rk
             FROM dist) z
           WHERE rk <= 50),
         exact AS (
           SELECT sh.q_id, sh.n_id,
-            round(list_reduce(list_transform(range(1, len(qq.v) + 1),
-              i -> (qq.v[i] - n.v[i]) * (qq.v[i] - n.v[i])), (x, y) -> x + y), 6) AS d2
+            round(${OracleSql.sqdist("qq.v", "n.v")}, 6) AS d2
           FROM short sh
           JOIN q qq ON qq.vec_id = sh.q_id
           JOIN e n ON n.vec_id = sh.n_id)
-        SELECT q_id, n_id, d2, rk FROM (
-          SELECT q_id, n_id, d2,
-            CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-          FROM exact) z
-        WHERE rk <= 10"""),
+        ${OracleSql.topK("q_id, n_id, d2", "d2 ASC", "exact", 10)}"""),
       bench = true),
 
     // Reciprocal rank fusion (Cormack, Clarke & Buettcher 2009) — the
@@ -1152,9 +1449,9 @@ object Curation {
     // fusion arithmetic verbatim.
     QueryDef("q131_rrf_hybrid",
       (s, dir) => {
-        val emb = Tables(s, dir, "embeddings")
-        val e = emb.select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
-        val cosR = Similarity.bruteTopK(emb.filter(col("vec_id") % 20 === 0), emb, k = 20)
+        val raw = Tables(s, dir, "embeddings")
+        val e = emb(s, dir)
+        val cosR = Similarity.bruteTopK(raw.filter(col("vec_id") % 20 === 0), raw, k = 20)
           .select(col("q_id"), col("n_id"), col("rk"))
         val cbs = graft.ml.Pq.fit(e, m = 4, k = 8, iterations = 2)
         val codes = graft.ml.Pq.encode(e, cbs, m = 4)
@@ -1164,40 +1461,25 @@ object Curation {
         Similarity.rrfFuse(Seq(cosR, pqR), k = 10)
       },
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${pqCtes(4, 16, 8, 2)},
         ${pqCodesCte(4)},
         q AS (SELECT vec_id, v FROM e WHERE vec_id % 20 = 0),
         ${pqDistCtes(4, 16, 2)},
         pqr AS MATERIALIZED (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-            FROM dist) z
-          WHERE rk <= 20),
+          ${OracleSql.topK("q_id, n_id", "d2 ASC", "dist", 20)}),
         sims AS (
           SELECT q.vec_id AS q_id, c.vec_id AS n_id,
-            round(CASE WHEN sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v)) = 0
-              THEN 0.0
-              ELSE list_dot_product(q.v, c.v) /
-                   (sqrt(list_dot_product(q.v, q.v)) * sqrt(list_dot_product(c.v, c.v))) END, 6) AS sim
+            ${OracleSql.cosine("q.v", "c.v")} AS sim
           FROM q CROSS JOIN e c WHERE q.vec_id <> c.vec_id),
         cosr AS MATERIALIZED (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-            FROM sims) z
-          WHERE rk <= 20),
+          ${OracleSql.topK("q_id, n_id", "sim DESC", "sims", 20)}),
         fused AS (
           SELECT q_id, n_id,
             round(CAST(SUM(CAST(round(1e0 / (60e0 + CAST(rk AS DOUBLE)), 12) AS DECIMAL(30,12))) AS DOUBLE), 8) AS rrf
           FROM (SELECT * FROM cosr UNION ALL SELECT * FROM pqr) u
           GROUP BY 1, 2)
-        SELECT q_id, n_id, rrf, rk FROM (
-          SELECT q_id, n_id, rrf,
-            CAST(row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, n_id ASC) AS BIGINT) AS rk
-          FROM fused) z
-        WHERE rk <= 10"""),
+        ${OracleSql.topK("q_id, n_id, rrf", "rrf DESC", "fused", 10)}"""),
       bench = true),
 
     // Johnson–Lindenstrauss random projection (Achlioptas 2003, ±1
@@ -1211,15 +1493,14 @@ object Curation {
     // map-side — the exchange carries n·16 rows, never n·d·16.
     QueryDef("q130_random_projection",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         graft.ml.RandomProjection.project(e, kDim = 16, d = 64)
       },
-      oracle = Some("""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      oracle = Some(s"""
+        WITH ${OracleSql.embCte("e", "v")},
         sgn AS MATERIALIZED (
           SELECT k, i,
-            CASE WHEN CAST('0x' || substr(md5('rp:' || CAST(k AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 15) AS BIGINT) % 2 = 0
+            CASE WHEN ${OracleSql.h60("'rp:' || CAST(k AS VARCHAR) || ':' || CAST(i AS VARCHAR)")} % 2 = 0
               THEN 1e0 ELSE -1e0 END AS s
           FROM (SELECT UNNEST(range(0, 16)) AS k) ks
           CROSS JOIN (SELECT UNNEST(range(0, 64)) AS i) ii),
@@ -1252,10 +1533,10 @@ object Curation {
         graft.ml.TopK.ranked(scored, Seq("lang"), "doc_id", "score", k = 100)
           .select(col("lang"), col("doc_id"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH h AS (
           SELECT lang, doc_id,
-            CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 12) AS BIGINT) AS h
+            ${OracleSql.h48("CAST(doc_id AS VARCHAR)")} AS h
           FROM documents)
         SELECT lang, doc_id FROM h
         QUALIFY row_number() OVER (PARTITION BY lang ORDER BY h ASC, doc_id ASC) <= 100"""),
@@ -1285,11 +1566,11 @@ object Curation {
           .select(col("doc_id"), round(col("es_key"), 8).as("es_key"))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         ntok AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
         k AS (
           SELECT d.doc_id,
-            round(ln((CAST('0x' || substr(md5('ws:' || CAST(d.doc_id AS VARCHAR)), 1, 12) AS BIGINT)
+            round(ln((${OracleSql.h48("'ws:' || CAST(d.doc_id AS VARCHAR)")}
                 + 1.0) / 281474976710656.0), 10)
               / CAST(greatest(COALESCE(nt.n, 0), 1) AS DOUBLE) AS es_key
           FROM documents d LEFT JOIN ntok nt ON d.doc_id = nt.doc_id)
@@ -1307,7 +1588,7 @@ object Curation {
     QueryDef("q112_minhash_cluster_purge",
       (s, dir) => {
         val pairs = Dedup.minhashLshPairs(docs(s, dir), threshold = 0.05,
-            portable = true, maxBucketSize = Some(64))
+            portable = true, maxBucketSize = Some(MaxBucketSize))
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         val comp = graft.graph.Graphs.connectedComponents(pairs)
           .withColumnRenamed("v", "doc_id")
@@ -1316,20 +1597,7 @@ object Curation {
           .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
           .withColumn("kept", col("doc_id") === col("cluster_id"))
       },
-      oracle = Some(s"""WITH RECURSIVE $shCteBody,
-        $minhashPairsCtes,
-        und2 AS (SELECT doc_a AS a, doc_b AS b FROM mh_pairs
-                 UNION SELECT doc_b, doc_a FROM mh_pairs),
-        reach2(a, b) AS (
-          SELECT a, b FROM und2
-          UNION
-          SELECT r.a, u.b FROM reach2 r JOIN und2 u ON r.b = u.a),
-        mclusters AS (
-          SELECT d.doc_id,
-            CAST(CASE WHEN m.mn IS NULL OR d.doc_id < m.mn THEN d.doc_id ELSE m.mn END AS BIGINT)
-              AS cluster_id
-          FROM documents d
-          LEFT JOIN (SELECT a AS doc_id, MIN(b) AS mn FROM reach2 GROUP BY 1) m USING (doc_id))
+      oracle = Some(s"""WITH RECURSIVE $minhashClusterCtes
         SELECT doc_id, cluster_id, doc_id = cluster_id AS kept FROM mclusters"""),
       bench = true), // the composed MinHash dedup chain in the headline run
 
@@ -1380,20 +1648,20 @@ object Curation {
         import graft.functions.Exprs
         val e = Tables(s, dir, "embeddings")
           .select(col("label").cast(org.apache.spark.sql.types.LongType).as("label"),
-            col("embedding").cast("array<double>").as("v"))
+            embVec.as("v"))
           .withColumn("norm", sqrt(Exprs.dot(col("v"), col("v"))))
           .withColumn("dim", size(col("v")).cast(org.apache.spark.sql.types.LongType))
         e.groupBy(col("label"))
           .agg(count(lit(1)).as("n"), max(col("dim")).as("dim"),
             Exprs.dsum(col("norm"), 8).as("sum_norm"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH e AS (
-          SELECT CAST(label AS BIGINT) AS label, CAST(embedding AS DOUBLE[]) AS v,
+          SELECT CAST(label AS BIGINT) AS label, ${OracleSql.vec} AS v,
             CAST(len(embedding) AS BIGINT) AS dim
           FROM embeddings)
         SELECT label, COUNT(*) AS n, MAX(dim) AS dim,
-          CAST(SUM(CAST(sqrt(list_dot_product(v, v)) AS DECIMAL(30,8))) AS DOUBLE) AS sum_norm
+          CAST(SUM(CAST(${OracleSql.norm("v")} AS DECIMAL(30,8))) AS DOUBLE) AS sum_norm
         FROM e GROUP BY 1""")),
 
     // End-to-end curation pipeline — the composability proof: exact-dedup
@@ -1412,80 +1680,44 @@ object Curation {
           .join(lid, "doc_id").filter(col("pred_lang") === col("lang"))
           .select(col("doc_id"), col("lang"), col("n_tokens"), col("quality"))
       },
-      oracle = Some {
-        val stopList = TextStats.stopwords.map(w => s"'$w'").mkString(", ")
-        val scoreCols = TextStats.langMarkers.map { case (lang, words) =>
-          val list = words.map(w => s"'$w'").mkString(", ")
-          s"CAST(SUM(CASE WHEN term IN ($list) THEN 1 ELSE 0 END) AS BIGINT) AS s_$lang"
-        }.mkString(",\n          ")
-        val bestExpr = TextStats.langMarkers.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        val predExpr = TextStats.langMarkers.map { case (l, _) =>
-          s"WHEN s_$l = best AND best > 0 THEN '$l'"
-        }.mkString("CASE ", " ", " ELSE 'und' END")
-        s"""
-        WITH ${Text.toksCte},
+      oracle = Some(s"""
+        WITH ${OracleSql.toksCte},
         norm AS (
           SELECT doc_id,
-            md5(trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS text_hash
+            md5(${OracleSql.clean()}) AS text_hash
           FROM documents),
         reps AS (SELECT MIN(doc_id) AS doc_id FROM norm GROUP BY text_hash),
-        per_doc AS (
-          SELECT doc_id, COUNT(*) AS n_tokens, COUNT(DISTINCT term) AS n_distinct,
-            CAST(SUM(CASE WHEN term IN ($stopList) THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
-          FROM toks GROUP BY 1),
+        $qualityCountsCte,
         qual AS (
           SELECT doc_id, n_tokens,
-            CAST(n_distinct AS DOUBLE)/CAST(n_tokens AS DOUBLE) * 0.4 +
-              CAST(least(n_tokens, 100) AS DOUBLE)/100.0 * 0.4 +
-              (1.0 - CAST(n_stop AS DOUBLE)/CAST(n_tokens AS DOUBLE)) * 0.2 AS quality
+            $qualitySql AS quality
           FROM per_doc),
-        scored AS (
-          SELECT doc_id,
-          $scoreCols
-          FROM toks GROUP BY 1),
-        pred AS (
-          SELECT doc_id, $predExpr AS pred_lang
-          FROM (SELECT *, $bestExpr AS best FROM scored) b)
+        $langScoredCte,
+        $langPredCte
         SELECT d.doc_id, d.lang, qual.n_tokens, qual.quality
         FROM documents d
         JOIN reps USING (doc_id)
         JOIN qual USING (doc_id)
         JOIN pred USING (doc_id)
-        WHERE qual.quality >= 0.6 AND pred.pred_lang = d.lang"""
-      },
+        WHERE qual.quality >= 0.6 AND pred.pred_lang = d.lang"""),
       bench = true),
 
     QueryDef("q39_lang_id",
       (s, dir) => TextStats.languageId(docs(s, dir)),
-      oracle = Some {
-        val scoreCols = TextStats.langMarkers.map { case (lang, words) =>
-          val list = words.map(w => s"'$w'").mkString(", ")
-          s"CAST(SUM(CASE WHEN term IN ($list) THEN 1 ELSE 0 END) AS BIGINT) AS s_$lang"
-        }.mkString(",\n          ")
-        val bestExpr = TextStats.langMarkers.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        val predExpr = TextStats.langMarkers.map { case (l, _) =>
-          s"WHEN s_$l = best AND best > 0 THEN '$l'"
-        }.mkString("CASE ", " ", " ELSE 'und' END")
-        s"""
-        WITH ${Text.toksCte},
-        scored AS (
-          SELECT doc_id,
-          $scoreCols
-          FROM toks GROUP BY 1)
-        SELECT doc_id, $predExpr AS pred_lang, best AS best_score
-        FROM (SELECT *, $bestExpr AS best FROM scored) b"""
-      }),
+      oracle = Some(s"""
+        WITH ${OracleSql.toksCte},
+        $langScoredCte
+        SELECT doc_id, $langPredSql AS pred_lang, best AS best_score
+        FROM $langBestSql""")),
 
     QueryDef("q40_quality",
       (s, dir) => TextStats.quality(docs(s, dir)),
-      oracle = Some {
-        val stopList = TextStats.stopwords.map(w => s"'$w'").mkString(", ")
-        s"""
-        WITH ${Text.toksCte},
+      oracle = Some(s"""
+        WITH ${OracleSql.toksCte},
         per_doc AS (
           SELECT doc_id, COUNT(*) AS n_tokens, COUNT(DISTINCT term) AS n_distinct,
             CAST(SUM(length(term)) AS BIGINT) AS n_term_chars,
-            CAST(SUM(CASE WHEN term IN ($stopList) THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
+            $nStopSql
           FROM toks GROUP BY 1),
         raw AS (
           SELECT doc_id, CAST(length(text) AS BIGINT) AS len_raw,
@@ -1496,11 +1728,8 @@ object Curation {
           CAST(n_term_chars AS DOUBLE)/CAST(n_tokens AS DOUBLE) AS avg_token_len,
           CAST(n_stop AS DOUBLE)/CAST(n_tokens AS DOUBLE) AS stopword_ratio,
           CAST(len_raw - len_clean AS DOUBLE)/CAST(len_raw AS DOUBLE) AS nonalnum_ratio,
-          CAST(n_distinct AS DOUBLE)/CAST(n_tokens AS DOUBLE) * 0.4 +
-            CAST(least(n_tokens, 100) AS DOUBLE)/100.0 * 0.4 +
-            (1.0 - CAST(n_stop AS DOUBLE)/CAST(n_tokens AS DOUBLE)) * 0.2 AS quality
-        FROM per_doc p JOIN raw r ON p.doc_id = r.doc_id"""
-      },
+          $qualitySql AS quality
+        FROM per_doc p JOIN raw r ON p.doc_id = r.doc_id"""),
       bench = true),
 
     QueryDef("q41_token_stats",
@@ -1513,12 +1742,11 @@ object Curation {
 
     QueryDef("q42_fingerprint",
       (s, dir) => TextStats.fingerprint(docs(s, dir)),
-      oracle = Some("""
+      oracle = Some(s"""
         WITH seq AS (
           SELECT doc_id,
             list_transform(
-              list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'),
-                          t -> t <> ''),
+              ${OracleSql.tokens(x = "t")},
               t -> CAST(length(t)*31 + ascii(t) AS BIGINT)) AS vals
           FROM documents)
         SELECT doc_id,
@@ -1535,21 +1763,8 @@ object Curation {
     // verbatim in SQL, so the trained-model semantics are hash-checked.
     QueryDef("q90_charlm_ppl",
       (s, dir) => TextStats.charLmPerplexity(docs(s, dir)),
-      oracle = Some("""
-        WITH cl AS (
-          SELECT doc_id, lang,
-            trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS clean
-          FROM documents),
-        cl2 AS (SELECT * FROM cl WHERE length(clean) >= 3),
-        tris AS (
-          SELECT doc_id, lang, substr(clean, CAST(i AS INTEGER), 3) AS tg
-          FROM cl2, unnest(generate_series(1, length(clean) - 2)) AS g(i)),
-        model AS (SELECT lang, tg, COUNT(*) AS cnt FROM tris GROUP BY 1, 2),
-        tot AS (SELECT lang, SUM(cnt) AS total, COUNT(*) AS d FROM model GROUP BY 1),
-        probs AS (
-          SELECT m.lang, m.tg,
-            round(ln((cnt + 1) / CAST(total + d AS DOUBLE)), 10) AS logp
-          FROM model m JOIN tot USING (lang)),
+      oracle = Some(s"""
+        WITH ${OracleSql.charLm()},
         sc AS (
           SELECT t.doc_id, t.lang, COUNT(*) AS n_tri,
             CAST(SUM(CAST(logp AS DECIMAL(30,10))) AS DOUBLE) AS s
@@ -1571,7 +1786,7 @@ object Curation {
     QueryDef("q96_lr_train",
       (s, dir) => graft.ml.Logistic.train(lrFeatures(s, dir), lr = 1.0, iterations = 8),
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         ${lrCtes(4, "1.0", 8)}
         SELECT CAST(pos AS BIGINT) AS pos, w AS weight FROM w8""")),
 
@@ -1587,7 +1802,7 @@ object Curation {
           .withColumn("keep", col("score") >= lit(0.5d))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         ${lrCtes(4, "1.0", 8)},
         waf AS (SELECT list(w ORDER BY pos) AS wv FROM w8)
         SELECT id, round(1.0/(1.0 + exp(-round(list_dot_product(x, wv), 12))), 10) AS score,
@@ -1614,24 +1829,10 @@ object Curation {
             round(col("n").cast(org.apache.spark.sql.types.DoubleType) /
               col("n_actual").cast(org.apache.spark.sql.types.DoubleType), 8).as("rate"))
       },
-      oracle = Some {
-        val scoreCols = TextStats.langMarkers.map { case (lang, words) =>
-          val list = words.map(w => s"'$w'").mkString(", ")
-          s"CAST(SUM(CASE WHEN term IN ($list) THEN 1 ELSE 0 END) AS BIGINT) AS s_$lang"
-        }.mkString(",\n          ")
-        val bestExpr = TextStats.langMarkers.map { case (l, _) => s"s_$l" }.mkString("greatest(", ", ", ")")
-        val predExpr = TextStats.langMarkers.map { case (l, _) =>
-          s"WHEN s_$l = best AND best > 0 THEN '$l'"
-        }.mkString("CASE ", " ", " ELSE 'und' END")
-        s"""
-        WITH ${Text.toksCte},
-        scored AS (
-          SELECT doc_id,
-          $scoreCols
-          FROM toks GROUP BY 1),
-        pred AS (
-          SELECT doc_id, $predExpr AS pred_lang
-          FROM (SELECT *, $bestExpr AS best FROM scored) b),
+      oracle = Some(s"""
+        WITH ${OracleSql.toksCte},
+        $langScoredCte,
+        $langPredCte,
         cells AS (
           SELECT d.lang, p.pred_lang, COUNT(*) AS n
           FROM pred p JOIN documents d ON d.doc_id = p.doc_id
@@ -1639,8 +1840,7 @@ object Curation {
         rt AS (SELECT lang, CAST(SUM(n) AS BIGINT) AS n_actual FROM cells GROUP BY 1)
         SELECT c.lang, c.pred_lang, c.n,
           round(CAST(c.n AS DOUBLE) / CAST(rt.n_actual AS DOUBLE), 8) AS rate
-        FROM cells c JOIN rt ON rt.lang = c.lang"""
-      },
+        FROM cells c JOIN rt ON rt.lang = c.lang"""),
       bench = true),
 
     // Calibration (reliability) bins of the q97 logistic filter — the
@@ -1673,7 +1873,7 @@ object Curation {
               col("n").cast(org.apache.spark.sql.types.DoubleType), 8).as("actual_rate"))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         ${lrCtes(4, "1.0", 8)},
         waf AS (SELECT list(w ORDER BY pos) AS wv FROM w8),
         scored AS (
@@ -1759,14 +1959,11 @@ object Curation {
             round(col("top_cnt").cast(DoubleType) /
               col("n_bigrams").cast(DoubleType), 6).as("top_frac"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         bg AS (
-          SELECT doc_id, tk[i] || ' ' || tk[i+1] AS bigram
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 1)) AS i FROM seq) g),
+          SELECT doc_id, ${OracleSql.ngram(2)} AS bigram
+          FROM ${OracleSql.ngramSql(2, "seq")} g),
         bc AS (SELECT doc_id, bigram, COUNT(*) AS cnt FROM bg GROUP BY 1, 2)
         SELECT doc_id,
           CAST(SUM(cnt) AS BIGINT) AS n_bigrams,
@@ -1831,24 +2028,12 @@ object Curation {
             round(Exprs.dsum(col("qb"), 6) / count(lit(1)).cast("double"), 6)
               .as("mean_q_best"))
       },
-      oracle = Some {
-        val stopList = TextStats.stopwords.map(w => s"'$w'").mkString(", ")
-        s"""WITH RECURSIVE $shCteBody, $jaccardPairsCtes,
-        toks AS (
-          SELECT doc_id, term FROM (
-            SELECT doc_id,
-              unnest(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +')) AS term
-            FROM documents) u
-          WHERE term <> ''),
-        per_doc AS (
-          SELECT doc_id, COUNT(*) AS n_tokens, COUNT(DISTINCT term) AS n_distinct,
-            CAST(SUM(CASE WHEN term IN ($stopList) THEN 1 ELSE 0 END) AS BIGINT) AS n_stop
-          FROM toks GROUP BY 1),
+      oracle = Some(s"""WITH RECURSIVE $shCteBody, $jaccardPairsCtes,
+        ${OracleSql.tokenRows("toks", "doc_id")},
+        $qualityCountsCte,
         qv AS (
           SELECT doc_id,
-            round(CAST(n_distinct AS DOUBLE)/CAST(n_tokens AS DOUBLE) * 0.4 +
-              CAST(least(n_tokens, 100) AS DOUBLE)/100.0 * 0.4 +
-              (1.0 - CAST(n_stop AS DOUBLE)/CAST(n_tokens AS DOUBLE)) * 0.2, 6) AS q
+            round($qualitySql, 6) AS q
           FROM per_doc),
         m AS (
           SELECT c.doc_id, c.cluster_id, d.lang, qv.q
@@ -1868,8 +2053,7 @@ object Curation {
           round(CAST(SUM(CAST(b.qb AS DECIMAL(30,6))) AS DOUBLE) /
             CAST(COUNT(*) AS DOUBLE), 6) AS mean_q_best
         FROM firstq f JOIN best b USING (cluster_id)
-        GROUP BY 1"""
-      },
+        GROUP BY 1"""),
       bench = true),
 
     // Context-window truncation card: for candidate context lengths, how
@@ -1894,10 +2078,8 @@ object Curation {
             col("tokens_lost"), col("total_tokens"),
             expr("(1000000 * tokens_lost) div total_tokens").as("lost_ppm"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq")},
         nn AS (SELECT CAST(len(tk) AS BIGINT) AS n FROM seq WHERE len(tk) > 0),
         ks(ctx_len) AS (VALUES (32), (64), (96))
         SELECT CAST(ctx_len AS BIGINT) AS ctx_len,
@@ -1922,7 +2104,7 @@ object Curation {
         val th = s.createDataFrame(Seq((0.05d, 50000L), (0.1d, 100000L),
           (0.2d, 200000L), (0.4d, 400000L))).toDF("t", "t_ppm")
         val pairs = Dedup.ngramJaccardPairs(docs(s, dir), n = 3, threshold = 0.05,
-          maxShingleDf = Some(64))
+          maxShingleDf = Some(MaxShingleDf))
         val pt = pairs.crossJoin(broadcast(th)).filter(col("jaccard") >= col("t"))
         val np = pt.groupBy(col("t_ppm")).agg(count(lit(1)).as("n_pairs"))
         val nd = pt.select(col("t_ppm"),
@@ -1935,22 +2117,8 @@ object Curation {
             coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
             coalesce(col("n_dup_docs"), lit(0L)).as("n_dup_docs"))
       },
-      oracle = Some(s"""$shCte,
-        dfreq AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY 1),
-        shc AS (SELECT sh.* FROM sh JOIN dfreq USING (shingle) WHERE df <= 64),
-        csizes AS (SELECT doc_id, COUNT(*) AS sz FROM shc GROUP BY 1),
-        common AS (
-          SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_common
-          FROM shc a JOIN shc b
-            ON a.shingle = b.shingle AND a.block = b.block AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        prs AS (
-          SELECT doc_a, doc_b,
-            CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) AS jaccard
-          FROM common
-          JOIN csizes sa ON sa.doc_id = doc_a
-          JOIN csizes sb ON sb.doc_id = doc_b
-          WHERE CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
+      oracle = Some(s"""$shCte, $jaccardCommonCtes,
+        prs AS (${jaccardPairsSql(s"doc_a, doc_b, ${jaccardOf("sa", "sb")} AS jaccard")}),
         th(t, t_ppm) AS (VALUES (0.05e0, 50000), (0.1e0, 100000),
           (0.2e0, 200000), (0.4e0, 400000)),
         pt AS (SELECT th.t_ppm, doc_a, doc_b FROM prs CROSS JOIN th
@@ -2008,13 +2176,8 @@ object Curation {
           .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
           .agg(round(Exprs.dsum(tc, 12), 6).as("js"))
       },
-      oracle = Some("""
-        WITH toks2 AS (
-          SELECT source, term FROM (
-            SELECT source,
-              unnest(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +')) AS term
-            FROM documents) u
-          WHERE term <> ''),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenRows("toks2", "source")},
         census AS MATERIALIZED (
           SELECT source, term, CAST(COUNT(*) AS BIGINT) AS cnt
           FROM toks2 GROUP BY 1, 2),
@@ -2114,37 +2277,25 @@ object Curation {
           .select(col("depth"), col("overlap"),
             expr("(1000000 * overlap) div depth").as("agreement_ppm"), col("rbo"))
       },
-      oracle = Some("""
-        WITH cl AS (
-          SELECT doc_id, lang,
-            trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS clean
-          FROM documents),
-        cl2 AS (SELECT * FROM cl WHERE length(clean) >= 3),
-        tris AS MATERIALIZED (
-          SELECT doc_id, lang, substr(clean, CAST(i AS INTEGER), 3) AS tg
-          FROM cl2, unnest(generate_series(1, length(clean) - 2)) AS g(i)),
-        m0 AS MATERIALIZED (SELECT lang, tg, COUNT(*) AS cnt FROM tris WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-        t0 AS (SELECT lang, SUM(cnt) AS total, COUNT(*) AS d FROM m0 GROUP BY 1),
-        p0 AS (SELECT m.lang, m.tg, round(ln((cnt + 1) / CAST(total + d AS DOUBLE)), 10) AS logp
-          FROM m0 m JOIN t0 USING (lang)),
-        f0 AS (SELECT lang, round(ln(1.0 / CAST(total + d AS DOUBLE)), 10) AS fl FROM t0),
-        s0 AS (
+      oracle = Some {
+        // the frame's pplUnder(parity): one half's model scoring every doc,
+        // out-of-model trigrams at the add-one floor, ending in s$par(doc_id, ppl)
+        def pplUnder(par: Int) =
+          s"""m$par AS MATERIALIZED (SELECT lang, tg, COUNT(*) AS cnt FROM tris WHERE doc_id % 2 = $par GROUP BY 1, 2),
+        t$par AS (SELECT lang, SUM(cnt) AS total, COUNT(*) AS d FROM m$par GROUP BY 1),
+        p$par AS (SELECT m.lang, m.tg, round(ln((cnt + 1) / CAST(total + d AS DOUBLE)), 10) AS logp
+          FROM m$par m JOIN t$par USING (lang)),
+        f$par AS (SELECT lang, round(ln(1.0 / CAST(total + d AS DOUBLE)), 10) AS fl FROM t$par),
+        s$par AS (
           SELECT tr.doc_id,
             round(exp(-CAST(SUM(CAST(COALESCE(p.logp, f.fl) AS DECIMAL(30,10))) AS DOUBLE) / COUNT(*)), 6) AS ppl
-          FROM tris tr LEFT JOIN p0 p ON p.lang = tr.lang AND p.tg = tr.tg
-          JOIN f0 f ON f.lang = tr.lang
-          GROUP BY 1),
-        m1 AS MATERIALIZED (SELECT lang, tg, COUNT(*) AS cnt FROM tris WHERE doc_id % 2 = 1 GROUP BY 1, 2),
-        t1 AS (SELECT lang, SUM(cnt) AS total, COUNT(*) AS d FROM m1 GROUP BY 1),
-        p1 AS (SELECT m.lang, m.tg, round(ln((cnt + 1) / CAST(total + d AS DOUBLE)), 10) AS logp
-          FROM m1 m JOIN t1 USING (lang)),
-        f1 AS (SELECT lang, round(ln(1.0 / CAST(total + d AS DOUBLE)), 10) AS fl FROM t1),
-        s1 AS (
-          SELECT tr.doc_id,
-            round(exp(-CAST(SUM(CAST(COALESCE(p.logp, f.fl) AS DECIMAL(30,10))) AS DOUBLE) / COUNT(*)), 6) AS ppl
-          FROM tris tr LEFT JOIN p1 p ON p.lang = tr.lang AND p.tg = tr.tg
-          JOIN f1 f ON f.lang = tr.lang
-          GROUP BY 1),
+          FROM tris tr LEFT JOIN p$par p ON p.lang = tr.lang AND p.tg = tr.tg
+          JOIN f$par f ON f.lang = tr.lang
+          GROUP BY 1)"""
+        s"""
+        WITH ${OracleSql.charTrigrams(materialized = true)},
+        ${pplUnder(0)},
+        ${pplUnder(1)},
         rq AS (SELECT doc_id, rs FROM (
           SELECT doc_id, CAST(row_number() OVER (ORDER BY ppl ASC, doc_id ASC) AS BIGINT) AS rs
           FROM s0) z WHERE rs <= 100),
@@ -2170,7 +2321,8 @@ object Curation {
               AS DOUBLE), 6) AS rbo
           FROM terms)
         SELECT depth, overlap, (1000000 * overlap) // depth AS agreement_ppm, rbo
-        FROM cum WHERE depth IN (10, 25, 50, 100)"""),
+        FROM cum WHERE depth IN (10, 25, 50, 100)"""
+      },
       bench = true),
 
     // Greedy source selection by marginal coverage gain — the submodular
@@ -2239,12 +2391,10 @@ object Curation {
         rows.reduce(_ unionByName _)
       },
       oracle = Some {
-        val prelude = """
-        WITH seq AS (
-          SELECT source, list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+        val prelude = s"""
+        WITH ${OracleSql.tokenLists("seq", "source")},
         tg3 AS (
-          SELECT source, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
+          SELECT source, ${OracleSql.ngram(3)} AS gram
           FROM (SELECT source, tk, UNNEST(generate_series(1, len(tk) - 2)) AS i
                 FROM seq WHERE len(tk) >= 3) z),
         st AS MATERIALIZED (SELECT DISTINCT source, gram FROM tg3),
@@ -2325,25 +2475,21 @@ object Curation {
     // makes the redaction path actually fire rather than vacuously match.
     QueryDef("q74_pii_redaction",
       (s, dir) => {
-        val t = concat(col("text"), when(col("doc_id") % 7 === 0,
-          concat(lit(" contact user"), col("doc_id"), lit("@example.com or call 555"),
-            col("doc_id"), lit("0100"))).otherwise(lit("")))
+        val t = concat(col("text"), piiSuffix)
         docs(s, dir).select(col("doc_id"), col("lang"),
           regexp_count(t, lit(TextStats.EmailRe)).cast("long").as("n_emails"),
           regexp_count(t, lit(TextStats.PhoneRe)).cast("long").as("n_phones"),
           TextStats.redactPii(t).as("redacted"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH enr AS (
           SELECT doc_id, lang,
-            text || CASE WHEN doc_id % 7 = 0
-              THEN ' contact user' || doc_id || '@example.com or call 555' || doc_id || '0100'
-              ELSE '' END AS t
+            text || $piiSuffixSql AS t
           FROM documents)
         SELECT doc_id, lang,
-          CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-          CAST(len(regexp_extract_all(t, '[0-9]{7,}')) AS BIGINT) AS n_phones,
-          regexp_replace(regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'), '[0-9]{7,}', '<PHONE>', 'g') AS redacted
+          CAST(len(regexp_extract_all(t, '${TextStats.EmailRe}')) AS BIGINT) AS n_emails,
+          CAST(len(regexp_extract_all(t, '${TextStats.PhoneRe}')) AS BIGINT) AS n_phones,
+          ${OracleSql.redactPii("t")} AS redacted
         FROM enr""")),
 
     // Markup strip — the HTML cleanup pass a web-corpus pipeline runs first
@@ -2356,34 +2502,19 @@ object Curation {
     // pins down.
     QueryDef("q86_markup_strip",
       (s, dir) => {
-        val wrapped = when(col("doc_id") % 5 === 0,
-          concat(lit("<html><body class=\"c\"><p>"), col("text"),
-            lit("</p><script>var a = 1;</script>&amp; more &lt;raw&gt; text</body></html>")))
-          .otherwise(col("text"))
-        docs(s, dir).select(col("doc_id"), wrapped.as("t"))
+        docs(s, dir).select(col("doc_id"), markupWrapped.as("t"))
           .select(col("doc_id"), col("t"), TextStats.stripMarkup(col("t")).as("clean"))
           .select(col("doc_id"), col("clean"),
             (length(col("t")) - length(col("clean"))).cast("long").as("removed"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH enr AS (
           SELECT doc_id,
-            CASE WHEN doc_id % 5 = 0
-              THEN '<html><body class="c"><p>' || text ||
-                   '</p><script>var a = 1;</script>&amp; more &lt;raw&gt; text</body></html>'
-              ELSE text END AS t
+            $markupWrappedSql AS t
           FROM documents),
         st AS (
           SELECT doc_id, t,
-            trim(regexp_replace(
-              regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-              regexp_replace(regexp_replace(
-                regexp_replace(
-                  regexp_replace(t, '(?is)<(script|style)[^>]*>.*?</(script|style)\s*>', ' ', 'g'),
-                  '<[^>]+>', ' ', 'g'),
-                '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'),
-                '&#39;', '''', 'g'), '&nbsp;', ' ', 'g'), '&amp;', '&', 'g'),
-              '\s+', ' ', 'g')) AS clean
+            ${OracleSql.stripMarkup("t")} AS clean
           FROM enr)
         SELECT doc_id, clean,
           CAST(length(t) - length(clean) AS BIGINT) AS removed
@@ -2399,28 +2530,17 @@ object Curation {
     QueryDef("q75_token_packing",
       (s, dir) => {
         val d = docs(s, dir).select(col("lang"),
-          floor(col("doc_id") / 64).cast("long").as("shard"),
+          shardCol,
           col("doc_id"),
           size(Exprs.tokens(col("text"))).cast("long").as("n_tok"))
-        val w = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        d.withColumn("bin", floor((sum(col("n_tok")).over(w) - col("n_tok")) / 256.0).cast("long"))
-          .groupBy(col("lang"), col("shard"), col("bin"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("bin_tokens"))
+        packBins(d)
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH toks AS (
           SELECT doc_id, lang, CAST(floor(doc_id / 64) AS BIGINT) AS shard,
-            CAST(len(list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '')) AS BIGINT) AS n_tok
+            CAST(len(${OracleSql.tokens()}) AS BIGINT) AS n_tok
           FROM documents),
-        cum AS (
-          SELECT lang, shard, n_tok,
-            SUM(n_tok) OVER (PARTITION BY lang, shard ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-          FROM toks)
-        SELECT lang, shard, CAST(floor((c - n_tok) / 256.0) AS BIGINT) AS bin,
-          COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS bin_tokens
-        FROM cum GROUP BY 1, 2, 3""")),
+        ${packBinsSql("toks", withDocId = false)}""")),
 
     // Substring-level duplication coverage (Lee et al. 2022, "Deduplicating
     // Training Data Makes Language Models Better": duplicated SPANS matter,
@@ -2446,14 +2566,11 @@ object Curation {
           .select(col("doc_id"), col("n_spans"), col("n_dup"),
             round(frac, 6).as("dup_frac"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         sp AS (
           SELECT DISTINCT doc_id, array_to_string(tk[i:i+9], ' ') AS g
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 9)) AS i FROM seq) x),
+          FROM ${OracleSql.ngramSql(10, "seq")} x),
         dfreq AS (SELECT g, COUNT(*) AS df FROM sp GROUP BY 1)
         SELECT doc_id, COUNT(*) AS n_spans,
           CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
@@ -2475,10 +2592,10 @@ object Curation {
           .groupBy(col("lang"))
           .agg(count(lit(1)).as("n_sampled"), min(col("doc_id")).as("first_doc"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         SELECT lang, COUNT(*) AS n_sampled, MIN(doc_id) AS first_doc
         FROM documents
-        WHERE CAST('0x' || substr(md5('smp:' || doc_id), 1, 15) AS BIGINT) % 1000
+        WHERE ${OracleSql.h60("'smp:' || doc_id")} % 1000
               < CASE WHEN lang = 'en' THEN 800 ELSE 500 END
         GROUP BY 1""")),
 
@@ -2504,10 +2621,10 @@ object Curation {
             round(col("tot").cast("double") / (col("n_src") * col("n_tokens")).cast("double"), 6)
               .as("mix_weight"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH toks AS (
           SELECT source,
-            CAST(len(list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '')) AS BIGINT) AS n_tok
+            CAST(len(${OracleSql.tokens()}) AS BIGINT) AS n_tok
           FROM documents),
         agg AS (SELECT source, COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS n_tokens
                 FROM toks GROUP BY 1),
@@ -2535,20 +2652,17 @@ object Curation {
           .select(col("q_id").as("doc_vec_id"), col("n_id").as("bench_vec_id"),
             col("sim"))
       },
-      oracle = Some("""
-        WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+      oracle = Some(s"""
+        WITH ${OracleSql.embCte("emb", "e")},
         bench AS (SELECT * FROM emb WHERE vec_id % 25 = 0),
         corpus AS (SELECT * FROM emb WHERE vec_id % 25 <> 0),
         sims AS (
           SELECT c.vec_id AS q_id, b.vec_id AS n_id,
-            round(CASE WHEN sqrt(list_dot_product(c.e, c.e)) * sqrt(list_dot_product(b.e, b.e)) = 0
-              THEN 0.0
-              ELSE list_dot_product(c.e, b.e) /
-                   (sqrt(list_dot_product(c.e, c.e)) * sqrt(list_dot_product(b.e, b.e))) END, 6) AS sim
+            ${OracleSql.cosine("c.e", "b.e")} AS sim
           FROM corpus c JOIN bench b ON c.vec_id <> b.vec_id)
         SELECT q_id AS doc_vec_id, n_id AS bench_vec_id, sim FROM (
           SELECT q_id, n_id, sim,
-            row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rk
+            ${OracleSql.rank("sim DESC", cast = false)} AS rk
           FROM sims) r
         WHERE rk = 1 AND sim >= 0.3"""),
       bench = true),
@@ -2589,8 +2703,7 @@ object Curation {
           -- normalizes to '' must yield ZERO chunks, matching Exprs.tokens —
           -- the unfiltered split would emit [''] → one phantom chunk
           SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(t), '[^a-z0-9 ]', ' ', 'g'), ' +'),
-                        x -> x <> '') AS tk
+            ${OracleSql.tokens("t")} AS tk
           FROM enr),
         ch AS (
           SELECT doc_id,
@@ -2621,8 +2734,7 @@ object Curation {
     // row.
     QueryDef("q101_quantized_cosine",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"),
-          col("embedding").cast("array<double>").as("v"))
+        val e = Tables(s, dir, "embeddings").select(col("vec_id"), col("label"), embVec.as("v"))
         val q = e.withColumn("qv",
           Similarity.quantizeInt8(col("v")).cast("array<double>"))
         val w = Window.partitionBy(col("label")).orderBy(col("vec_id").asc)
@@ -2645,14 +2757,14 @@ object Curation {
             max(col("abs_err")).as("max_abs_err"),
             round(Exprs.davg(col("abs_err"), 10), 8).as("avg_abs_err"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH emb AS (
           SELECT vec_id, label, v, CASE WHEN s = 0 THEN list_transform(v, x -> 0.0)
             ELSE list_transform(v, x -> CAST(CAST(round(x / s * 127.0, 0) AS BIGINT) AS DOUBLE))
             END AS qv
           FROM (
             SELECT vec_id, label, v, list_max(list_transform(v, x -> abs(x))) AS s
-            FROM (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings) b)),
+            FROM (SELECT vec_id, label, ${OracleSql.vec} AS v FROM embeddings) b)),
         capped AS (
           SELECT vec_id, label, v, qv FROM (
             SELECT *, row_number() OVER (PARTITION BY label ORDER BY vec_id ASC) AS rn
@@ -2661,12 +2773,8 @@ object Curation {
         pairs AS (
           SELECT a.label,
             round(abs(
-              round(CASE WHEN sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)) = 0
-                THEN 0.0 ELSE list_dot_product(a.v, b.v) /
-                  (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) END, 6) -
-              round(CASE WHEN sqrt(list_dot_product(a.qv, a.qv)) * sqrt(list_dot_product(b.qv, b.qv)) = 0
-                THEN 0.0 ELSE list_dot_product(a.qv, b.qv) /
-                  (sqrt(list_dot_product(a.qv, a.qv)) * sqrt(list_dot_product(b.qv, b.qv))) END, 6)), 6) AS abs_err
+              ${OracleSql.cosine("a.v", "b.v")} -
+              ${OracleSql.cosine("a.qv", "b.qv")}), 6) AS abs_err
           FROM capped a JOIN capped b ON a.label = b.label AND a.vec_id < b.vec_id)
         SELECT label, COUNT(*) AS n_pairs, MAX(abs_err) AS max_abs_err,
           round(CAST(SUM(CAST(abs_err AS DECIMAL(30,10))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 8) AS avg_abs_err
@@ -2689,13 +2797,7 @@ object Curation {
     // hash-shuffle on the cleaned content.
     QueryDef("q100_curation_e2e",
       (s, dir) => {
-        val wrapped = when(col("doc_id") % 5 === 0,
-          concat(lit("<html><body class=\"c\"><p>"), col("text"),
-            lit("</p><script>var a = 1;</script>&amp; more &lt;raw&gt; text</body></html>")))
-          .otherwise(col("text"))
-        val withPii = concat(wrapped, when(col("doc_id") % 7 === 0,
-          concat(lit(" contact user"), col("doc_id"), lit("@example.com or call 555"),
-            col("doc_id"), lit("0100"))).otherwise(lit("")))
+        val withPii = concat(markupWrapped, piiSuffix)
         val withBoiler = when(col("doc_id") % 50 === 1,
           lit("<p>All rights reserved contact admin@example.com for details</p>"))
           .otherwise(withPii)
@@ -2709,44 +2811,27 @@ object Curation {
             count(lit(1)).as("n_copies"))
           .select(col("doc_id"), col("n_tok"), col("n_copies"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH enr AS (
           SELECT doc_id,
             CASE WHEN doc_id % 50 = 1
               THEN '<p>All rights reserved contact admin@example.com for details</p>'
               ELSE
-                (CASE WHEN doc_id % 5 = 0
-                  THEN '<html><body class="c"><p>' || text ||
-                       '</p><script>var a = 1;</script>&amp; more &lt;raw&gt; text</body></html>'
-                  ELSE text END) ||
-                (CASE WHEN doc_id % 7 = 0
-                  THEN ' contact user' || doc_id || '@example.com or call 555' || doc_id || '0100'
-                  ELSE '' END)
+                ($markupWrappedSql) ||
+                ($piiSuffixSql)
             END AS t
           FROM documents),
         st AS (
           SELECT doc_id,
-            trim(regexp_replace(
-              regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-              regexp_replace(regexp_replace(
-                regexp_replace(
-                  regexp_replace(t, '(?is)<(script|style)[^>]*>.*?</(script|style)\s*>', ' ', 'g'),
-                  '<[^>]+>', ' ', 'g'),
-                '&lt;', '<', 'g'), '&gt;', '>', 'g'), '&quot;', '"', 'g'),
-                '&#39;', '''', 'g'), '&nbsp;', ' ', 'g'), '&amp;', '&', 'g'),
-              '\s+', ' ', 'g')) AS stripped
+            ${OracleSql.stripMarkup("t")} AS stripped
           FROM enr),
         red AS (
           SELECT doc_id,
-            regexp_replace(regexp_replace(stripped,
-              '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-              '[0-9]{7,}', '<PHONE>', 'g') AS clean
+            ${OracleSql.redactPii("stripped")} AS clean
           FROM st),
         tok AS (
           SELECT doc_id, clean,
-            CAST(len(list_filter(
-              string_split_regex(regexp_replace(lower(clean), '[^a-z0-9 ]', ' ', 'g'), ' +'),
-              x -> x <> '')) AS BIGINT) AS n_tok
+            CAST(len(${OracleSql.tokens("clean")}) AS BIGINT) AS n_tok
           FROM red),
         gated AS (SELECT * FROM tok WHERE n_tok >= 5)
         SELECT MIN(doc_id) AS doc_id, MIN(n_tok) AS n_tok, COUNT(*) AS n_copies
@@ -2766,35 +2851,10 @@ object Curation {
     // coin ⇒ binomial counts); an exact-quota variant would use the A4
     // two-phase rank over (source, coin) instead.
     QueryDef("q98_mix_rebalance",
-      (s, dir) => {
-        val d = docs(s, dir).select(col("source"), col("doc_id"))
-        val agg = d.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-        val tot = agg.agg(min(col("n_docs")).as("min_docs"))
-        val rates = agg.crossJoin(broadcast(tot))
-          .select(col("source"), col("n_docs"),
-            least(lit(1000000L), expr("(1000000 * min_docs) DIV n_docs")).as("rate_ppm"))
-        val sampled = d.join(broadcast(rates), "source")
-          .filter(Exprs.h60(concat(lit("mix:"), col("doc_id"))) % 1000000L < col("rate_ppm"))
-        sampled.groupBy(col("source"))
-          .agg(count(lit(1)).as("n_sampled"), min(col("doc_id")).as("first_doc"))
-          .join(rates, "source")
-          .select(col("source"), col("n_docs"), col("rate_ppm"),
-            col("n_sampled"), col("first_doc"))
-      },
-      oracle = Some("""
-        WITH agg AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1),
-        tot AS (SELECT MIN(n_docs) AS min_docs FROM agg),
-        rates AS (SELECT source, n_docs,
-            CAST(least(1000000, (1000000 * min_docs) // n_docs) AS BIGINT) AS rate_ppm
-          FROM agg, tot),
-        sampled AS (
-          SELECT d.source, d.doc_id FROM documents d JOIN rates r ON d.source = r.source
-          WHERE CAST('0x' || substr(md5('mix:' || doc_id), 1, 15) AS BIGINT) % 1000000
-                < r.rate_ppm)
-        SELECT r.source, r.n_docs, r.rate_ppm,
-          COUNT(*) AS n_sampled, MIN(s.doc_id) AS first_doc
-        FROM sampled s JOIN rates r ON s.source = r.source
-        GROUP BY r.source, r.n_docs, r.rate_ppm"""),
+      (s, dir) => mixSample(s, dir,
+        least(lit(1000000L), expr("(1000000 * min_docs) DIV n_docs")), "mix:"),
+      oracle = Some(mixSampleSql(
+        "CAST(least(1000000, (1000000 * min_docs) // n_docs) AS BIGINT)", "mix:")),
       bench = true),
 
     // Temperature-based mixture sampling — the mC4/PaLM partial flatten
@@ -2810,37 +2870,13 @@ object Curation {
     // exact ×1e6 → floor. Same shape as q98: source census (map-side
     // collapse) + 1-row broadcast + per-row md5 coin (salt "tmix:").
     QueryDef("q196_temperature_mix",
-      (s, dir) => {
-        val d = docs(s, dir).select(col("source"), col("doc_id"))
-        val agg = d.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-        val tot = agg.agg(min(col("n_docs")).as("min_docs"))
-        val rates = agg.crossJoin(broadcast(tot))
-          .select(col("source"), col("n_docs"),
-            floor(lit(1000000.0d) *
-              sqrt(col("min_docs").cast("double") / col("n_docs").cast("double")))
-              .cast(org.apache.spark.sql.types.LongType).as("rate_ppm"))
-        val sampled = d.join(broadcast(rates), "source")
-          .filter(Exprs.h60(concat(lit("tmix:"), col("doc_id"))) % 1000000L < col("rate_ppm"))
-        sampled.groupBy(col("source"))
-          .agg(count(lit(1)).as("n_sampled"), min(col("doc_id")).as("first_doc"))
-          .join(rates, "source")
-          .select(col("source"), col("n_docs"), col("rate_ppm"),
-            col("n_sampled"), col("first_doc"))
-      },
-      oracle = Some("""
-        WITH agg AS (SELECT source, COUNT(*) AS n_docs FROM documents GROUP BY 1),
-        tot AS (SELECT MIN(n_docs) AS min_docs FROM agg),
-        rates AS (SELECT source, n_docs,
-            CAST(floor(1000000.0 * sqrt(CAST(min_docs AS DOUBLE) / CAST(n_docs AS DOUBLE))) AS BIGINT) AS rate_ppm
-          FROM agg, tot),
-        sampled AS (
-          SELECT d.source, d.doc_id FROM documents d JOIN rates r ON d.source = r.source
-          WHERE CAST('0x' || substr(md5('tmix:' || doc_id), 1, 15) AS BIGINT) % 1000000
-                < r.rate_ppm)
-        SELECT r.source, r.n_docs, r.rate_ppm,
-          COUNT(*) AS n_sampled, MIN(s.doc_id) AS first_doc
-        FROM sampled s JOIN rates r ON s.source = r.source
-        GROUP BY r.source, r.n_docs, r.rate_ppm"""),
+      (s, dir) => mixSample(s, dir,
+        floor(lit(1000000.0d) *
+          sqrt(col("min_docs").cast("double") / col("n_docs").cast("double")))
+          .cast(org.apache.spark.sql.types.LongType), "tmix:"),
+      oracle = Some(mixSampleSql(
+        "CAST(floor(1000000.0 * sqrt(CAST(min_docs AS DOUBLE) / CAST(n_docs AS DOUBLE))) AS BIGINT)",
+        "tmix:")),
       bench = true),
 
     // Data-budget / epoch-accounting card (Muennighoff et al., NeurIPS
@@ -2888,7 +2924,7 @@ object Curation {
             col("rep_ppm"), col("over_4epoch"))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         tc AS (SELECT doc_id, COUNT(*) AS nt FROM toks GROUP BY 1),
         base AS (
           SELECT d.source, COUNT(*) AS n_docs,
@@ -2933,12 +2969,7 @@ object Curation {
     // contract); the probe side is one scan.
     QueryDef("q199_exact_ngram_decontam",
       (s, dir) => {
-        val e1 = " held out benchmark question answer pairs must never leak into training"
-        val e2 = " the standardized test prompt appears verbatim in this document for evaluation"
-        val d2 = docs(s, dir).withColumn("text",
-          concat(col("text"),
-            when(col("doc_id") % 13 === 0, lit(e1)).otherwise(lit("")),
-            when(col("doc_id") % 7 === 0, lit(e2)).otherwise(lit(""))))
+        val d2 = plantedDocs(s, dir)
         val sh = graft.Caching.pin(
           Dedup.shingleSet(d2, 8).select(col("doc_id"), col("shingle")))
         val benchGrams = sh.filter(col("doc_id") % 97 === 0)
@@ -2950,20 +2981,12 @@ object Curation {
             countDistinct(col("bench_doc")).as("n_bench_docs"),
             min(col("bench_doc")).as("first_bench_doc"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(
-              text ||
-              CASE WHEN doc_id % 13 = 0 THEN ' held out benchmark question answer pairs must never leak into training' ELSE '' END ||
-              CASE WHEN doc_id % 7 = 0 THEN ' the standardized test prompt appears verbatim in this document for evaluation' ELSE '' END
-            ), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${plantedSeqCte()},
         g8 AS (
           SELECT DISTINCT doc_id,
-            tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-            tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7] AS shingle
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM seq) u),
+            ${OracleSql.ngram(8)} AS shingle
+          FROM ${OracleSql.ngramSql(8, "seq")} u),
         bg AS (SELECT shingle, doc_id AS bench_doc FROM g8 WHERE doc_id % 97 = 0),
         h AS (
           SELECT t.doc_id, t.shingle, bg.bench_doc
@@ -2987,23 +3010,20 @@ object Curation {
     QueryDef("q200_triplet_mining",
       (s, dir) => tripletMining(s, dir, col("vec_id") % 50 === 0),
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${kmeansCtes(8, 3)},
         anch AS (SELECT vec_id, v, cid FROM af WHERE vec_id % 50 = 0),
         tsims AS (
           SELECT a.vec_id AS q_id, a.cid AS q_cid, b.vec_id AS n_id, b.cid AS n_cid,
-            round(CASE WHEN sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)) = 0
-              THEN 0.0
-              ELSE list_dot_product(a.v, b.v) /
-                   (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) END, 6) AS sim
+            ${OracleSql.cosine("a.v", "b.v")} AS sim
           FROM anch a JOIN af b ON a.vec_id <> b.vec_id),
         pos AS (SELECT q_id, n_id AS pos_id, sim AS pos_sim FROM (
             SELECT q_id, n_id, sim,
-              row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rk
+              ${OracleSql.rank("sim DESC", cast = false)} AS rk
             FROM tsims WHERE q_cid = n_cid) p WHERE rk = 1),
         neg AS (SELECT q_id, n_id AS neg_id, sim AS neg_sim FROM (
             SELECT q_id, n_id, sim,
-              row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rk
+              ${OracleSql.rank("sim DESC", cast = false)} AS rk
             FROM tsims WHERE q_cid <> n_cid) p WHERE rk = 1)
         SELECT p.q_id, pos_id, pos_sim, neg_id, neg_sim,
           round(pos_sim - neg_sim, 6) AS margin
@@ -3027,27 +3047,24 @@ object Curation {
         tripletMining(s, dir, col("vec_id").isin(panel: _*))
       },
       oracle = Some(s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ${kmeansCtes(8, 3)},
         anch AS (SELECT a.vec_id, a.v, a.cid FROM af a
           JOIN (SELECT vec_id FROM e
-            ORDER BY CAST('0x' || substr(md5('ta:' || vec_id), 1, 15) AS BIGINT) ASC,
+            ORDER BY ${OracleSql.h60("'ta:' || vec_id")} ASC,
               vec_id ASC
             LIMIT 64) p ON p.vec_id = a.vec_id),
         tsims AS (
           SELECT a.vec_id AS q_id, a.cid AS q_cid, b.vec_id AS n_id, b.cid AS n_cid,
-            round(CASE WHEN sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)) = 0
-              THEN 0.0
-              ELSE list_dot_product(a.v, b.v) /
-                   (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) END, 6) AS sim
+            ${OracleSql.cosine("a.v", "b.v")} AS sim
           FROM anch a JOIN af b ON a.vec_id <> b.vec_id),
         pos AS (SELECT q_id, n_id AS pos_id, sim AS pos_sim FROM (
             SELECT q_id, n_id, sim,
-              row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rk
+              ${OracleSql.rank("sim DESC", cast = false)} AS rk
             FROM tsims WHERE q_cid = n_cid) p WHERE rk = 1),
         neg AS (SELECT q_id, n_id AS neg_id, sim AS neg_sim FROM (
             SELECT q_id, n_id, sim,
-              row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rk
+              ${OracleSql.rank("sim DESC", cast = false)} AS rk
             FROM tsims WHERE q_cid <> n_cid) p WHERE rk = 1)
         SELECT p.q_id, pos_id, pos_sim, neg_id, neg_sim,
           round(pos_sim - neg_sim, 6) AS margin
@@ -3073,17 +3090,13 @@ object Curation {
     // without enrichment.
     QueryDef("q210_duplicated_spans",
       (s, dir) => Dedup.duplicatedSpans(docs(s, dir), 8),
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id, list_filter(string_split_regex(regexp_replace(lower(text),
-            '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         base AS (SELECT doc_id, len(tk) AS n_tokens, tk FROM seq),
         pg AS (
           SELECT doc_id, CAST(i AS BIGINT) AS pos,
-            tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-            tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7] AS gram
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM base) u),
+            ${OracleSql.ngram(8)} AS gram
+          FROM ${OracleSql.ngramSql(8, "base")} u),
         dup AS (SELECT gram FROM pg GROUP BY gram HAVING COUNT(DISTINCT doc_id) >= 2),
         hit AS (SELECT doc_id, pos FROM pg JOIN dup USING (gram)),
         isl AS (
@@ -3118,17 +3131,13 @@ object Curation {
     QueryDef("q211_winnowing_overlap",
       (s, dir) => Dedup.winnowedOverlapPairs(docs(s, dir), k = 4, w = 4,
         minShared = 2L),
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id, list_filter(string_split_regex(regexp_replace(lower(text),
-            '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         pg AS (
           SELECT doc_id, CAST(i AS BIGINT) AS pos,
-            CAST('0x' || substr(md5(tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] ||
-              ' ' || tk[i+3]), 1, 15) AS BIGINT) AS h,
+            ${OracleSql.h60(OracleSql.ngram(4))} AS h,
             COUNT(*) OVER (PARTITION BY doc_id) AS n_grams
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 3)) AS i FROM seq) u),
+          FROM ${OracleSql.ngramSql(4, "seq")} u),
         fpw AS (
           SELECT doc_id, pos, n_grams,
             min(h) OVER (PARTITION BY doc_id ORDER BY pos
@@ -3213,15 +3222,12 @@ object Curation {
             round(graft.functions.Exprs.dsum(col("bleu2"), 6) /
               count(lit(1)).cast("double"), 6).as("mean_bleu2"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id, source, list_filter(string_split_regex(regexp_replace(lower(text),
-            '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id", "source")},
         base AS (SELECT doc_id, source, tk FROM seq WHERE len(tk) >= 2),
         pan AS MATERIALIZED (
           SELECT doc_id, tk FROM base
-          ORDER BY CAST('0x' || substr(md5('sb:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) ASC,
+          ORDER BY ${OracleSql.h60("'sb:' || CAST(doc_id AS VARCHAR)")} ASC,
             doc_id ASC
           LIMIT 64),
         cand AS (SELECT doc_id, tk FROM base
@@ -3229,7 +3235,7 @@ object Curation {
         pu AS (SELECT doc_id, UNNEST(tk) AS gram FROM pan),
         rg1 AS MATERIALIZED (SELECT gram, MAX(c) AS mc FROM (
           SELECT doc_id, gram, COUNT(*) AS c FROM pu GROUP BY 1, 2) z GROUP BY 1),
-        pb AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] AS gram
+        pb AS (SELECT doc_id, ${OracleSql.ngram(2)} AS gram
           FROM (SELECT doc_id, tk, UNNEST(generate_series(1, len(tk) - 1)) AS i FROM pan) z),
         rg2 AS MATERIALIZED (SELECT gram, MAX(c) AS mc FROM (
           SELECT doc_id, gram, COUNT(*) AS c FROM pb GROUP BY 1, 2) z GROUP BY 1),
@@ -3239,7 +3245,7 @@ object Curation {
             CAST(SUM(LEAST(c, COALESCE(mc, 0))) AS BIGINT) AS num1,
             CAST(SUM(c) AS BIGINT) AS den1
           FROM cg1 LEFT JOIN rg1 USING (gram) GROUP BY 1),
-        cb AS (SELECT doc_id, tk[i] || ' ' || tk[i+1] AS gram
+        cb AS (SELECT doc_id, ${OracleSql.ngram(2)} AS gram
           FROM (SELECT doc_id, tk, UNNEST(generate_series(1, len(tk) - 1)) AS i FROM cand) z),
         cg2 AS (SELECT doc_id, gram, CAST(COUNT(*) AS BIGINT) AS c FROM cb GROUP BY 1, 2),
         p2 AS (SELECT doc_id,
@@ -3306,21 +3312,8 @@ object Curation {
             min(col("ppl")).as("min_ppl"), max(col("ppl")).as("max_ppl"),
             round(Exprs.davg(col("ppl"), 6), 6).as("mean_ppl"))
       },
-      oracle = Some("""
-        WITH cl AS (
-          SELECT doc_id, lang,
-            trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS clean
-          FROM documents),
-        cl2 AS (SELECT * FROM cl WHERE length(clean) >= 3),
-        tris AS (
-          SELECT doc_id, lang, substr(clean, CAST(i AS INTEGER), 3) AS tg
-          FROM cl2, unnest(generate_series(1, length(clean) - 2)) AS g(i)),
-        model AS (SELECT lang, tg, COUNT(*) AS cnt FROM tris GROUP BY 1, 2),
-        tot AS (SELECT lang, SUM(cnt) AS total, COUNT(*) AS d FROM model GROUP BY 1),
-        probs AS (
-          SELECT m.lang, m.tg,
-            round(ln((cnt + 1) / CAST(total + d AS DOUBLE)), 10) AS logp
-          FROM model m JOIN tot USING (lang)),
+      oracle = Some(s"""
+        WITH ${OracleSql.charLm()},
         pplt AS (
           SELECT t.doc_id, t.lang,
             round(exp(-CAST(SUM(CAST(logp AS DECIMAL(30,10))) AS DOUBLE) / COUNT(*)), 6) AS ppl
@@ -3328,7 +3321,7 @@ object Curation {
           GROUP BY 1, 2),
         samp AS MATERIALIZED (
           SELECT doc_id, lang, ppl FROM pplt
-          ORDER BY CAST('0x' || substr(md5('cc:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) ASC,
+          ORDER BY ${OracleSql.h60("'cc:' || CAST(doc_id AS VARCHAR)")} ASC,
             doc_id ASC
           LIMIT 768),
         rk AS (
@@ -3364,10 +3357,10 @@ object Curation {
     // exchanges, the operator rides the scan — the q211 winnowMins posture.
     QueryDef("q216_char_entropy",
       (s, dir) => TextStats.charEntropy(docs(s, dir)),
-      oracle = Some("""
+      oracle = Some(s"""
         WITH cl AS (
           SELECT doc_id,
-            trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS clean
+            ${OracleSql.clean()} AS clean
           FROM documents),
         cl2 AS (SELECT * FROM cl WHERE length(clean) >= 1),
         ch AS (SELECT doc_id, clean,
@@ -3403,13 +3396,7 @@ object Curation {
         import graft.functions.Exprs
         val base = docs(s, dir)
           .select(col("doc_id"), col("lang"), Exprs.tokens(col("text")).as("toks"))
-        val pc = base.select(col("doc_id"), explode(col("toks")).as("term"))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
-        val st = pc.groupBy(col("doc_id"))
-          .agg(sum(col("c")).as("n"), count(lit(1)).as("ndis"),
-            max(col("c")).as("topc"),
-            sum(when(col("c") === 1, 1L).otherwise(0L)).as("hapax"),
-            sum(length(col("term")) * col("c")).as("sumlen"))
+        val st = termStats(base.select(col("doc_id"), explode(col("toks")).as("term")))
         val perDoc = base
           .select(col("doc_id"), col("lang"),
             md5(array_join(col("toks"), " ")).as("h"))
@@ -3457,17 +3444,11 @@ object Curation {
             col("n_removed"), col("n_out"), col("removed_ppm"))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
-        pc AS (SELECT doc_id, term, COUNT(*) AS c FROM toks GROUP BY 1, 2),
-        st AS (
-          SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, COUNT(*) AS ndis,
-            CAST(MAX(c) AS BIGINT) AS topc,
-            CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-            CAST(SUM(LEN(term) * c) AS BIGINT) AS sumlen
-          FROM pc GROUP BY 1),
+        WITH ${OracleSql.toksCte},
+        $termStatsCtes,
         perdoc AS (
           SELECT d.doc_id, d.lang,
-            md5(trim(regexp_replace(regexp_replace(lower(d.text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS h,
+            md5(${OracleSql.clean("d.text")}) AS h,
             COALESCE(st.n, 0) AS n, COALESCE(st.ndis, 0) AS ndis,
             COALESCE(st.topc, 0) AS topc, COALESCE(st.hapax, 0) AS hapax,
             COALESCE(st.sumlen, 0) AS sumlen
@@ -3524,17 +3505,11 @@ object Curation {
         val nd = graft.operators.TextPipeline.tokenize(d)
           .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
         val pd = d.select(col("doc_id"), col("lang"),
-            floor(col("doc_id") / 64).cast(org.apache.spark.sql.types.LongType).as("shard"))
+            shardCol)
           .join(nd, Seq("doc_id"), "left")
           .select(col("doc_id"), col("lang"), col("shard"),
             coalesce(col("n"), lit(0L)).cast(org.apache.spark.sql.types.LongType).as("n_tok"))
-        val w = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val bins = pd.withColumn("bin",
-            floor((sum(col("n_tok")).over(w) - col("n_tok")) / 256.0)
-              .cast(org.apache.spark.sql.types.LongType))
-          .groupBy(col("lang"), col("shard"), col("bin"))
-          .agg(count(lit(1)).as("nd"), sum(col("n_tok")).as("bt"))
+        val bins = packBins(pd, nDocs = "nd", nTokens = "bt")
         bins.groupBy(col("lang"))
           .agg(sum(col("nd")).as("n_docs"), sum(col("bt")).as("n_tokens"),
             count(lit(1)).as("n_bins"),
@@ -3547,7 +3522,7 @@ object Curation {
             col("overflow_tokens"))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         tc AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
         pd AS (
           SELECT d.doc_id, d.lang, CAST(floor(d.doc_id / 64) AS BIGINT) AS shard,
@@ -3588,19 +3563,8 @@ object Curation {
         import graft.functions.Exprs
         val d = docs(s, dir)
         val ppl = TextStats.charLmPerplexity(d).select(col("doc_id"), col("ppl"))
-        val pc = d.select(col("doc_id"), explode(Exprs.tokens(col("text"))).as("term"))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
-        val keep = pc.groupBy(col("doc_id"))
-          .agg(sum(col("c")).as("n"), count(lit(1)).as("ndis"),
-            max(col("c")).as("topc"),
-            sum(when(col("c") === 1, 1L).otherwise(0L)).as("hapax"),
-            sum(length(col("term")) * col("c")).as("sumlen"))
-          .select(col("doc_id"),
-            (col("n") >= 30 &&
-              col("sumlen") >= lit(4L) * col("n") &&
-              col("sumlen") <= lit(5L) * col("n") &&
-              lit(100L) * col("topc") <= lit(15L) * col("n") &&
-              lit(5L) * col("hapax") >= col("ndis")).as("keep"))
+        val keep = termStats(d.select(col("doc_id"), explode(Exprs.tokens(col("text"))).as("term")))
+          .select(col("doc_id"), gopherKeep.as("keep"))
         val scored = ppl.join(keep, "doc_id")
           .select(col("ppl"), when(!col("keep"), 1L).otherwise(0L).as("y"))
         val cen = scored.groupBy(col("ppl"))
@@ -3636,38 +3600,13 @@ object Curation {
               .otherwise(lit(0L)).as("auc_ppm"))
       },
       oracle = Some(s"""
-        WITH cl AS (
-          SELECT doc_id, lang,
-            trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS clean
-          FROM documents),
-        cl2 AS (SELECT * FROM cl WHERE length(clean) >= 3),
-        tris AS (
-          SELECT doc_id, lang, substr(clean, CAST(i AS INTEGER), 3) AS tg
-          FROM cl2, unnest(generate_series(1, length(clean) - 2)) AS g(i)),
-        model AS (SELECT lang, tg, COUNT(*) AS cnt FROM tris GROUP BY 1, 2),
-        tot AS (SELECT lang, SUM(cnt) AS total, COUNT(*) AS d FROM model GROUP BY 1),
-        probs AS (
-          SELECT m.lang, m.tg,
-            round(ln((cnt + 1) / CAST(total + d AS DOUBLE)), 10) AS logp
-          FROM model m JOIN tot USING (lang)),
-        sc AS (
-          SELECT t.doc_id, COUNT(*) AS n_tri,
-            CAST(SUM(CAST(logp AS DECIMAL(30,10))) AS DOUBLE) AS s
-          FROM tris t JOIN probs p ON p.lang = t.lang AND p.tg = t.tg
-          GROUP BY 1),
+        WITH ${OracleSql.charLm()},
+        ${OracleSql.charLmScore()},
         pplv AS (SELECT doc_id, round(exp(-s/n_tri), 6) AS ppl FROM sc),
-        ${Text.toksCte},
-        pc AS (SELECT doc_id, term, COUNT(*) AS c FROM toks GROUP BY 1, 2),
-        st AS (
-          SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, COUNT(*) AS ndis,
-            CAST(MAX(c) AS BIGINT) AS topc,
-            CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-            CAST(SUM(LEN(term) * c) AS BIGINT) AS sumlen
-          FROM pc GROUP BY 1),
+        ${OracleSql.toksCte},
+        $termStatsCtes,
         kp AS (
-          SELECT doc_id,
-            (n >= 30 AND sumlen >= 4 * n AND sumlen <= 5 * n AND
-             100 * topc <= 15 * n AND 5 * hapax >= ndis) AS keep
+          SELECT doc_id, $gopherKeepSql AS keep
           FROM st),
         scored AS (
           SELECT p.ppl, CASE WHEN NOT k.keep THEN 1 ELSE 0 END AS y
@@ -3704,19 +3643,8 @@ object Curation {
         val d = docs(s, dir)
         val ppl = TextStats.charLmPerplexity(d)
           .select(col("doc_id"), (col("ppl") <= lit(213.0d)).as("gate_b"))
-        val pc = d.select(col("doc_id"), explode(Exprs.tokens(col("text"))).as("term"))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
-        val keep = pc.groupBy(col("doc_id"))
-          .agg(sum(col("c")).as("n"), count(lit(1)).as("ndis"),
-            max(col("c")).as("topc"),
-            sum(when(col("c") === 1, 1L).otherwise(0L)).as("hapax"),
-            sum(length(col("term")) * col("c")).as("sumlen"))
-          .select(col("doc_id"),
-            (col("n") >= 30 &&
-              col("sumlen") >= lit(4L) * col("n") &&
-              col("sumlen") <= lit(5L) * col("n") &&
-              lit(100L) * col("topc") <= lit(15L) * col("n") &&
-              lit(5L) * col("hapax") >= col("ndis")).as("gate_a"))
+        val keep = termStats(d.select(col("doc_id"), explode(Exprs.tokens(col("text"))).as("term")))
+          .select(col("doc_id"), gopherKeep.as("gate_a"))
         ppl.join(keep, "doc_id")
           .agg(count(lit(1)).as("n"),
             sum(when(col("gate_a") && col("gate_b"), 1L).otherwise(0L)).as("n11"),
@@ -3733,38 +3661,13 @@ object Curation {
               .otherwise(lit(0L)).as("kappa_ppm"))
       },
       oracle = Some(s"""
-        WITH cl AS (
-          SELECT doc_id, lang,
-            trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS clean
-          FROM documents),
-        cl2 AS (SELECT * FROM cl WHERE length(clean) >= 3),
-        tris AS (
-          SELECT doc_id, lang, substr(clean, CAST(i AS INTEGER), 3) AS tg
-          FROM cl2, unnest(generate_series(1, length(clean) - 2)) AS g(i)),
-        model AS (SELECT lang, tg, COUNT(*) AS cnt FROM tris GROUP BY 1, 2),
-        tot AS (SELECT lang, SUM(cnt) AS total, COUNT(*) AS d FROM model GROUP BY 1),
-        probs AS (
-          SELECT m.lang, m.tg,
-            round(ln((cnt + 1) / CAST(total + d AS DOUBLE)), 10) AS logp
-          FROM model m JOIN tot USING (lang)),
-        sc AS (
-          SELECT t.doc_id, COUNT(*) AS n_tri,
-            CAST(SUM(CAST(logp AS DECIMAL(30,10))) AS DOUBLE) AS s
-          FROM tris t JOIN probs p ON p.lang = t.lang AND p.tg = t.tg
-          GROUP BY 1),
+        WITH ${OracleSql.charLm()},
+        ${OracleSql.charLmScore()},
         gb AS (SELECT doc_id, round(exp(-s/n_tri), 6) <= 213.0 AS gate_b FROM sc),
-        ${Text.toksCte},
-        pc AS (SELECT doc_id, term, COUNT(*) AS c FROM toks GROUP BY 1, 2),
-        st AS (
-          SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, COUNT(*) AS ndis,
-            CAST(MAX(c) AS BIGINT) AS topc,
-            CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-            CAST(SUM(LEN(term) * c) AS BIGINT) AS sumlen
-          FROM pc GROUP BY 1),
+        ${OracleSql.toksCte},
+        $termStatsCtes,
         ga AS (
-          SELECT doc_id,
-            (n >= 30 AND sumlen >= 4 * n AND sumlen <= 5 * n AND
-             100 * topc <= 15 * n AND 5 * hapax >= ndis) AS gate_a
+          SELECT doc_id, $gopherKeepSql AS gate_a
           FROM st),
         cells AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -3871,7 +3774,7 @@ object Curation {
             col("at_value"))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         tc AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
         dt AS (
           SELECT d.source, CAST(COALESCE(tc.n, 0) AS BIGINT) AS v
@@ -3940,10 +3843,10 @@ object Curation {
             abs(expr("(1000000 * n_docs) DIV n_split") -
               expr("(1000000 * n_src) DIV n_all")).as("abs_dev_ppm"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH d AS (
           SELECT doc_id, source,
-            CAST('0x' || substr(md5('split:' || doc_id), 1, 15) AS BIGINT) % 1000000 AS coin
+            ${OracleSql.h60("'split:' || doc_id")} % 1000000 AS coin
           FROM documents),
         sp AS (
           SELECT source,
@@ -3995,16 +3898,11 @@ object Curation {
       (s, dir) => {
         val merges = Bpe.train(docs(s, dir), col("text"), BpeMergeRounds)
         val d = docs(s, dir).select(col("lang"),
-          floor(col("doc_id") / 64).cast("long").as("shard"),
+          shardCol,
           col("doc_id"),
           coalesce(size(Bpe.encode(Exprs.tokens(col("text")), merges)), lit(0))
             .cast("long").as("n_tok"))
-        val w = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        d.withColumn("bin",
-            floor((sum(col("n_tok")).over(w) - col("n_tok")) / 256.0).cast("long"))
-          .groupBy(col("lang"), col("shard"), col("bin"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("bin_tokens"))
+        packBins(d)
       },
       oracle = Some(bpeTrainSql(BpeMergeRounds) + s""",
         nb AS (SELECT t.doc_id, SUM(len(r.syms)) AS n
@@ -4012,13 +3910,7 @@ object Curation {
         pd AS (SELECT d.doc_id, d.lang, CAST(floor(d.doc_id / 64) AS BIGINT) AS shard,
                       CAST(COALESCE(nb.n, 0) AS BIGINT) AS n_tok
                FROM documents d LEFT JOIN nb ON d.doc_id = nb.doc_id),
-        cum AS (SELECT lang, shard, doc_id, n_tok,
-                  SUM(n_tok) OVER (PARTITION BY lang, shard ORDER BY doc_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-                FROM pd)
-        SELECT lang, shard, CAST(floor((c - n_tok) / 256.0) AS BIGINT) AS bin,
-          COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS bin_tokens
-        FROM cum GROUP BY 1, 2, 3""")),
+        ${packBinsSql("pd", withDocId = true)}""")),
 
     // Subword VOCABULARY with stable integer ids — what sequence packing
     // feeds a model: the BPE operator composed with the A4 two-phase
@@ -4069,7 +3961,7 @@ object Curation {
           SELECT doc_id, i AS pos, tk[i] AS word FROM (
             SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM (
               SELECT doc_id, list_filter(
-                string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'),
+                ${OracleSql.split()},
                 t -> t <> '') AS tk FROM documents) raw) g),
         vocab AS MATERIALIZED (
           SELECT subword, row_number() OVER (ORDER BY subword) AS id
@@ -4144,9 +4036,7 @@ object Curation {
         LineDedup.dedupLines(LineDedup.explodeLines(toks, lines))
       },
       oracle = Some(s"""
-        WITH seq AS (
-          SELECT doc_id, list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         ch AS (
           SELECT doc_id, list_concat(list_concat(
             list_transform(range(CAST(ceil(len(tk) / 12.0) AS BIGINT)),
@@ -4190,12 +4080,12 @@ object Curation {
       oracle = Some(s"""$shCte,
         bsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
         ks AS (SELECT unnest([0, 1, 2]) AS i),
-        bits AS (SELECT DISTINCT CAST('0x' || substr(md5(i || ':' || shingle), 1, 15) AS BIGINT) % $BloomBits AS b
+        bits AS (SELECT DISTINCT ${OracleSql.h60("i || ':' || shingle")} % $BloomBits AS b
                  FROM bsh CROSS JOIN ks),
         tr AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 97 <> 0),
         trh AS (
           SELECT doc_id, shingle,
-            (SUM(CASE WHEN CAST('0x' || substr(md5(i || ':' || shingle), 1, 15) AS BIGINT) % $BloomBits
+            (SUM(CASE WHEN ${OracleSql.h60("i || ':' || shingle")} % $BloomBits
                       IN (SELECT b FROM bits) THEN 1 ELSE 0 END) = $BloomK) AS hit
           FROM tr CROSS JOIN ks GROUP BY doc_id, shingle)
         SELECT doc_id, COUNT(*) AS n_shingles,
@@ -4215,8 +4105,7 @@ object Curation {
     // through residual lookup tables.
     QueryDef("q164_ivfpq_topk",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         graft.ml.Pq.ivfPqTopK(e.filter(col("vec_id") % 100 === 0), e,
           kCoarse = 8, coarseIter = 2, m = 4, kc = 8, pqIter = 2, nprobe = 2, k = 10)
       },
@@ -4231,30 +4120,24 @@ object Curation {
     // the way q126 completed flat ADC.
     QueryDef("q166_ivfpq_rerank",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         graft.ml.Pq.ivfPqRerankTopK(e.filter(col("vec_id") % 100 === 0), e,
           kCoarse = 8, coarseIter = 2, m = 4, kc = 8, pqIter = 2, nprobe = 2,
           shortlist = 40, k = 10)
       },
       oracle = Some(ivfpqSql(kCoarse = 8, cIter = 2, m = 4, sub = 16, kc = 8,
-        pIter = 2, nprobe = 2, k = 40, fin = """,
+        pIter = 2, nprobe = 2, k = 40, fin = s""",
         sl AS (
           SELECT q_id, n_id FROM (
             SELECT q_id, n_id,
-              row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS rk
+              ${OracleSql.rank("d2 ASC", cast = false)} AS rk
             FROM dist) z
           WHERE rk <= 40),
         tr AS (
           SELECT sl.q_id, sl.n_id,
-            round(list_reduce(list_transform(range(1, len(qv.v) + 1),
-              i -> (qv.v[i] - nv.v[i]) * (qv.v[i] - nv.v[i])), (x, y) -> x + y), 6) AS d2
+            round(${OracleSql.sqdist("qv.v", "nv.v")}, 6) AS d2
           FROM sl JOIN e nv ON nv.vec_id = sl.n_id JOIN q qv ON qv.vec_id = sl.q_id)
-        SELECT q_id, n_id, d2, rk FROM (
-          SELECT q_id, n_id, d2,
-            CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-          FROM tr) z
-        WHERE rk <= 10""")),
+        ${OracleSql.topK("q_id, n_id, d2", "d2 ASC", "tr", 10)}""")),
       bench = true),
 
     // Retrieval-eval card for the IVF-PQ system (VERDICT r10 #4): q197
@@ -4268,8 +4151,7 @@ object Curation {
     // truth kernel stays |sample|·n by design — the q37/q197 eval posture.
     QueryDef("q207_ivfpq_retrieval_eval",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         val q = e.filter(col("vec_id") % 100 === 0)
         val sys = graft.ml.Pq.ivfPqTopK(q, e, kCoarse = 8, coarseIter = 2,
             m = 4, kc = 8, pqIter = 2, nprobe = 2, k = 10)
@@ -4279,40 +4161,11 @@ object Curation {
         retrievalEvalCard(sys, truth, "ivfpq_vs_exact", k = 10)
       },
       oracle = Some(ivfpqSql(kCoarse = 8, cIter = 2, m = 4, sub = 16, kc = 8,
-        pIter = 2, nprobe = 2, k = 10, fin = """,
+        pIter = 2, nprobe = 2, k = 10, fin = s""",
         sys AS (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-            FROM dist) z
-          WHERE rk <= 10),
-        tdist AS (
-          SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-            round(list_reduce(list_transform(range(1, len(q.v) + 1),
-              i -> (q.v[i] - e.v[i]) * (q.v[i] - e.v[i])), (x, y) -> x + y), 6) AS d2
-          FROM q JOIN e ON e.vec_id <> q.vec_id),
-        truth AS (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-            FROM tdist) t
-          WHERE rk <= 10),
-        nq AS (SELECT COUNT(DISTINCT q_id) AS n_queries FROM truth),
-        hits AS (
-          SELECT s.q_id, s.n_id, s.rk AS srk, t.rk AS trk
-          FROM sys s JOIN truth t ON s.q_id = t.q_id AND s.n_id = t.n_id),
-        nhits AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits FROM hits),
-        rr AS (
-          SELECT CAST(COALESCE(SUM(COALESCE(1000000 // s.rk, 0)), 0) AS BIGINT) AS rr_sum
-          FROM truth t LEFT JOIN sys s ON s.q_id = t.q_id AND s.n_id = t.n_id
-          WHERE t.rk = 1),
-        h1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit1 FROM hits WHERE trk = 1 AND srk = 1)
-        SELECT 'ivfpq_vs_exact' AS system, n_queries, n_hits,
-          (1000000 * n_hits) // (n_queries * 10) AS recall_ppm,
-          rr_sum // n_queries AS mrr_ppm,
-          n_hit1,
-          (1000000 * n_hit1) // n_queries AS hit1_ppm
-        FROM nq, nhits, rr, h1""")),
+          ${OracleSql.topK("q_id, n_id", "d2 ASC", "dist", 10)}),
+        $l2TruthCtes,
+        ${OracleSql.evalCard("sys", "ivfpq_vs_exact", 10)}""")),
       bench = true),
 
     // Per-source data card — the corpus-audit summary a curation run
@@ -4349,11 +4202,11 @@ object Curation {
               .as("mean_tokens"))
       },
       oracle = Some(s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         tc AS (SELECT doc_id, COUNT(*) AS n FROM toks GROUP BY 1),
         norm AS (
           SELECT d.doc_id, d.source, d.lang, COALESCE(tc.n, 0) AS n_tokens,
-            md5(trim(regexp_replace(regexp_replace(lower(d.text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS h
+            md5(${OracleSql.clean("d.text")}) AS h
           FROM documents d LEFT JOIN tc ON tc.doc_id = d.doc_id),
         duph AS (SELECT h FROM norm GROUP BY h HAVING COUNT(*) > 1),
         agg AS (
@@ -4404,12 +4257,7 @@ object Curation {
           FROM sh a JOIN sh b
             ON a.shingle = b.shingle AND a.block = b.block AND a.doc_id < b.doc_id
           GROUP BY 1, 2)
-        SELECT doc_a, doc_b, n_common,
-          CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) AS jaccard
-        FROM common
-        JOIN csizes sa ON sa.doc_id = doc_a
-        JOIN csizes sb ON sb.doc_id = doc_b
-        WHERE CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.3"""),
+        ${jaccardPairsSql(s"doc_a, doc_b, n_common, ${jaccardOf("sa", "sb")} AS jaccard", "0.3")}"""),
       bench = true),
 
     // DSIR importance weights (Xie et al., NeurIPS 2023): every doc scored
@@ -4441,7 +4289,7 @@ object Curation {
         keyed AS (
           SELECT doc_id,
             round(logw + round(-ln(-ln(
-              (CAST('0x' || substr(md5('dsir:' || CAST(doc_id AS VARCHAR)), 1, 12) AS BIGINT)
+              (${OracleSql.h48("'dsir:' || CAST(doc_id AS VARCHAR)")}
                 + 0.5) / 281474976710656.0)), 10), 8) AS dsir_key
           FROM w)
         SELECT doc_id, round(dsir_key, 8) AS dsir_key FROM keyed
@@ -4473,7 +4321,7 @@ object Curation {
         val d = docs(s, dir)
         // stage 1: MinHash dedup — cluster representatives survive
         val pairs = Dedup.minhashLshPairs(d, threshold = 0.05,
-            portable = true, maxBucketSize = Some(64))
+            portable = true, maxBucketSize = Some(MaxBucketSize))
           .select(col("doc_a").as("src"), col("doc_b").as("dst"))
         val comp = graft.graph.Graphs.connectedComponents(pairs)
           .withColumnRenamed("v", "doc_id")
@@ -4538,31 +4386,13 @@ object Curation {
           .groupBy(col("doc_id")).agg(sum(col("np")).as("n"))
         // stage 6: pack into 256-token bins over (lang, shard) windows
         val pd = fin.select(col("doc_id"), col("lang"),
-            floor(col("doc_id") / 64).cast("long").as("shard"))
+            shardCol)
           .join(nd, Seq("doc_id"), "left")
           .select(col("doc_id"), col("lang"), col("shard"),
             coalesce(col("n"), lit(0L)).cast("long").as("n_tok"))
-        val w = Window.partitionBy(col("lang"), col("shard")).orderBy(col("doc_id"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        pd.withColumn("bin",
-            floor((sum(col("n_tok")).over(w) - col("n_tok")) / 256.0).cast("long"))
-          .groupBy(col("lang"), col("shard"), col("bin"))
-          .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("bin_tokens"))
+        packBins(pd)
       },
-      oracle = Some(s"""WITH RECURSIVE $shCteBody,
-        $minhashPairsCtes,
-        und2 AS (SELECT doc_a AS a, doc_b AS b FROM mh_pairs
-                 UNION SELECT doc_b, doc_a FROM mh_pairs),
-        reach2(a, b) AS (
-          SELECT a, b FROM und2
-          UNION
-          SELECT r.a, u.b FROM reach2 r JOIN und2 u ON r.b = u.a),
-        mclusters AS (
-          SELECT d.doc_id,
-            CAST(CASE WHEN m.mn IS NULL OR d.doc_id < m.mn THEN d.doc_id ELSE m.mn END AS BIGINT)
-              AS cluster_id
-          FROM documents d
-          LEFT JOIN (SELECT a AS doc_id, MIN(b) AS mn FROM reach2 GROUP BY 1) m USING (doc_id)),
+      oracle = Some(s"""WITH RECURSIVE $minhashClusterCtes,
         dd AS (SELECT doc_id FROM mclusters WHERE doc_id = cluster_id),
         bsh AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
         cshared AS (
@@ -4571,26 +4401,9 @@ object Curation {
         contam AS (
           SELECT c.doc_id FROM cshared c JOIN sizes z USING (doc_id)
           WHERE round(CAST(n_shared AS DOUBLE) / CAST(sz AS DOUBLE), 6) >= 0.5),
-        ${Text.toksCte},
-        cl AS (
-          SELECT doc_id, lang,
-            trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS clean
-          FROM documents),
-        cl2 AS (SELECT * FROM cl WHERE length(clean) >= 3),
-        tris AS (
-          SELECT doc_id, lang, substr(clean, CAST(i AS INTEGER), 3) AS tg
-          FROM cl2, unnest(generate_series(1, length(clean) - 2)) AS g(i)),
-        clmodel AS (SELECT lang, tg, COUNT(*) AS cnt FROM tris GROUP BY 1, 2),
-        cltot AS (SELECT lang, SUM(cnt) AS total, COUNT(*) AS d FROM clmodel GROUP BY 1),
-        clprobs AS (
-          SELECT m.lang, m.tg,
-            round(ln((cnt + 1) / CAST(total + d AS DOUBLE)), 10) AS logp
-          FROM clmodel m JOIN cltot USING (lang)),
-        clsc AS (
-          SELECT t.doc_id, COUNT(*) AS n_tri,
-            CAST(SUM(CAST(logp AS DECIMAL(30,10))) AS DOUBLE) AS s
-          FROM tris t JOIN clprobs p ON p.lang = t.lang AND p.tg = t.tg
-          GROUP BY 1),
+        ${OracleSql.toksCte},
+        ${OracleSql.charLm("cl")},
+        ${OracleSql.charLmScore("cl")},
         qual AS (
           SELECT doc_id FROM clsc WHERE round(exp(-s/n_tri), 6) <= 213.0),
         k3 AS (
@@ -4606,7 +4419,7 @@ object Curation {
           FROM agg3, tot3),
         final AS (
           SELECT k.doc_id, k.lang FROM k3 k JOIN rates3 r USING (source)
-          WHERE CAST('0x' || substr(md5('mix:' || k.doc_id), 1, 15) AS BIGINT) % 1000000
+          WHERE ${OracleSql.h60("'mix:' || k.doc_id")} % 1000000
                 < r.rate_ppm),
         utoks AS (SELECT t.doc_id, t.term FROM toks t JOIN final f USING (doc_id)),
         ${Text.unigramBody(rounds = 3, lastRoundSegOnly = true, tokSource = "utoks")},
@@ -4617,14 +4430,7 @@ object Curation {
           SELECT f.doc_id, f.lang, CAST(floor(f.doc_id / 64) AS BIGINT) AS shard,
             CAST(COALESCE(nd.n, 0) AS BIGINT) AS n_tok
           FROM final f LEFT JOIN nd ON f.doc_id = nd.doc_id),
-        cum AS (
-          SELECT lang, shard, doc_id, n_tok,
-            SUM(n_tok) OVER (PARTITION BY lang, shard ORDER BY doc_id
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c
-          FROM pd)
-        SELECT lang, shard, CAST(floor((c - n_tok) / 256.0) AS BIGINT) AS bin,
-          COUNT(*) AS n_docs, CAST(SUM(n_tok) AS BIGINT) AS bin_tokens
-        FROM cum GROUP BY 1, 2, 3"""),
+        ${packBinsSql("pd", withDocId = true)}"""),
       bench = true),
 
     // Hashed-feature quality classifier — the fastText shape (Joulin et
@@ -4687,7 +4493,7 @@ object Curation {
         WITH $hashedFeatCtes,
         feat_tr AS MATERIALIZED (
           SELECT * FROM feat
-          WHERE CAST('0x' || substr(md5('lrs:' || id), 1, 15) AS BIGINT) % 1000 < 250),
+          WHERE ${OracleSql.h60("'lrs:' || id")} % 1000 < 250),
         ${lrRoundCtes("feat_tr", 257, "0.1", 16)},
         waf AS (SELECT list(w ORDER BY pos) AS wv FROM w16)
         $lrScoreSelect"""),
@@ -4713,81 +4519,22 @@ object Curation {
     // maxBucketSize cap.
     QueryDef("q177_image_ahash_dedup",
       (s, dir) => {
-        import s.implicits._
-        import graft.operators.Multimodal
-        val media = docs(s, dir).select(col("doc_id")).as[Long].map { id =>
-          val g = id / 5; val m = id % 5
-          val rgb: Int => Int = { i =>
-            val p = i / 3; val c = i % 3; val x = p % 16; val y = p / 16
-            val v0 = ((g * 37 + x * 13 + y * 29 + c * 71 +
-              g * (x + 2 * y + c)) % 256).toInt
-            if (m > 0 && (x + 16 * y) % 97 == m) (v0 + 128) % 256 else v0
-          }
-          Multimodal.MediaRecord(id, "bmp",
-            Multimodal.encodeBmp(16, 16, rgb), Map.empty)
-        }
-        val hv = Multimodal.imageAHash(media)
-        val bands = hv.select(col("media_id"), explode(array(
-            struct(lit(0L).as("t"), col("b0").as("bv")),
-            struct(lit(1L).as("t"), col("b1").as("bv")),
-            struct(lit(2L).as("t"), col("b2").as("bv")),
-            struct(lit(3L).as("t"), col("b3").as("bv")))).as("b"))
-          .select(col("media_id"), col("b.t").as("t"), col("b.bv").as("bv"))
-        val cand = bands.as("ba").join(bands.as("bb"), Seq("t", "bv"))
-          .filter(col("ba.media_id") < col("bb.media_id"))
-          .select(col("ba.media_id").as("doc_a"), col("bb.media_id").as("doc_b"))
-          .distinct()
-        cand
-          .join(hv.select(col("media_id").as("doc_a"),
-            col("h_hi").as("hi_a"), col("h_lo").as("lo_a")), "doc_a")
-          .join(hv.select(col("media_id").as("doc_b"),
-            col("h_hi").as("hi_b"), col("h_lo").as("lo_b")), "doc_b")
+        val media = synthMedia(s, dir)
+        val hv = graft.operators.Multimodal.imageAHash(media)
+        val bands = aHashBands(hv)
+        withPairHashes(bandPairs(bands), hv)
           .select(col("doc_a"), col("doc_b"),
             (expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)"))
               .cast(org.apache.spark.sql.types.LongType).as("hamming"))
           .filter(col("hamming") <= 10)
       },
-      oracle = Some("""
-        WITH ids AS (SELECT doc_id AS id, doc_id // 5 AS g, doc_id % 5 AS m FROM documents),
-        px AS (
-          SELECT id, g, m, p % 16 AS x, p // 16 AS y
-          FROM ids, UNNEST(range(256)) AS tp(p)),
-        lum AS (
-          SELECT id, (x // 2) + 8 * (y // 2) AS bp,
-            (299 * v0 + 587 * v1 + 114 * v2) // 1000 AS l
-          FROM (
-            SELECT id, x, y,
-              MAX(CASE WHEN c = 0 THEN v END) AS v0,
-              MAX(CASE WHEN c = 1 THEN v END) AS v1,
-              MAX(CASE WHEN c = 2 THEN v END) AS v2
-            FROM (
-              SELECT id, x, y, c,
-                CASE WHEN m > 0 AND (x + 16 * y) % 97 = m
-                  THEN ((g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 + 128) % 256
-                  ELSE (g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 END AS v
-              FROM px, UNNEST([0, 1, 2]) AS tc(c)) ch
-            GROUP BY id, x, y) pix),
-        blocks AS (SELECT id, bp, CAST(SUM(l) AS BIGINT) AS bsum FROM lum GROUP BY 1, 2),
-        tot AS (SELECT id, CAST(SUM(l) AS BIGINT) AS tsum FROM lum GROUP BY 1),
-        bits AS (
-          SELECT b.id, b.bp, CASE WHEN b.bsum * 64 > t.tsum THEN 1 ELSE 0 END AS bit
-          FROM blocks b JOIN tot t ON b.id = t.id),
-        halves AS (
-          SELECT id,
-            CAST(SUM(CASE WHEN bp < 32 THEN bit * (1::BIGINT << bp) ELSE 0 END) AS BIGINT) AS h_lo,
-            CAST(SUM(CASE WHEN bp >= 32 THEN bit * (1::BIGINT << (bp - 32)) ELSE 0 END) AS BIGINT) AS h_hi
-          FROM bits GROUP BY 1),
-        bands AS (
-          SELECT id, t, CASE t WHEN 0 THEN h_lo % 65536 WHEN 1 THEN h_lo // 65536
-            WHEN 2 THEN h_hi % 65536 ELSE h_hi // 65536 END AS bv
-          FROM halves, UNNEST([0, 1, 2, 3]) AS tt(t)),
-        cand AS (
-          SELECT DISTINCT a.id AS doc_a, b.id AS doc_b
-          FROM bands a JOIN bands b ON a.t = b.t AND a.bv = b.bv AND a.id < b.id)
+      oracle = Some(s"""
+        WITH $aHashBandCtes,
+        $bandPairsCte
         SELECT c.doc_a, c.doc_b,
-          CAST(bit_count(xor(ha.h_hi, hb.h_hi)) + bit_count(xor(ha.h_lo, hb.h_lo)) AS BIGINT) AS hamming
-        FROM cand c JOIN halves ha ON ha.id = c.doc_a JOIN halves hb ON hb.id = c.doc_b
-        WHERE bit_count(xor(ha.h_hi, hb.h_hi)) + bit_count(xor(ha.h_lo, hb.h_lo)) <= 10"""),
+          CAST($hammingSql AS BIGINT) AS hamming
+        FROM $candHalvesSql
+        WHERE $hammingSql <= 10"""),
       bench = true),
 
     // Hard-negative mining for contrastive encoder training (the SBERT/
@@ -4810,21 +4557,14 @@ object Curation {
         val e = Tables(s, dir, "embeddings")
         Similarity.hardNegativeTopK(e.filter(col("vec_id") % 4 === 0), e, k = 3)
       },
-      oracle = Some("""
-        WITH emb AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+      oracle = Some(s"""
+        WITH emb AS (SELECT vec_id, label, ${OracleSql.vec} AS e FROM embeddings),
         q AS (SELECT * FROM emb WHERE vec_id % 4 = 0),
         sims AS (
           SELECT q.vec_id AS q_id, q.label AS q_label, c.vec_id AS n_id,
-            round(CASE WHEN sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e)) = 0
-              THEN 0.0
-              ELSE list_dot_product(q.e, c.e) /
-                   (sqrt(list_dot_product(q.e, q.e)) * sqrt(list_dot_product(c.e, c.e))) END, 6) AS sim
+            ${OracleSql.cosine("q.e", "c.e")} AS sim
           FROM q CROSS JOIN emb c WHERE q.label <> c.label)
-        SELECT q_id, q_label, n_id, sim, rk FROM (
-          SELECT q_id, q_label, n_id, sim,
-            CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
-          FROM sims) s
-        WHERE rk <= 3"""),
+        ${OracleSql.topK("q_id, q_label, n_id, sim", "sim DESC", "sims", 3, "s")}"""),
       bench = true),
 
     // WordPiece-style tokenizer trainer (Schuster & Nakajima, ICASSP
@@ -4875,12 +4615,12 @@ object Curation {
           .withColumn("pos", row_number().over(w).cast(org.apache.spark.sql.types.LongType))
           .select(col("phase"), col("shard"), col("pos"), col("doc_id"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH m AS (
           SELECT doc_id,
             CASE WHEN n_chars < 200 THEN 1 WHEN n_chars < 400 THEN 2 ELSE 3 END AS phase,
-            CAST('0x' || substr(md5('ord:' || doc_id), 1, 15) AS BIGINT) % 16 AS shard,
-            CAST('0x' || substr(md5('ord:' || doc_id), 1, 15) AS BIGINT) AS hv
+            ${OracleSql.h60("'ord:' || doc_id")} % 16 AS shard,
+            ${OracleSql.h60("'ord:' || doc_id")} AS hv
           FROM documents)
         SELECT CAST(phase AS BIGINT) AS phase, shard,
           CAST(row_number() OVER (PARTITION BY phase, shard
@@ -4912,7 +4652,7 @@ object Curation {
           .select(col("doc_id"), posexplode(Exprs.shingles(col("toks"), 8)).as(Seq("p0", "g")))
           .select(col("doc_id"), (col("p0") + 1).cast(lng).as("p"), col("g"))
         val hot = sp.groupBy(col("g"))
-          .agg(countDistinct(col("doc_id")).as("df")).filter(col("df") > 64)
+          .agg(countDistinct(col("doc_id")).as("df")).filter(col("df") > MaxShingleDf)
         val cold = sp.join(hot.select(col("g")), Seq("g"), "left_anti")
         val pairs = cold.as("pa").join(cold.as("pb"), Seq("g"))
           .filter(col("pa.doc_id") < col("pb.doc_id"))
@@ -4930,17 +4670,14 @@ object Curation {
           .select(col("doc_a"), col("doc_b"), col("start_a"), col("start_b"),
             col("run_len"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         sp AS (
           SELECT doc_id, CAST(i AS BIGINT) AS p,
             array_to_string(tk[i:i+7], ' ') AS g
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM seq) u),
+          FROM ${OracleSql.ngramSql(8, "seq")} u),
         hot AS (SELECT g FROM (
-          SELECT g, COUNT(DISTINCT doc_id) AS df FROM sp GROUP BY 1) h WHERE df > 64),
+          SELECT g, COUNT(DISTINCT doc_id) AS df FROM sp GROUP BY 1) h WHERE df > $MaxShingleDf),
         cold AS (SELECT * FROM sp ANTI JOIN hot USING (g)),
         pairs AS (
           SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.p AS ppa, b.p AS ppb,
@@ -4970,14 +4707,8 @@ object Curation {
     QueryDef("q184_quality_rules",
       (s, dir) => {
         import graft.functions.Exprs
-        val pc = docs(s, dir)
-          .select(col("doc_id"), explode(Exprs.tokens(col("text"))).as("term"))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
-        pc.groupBy(col("doc_id"))
-          .agg(sum(col("c")).as("n"), count(lit(1)).as("ndis"),
-            max(col("c")).as("topc"),
-            sum(when(col("c") === 1, 1L).otherwise(0L)).as("hapax"),
-            sum(length(col("term")) * col("c")).as("sumlen"))
+        termStats(docs(s, dir)
+            .select(col("doc_id"), explode(Exprs.tokens(col("text"))).as("term")))
           .select(col("doc_id"),
             (col("n") >= 30).as("r_len"),
             (col("sumlen") >= lit(4L) * col("n") &&
@@ -4988,14 +4719,8 @@ object Curation {
             col("r_len") && col("r_mwl") && col("r_top") && col("r_hapax"))
       },
       oracle = Some(s"""
-        WITH ${graft.queries.Text.toksCte},
-        pc AS (SELECT doc_id, term, COUNT(*) AS c FROM toks GROUP BY 1, 2),
-        st AS (
-          SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n, COUNT(*) AS ndis,
-            CAST(MAX(c) AS BIGINT) AS topc,
-            CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-            CAST(SUM(LEN(term) * c) AS BIGINT) AS sumlen
-          FROM pc GROUP BY 1),
+        WITH ${OracleSql.toksCte},
+        $termStatsCtes,
         flags AS (
           SELECT doc_id,
             n >= 30 AS r_len,
@@ -5027,7 +4752,7 @@ object Curation {
           .select(col("source"), explode(Exprs.shingles(col("toks"), 3)).as("sh"))
           .distinct()
         val hot = sh.groupBy(col("sh"))
-          .agg(count(lit(1)).as("df")).filter(col("df") > 64)
+          .agg(count(lit(1)).as("df")).filter(col("df") > MaxShingleDf)
         val cold = sh.join(hot.select(col("sh")), Seq("sh"), "left_anti")
         val sizes = cold.groupBy(col("source")).agg(count(lit(1)).as("sz"))
         val common = cold.as("x").join(cold.as("y"), Seq("sh"))
@@ -5041,14 +4766,11 @@ object Curation {
             expr("(1000000 * common) div (sz_a + sz_b - common)").as("jac_e6"))
       },
       oracle = Some(s"""
-        WITH sq AS (
-          SELECT doc_id, source,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+        WITH ${OracleSql.tokenLists("sq", "doc_id", "source")},
         sh AS (
-          SELECT DISTINCT source, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS sh
-          FROM (SELECT source, tk, unnest(generate_series(1, len(tk) - 2)) AS i FROM sq) g),
-        hot AS (SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY 1) h WHERE df > 64),
+          SELECT DISTINCT source, ${OracleSql.ngram(3)} AS sh
+          FROM ${OracleSql.ngramSql(3, "sq", "source")} g),
+        hot AS (SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY 1) h WHERE df > $MaxShingleDf),
         cold AS (SELECT * FROM sh ANTI JOIN hot USING (sh)),
         sizes AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS sz FROM cold GROUP BY 1),
         cm AS (
@@ -5099,14 +4821,11 @@ object Curation {
             sum(when(col("d") >= 2, col("ntok")).otherwise(0L)).as("dup_tokens"),
             sum(col("ntok")).as("tot_tokens"))
       },
-      oracle = Some("""
-        WITH sq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("sq", "doc_id")},
         tk AS (
           SELECT doc_id, CAST(i AS BIGINT) AS p, tk[i] AS term,
-            CASE WHEN CAST('0x' || substr(md5('cdc:' || tk[i]), 1, 15) AS BIGINT) % 8 = 0
+            CASE WHEN ${OracleSql.h60("'cdc:' || tk[i]")} % 8 = 0
                  THEN 1 ELSE 0 END AS brk
           FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk))) AS i FROM sq) u),
         ch AS (
@@ -5143,7 +4862,7 @@ object Curation {
           .select(col("doc_id"), explode(array_distinct(
             Exprs.shingles(col("toks"), 3))).as("sh"))
         val hot = sh.groupBy(col("sh"))
-          .agg(count(lit(1)).as("df")).filter(col("df") > 64)
+          .agg(count(lit(1)).as("df")).filter(col("df") > MaxShingleDf)
         val cold = sh.join(hot.select(col("sh")), Seq("sh"), "left_anti")
         val sizes = cold.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
         cold.as("x").join(cold.as("y"), Seq("sh"))
@@ -5157,15 +4876,12 @@ object Curation {
             expr("(1000000 * common) div sz_b").as("cont_b_e6"))
           .filter(greatest(col("cont_a_e6"), col("cont_b_e6")) >= 500000L)
       },
-      oracle = Some("""
-        WITH sq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("sq", "doc_id")},
         sh AS (
-          SELECT DISTINCT doc_id, tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS sh
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 2)) AS i FROM sq) g),
-        hot AS (SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY 1) h WHERE df > 64),
+          SELECT DISTINCT doc_id, ${OracleSql.ngram(3)} AS sh
+          FROM ${OracleSql.ngramSql(3, "sq")} g),
+        hot AS (SELECT sh FROM (SELECT sh, COUNT(*) AS df FROM sh GROUP BY 1) h WHERE df > $MaxShingleDf),
         cold AS (SELECT * FROM sh ANTI JOIN hot USING (sh)),
         sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS sz FROM cold GROUP BY 1),
         cm AS (
@@ -5230,11 +4946,7 @@ object Curation {
         ws.unionByName(bp).unionByName(wp).unionByName(un)
       },
       oracle = Some(s"""
-        WITH toks AS MATERIALIZED (
-          SELECT doc_id, t AS word FROM (
-            SELECT doc_id, unnest(list_filter(
-              string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'),
-              t -> t <> '')) AS t FROM documents)),
+        WITH $wordToksCte,
         uterm AS (SELECT doc_id, word AS term FROM toks),
         ${bpeBody(BpeMergeRounds, "bp")},
         ${wordPieceBody(BpeMergeRounds, "wp")},
@@ -5288,37 +5000,16 @@ object Curation {
     // gets hash-checked.
     QueryDef("q189_incremental_image_dedup",
       (s, dir) => {
-        import s.implicits._
-        import graft.operators.Multimodal
-        val media = docs(s, dir).select(col("doc_id")).as[Long].map { id =>
-          val g = id / 5; val m = id % 5
-          val rgb: Int => Int = { i =>
-            val p = i / 3; val c = i % 3; val x = p % 16; val y = p / 16
-            val v0 = ((g * 37 + x * 13 + y * 29 + c * 71 +
-              g * (x + 2 * y + c)) % 256).toInt
-            if (m > 0 && (x + 16 * y) % 97 == m) (v0 + 128) % 256 else v0
-          }
-          Multimodal.MediaRecord(id, "bmp",
-            Multimodal.encodeBmp(16, 16, rgb), Map.empty)
-        }
-        val hv = Multimodal.imageAHash(media)
-        val bands = hv.select(col("media_id"), explode(array(
-            struct(lit(0L).as("t"), col("b0").as("bv")),
-            struct(lit(1L).as("t"), col("b1").as("bv")),
-            struct(lit(2L).as("t"), col("b2").as("bv")),
-            struct(lit(3L).as("t"), col("b3").as("bv")))).as("b"))
-          .select(col("media_id"), col("b.t").as("t"), col("b.bv").as("bv"))
+        val media = synthMedia(s, dir)
+        val hv = graft.operators.Multimodal.imageAHash(media)
+        val bands = aHashBands(hv)
         val cand = bands.filter(col("media_id") % 10 === 7).as("ba")
           .join(bands.as("bb"), Seq("t", "bv"))
           .filter(col("ba.media_id") =!= col("bb.media_id"))
           .select(least(col("ba.media_id"), col("bb.media_id")).as("doc_a"),
             greatest(col("ba.media_id"), col("bb.media_id")).as("doc_b"))
           .distinct()
-        cand
-          .join(hv.select(col("media_id").as("doc_a"),
-            col("h_hi").as("hi_a"), col("h_lo").as("lo_a")), "doc_a")
-          .join(hv.select(col("media_id").as("doc_b"),
-            col("h_hi").as("hi_b"), col("h_lo").as("lo_b")), "doc_b")
+        withPairHashes(cand, hv)
           .select(col("doc_a"), col("doc_b"),
             (expr("bit_count(hi_a ^ hi_b)") + expr("bit_count(lo_a ^ lo_b)"))
               .cast(org.apache.spark.sql.types.LongType).as("hamming"))
@@ -5327,50 +5018,18 @@ object Curation {
             when(col("doc_a") % 10 === 7 && col("doc_b") % 10 === 7,
               lit("batch_batch")).otherwise(lit("batch_index")))
       },
-      oracle = Some("""
-        WITH ids AS (SELECT doc_id AS id, doc_id // 5 AS g, doc_id % 5 AS m FROM documents),
-        px AS (
-          SELECT id, g, m, p % 16 AS x, p // 16 AS y
-          FROM ids, UNNEST(range(256)) AS tp(p)),
-        lum AS (
-          SELECT id, (x // 2) + 8 * (y // 2) AS bp,
-            (299 * v0 + 587 * v1 + 114 * v2) // 1000 AS l
-          FROM (
-            SELECT id, x, y,
-              MAX(CASE WHEN c = 0 THEN v END) AS v0,
-              MAX(CASE WHEN c = 1 THEN v END) AS v1,
-              MAX(CASE WHEN c = 2 THEN v END) AS v2
-            FROM (
-              SELECT id, x, y, c,
-                CASE WHEN m > 0 AND (x + 16 * y) % 97 = m
-                  THEN ((g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 + 128) % 256
-                  ELSE (g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 END AS v
-              FROM px, UNNEST([0, 1, 2]) AS tc(c)) ch
-            GROUP BY id, x, y) pix),
-        blocks AS (SELECT id, bp, CAST(SUM(l) AS BIGINT) AS bsum FROM lum GROUP BY 1, 2),
-        tot AS (SELECT id, CAST(SUM(l) AS BIGINT) AS tsum FROM lum GROUP BY 1),
-        bits AS (
-          SELECT b.id, b.bp, CASE WHEN b.bsum * 64 > t.tsum THEN 1 ELSE 0 END AS bit
-          FROM blocks b JOIN tot t ON b.id = t.id),
-        halves AS (
-          SELECT id,
-            CAST(SUM(CASE WHEN bp < 32 THEN bit * (1::BIGINT << bp) ELSE 0 END) AS BIGINT) AS h_lo,
-            CAST(SUM(CASE WHEN bp >= 32 THEN bit * (1::BIGINT << (bp - 32)) ELSE 0 END) AS BIGINT) AS h_hi
-          FROM bits GROUP BY 1),
-        bands AS (
-          SELECT id, t, CASE t WHEN 0 THEN h_lo % 65536 WHEN 1 THEN h_lo // 65536
-            WHEN 2 THEN h_hi % 65536 ELSE h_hi // 65536 END AS bv
-          FROM halves, UNNEST([0, 1, 2, 3]) AS tt(t)),
+      oracle = Some(s"""
+        WITH $aHashBandCtes,
         cand AS (
           SELECT DISTINCT least(a.id, b.id) AS doc_a, greatest(a.id, b.id) AS doc_b
           FROM bands a JOIN bands b ON a.t = b.t AND a.bv = b.bv AND a.id <> b.id
           WHERE a.id % 10 = 7)
         SELECT c.doc_a, c.doc_b,
-          CAST(bit_count(xor(ha.h_hi, hb.h_hi)) + bit_count(xor(ha.h_lo, hb.h_lo)) AS BIGINT) AS hamming,
+          CAST($hammingSql AS BIGINT) AS hamming,
           CASE WHEN c.doc_a % 10 = 7 AND c.doc_b % 10 = 7 THEN 'batch_batch'
                ELSE 'batch_index' END AS pair_type
-        FROM cand c JOIN halves ha ON ha.id = c.doc_a JOIN halves hb ON hb.id = c.doc_b
-        WHERE bit_count(xor(ha.h_hi, hb.h_hi)) + bit_count(xor(ha.h_lo, hb.h_lo)) <= 10""")),
+        FROM $candHalvesSql
+        WHERE $hammingSql <= 10""")),
 
     // The MULTIMODAL pipeline capstone — q175's composed-stages stance on
     // the image family, with TWO codec round trips oracle-gated: synth
@@ -5389,32 +5048,10 @@ object Curation {
       (s, dir) => {
         import s.implicits._
         import graft.operators.Multimodal
-        val media = docs(s, dir).select(col("doc_id")).as[Long].map { id =>
-          val g = id / 5; val m = id % 5
-          val rgb: Int => Int = { i =>
-            val p = i / 3; val c = i % 3; val x = p % 16; val y = p / 16
-            val v0 = ((g * 37 + x * 13 + y * 29 + c * 71 +
-              g * (x + 2 * y + c)) % 256).toInt
-            if (m > 0 && (x + 16 * y) % 97 == m) (v0 + 128) % 256 else v0
-          }
-          Multimodal.MediaRecord(id, "bmp",
-            Multimodal.encodeBmp(16, 16, rgb), Map.empty)
-        }
+        val media = synthMedia(s, dir)
         val hv = Multimodal.imageAHash(media)
-        val bands = hv.select(col("media_id"), explode(array(
-            struct(lit(0L).as("t"), col("b0").as("bv")),
-            struct(lit(1L).as("t"), col("b1").as("bv")),
-            struct(lit(2L).as("t"), col("b2").as("bv")),
-            struct(lit(3L).as("t"), col("b3").as("bv")))).as("b"))
-          .select(col("media_id"), col("b.t").as("t"), col("b.bv").as("bv"))
-        val purge = bands.as("ba").join(bands.as("bb"), Seq("t", "bv"))
-          .filter(col("ba.media_id") < col("bb.media_id"))
-          .select(col("ba.media_id").as("doc_a"), col("bb.media_id").as("doc_b"))
-          .distinct()
-          .join(hv.select(col("media_id").as("doc_a"),
-            col("h_hi").as("hi_a"), col("h_lo").as("lo_a")), "doc_a")
-          .join(hv.select(col("media_id").as("doc_b"),
-            col("h_hi").as("hi_b"), col("h_lo").as("lo_b")), "doc_b")
+        val bands = aHashBands(hv)
+        val purge = withPairHashes(bandPairs(bands), hv)
           .filter(expr("bit_count(hi_a ^ hi_b) + bit_count(lo_a ^ lo_b)") <= 10)
           .select(col("doc_b").as("media_id")).distinct()
         val survivors = media.toDF().join(purge, Seq("media_id"), "left_anti")
@@ -5427,63 +5064,18 @@ object Curation {
             col("height").cast("long").as("height"),
             col("sum_r"), col("sum_g"), col("sum_b"), col("sum_luma"))
       },
-      oracle = Some("""
-        WITH ids AS (SELECT doc_id AS id, doc_id // 5 AS g, doc_id % 5 AS m FROM documents),
-        px AS (
-          SELECT id, g, m, p % 16 AS x, p // 16 AS y
-          FROM ids, UNNEST(range(256)) AS tp(p)),
-        lum AS (
-          SELECT id, (x // 2) + 8 * (y // 2) AS bp,
-            (299 * v0 + 587 * v1 + 114 * v2) // 1000 AS l
-          FROM (
-            SELECT id, x, y,
-              MAX(CASE WHEN c = 0 THEN v END) AS v0,
-              MAX(CASE WHEN c = 1 THEN v END) AS v1,
-              MAX(CASE WHEN c = 2 THEN v END) AS v2
-            FROM (
-              SELECT id, x, y, c,
-                CASE WHEN m > 0 AND (x + 16 * y) % 97 = m
-                  THEN ((g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 + 128) % 256
-                  ELSE (g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 END AS v
-              FROM px, UNNEST([0, 1, 2]) AS tc(c)) ch
-            GROUP BY id, x, y) pix),
-        blocks AS (SELECT id, bp, CAST(SUM(l) AS BIGINT) AS bsum FROM lum GROUP BY 1, 2),
-        tot AS (SELECT id, CAST(SUM(l) AS BIGINT) AS tsum FROM lum GROUP BY 1),
-        bits AS (
-          SELECT b.id, b.bp, CASE WHEN b.bsum * 64 > t.tsum THEN 1 ELSE 0 END AS bit
-          FROM blocks b JOIN tot t ON b.id = t.id),
-        halves AS (
-          SELECT id,
-            CAST(SUM(CASE WHEN bp < 32 THEN bit * (1::BIGINT << bp) ELSE 0 END) AS BIGINT) AS h_lo,
-            CAST(SUM(CASE WHEN bp >= 32 THEN bit * (1::BIGINT << (bp - 32)) ELSE 0 END) AS BIGINT) AS h_hi
-          FROM bits GROUP BY 1),
-        bands AS (
-          SELECT id, t, CASE t WHEN 0 THEN h_lo % 65536 WHEN 1 THEN h_lo // 65536
-            WHEN 2 THEN h_hi % 65536 ELSE h_hi // 65536 END AS bv
-          FROM halves, UNNEST([0, 1, 2, 3]) AS tt(t)),
-        cand AS (
-          SELECT DISTINCT a.id AS doc_a, b.id AS doc_b
-          FROM bands a JOIN bands b ON a.t = b.t AND a.bv = b.bv AND a.id < b.id),
+      oracle = Some(s"""
+        WITH $aHashBandCtes,
+        $bandPairsCte,
         purge AS (
           SELECT DISTINCT c.doc_b AS id
-          FROM cand c JOIN halves ha ON ha.id = c.doc_a JOIN halves hb ON hb.id = c.doc_b
-          WHERE bit_count(xor(ha.h_hi, hb.h_hi)) + bit_count(xor(ha.h_lo, hb.h_lo)) <= 10),
+          FROM $candHalvesSql
+          WHERE $hammingSql <= 10),
         surv AS (SELECT id, g, m FROM ids ANTI JOIN purge USING (id)),
         rpx AS (
           SELECT id, g, m, 4 * (p % 4) AS x, 4 * (p // 4) AS y
           FROM surv, UNNEST(range(16)) AS tp(p)),
-        rch AS (
-          SELECT id, x, y,
-            MAX(CASE WHEN c = 0 THEN v END) AS v0,
-            MAX(CASE WHEN c = 1 THEN v END) AS v1,
-            MAX(CASE WHEN c = 2 THEN v END) AS v2
-          FROM (
-            SELECT id, x, y, c,
-              CASE WHEN m > 0 AND (x + 16 * y) % 97 = m
-                THEN ((g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 + 128) % 256
-                ELSE (g*37 + x*13 + y*29 + c*71 + g*(x + 2*y + c)) % 256 END AS v
-            FROM rpx, UNNEST([0, 1, 2]) AS tc(c)) u
-          GROUP BY id, x, y)
+        rch AS (${rgbSql("rpx", "u")})
         SELECT id AS doc_id, CAST(4 AS BIGINT) AS width, CAST(4 AS BIGINT) AS height,
           CAST(SUM(v0) AS BIGINT) AS sum_r, CAST(SUM(v1) AS BIGINT) AS sum_g,
           CAST(SUM(v2) AS BIGINT) AS sum_b,
@@ -5505,20 +5097,8 @@ object Curation {
         import graft.functions.Exprs
         val base = docs(s, dir)
           .select(col("doc_id"), col("source"), Exprs.tokens(col("text")).as("toks"))
-        val pc = base
-          .select(col("doc_id"), explode(col("toks")).as("term"))
-          .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("c"))
-        val keep = pc.groupBy(col("doc_id"))
-          .agg(sum(col("c")).as("n"), count(lit(1)).as("ndis"),
-            max(col("c")).as("topc"),
-            sum(when(col("c") === 1, 1L).otherwise(0L)).as("hapax"),
-            sum(length(col("term")) * col("c")).as("sumlen"))
-          .select(col("doc_id"), col("n"),
-            (col("n") >= 30 &&
-              col("sumlen") >= lit(4L) * col("n") &&
-              col("sumlen") <= lit(5L) * col("n") &&
-              lit(100L) * col("topc") <= lit(15L) * col("n") &&
-              lit(5L) * col("hapax") >= col("ndis")).as("keep"))
+        val keep = termStats(base.select(col("doc_id"), explode(col("toks")).as("term")))
+          .select(col("doc_id"), col("n"), gopherKeep.as("keep"))
         val fp = base.select(col("doc_id"), col("source"),
           md5(array_join(col("toks"), " ")).as("f"))
         val dfc = fp.groupBy(col("f")).agg(count(lit(1)).as("d"))
@@ -5534,11 +5114,8 @@ object Curation {
             expr("(1000000 * n_keep) div n_docs").as("keep_rate_e6"),
             expr("(1000000 * n_dup) div n_docs").as("dup_rate_e6"))
       },
-      oracle = Some("""
-        WITH sq AS (
-          SELECT doc_id, source,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("sq", "doc_id", "source")},
         pc AS (
           SELECT doc_id, term, COUNT(*) AS c
           FROM (SELECT doc_id, unnest(tk) AS term FROM sq) u GROUP BY 1, 2),
@@ -5603,8 +5180,8 @@ object Curation {
       oracle = Some(s"""WITH RECURSIVE $shCteBody, $jaccardPairsCtes,
         co AS (
           SELECT doc_id, cluster_id,
-            CAST('0x' || substr(md5('split:' || cluster_id), 1, 15) AS BIGINT) % 1000000 AS ccoin,
-            CAST('0x' || substr(md5('split:' || doc_id), 1, 15) AS BIGINT) % 1000000 AS dcoin
+            ${OracleSql.h60("'split:' || cluster_id")} % 1000000 AS ccoin,
+            ${OracleSql.h60("'split:' || doc_id")} % 1000000 AS dcoin
           FROM clusters),
         lab AS (
           SELECT doc_id, cluster_id,
@@ -5651,16 +5228,12 @@ object Curation {
           .select(col("doc_id"), col("n_grams"), col("n_first"),
             expr("(1000000 * n_first) div n_grams").as("novelty_ppm"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         g8 AS (
           SELECT DISTINCT doc_id,
-            tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-            tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7] AS shingle
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM seq) u),
+            ${OracleSql.ngram(8)} AS shingle
+          FROM ${OracleSql.ngramSql(8, "seq")} u),
         fo AS (SELECT shingle, MIN(doc_id) AS first_doc FROM g8 GROUP BY 1)
         SELECT g8.doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
           CAST(SUM(CASE WHEN fo.first_doc = g8.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_first,
@@ -5686,17 +5259,12 @@ object Curation {
       (s, dir) => {
         val d = docs(s, dir)
         val exact = Dedup.ngramJaccardPairs(d, n = 3, threshold = 0.05,
-            maxShingleDf = Some(64))
+            maxShingleDf = Some(MaxShingleDf))
           .select(col("doc_a"), col("doc_b"), col("jaccard"))
         val found = Dedup.minhashLshPairs(d, threshold = 0.05, portable = true,
-            maxBucketSize = Some(64))
+            maxBucketSize = Some(MaxBucketSize))
           .select(col("doc_a"), col("doc_b"), lit(1L).as("hit"))
-        val expectPpm = (0 to 9).map { b =>
-          val lo = math.max(0.05, b / 10.0); val hi = (b + 1) / 10.0
-          val m = (lo + hi) / 2
-          b.toLong -> math.round(1e6 * (1 - math.pow(1 - math.pow(m, 4), 8)))
-        }
-        val expectCol = expectPpm.foldLeft(lit(null).cast("long")) {
+        val expectCol = bandingExpectPpm.foldLeft(lit(null).cast("long")) {
           case (acc, (b, p)) => when(col("bucket") === b, lit(p)).otherwise(acc)
         }
         exact
@@ -5711,21 +5279,12 @@ object Curation {
             expectCol.as("expect_ppm"))
       },
       oracle = Some {
-        val expectCase = (0 to 9).map { b =>
-          val lo = math.max(0.05, b / 10.0); val hi = (b + 1) / 10.0
-          val m = (lo + hi) / 2
-          s"WHEN bucket = $b THEN ${math.round(1e6 * (1 - math.pow(1 - math.pow(m, 4), 8)))}"
-        }.mkString(" ")
+        val expectCase = bandingExpectPpm.map { case (b, p) => s"WHEN bucket = $b THEN $p" }
+          .mkString(" ")
         s"""WITH RECURSIVE $shCteBody,
         $jaccardPairsCtes,
         $minhashPairsCtes,
-        ej AS (
-          SELECT doc_a, doc_b,
-            CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) AS j
-          FROM common
-          JOIN csizes sa ON sa.doc_id = doc_a
-          JOIN csizes sb ON sb.doc_id = doc_b
-          WHERE CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
+        $jaccardEdgesCte,
         bk AS (
           SELECT LEAST(CAST(FLOOR(j * 10) AS BIGINT), 9) AS bucket,
             CASE WHEN mh.doc_a IS NOT NULL THEN 1 ELSE 0 END AS hit
@@ -5799,27 +5358,23 @@ object Curation {
             (col("chars").cast(dbl) / col("n").cast(dbl)).as("b"),
             (col("ndis").cast(dbl) / col("n").cast(dbl)).as("c"),
             col("n_chars").cast(dbl).as("d"))
-        val sigs = Seq("a", "b", "c", "d")
+        val sigs = signalNames.keys.toSeq.sorted
         val moments =
           Seq(count(lit(1)).cast(dbl).as("n")) ++
           sigs.map(x => Exprs.dsum(col(x)).as(s"s$x")) ++
           (for (x <- sigs; y <- sigs if x <= y)
             yield Exprs.dsum(col(x) * col(y)).as(s"s$x$y"))
         val m = st.agg(moments.head, moments.tail: _*)
-        val names = Map("a" -> "n_tokens", "b" -> "mean_word_len",
-          "c" -> "distinct_ratio", "d" -> "n_chars")
         def vr(x: String) = col("n") * col(s"s$x$x") - col(s"s$x") * col(s"s$x")
         val pairs = for (x <- sigs; y <- sigs if x < y) yield struct(
-          lit(names(x)).as("sig_x"), lit(names(y)).as("sig_y"),
+          lit(signalNames(x)).as("sig_x"), lit(signalNames(y)).as("sig_y"),
           when(vr(x) * vr(y) <= 0, lit(null).cast(dbl))
             .otherwise(round((col("n") * col(s"s$x$y") - col(s"s$x") * col(s"s$y")) /
               sqrt(vr(x) * vr(y)), 6)).as("r"))
         m.select(explode(array(pairs: _*)).as("p")).select(col("p.*"))
       },
       oracle = Some {
-        val sigs = Seq("a", "b", "c", "d")
-        val names = Map("a" -> "n_tokens", "b" -> "mean_word_len",
-          "c" -> "distinct_ratio", "d" -> "n_chars")
+        val sigs = signalNames.keys.toSeq.sorted
         val moments =
           (Seq("CAST(COUNT(*) AS DOUBLE) AS n") ++
             sigs.map(x => s"CAST(SUM(CAST($x AS DECIMAL(30,6))) AS DOUBLE) AS s$x") ++
@@ -5828,15 +5383,12 @@ object Curation {
             .mkString(",\n            ")
         def vr(x: String) = s"(n*s$x$x - s$x*s$x)"
         val rows = (for (x <- sigs; y <- sigs if x < y) yield
-          s"""SELECT '${names(x)}' AS sig_x, '${names(y)}' AS sig_y,
+          s"""SELECT '${signalNames(x)}' AS sig_x, '${signalNames(y)}' AS sig_y,
             CASE WHEN ${vr(x)} * ${vr(y)} <= 0 THEN NULL
                  ELSE round((n*s$x$y - s$x*s$y) / sqrt(${vr(x)} * ${vr(y)}), 6)
             END AS r FROM m""").mkString("\n        UNION ALL\n        ")
         s"""
-        WITH sq AS (
-          SELECT doc_id, n_chars,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+        WITH ${OracleSql.tokenLists("sq", "doc_id", "n_chars")},
         pc AS (
           SELECT doc_id, n_chars, term, COUNT(*) AS c
           FROM (SELECT doc_id, n_chars, unnest(tk) AS term FROM sq) u GROUP BY 1, 2, 3),
@@ -5910,13 +5462,7 @@ object Curation {
     QueryDef("q233_decontam_span_surgery",
       (s, dir) => {
         val lng = org.apache.spark.sql.types.LongType
-        val e1 = " held out benchmark question answer pairs must never leak into training"
-        val e2 = " the standardized test prompt appears verbatim in this document for evaluation"
-        val d2 = docs(s, dir).withColumn("text",
-          concat(col("text"),
-            when(col("doc_id") % 13 === 0, lit(e1)).otherwise(lit("")),
-            when(col("doc_id") % 7 === 0, lit(e2)).otherwise(lit(""))))
-        val sp = graft.Caching.pin(d2
+        val sp = graft.Caching.pin(plantedDocs(s, dir)
           .select(col("doc_id"), Exprs.tokens(col("text")).as("toks"))
           .select(col("doc_id"), size(col("toks")).cast(lng).as("n_before"),
             posexplode(Exprs.shingles(col("toks"), 8)).as(Seq("p0", "g")))
@@ -5936,20 +5482,12 @@ object Curation {
             col("n_removed"), (col("n_before") - col("n_removed")).as("n_after"),
             expr("(1000000 * n_removed) div n_before").as("removed_ppm"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(
-              text ||
-              CASE WHEN doc_id % 13 = 0 THEN ' held out benchmark question answer pairs must never leak into training' ELSE '' END ||
-              CASE WHEN doc_id % 7 = 0 THEN ' the standardized test prompt appears verbatim in this document for evaluation' ELSE '' END
-            ), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${plantedSeqCte()},
         g8 AS (
           SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_before, CAST(i AS BIGINT) AS p,
-            tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-            tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7] AS g
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM seq) u),
+            ${OracleSql.ngram(8)} AS g
+          FROM ${OracleSql.ngramSql(8, "seq")} u),
         bg AS (SELECT DISTINCT g FROM g8 WHERE doc_id % 97 = 0),
         fl AS (SELECT g8.* FROM g8 JOIN bg USING (g) WHERE doc_id % 97 <> 0),
         pos AS (
@@ -5982,22 +5520,7 @@ object Curation {
     QueryDef("q238_decontam_surgery_emit",
       (s, dir) => {
         val lng = org.apache.spark.sql.types.LongType
-        val e1 = " held out benchmark question answer pairs must never leak into training"
-        val e2 = " the standardized test prompt appears verbatim in this document for evaluation"
-        val d2 = docs(s, dir).withColumn("text",
-          concat(col("text"),
-            when(col("doc_id") % 13 === 0, lit(e1)).otherwise(lit("")),
-            when(col("doc_id") % 7 === 0, lit(e2)).otherwise(lit(""))))
-        val tk = graft.Caching.pin(
-          d2.select(col("doc_id"), Exprs.tokens(col("text")).as("toks")))
-        val sp = tk.select(col("doc_id"),
-            posexplode(Exprs.shingles(col("toks"), 8)).as(Seq("p0", "g")))
-          .select(col("doc_id"), (col("p0") + 1).cast(lng).as("p"), col("g"))
-        val bench = sp.filter(col("doc_id") % 97 === 0).select(col("g")).distinct()
-        val cut = sp.filter(col("doc_id") % 97 =!= 0).join(broadcast(bench), "g")
-          .select(col("doc_id"), explode(sequence(col("p"), col("p") + 7)).as("pos"))
-          .groupBy(col("doc_id"))
-          .agg(array_sort(collect_set(col("pos"))).as("cut"))
+        val (tk, _, cut) = surgeryCut(plantedDocs(s, dir))
         tk.join(cut, "doc_id")
           .select(col("doc_id"),
             size(col("toks")).cast(lng).as("n_before"),
@@ -6008,25 +5531,9 @@ object Curation {
                 (_, i) => !array_contains(col("cut"), (i + lit(1)).cast(lng))),
               " ").as("clean_text"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(
-              text ||
-              CASE WHEN doc_id % 13 = 0 THEN ' held out benchmark question answer pairs must never leak into training' ELSE '' END ||
-              CASE WHEN doc_id % 7 = 0 THEN ' the standardized test prompt appears verbatim in this document for evaluation' ELSE '' END
-            ), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
-        g8 AS (
-          SELECT doc_id, CAST(i AS BIGINT) AS p,
-            tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-            tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7] AS g
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM seq) u),
-        bg AS (SELECT DISTINCT g FROM g8 WHERE doc_id % 97 = 0),
-        fl AS (SELECT g8.* FROM g8 JOIN bg USING (g) WHERE doc_id % 97 <> 0),
-        pos AS (
-          SELECT DISTINCT doc_id, p + o AS pos
-          FROM (SELECT doc_id, p, unnest(generate_series(0, 7)) AS o FROM fl) z),
+      oracle = Some(s"""
+        WITH ${plantedSeqCte()},
+        $surgeryCutCtes,
         cut AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_removed
                 FROM pos GROUP BY 1),
         toks AS (
@@ -6073,24 +5580,7 @@ object Curation {
     QueryDef("q239_decontam_residual_audit",
       (s, dir) => {
         val lng = org.apache.spark.sql.types.LongType
-        val e1 = " held out benchmark question answer pairs must never leak into training "
-        val e2 = " the standardized test prompt appears verbatim in this document for evaluation"
-        val d2 = docs(s, dir).withColumn("text",
-          concat(
-            when(col("doc_id") % 13 === 0,
-              concat(expr("substr(text, 1, 120)"), lit(e1), expr("substr(text, 121)")))
-              .otherwise(col("text")),
-            when(col("doc_id") % 7 === 0, lit(e2)).otherwise(lit(""))))
-        val tk = graft.Caching.pin(
-          d2.select(col("doc_id"), Exprs.tokens(col("text")).as("toks")))
-        val sp = tk.select(col("doc_id"),
-            posexplode(Exprs.shingles(col("toks"), 8)).as(Seq("p0", "g")))
-          .select(col("doc_id"), (col("p0") + 1).cast(lng).as("p"), col("g"))
-        val bench = sp.filter(col("doc_id") % 97 === 0).select(col("g")).distinct()
-        val cut = sp.filter(col("doc_id") % 97 =!= 0).join(broadcast(bench), "g")
-          .select(col("doc_id"), explode(sequence(col("p"), col("p") + 7)).as("pos"))
-          .groupBy(col("doc_id"))
-          .agg(array_sort(collect_set(col("pos"))).as("cut"))
+        val (tk, bench, cut) = surgeryCut(plantedDocs(s, dir, splice = true))
         // survivors paired with their ORIGINAL 1-based positions
         val kept = filter(
           zip_with(col("toks"), sequence(lit(1), size(col("toks"))),
@@ -6124,26 +5614,9 @@ object Curation {
             col("n_seam_grams"),
             coalesce(col("n_residual_hits"), lit(0L)).as("n_residual_hits"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(
-              CASE WHEN doc_id % 13 = 0
-                THEN substr(text, 1, 120) || ' held out benchmark question answer pairs must never leak into training ' || substr(text, 121)
-                ELSE text END ||
-              CASE WHEN doc_id % 7 = 0 THEN ' the standardized test prompt appears verbatim in this document for evaluation' ELSE '' END
-            ), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
-        g8 AS (
-          SELECT doc_id, CAST(i AS BIGINT) AS p,
-            tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] || ' ' || tk[i+3] || ' ' ||
-            tk[i+4] || ' ' || tk[i+5] || ' ' || tk[i+6] || ' ' || tk[i+7] AS g
-          FROM (SELECT doc_id, tk, unnest(generate_series(1, len(tk) - 7)) AS i FROM seq) u),
-        bg AS (SELECT DISTINCT g FROM g8 WHERE doc_id % 97 = 0),
-        fl AS (SELECT g8.* FROM g8 JOIN bg USING (g) WHERE doc_id % 97 <> 0),
-        pos AS (
-          SELECT DISTINCT doc_id, p + o AS pos
-          FROM (SELECT doc_id, p, unnest(generate_series(0, 7)) AS o FROM fl) z),
+      oracle = Some(s"""
+        WITH ${plantedSeqCte(splice = true)},
+        $surgeryCutCtes,
         toks AS (
           SELECT doc_id, unnest(tk) AS tok,
             unnest(generate_series(1, len(tk))) AS i
@@ -6166,8 +5639,7 @@ object Curation {
           FROM keptl),
         rg AS (
           SELECT doc_id,
-            kt[k] || ' ' || kt[k+1] || ' ' || kt[k+2] || ' ' || kt[k+3] || ' ' ||
-            kt[k+4] || ' ' || kt[k+5] || ' ' || kt[k+6] || ' ' || kt[k+7] AS g
+            ${OracleSql.ngram(8, "kt", "k")} AS g
           FROM (SELECT doc_id, kt, unnest(generate_series(1, len(kt) - 7)) AS k
                 FROM stats) u),
         res AS (SELECT rg.doc_id, CAST(COUNT(*) AS BIGINT) AS n_residual_hits
@@ -6201,12 +5673,10 @@ object Curation {
     QueryDef("q234_kcenter_selection",
       (s, dir) => {
         import graft.Par.ParOps
-        val dbl = org.apache.spark.sql.types.DoubleType
         def l2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
           round(Exprs.sqdist(a, b), 6)
         val e = graft.Caching.pin(Tables(s, dir, "embeddings")
-          .select(col("vec_id"),
-            col("embedding").cast(org.apache.spark.sql.types.ArrayType(dbl)).as("v")))
+          .select(col("vec_id"), embVec.as("v")))
         var sel = e.orderBy(col("vec_id").asc).limit(1)
           .select(col("vec_id").as("c_id"), col("v").as("cv"))
           .onePart.localCheckpoint(true)
@@ -6244,9 +5714,7 @@ object Curation {
         rows.reduce(_ unionByName _)
       },
       oracle = Some {
-        val l2 = (a: String, b: String) =>
-          s"round(list_reduce(list_transform(range(1, len($a) + 1), " +
-            s"i -> ($a[i] - $b[i]) * ($a[i] - $b[i])), (x, y) -> x + y), 6)"
+        val l2 = (a: String, b: String) => s"round(${OracleSql.sqdist(a, b)}, 6)"
         val rounds = (1 to 6).map { r =>
           val dPrev = if (r == 1) "" else {
             s"""d$r AS MATERIALIZED (
@@ -6271,7 +5739,7 @@ object Curation {
             (SELECT MAX(d) FROM d$r) AS radius FROM c$r""")
           .mkString("\n        UNION ALL\n        ")
         s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         $rounds
         $selects"""
       },
@@ -6294,8 +5762,7 @@ object Curation {
     // table, one shared truth, four metric rollups unioned.
     QueryDef("q235_nprobe_sweep",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         val q = e.filter(col("vec_id") % 100 === 0)
         val nps = Seq(1, 2, 4, 8)
         val sweep = graft.Caching.pin(
@@ -6310,50 +5777,11 @@ object Curation {
             truth, s"ivfpq_np$np", k = 10)
         }.reduce(_ unionByName _)
       },
-      oracle = Some {
-        val nps = Seq(1, 2, 4, 8)
-        val perNp = nps.map { np =>
-          s"""sys$np AS (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-            FROM dist WHERE rn <= $np) z
-          WHERE rk <= 10),
-        hits$np AS (
-          SELECT s.q_id, s.n_id, s.rk AS srk, t.rk AS trk
-          FROM sys$np s JOIN truth t ON s.q_id = t.q_id AND s.n_id = t.n_id),
-        nhits$np AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits FROM hits$np),
-        rr$np AS (
-          SELECT CAST(COALESCE(SUM(COALESCE(1000000 // s.rk, 0)), 0) AS BIGINT) AS rr_sum
-          FROM truth t LEFT JOIN sys$np s ON s.q_id = t.q_id AND s.n_id = t.n_id
-          WHERE t.rk = 1),
-        h1$np AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit1 FROM hits$np WHERE trk = 1 AND srk = 1)"""
-        }.mkString(",\n        ")
-        val selects = nps.map { np =>
-          s"""SELECT 'ivfpq_np$np' AS system, n_queries, n_hits,
-          (1000000 * n_hits) // (n_queries * 10) AS recall_ppm,
-          rr_sum // n_queries AS mrr_ppm,
-          n_hit1,
-          (1000000 * n_hit1) // n_queries AS hit1_ppm
-        FROM nq, nhits$np, rr$np, h1$np"""
-        }.mkString("\n        UNION ALL\n        ")
-        ivfpqSql(kCoarse = 8, cIter = 2, m = 4, sub = 16, kc = 8,
-          pIter = 2, nprobe = 8, k = 10, sweep = true, fin = s""",
-        tdist AS (
-          SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-            round(list_reduce(list_transform(range(1, len(q.v) + 1),
-              i -> (q.v[i] - e.v[i]) * (q.v[i] - e.v[i])), (x, y) -> x + y), 6) AS d2
-          FROM q JOIN e ON e.vec_id <> q.vec_id),
-        truth AS (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-            FROM tdist) t
-          WHERE rk <= 10),
-        nq AS (SELECT COUNT(DISTINCT q_id) AS n_queries FROM truth),
-        $perNp
-        $selects""")
-      },
+      oracle = Some(ivfpqSql(kCoarse = 8, cIter = 2, m = 4, sub = 16, kc = 8,
+        pIter = 2, nprobe = 8, k = 10, sweep = true, fin = s""",
+        $l2TruthCtes,
+        ${sweepCardsSql(Seq(1, 2, 4, 8), "ivfpq_np", np =>
+          OracleSql.topK("q_id, n_id", "d2 ASC", s"dist WHERE rn <= $np", 10))}""")),
       bench = true),
 
     // Duplicate-cluster chaining audit — the known failure mode of
@@ -6370,7 +5798,7 @@ object Curation {
       (s, dir) => {
         val cl = dupClusterAssignment(s, dir)
         val pairs = Dedup.ngramJaccardPairs(docs(s, dir), n = 3, threshold = 0.05,
-            maxShingleDf = Some(64))
+            maxShingleDf = Some(MaxShingleDf))
           .select(col("doc_a"), col("jaccard"))
           .join(cl.withColumnRenamed("doc_id", "doc_a"), "doc_a")
         val sizes = cl.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
@@ -6383,13 +5811,7 @@ object Curation {
             col("weakest_link"))
       },
       oracle = Some(s"""WITH RECURSIVE $shCteBody, $jaccardPairsCtes,
-        ej AS (
-          SELECT doc_a, doc_b,
-            CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) AS j
-          FROM common
-          JOIN csizes sa ON sa.doc_id = doc_a
-          JOIN csizes sb ON sb.doc_id = doc_b
-          WHERE CAST(n_common AS DOUBLE)/CAST(sa.sz + sb.sz - n_common AS DOUBLE) >= 0.05),
+        $jaccardEdgesCte,
         pc AS (SELECT c.cluster_id, ej.j FROM ej JOIN clusters c ON c.doc_id = ej.doc_a),
         cs AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_docs
                FROM clusters GROUP BY 1)
@@ -6414,8 +5836,7 @@ object Curation {
     // next to q235's is the whole two-knob tuning story.
     QueryDef("q237_shortlist_sweep",
       (s, dir) => {
-        val e = Tables(s, dir, "embeddings")
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("vec"))
+        val e = emb(s, dir)
         val q = e.filter(col("vec_id") % 100 === 0)
         val sls = Seq(10, 20, 40, 80)
         val sweep = graft.Caching.pin(
@@ -6430,63 +5851,47 @@ object Curation {
             truth, s"rerank_sl$sl", k = 10)
         }.reduce(_ unionByName _)
       },
-      oracle = Some {
-        val sls = Seq(10, 20, 40, 80)
-        val perSl = sls.map { sl =>
-          s"""sys$sl AS (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-            FROM tr WHERE adc_rk <= $sl) z
-          WHERE rk <= 10),
-        hits$sl AS (
-          SELECT s.q_id, s.n_id, s.rk AS srk, t.rk AS trk
-          FROM sys$sl s JOIN truth t ON s.q_id = t.q_id AND s.n_id = t.n_id),
-        nhits$sl AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hits FROM hits$sl),
-        rr$sl AS (
-          SELECT CAST(COALESCE(SUM(COALESCE(1000000 // s.rk, 0)), 0) AS BIGINT) AS rr_sum
-          FROM truth t LEFT JOIN sys$sl s ON s.q_id = t.q_id AND s.n_id = t.n_id
-          WHERE t.rk = 1),
-        h1$sl AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_hit1 FROM hits$sl WHERE trk = 1 AND srk = 1)"""
-        }.mkString(",\n        ")
-        val selects = sls.map { sl =>
-          s"""SELECT 'rerank_sl$sl' AS system, n_queries, n_hits,
-          (1000000 * n_hits) // (n_queries * 10) AS recall_ppm,
-          rr_sum // n_queries AS mrr_ppm,
-          n_hit1,
-          (1000000 * n_hit1) // n_queries AS hit1_ppm
-        FROM nq, nhits$sl, rr$sl, h1$sl"""
-        }.mkString("\n        UNION ALL\n        ")
-        ivfpqSql(kCoarse = 8, cIter = 2, m = 4, sub = 16, kc = 8,
-          pIter = 2, nprobe = 2, k = 10, fin = s""",
+      oracle = Some(ivfpqSql(kCoarse = 8, cIter = 2, m = 4, sub = 16, kc = 8,
+        pIter = 2, nprobe = 2, k = 10, fin = s""",
         sl AS (
-          SELECT q_id, n_id, rk AS adc_rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-            FROM dist) z
-          WHERE rk <= 80),
+          ${OracleSql.topK("q_id, n_id", "d2 ASC", "dist", 80, "z", rk = "rk AS adc_rk")}),
         tr AS (
           SELECT sl.q_id, sl.n_id, sl.adc_rk,
-            round(list_reduce(list_transform(range(1, len(qv.v) + 1),
-              i -> (qv.v[i] - nv.v[i]) * (qv.v[i] - nv.v[i])), (x, y) -> x + y), 6) AS d2
+            round(${OracleSql.sqdist("qv.v", "nv.v")}, 6) AS d2
           FROM sl JOIN e nv ON nv.vec_id = sl.n_id JOIN q qv ON qv.vec_id = sl.q_id),
-        tdist AS (
-          SELECT q.vec_id AS q_id, e.vec_id AS n_id,
-            round(list_reduce(list_transform(range(1, len(q.v) + 1),
-              i -> (q.v[i] - e.v[i]) * (q.v[i] - e.v[i])), (x, y) -> x + y), 6) AS d2
-          FROM q JOIN e ON e.vec_id <> q.vec_id),
-        truth AS (
-          SELECT q_id, n_id, rk FROM (
-            SELECT q_id, n_id,
-              CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-            FROM tdist) t
-          WHERE rk <= 10),
-        nq AS (SELECT COUNT(DISTINCT q_id) AS n_queries FROM truth),
-        $perSl
-        $selects""")
-      },
+        $l2TruthCtes,
+        ${sweepCardsSql(Seq(10, 20, 40, 80), "rerank_sl", sl =>
+          OracleSql.topK("q_id, n_id", "d2 ASC", s"tr WHERE adc_rk <= $sl", 10))}""")),
       bench = true)
   )
+
+  /** `truth(q_id, n_id, rk)`: the exact squared-L2 top-10 of [[ivfpqSql]]'s
+    * query sample `q` over the corpus `e` ([[graft.ml.Pq.bruteL2TopK]]),
+    * the ground truth of the IVF-PQ eval cards (q207, q235, q237). */
+  private def l2TruthCtes: String =
+    s"""tdist AS (
+          SELECT q.vec_id AS q_id, e.vec_id AS n_id,
+            round(${OracleSql.sqdist("q.v", "e.v")}, 6) AS d2
+          FROM q JOIN e ON e.vec_id <> q.vec_id),
+        truth AS (
+          ${OracleSql.topK("q_id, n_id", "d2 ASC", "tdist", 10, "t")})"""
+
+  /** The eval cards of a tuning sweep (q235, q237), after `truth`: per
+    * point `p` the system ranking `sys$p` (`sysSql(p)`) scored against
+    * `truth` by the [[retrievalEvalCard]] SQL, one row labelled
+    * `label$p` per point, unioned. */
+  private def sweepCardsSql(points: Seq[Int], label: String, sysSql: Int => String): String = {
+    val ctes = points.map { p =>
+      s"""sys$p AS (
+          ${sysSql(p)}),
+        ${OracleSql.evalCardCtes(s"sys$p", p.toString)}"""
+    }.mkString(",\n        ")
+    val rows = points.map(p => OracleSql.evalCardRow(s"$label$p", 10, p.toString))
+      .mkString("\n        UNION ALL\n        ")
+    s"""${OracleSql.evalQueries},
+        $ctes
+        $rows"""
+  }
 
   /** Unrolled IVF-PQ oracle ([[graft.ml.Pq.ivfPqTopK]]): the coarse
     * kmeansCtes unroll (prefix g), residual vectors, per-subspace
@@ -6515,8 +5920,7 @@ object Curation {
       val rnSrc = if (sweep && s == 0) ", rn" else ""
       s"""t$s AS MATERIALIZED (
           SELECT qs.q_id, qs.cell$rnSel, c.cid,
-            list_reduce(list_transform(range(1, len(qs.sv) + 1),
-              i -> (qs.sv[i] - c.c[i]) * (qs.sv[i] - c.c[i])), (x, y) -> x + y) AS d2
+            ${OracleSql.sqdist("qs.sv", "c.c")} AS d2
           FROM (SELECT q_id, cell$rnSrc, rv[${s * sub + 1}:${(s + 1) * sub}] AS sv FROM qr) qs
           CROSS JOIN r${s}c$pIter c)"""
     }.mkString(",\n        ")
@@ -6525,7 +5929,7 @@ object Curation {
       .mkString("\n          ")
     val distSum = (0 until m).map(s => s"t$s.d2").mkString(" + ")
     s"""
-        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        WITH ${OracleSql.embCte("e", "v")},
         ge AS (SELECT vec_id, v FROM e),
         ${kmeansCtes(kCoarse, cIter, "g")},
         re AS MATERIALIZED (
@@ -6540,8 +5944,7 @@ object Curation {
           SELECT q_id, cid AS cell, c$rnQc FROM (
             SELECT q.vec_id AS q_id, c.cid, c.c,
               row_number() OVER (PARTITION BY q.vec_id ORDER BY
-                list_reduce(list_transform(range(1, len(q.v) + 1),
-                  i -> (q.v[i] - c.c[i]) * (q.v[i] - c.c[i])), (x, y) -> x + y) ASC,
+                ${OracleSql.sqdist("q.v", "c.c")} ASC,
                 c.cid ASC) AS rn
             FROM q CROSS JOIN gc$cIter c) z
           WHERE rn <= $nprobe),
@@ -6556,11 +5959,7 @@ object Curation {
           JOIN t0 ON t0.cell = cd.cell AND t0.cid = cd.k1
           $distJoins
           WHERE t0.q_id <> cd.vec_id)
-        ${if (fin.nonEmpty) fin else s"""SELECT q_id, n_id, d2, rk FROM (
-          SELECT q_id, n_id, d2,
-            CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2 ASC, n_id ASC) AS BIGINT) AS rk
-          FROM dist) z
-        WHERE rk <= $k"""}"""
+        ${if (fin.nonEmpty) fin else OracleSql.topK("q_id, n_id, d2", "d2 ASC", "dist", k)}"""
   }
 
   /** Unrolled MMR oracle ([[graft.operators.Similarity.mmrRerank]]): the
@@ -6571,15 +5970,10 @@ object Curation {
   private def mmrSql(n: Int, k: Int, lambda: String): String = {
     val lam = s"CAST($lambda AS DOUBLE)"
     val oneMinus = s"(CAST(1 AS DOUBLE) - $lam)"
-    def cos(a: String, b: String) =
-      s"""round(CASE WHEN sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b)) = 0
-           THEN 0.0
-           ELSE list_dot_product($a, $b) /
-                (sqrt(list_dot_product($a, $a)) * sqrt(list_dot_product($b, $b))) END, 6)"""
     val rounds = (1 to k).map { r =>
       s"""ms$r AS (
         SELECT c.q_id, c.n_id, c.rel,
-          COALESCE(MAX(${cos("c.v", "s.v")}), CAST(0.0 AS DOUBLE)) AS ms
+          COALESCE(MAX(${OracleSql.cosine("c.v", "s.v")}), CAST(0.0 AS DOUBLE)) AS ms
         FROM rem${r - 1} c LEFT JOIN sel${r - 1} s ON s.q_id = c.q_id
         GROUP BY 1, 2, 3),
       pk$r AS MATERIALIZED (
@@ -6599,15 +5993,15 @@ object Curation {
         WHERE p.n_id IS NULL)"""
     }.mkString(",\n      ")
     s"""
-      WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+      WITH ${OracleSql.embCte("emb", "e")},
       q AS (SELECT * FROM emb WHERE vec_id % 100 = 0),
       sims AS (
-        SELECT q.vec_id AS q_id, c.vec_id AS n_id, ${cos("q.e", "c.e")} AS sim
+        SELECT q.vec_id AS q_id, c.vec_id AS n_id, ${OracleSql.cosine("q.e", "c.e")} AS sim
         FROM q CROSS JOIN emb c WHERE q.vec_id <> c.vec_id),
       cand AS MATERIALIZED (
         SELECT s.q_id, s.n_id, s.sim AS rel, c.e AS v FROM (
           SELECT q_id, n_id, sim,
-            row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS rk
+            ${OracleSql.rank("sim DESC", cast = false)} AS rk
           FROM sims) s
         JOIN emb c ON c.vec_id = s.n_id
         WHERE s.rk <= $n),
@@ -6624,10 +6018,7 @@ object Curation {
     * re-sync (10 dp until round 10's ln-ulp fix), and the exact DECIMAL
     * per-doc fold. MATERIALIZED where a
     * frame is read twice (the q81 lesson). */
-  private def dsirCtes: String = """seq AS (
-      SELECT doc_id, lang,
-        list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-      FROM documents),
+  private def dsirCtes: String = s"""${OracleSql.tokenLists("seq", "doc_id", "lang")},
     fr AS (
       SELECT doc_id, lang = 'en' AS is_t,
         UNNEST(list_concat(
@@ -6636,7 +6027,7 @@ object Curation {
       FROM seq WHERE len(tk) > 0),
     fh AS MATERIALIZED (
       SELECT doc_id, is_t,
-        CAST('0x' || substr(md5(f), 1, 12) AS BIGINT) % 1024 AS b
+        ${OracleSql.h48("f")} % 1024 AS b
       FROM fr),
     raw AS MATERIALIZED (SELECT b, COUNT(*) AS cr FROM fh GROUP BY 1),
     tc AS (SELECT b, COUNT(*) AS ct FROM fh WHERE is_t GROUP BY 1),
@@ -6666,12 +6057,8 @@ object Curation {
     * matches the Spark loop's early stop. Ends with CTEs `toks`, `merges`,
     * and `r<n>` open for the caller's final SELECT. */
   private def bpeTrainSql(rounds: Int): String =
-    """
-        WITH toks AS MATERIALIZED (
-          SELECT doc_id, t AS word FROM (
-            SELECT doc_id, unnest(list_filter(
-              string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'),
-              t -> t <> '')) AS t FROM documents)),
+    s"""
+        WITH $wordToksCte,
         """ + bpeBody(rounds)
 
   /** [[bpeTrainSql]]'s CTE chain without the WITH/toks prelude — for
@@ -6711,12 +6098,8 @@ object Curation {
     * is byte-for-byte bpeTrainSql's list_reduce fold. Ends with `merges
     * (rank, l, r, score)` open for the caller's final SELECT. */
   private def wordPieceSql(rounds: Int): String =
-    """
-        WITH toks AS MATERIALIZED (
-          SELECT doc_id, t AS word FROM (
-            SELECT doc_id, unnest(list_filter(
-              string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'),
-              t -> t <> '')) AS t FROM documents)),
+    s"""
+        WITH $wordToksCte,
         """ + wordPieceBody(rounds)
 
   /** [[wordPieceSql]]'s CTE chain without the WITH/toks prelude — the

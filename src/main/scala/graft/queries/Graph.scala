@@ -16,7 +16,7 @@ object Graph {
 
   /** `toks`, then the co-occurrence counts cooc(src, dst, cnt) over each
     * document's distinct terms — the oracle of [[cooc]]. Follows a `WITH`. */
-  private val coocCte: String = s"""${Text.toksCte},
+  private val coocCte: String = s"""${OracleSql.toksCte},
     dt AS (SELECT DISTINCT doc_id, term FROM toks),
     cooc AS (
       SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
@@ -37,7 +37,7 @@ object Graph {
     * counts pv(v, tri), by the same degree orientation and wedge closure as
     * [[Graphs.triangles]]. */
   private val triangleCte: String = s"""
-        WITH ${Text.toksCte},
+        WITH ${OracleSql.toksCte},
         dt AS (SELECT DISTINCT doc_id, term FROM toks),
         cooc AS (
           SELECT DISTINCT a.term AS src, b.term AS dst
@@ -162,7 +162,7 @@ object Graph {
     QueryDef("q23_cooccurrence",
       (s, dir) => cooc(s, dir).select(col("src"), col("dst"), col("cnt")),
       oracle = Some(s"""
-        ${Text.toksCte.replaceFirst("^\\s*", "WITH ")},
+        WITH ${OracleSql.toksCte},
         dt AS (SELECT DISTINCT doc_id, term FROM toks)
         SELECT a.term AS src, b.term AS dst, COUNT(*) AS cnt
         FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.term <> b.term
@@ -223,8 +223,7 @@ object Graph {
       oracle = Some(s"""
         WITH seq AS (
           SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'),
-                        t -> t <> '') AS tk
+            ${OracleSql.tokens(x = "t")} AS tk
           FROM documents),
         pos AS (
           SELECT doc_id, i - 1 AS pos, tk[i] AS term
@@ -326,10 +325,8 @@ object Graph {
           round(col("n_reciprocal").cast(org.apache.spark.sql.types.DoubleType) /
             col("n_edges").cast(org.apache.spark.sql.types.DoubleType), 8).as("reciprocity"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq")},
         ed AS MATERIALIZED (
           SELECT DISTINCT tk[i] AS src, tk[i + 1] AS dst
           FROM (SELECT tk, UNNEST(generate_series(1, len(tk) - 1)) AS i FROM seq WHERE len(tk) > 1) z
@@ -726,9 +723,7 @@ object Graph {
     * then the exact scaled-long rounds of [[pageRankSql]]. */
   private def textrankSql(iters: Int, d: Double): String =
     s"""
-    WITH seq AS (
-      SELECT list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-      FROM documents),
+    WITH ${OracleSql.tokenLists("seq")},
     pr AS (
       SELECT g.tk[g.i] AS src, g.tk[g.i + u.j] AS dst
       FROM (SELECT tk, UNNEST(generate_series(1, len(tk) - 1)) AS i FROM seq WHERE len(tk) > 1) g,
@@ -830,9 +825,7 @@ object Graph {
         FROM verts vt LEFT JOIN hr$i r ON vt.v = r.v)"""
     }.mkString(",\n      ")
     s"""
-        WITH seq AS (
-          SELECT list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+        WITH ${OracleSql.tokenLists("seq")},
         bg AS (
           SELECT tk[i] AS src, tk[i + 1] AS dst
           FROM (SELECT tk, UNNEST(generate_series(1, len(tk) - 1)) AS i FROM seq WHERE len(tk) > 1) z),

@@ -15,22 +15,18 @@ import org.apache.spark.sql.types.LongType
   */
 object Ml {
 
-  private val embCte = """
-    emb AS (SELECT vec_id, CAST(label AS BIGINT) AS label, CAST(embedding AS DOUBLE[]) AS e
-            FROM embeddings),
+  private val embCte = s"""
+    emb AS (SELECT vec_id, CAST(label AS BIGINT) AS label, ${OracleSql.vec} AS e FROM embeddings),
     test AS (SELECT * FROM emb WHERE vec_id % 10 = 0),
     train AS (SELECT * FROM emb WHERE vec_id % 10 <> 0),
     sims AS (
       SELECT t.vec_id AS q_id, r.vec_id AS n_id, r.label AS n_label,
-        round(CASE WHEN sqrt(list_dot_product(t.e, t.e)) * sqrt(list_dot_product(r.e, r.e)) = 0
-          THEN 0.0
-          ELSE list_dot_product(t.e, r.e) /
-               (sqrt(list_dot_product(t.e, t.e)) * sqrt(list_dot_product(r.e, r.e))) END, 6) AS sim
+        ${OracleSql.cosine("t.e", "r.e")} AS sim
       FROM test t CROSS JOIN train r),
     topk AS (
       SELECT * FROM (
         SELECT q_id, n_id, n_label, sim,
-          CAST(row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, n_id ASC) AS BIGINT) AS rk
+          ${OracleSql.rank("sim DESC")} AS rk
         FROM sims) s
       WHERE rk <= 5),
     votes AS (SELECT q_id, n_label, COUNT(*) AS votes FROM topk GROUP BY 1, 2),
@@ -48,7 +44,7 @@ object Ml {
   }
 
   private val nbCte = s"""
-    ${Text.toksCte},
+    ${OracleSql.toksCte},
     train_toks AS (SELECT * FROM toks WHERE doc_id % 10 <> 0),
     test_toks AS (SELECT * FROM toks WHERE doc_id % 10 = 0),
     tc AS (SELECT lang AS label, term, COUNT(*) AS tcnt FROM train_toks GROUP BY 1, 2),
@@ -307,9 +303,9 @@ object Ml {
             round(sum(when(col("clabel") === col("label"), 1L).otherwise(0L))
               .cast(DoubleType) / count(lit(1)).cast(DoubleType), 8).as("acc"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH e AS (SELECT vec_id, CAST(label AS BIGINT) AS label,
-                     CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+                     ${OracleSql.vec} AS v FROM embeddings),
         tr AS (SELECT * FROM e WHERE vec_id % 10 <> 0),
         te AS (SELECT * FROM e WHERE vec_id % 10 = 0),
         mu AS MATERIALIZED (
@@ -321,8 +317,7 @@ object Ml {
         ca AS MATERIALIZED (SELECT clabel, list(c ORDER BY pos) AS cv FROM mu GROUP BY 1),
         sc AS (
           SELECT t.vec_id, t.label, c.clabel,
-            round(list_dot_product(t.v, t.v) - CAST(2 AS DOUBLE) * list_dot_product(t.v, c.cv)
-              + list_dot_product(c.cv, c.cv), 8) AS d2
+            round(${OracleSql.sqdistByDots("t.v", "c.cv")}, 8) AS d2
           FROM te t CROSS JOIN ca c),
         pred AS (
           SELECT vec_id, label, clabel FROM sc
@@ -359,9 +354,9 @@ object Ml {
             round(sqrt(dot(col("va"), col("va")) - lit(2.0d) * dot(col("va"), col("vb")) +
               dot(col("vb"), col("vb"))), 8).as("dist"))
       },
-      oracle = Some("""
+      oracle = Some(s"""
         WITH e AS (SELECT CAST(label AS BIGINT) AS label,
-                     CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+                     ${OracleSql.vec} AS v FROM embeddings),
         mu AS MATERIALIZED (
           SELECT label, pos,
             round(CAST(SUM(CAST(round(x, 12) AS DECIMAL(30,12))) AS DOUBLE)
@@ -370,9 +365,7 @@ object Ml {
           GROUP BY 1, 2),
         ca AS MATERIALIZED (SELECT label, list(c ORDER BY pos) AS cv FROM mu GROUP BY 1)
         SELECT a.label AS label_a, b.label AS label_b,
-          round(sqrt(list_dot_product(a.cv, a.cv)
-            - CAST(2 AS DOUBLE) * list_dot_product(a.cv, b.cv)
-            + list_dot_product(b.cv, b.cv)), 8) AS dist
+          round(sqrt(${OracleSql.sqdistByDots("a.cv", "b.cv")}), 8) AS dist
         FROM ca a JOIN ca b ON a.label < b.label"""),
       bench = true),
 
@@ -433,7 +426,7 @@ object Ml {
           SELECT b,
             (1000000 * SUM(CASE WHEN ok THEN 1 ELSE 0 END)) // COUNT(*) AS acc_e6
           FROM sc, UNNEST(range(64)) AS tb(b)
-          WHERE CAST('0x' || substr(md5('boot:' || b || ':' || doc_id), 1, 15) AS BIGINT) % 2 = 0
+          WHERE ${OracleSql.h60("'boot:' || b || ':' || doc_id")} % 2 = 0
           GROUP BY 1),
         arr AS (SELECT list_sort(list(acc_e6)) AS accs, COUNT(*) AS n FROM reps),
         f AS (SELECT (1000000 * SUM(CASE WHEN ok THEN 1 ELSE 0 END)) // COUNT(*) AS acc_full_e6

@@ -3,24 +3,16 @@ package graft.queries
 import graft.QueryDef
 import graft.functions.SpaceSavingTopK
 import graft.operators.{CountMin, Segment, TextPipeline, TextStats}
+import graft.queries.OracleSql.toksCte
 import graft.sources.Tables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** TF-IDF text pipeline queries over the `documents` table (SURVEY.md §2.2,
-  * §2.4 A1-A5, §2.3 J1). Oracle SQL shares one tokenizer CTE so both engines
-  * see the identical token stream.
+  * §2.4 A1-A5, §2.3 J1). Oracle SQL shares one tokenizer CTE
+  * ([[OracleSql.toksCte]]) so both engines see the identical token stream.
   */
 object Text {
-
-  /** DuckDB CTE mirroring Exprs.tokens: lowercase → strip non-alnum → split. */
-  val toksCte: String = """
-    toks AS (
-      SELECT doc_id, lang, term FROM (
-        SELECT doc_id, lang,
-          unnest(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +')) AS term
-        FROM documents) u
-      WHERE term <> '')"""
 
   private def toks(s: org.apache.spark.sql.SparkSession, dir: String) =
     TextPipeline.tokenize(Tables(s, dir, "documents"))
@@ -366,14 +358,11 @@ object Text {
         t.join(broadcast(stop), t("term") === stop("sw"), "left_anti")
           .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
       },
-      oracle = Some {
-        val list = TextStats.stopwords.map(w => s"'$w'").mkString(", ")
-        s"""
+      oracle = Some(s"""
         WITH $toksCte
         SELECT term, COUNT(*) AS cnt FROM toks
-        WHERE term NOT IN ($list)
-        GROUP BY 1"""
-      }),
+        WHERE term NOT IN (${OracleSql.stopwords})
+        GROUP BY 1""")),
 
     // P11: dictionary segmentation of UNSEGMENTED text (PDF2's Chinese-novel
     // tokenization shape). The text is de-spaced first — a whitespace
@@ -557,7 +546,7 @@ object Text {
         js AS (SELECT unnest(range(0, 4)) AS j),
         cells AS MATERIALIZED (
           SELECT j,
-            CAST('0x' || substr(md5('cm' || CAST(j AS VARCHAR) || ':' || term), 1, 15) AS BIGINT) % 256 AS cell,
+            ${OracleSql.h60("'cm' || CAST(j AS VARCHAR) || ':' || term")} % 256 AS cell,
             CAST(SUM(cnt) AS BIGINT) AS c
           FROM counts CROSS JOIN js
           GROUP BY 1, 2),
@@ -565,7 +554,7 @@ object Text {
           SELECT term, cnt FROM counts ORDER BY cnt DESC, term ASC LIMIT 20),
         pj AS (
           SELECT p.term, js.j,
-            CAST('0x' || substr(md5('cm' || CAST(js.j AS VARCHAR) || ':' || p.term), 1, 15) AS BIGINT) % 256 AS cell
+            ${OracleSql.h60("'cm' || CAST(js.j AS VARCHAR) || ':' || p.term")} % 256 AS cell
           FROM probes p CROSS JOIN js),
         est AS (
           SELECT pj.term, MIN(COALESCE(cl.c, 0)) AS est
@@ -593,11 +582,8 @@ object Text {
           docs.filter(col("doc_id") % 2 === 1),
           docs.filter(col("doc_id") % 2 === 0))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         sq AS (SELECT doc_id, tk FROM seq WHERE len(tk) > 0),
         tr AS (SELECT doc_id, tk FROM sq WHERE doc_id % 2 = 0),
         sc AS (SELECT doc_id, tk FROM sq WHERE doc_id % 2 = 1),
@@ -652,11 +638,8 @@ object Text {
           docs.filter(col("doc_id") % 2 === 1),
           docs.filter(col("doc_id") % 2 === 0))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         sq AS (SELECT doc_id, tk FROM seq WHERE len(tk) > 0),
         tr AS (SELECT doc_id, tk FROM sq WHERE doc_id % 2 = 0),
         sc AS (SELECT doc_id, tk FROM sq WHERE doc_id % 2 = 1),
@@ -715,11 +698,8 @@ object Text {
           docs.filter(col("doc_id") % 2 === 0), rounds = 3)
       },
       oracle = Some {
-        val prelude = """
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+        val prelude = s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         sq AS (SELECT doc_id, tk FROM seq WHERE len(tk) > 0),
         tr AS (SELECT doc_id, tk FROM sq WHERE doc_id % 2 = 0),
         sc AS (SELECT doc_id, tk FROM sq WHERE doc_id % 2 = 1),
@@ -855,10 +835,8 @@ object Text {
               col("n_r").cast("double"), 6).as("r_star"),
             expr("(1000000 * r * n_r) div total").as("mass_ppm"))
       },
-      oracle = Some("""
-        WITH seq AS (
-          SELECT list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq")},
         tg AS (
           SELECT tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
           FROM (SELECT tk, UNNEST(generate_series(1, len(tk) - 2)) AS i
@@ -900,13 +878,10 @@ object Text {
               array_sort(collect_list(struct(col("pos"), col("p"), col("idx")))),
               x => x.getField("idx").cast("string")), ",").as("token_ids"))
       },
-      oracle = Some(unigramSql(rounds = 3, lastRoundSegOnly = true, fin = """,
+      oracle = Some(unigramSql(rounds = 3, lastRoundSegOnly = true, fin = s""",
         vsp AS (SELECT DISTINCT piece FROM seg3),
         vid AS (SELECT piece, CAST(row_number() OVER (ORDER BY piece) AS BIGINT) AS idx FROM vsp),
-        sq2 AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+        ${OracleSql.tokenLists("sq2", "doc_id")},
         posn AS (
           SELECT doc_id, i AS pos, tk[i] AS word
           FROM (SELECT doc_id, tk, UNNEST(generate_series(1, len(tk))) AS i FROM sq2) z
@@ -960,7 +935,7 @@ object Text {
             (900000102, 'spaark systen')) fx(doc_id, text)),
         w AS (
           SELECT term AS word, COUNT(*) AS f FROM (
-            SELECT unnest(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +')) AS term
+            SELECT unnest(${OracleSql.split()}) AS term
             FROM alld) u
           WHERE term <> '' GROUP BY 1),
         rare AS (SELECT word, f FROM w WHERE f <= 2),
@@ -1090,16 +1065,11 @@ object Text {
           .orderBy(col("score").desc, col("phrase").asc)
           .limit(15)
       },
-      oracle = Some {
-        val stopList = graft.operators.TextStats.stopwords.map(x => s"'$x'").mkString(", ")
-        s"""
-        WITH seq AS (
-          SELECT doc_id,
-            list_filter(string_split_regex(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +'), x -> x <> '') AS tk
-          FROM documents),
+      oracle = Some(s"""
+        WITH ${OracleSql.tokenLists("seq", "doc_id")},
         base AS (
           SELECT doc_id, i - 1 AS pos, tk[i] AS term,
-            CASE WHEN tk[i] IN ($stopList) THEN 1 ELSE 0 END AS is_stop
+            CASE WHEN tk[i] IN (${OracleSql.stopwords}) THEN 1 ELSE 0 END AS is_stop
           FROM (SELECT doc_id, tk, UNNEST(generate_series(1, len(tk))) AS i FROM seq) g),
         grouped AS (
           SELECT doc_id, pos, term,
@@ -1123,8 +1093,7 @@ object Text {
           GROUP BY 1, 2, 3)
         SELECT phrase, COUNT(*) AS n_occurrences, MAX(pscore) AS score
         FROM pscores GROUP BY 1
-        ORDER BY score DESC, phrase ASC LIMIT 15"""
-      },
+        ORDER BY score DESC, phrase ASC LIMIT 15"""),
       bench = true),
 
     // Unigram-LM subword tokenizer (Kudo, ACL 2018 — the SentencePiece

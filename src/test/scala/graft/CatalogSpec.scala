@@ -2,7 +2,8 @@ package graft
 
 /** Driver-contract invariants over the query catalog — cheap guards against
   * catalog regressions in later rounds (duplicate names, oracles referencing
-  * unknown tables, an empty bench set, or a broken flagship entry). */
+  * unknown tables or an uninitialised fragment, an empty bench set, or a
+  * broken flagship entry). */
 class CatalogSpec extends SparkSpec {
 
   test("query names are unique and stably prefixed") {
@@ -40,5 +41,17 @@ class CatalogSpec extends SparkSpec {
 
   test("every oracle key has a matching query") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+  }
+
+  // Oracles interpolate shared fragments (queries.OracleSql and the catalog
+  // objects' own). A `val` fragment declared after the `defs` that read it
+  // is still null when they are built and interpolates as the word `null`;
+  // the oracle SQL spells SQL's null in upper case only.
+  test("no oracle interpolates an uninitialised fragment") {
+    val hit = "\\bnull\\b".r
+    val offenders = SparkEntry.oracleSql.collect {
+      case (name, sql) if hit.findFirstIn(sql).isDefined => name
+    }
+    assert(offenders.isEmpty, s"oracles holding a null fragment: $offenders")
   }
 }

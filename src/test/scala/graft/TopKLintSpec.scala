@@ -31,6 +31,20 @@ import scala.jdk.CollectionConverters._
   * `Graphs.scala` only there. The graph catalog builds its undirected edge
   * set with `Graphs.undirected`, so `queries/Graph.scala` never spells the
   * canonical pair `least(col("src"), col("dst"))`.
+  *
+  * Oracle steps: each DuckDB step the catalog oracles replay is spelled once,
+  * in `queries/OracleSql.scala`, so a change to how the engine tokenizes,
+  * reads an embedding or scores a cosine is one edit there, not one per
+  * row. No other file under `queries/` may spell the tokenizer's
+  * `string_split_regex(regexp_replace(lower(`, the `CAST(embedding AS
+  * DOUBLE[])` input or the `sqrt(list_dot_product(` norm; whitespace is
+  * ignored, so a spelling split over lines is still found. A hit here
+  * means pasted SQL came back: call the fragment instead.
+  *
+  * Embedding input: the curation catalog reads the embedding vector through
+  * one helper, `Curation.embVec`, so `Curation.scala` spells
+  * `col("embedding").cast("array<double>")` on that helper's line only.
+  * The frame side then changes with its SQL twin, `OracleSql.vec`.
   */
 class TopKLintSpec extends AnyFunSuite {
 
@@ -97,6 +111,31 @@ class TopKLintSpec extends AnyFunSuite {
       case (p, n, line) if line.contains("floor(") && !helper.contains(n - 1) => s"$p:$n"
     }
     assert(offenders.isEmpty, s"floor( outside Graphs.scaledSum: $offenders")
+  }
+
+  test("only OracleSql spells the oracle tokenizer, embedding input and norm") {
+    val queries = root.resolve("graft/queries")
+    val home = queries.resolve("OracleSql.scala")
+    assert(Files.isRegularFile(home), s"run from the repo root: $home not found")
+    val steps = Seq("string_split_regex(regexp_replace(lower(",
+      "CAST(embedding AS DOUBLE[])", "sqrt(list_dot_product(")
+    val offenders = Files.list(queries).iterator().asScala.toList
+      .filter(p => p.toString.endsWith(".scala") && p != home)
+      .flatMap { p =>
+        val squeezed = Files.readString(p).filterNot(_.isWhitespace)
+        steps.filter(st => squeezed.contains(st.filterNot(_.isWhitespace))).map(st => s"$p: $st")
+      }
+    assert(offenders.isEmpty, s"oracle step spelled outside OracleSql: $offenders")
+  }
+
+  test("Curation.scala casts the embedding column only in its input helper") {
+    val home = root.resolve("graft/queries/Curation.scala")
+    val cast = """col("embedding").cast("array<double>")"""
+    val hits = sourceLines(home).collect {
+      case (p, n, line) if p == home && line.contains(cast) => (n, line)
+    }
+    assert(hits.size == 1 && hits.head._2.contains("def embVec"),
+      s"embedding cast outside Curation.embVec: ${hits.map(h => s"$home:${h._1}")}")
   }
 
   test("the graph catalog builds undirected edges with Graphs.undirected") {
