@@ -19,30 +19,29 @@ object Evaluate {
       sum(when(col("truth") === col("pred"), 1L).otherwise(0L)).as("n_correct"))
       .withColumn("accuracy", col("n_correct").cast(DoubleType) / col("n").cast(DoubleType))
 
-  /** Confusion matrix over (truth, pred): one row per observed class pair.
-    * The raw artifact per-class metrics derive from. */
+  /** Confusion matrix over (truth, pred): one row per observed class pair. */
   def confusion(scored: DataFrame): DataFrame =
     scored.groupBy(col("truth"), col("pred")).agg(count(lit(1)).as("n"))
 
   /** Per-class precision / recall / F1 from (truth, pred) rows — the
-    * evaluation surface beyond plain accuracy. Derived from [[confusion]]:
-    * one (truth, pred) aggregate, each cell exploded into a truth-side
-    * (tp, n_truth) and a pred-side (n_pred) contribution, one
-    * class-sized groupBy(label). Classes are the observed truths and
+    * evaluation surface beyond plain accuracy. Each row is exploded into a
+    * truth-side (tp, n_truth) and a pred-side (n_pred) contribution of 0 or
+    * 1, then one class-sized groupBy(label): one exchange, whose partial
+    * aggregate runs map-side. Classes are the observed truths and
     * predictions (a class never predicted gets precision 0, one never true
     * gets recall 0). A null label contributes no counts, so it keeps the
-    * all-zero row it gets under equi-join semantics. Ratios are exact
-    * integer divisions, F1 a fixed expression over them → engine-portable. */
+    * all-zero row it gets under equi-join semantics. Counts are long sums,
+    * ratios exact integer divisions, F1 a fixed expression over them →
+    * engine-portable. */
   def classMetrics(scored: DataFrame): DataFrame = {
-    val n = col("n")
+    def one(c: Column): Column = when(c, 1L).otherwise(0L)
     val z = lit(0L)
     def side(label: String, tp: Column, nTruth: Column, nPred: Column): Column =
       struct(col(label).as("label"), tp.as("tp"), nTruth.as("n_truth"), nPred.as("n_pred"))
-    confusion(scored)
+    scored
       .select(explode(array(
-        side("truth", when(col("truth") === col("pred"), n).otherwise(z),
-          when(col("truth").isNotNull, n).otherwise(z), z),
-        side("pred", z, z, when(col("pred").isNotNull, n).otherwise(z)))).as("c"))
+        side("truth", one(col("truth") === col("pred")), one(col("truth").isNotNull), z),
+        side("pred", z, z, one(col("pred").isNotNull)))).as("c"))
       .groupBy(col("c.label").as("label"))
       .agg(sum(col("c.tp")).as("tp"), sum(col("c.n_truth")).as("n_truth"),
         sum(col("c.n_pred")).as("n_pred"))

@@ -24,11 +24,27 @@ import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
   * fuse into one WholeStageCodegen stage over the scan; term counting
   * partial-aggregates map-side. [[tfidfOf]] derives TF, DF and the document
   * count from that one count frame: TF and DF are windows over it
-  * (hash-partitioned on `doc_id`, then on `term`), and only the one-row
-  * document count is broadcast. No vocabulary-sized side table is built, and
-  * every shuffle hash-partitions on a high-cardinality key (doc_id, term).
+  * (clustered on `doc_id`, then on `term`), and only the one-row document
+  * count is broadcast. No vocabulary-sized side table is built. A caller
+  * that tokenizes [[byDoc]] documents keys the whole `doc_id` side with one
+  * shuffle of the document rows, so the counts and the TF window add none;
+  * every other shuffle hash-partitions on a high-cardinality key (doc_id,
+  * term) or on `term`.
   */
 object TextPipeline {
+
+  /** `docs` hash-partitioned on `doc_id`, before any tokenizing. A hash
+    * partitioning on `doc_id` satisfies a clustering on every key set that
+    * holds `doc_id`, so each later step keyed on the document (the
+    * (doc_id, term) counts, a `doc_id` window, the (doc_id, label) scores, a
+    * join on `doc_id` to another side partitioned here) runs in the
+    * exchange's stage with no exchange of its own: one round where each such
+    * step would re-key. The shuffle moves the document rows, not the token
+    * stream (a repartition after tokenizing moves every token and loses the
+    * map-side partial count). No partition count: adaptive execution
+    * coalesces it like any other shuffle, and two plan branches over the same
+    * columns share it as one reused exchange. */
+  def byDoc(docs: DataFrame): DataFrame = docs.repartition(col("doc_id"))
 
   /** (doc_id, term) token stream — one row per token occurrence.
     * Reference semantics: lowercase, strip non-alphanumerics, whitespace split
@@ -70,7 +86,11 @@ object TextPipeline {
     * (doc, term) pair, so no distinct count); `n_docs` counts its distinct
     * `doc_id`s and is the only broadcast (one row). A duplicated `doc_id`
     * is one document and a token-less document is none, as in the oracle's
-    * `COUNT(DISTINCT doc_id) FROM toks`. */
+    * `COUNT(DISTINCT doc_id) FROM toks`. Over a [[byDoc]] token stream the
+    * counts and the `tf` window run in the exchange's stage, and the
+    * `n_docs` branch starts from the same exchange over the same scan, which
+    * adaptive execution reuses: the documents are read once and only the
+    * `df` window re-keys (on `term`). */
   def tfidfOf(toks: DataFrame, ref: Boolean = true): DataFrame = {
     val counts = termCounts(toks)
     tf(counts)

@@ -79,24 +79,33 @@ object Ml {
   /** The naive-Bayes rows' inputs, `doc_id % 10 = 0` the test split:
     * training tokens (doc_id, label, term), test tokens (doc_id, term), and
     * the oracle's `truth` (`DISTINCT doc_id, lang FROM test_toks`) read from
-    * the test documents that have at least one token, with no explode. */
+    * the test documents that have at least one token, with no explode.
+    * The test documents are keyed on `doc_id` once, before tokenizing
+    * ([[TextPipeline.byDoc]]): test tokens and `truth` both come from them,
+    * so the scoring's (doc_id, term) and (doc_id, label) aggregates, its
+    * argmax window and the `truth` distinct add no exchange. The training
+    * side keys on label and term, so it stays as it is. */
   private case class NbParts(train: DataFrame, test: DataFrame, truth: DataFrame)
 
   private def nbParts(s: org.apache.spark.sql.SparkSession, dir: String): NbParts = {
     val docs = Tables(s, dir, "documents")
     val isTest = col("doc_id") % 10 === 0
+    val testDocs = TextPipeline.byDoc(docs.filter(isTest))
     NbParts(
       train = TextPipeline.tokenize(docs.filter(!isTest), keep = Seq("doc_id", "lang"))
         .withColumnRenamed("lang", "label"),
-      test = TextPipeline.tokenize(docs.filter(isTest)),
-      truth = docs.filter(isTest && size(tokens(col("text"))) > 0)
+      test = TextPipeline.tokenize(testDocs),
+      truth = testDocs.filter(size(tokens(col("text"))) > 0)
         .select(col("doc_id"), col("lang").as("truth")).distinct())
   }
 
-  /** (doc_id, pred, truth): the standard predictions joined to `truth`. */
+  /** (doc_id, pred, truth): the standard predictions joined to `truth`. Both
+    * sides are partitioned on `doc_id` by [[nbParts]], so the join is a
+    * sort-merge join with no exchange and no broadcast job. */
   private def nbScored(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val p = nbParts(s, dir)
-    NaiveBayes.predict(p.test, NaiveBayes.train(p.train)).join(p.truth, "doc_id")
+    NaiveBayes.predict(p.test, NaiveBayes.train(p.train))
+      .join(p.truth.hint("shuffle_merge"), "doc_id")
   }
 
   val defs: Seq[QueryDef] = Seq(

@@ -17,9 +17,14 @@ object Text {
   private def toks(s: org.apache.spark.sql.SparkSession, dir: String) =
     TextPipeline.tokenize(Tables(s, dir, "documents"))
 
+  /** [[toks]] over the documents keyed on `doc_id` first
+    * ([[TextPipeline.byDoc]]): TF-IDF's `doc_id` side then re-keys nothing. */
+  private def docToks(s: org.apache.spark.sql.SparkSession, dir: String) =
+    TextPipeline.tokenize(TextPipeline.byDoc(Tables(s, dir, "documents")))
+
   /** q21's TF-IDF as the LSA rows' (doc_id, term, w) cell table. */
   private def lsaCells(s: org.apache.spark.sql.SparkSession, dir: String) =
-    TextPipeline.tfidfOf(toks(s, dir)).select(col("doc_id"), col("term"), col("tfidf").as("w"))
+    TextPipeline.tfidfOf(docToks(s, dir)).select(col("doc_id"), col("term"), col("tfidf").as("w"))
 
   /** Name dictionary for q61 (P11): corpus words incl. nested/overlapping
     * entries ("spark" ⊃ "a", "sort"/"scan" share prefixes) so the query
@@ -195,7 +200,7 @@ object Text {
         FROM toks GROUP BY 1""")),
 
     QueryDef("q21_tfidf",
-      (s, dir) => TextPipeline.tfidfOf(toks(s, dir)),
+      (s, dir) => TextPipeline.tfidfOf(docToks(s, dir)),
       oracle = Some(s"""
         WITH $toksCte,
         counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),
@@ -325,7 +330,7 @@ object Text {
 
     QueryDef("q22_doc_vectors",
       (s, dir) => {
-        val t = toks(s, dir)
+        val t = docToks(s, dir)
         TextPipeline.docVectors(TextPipeline.tfidfOf(t), TextPipeline.vocab(t))
       },
       oracle = Some(s"""
@@ -414,7 +419,7 @@ object Text {
     // log; both live behind TextPipeline.tfidfOf's `ref`). ln is rounded
     // to 10 dp on both engines — the determinism contract for transcendentals.
     QueryDef("q69_tfidf_log",
-      (s, dir) => TextPipeline.tfidfOf(toks(s, dir), ref = false),
+      (s, dir) => TextPipeline.tfidfOf(docToks(s, dir), ref = false),
       oracle = Some(s"""
         WITH $toksCte,
         counts AS (SELECT doc_id, term, COUNT(*) AS cnt FROM toks GROUP BY 1, 2),

@@ -119,7 +119,7 @@ class ClassifierSpec extends SparkSpec {
       .as[(String, String, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     assert(conf == Map(("a", "a") -> 2L, ("a", "b") -> 1L, ("b", "a") -> 1L,
       ("b", "b") -> 1L, ("c", "a") -> 1L))
-    // null truths and preds: the confusion-derived form equals the former
+    // null truths and preds: the direct form equals the former
     // union/three-aggregate/three-join form, whose equi-joins leave the null
     // label an all-zero row
     val withNulls = scored.unionByName(Seq[(String, String)](

@@ -6,15 +6,17 @@ import graft.sources.Tables
 import org.apache.spark.SparkEnv
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
 
 /** The classify pipeline's TF-IDF and naive-Bayes rows against the forms
   * they replaced, on a fixture with the cases the shipped tables lack:
   * duplicated `doc_id`s (same and different `lang`, in both splits),
   * token-less documents (empty, punctuation-only, null) and a test document
   * with only out-of-vocabulary terms. Every double is compared by its bits.
-  * Also pins the plan shapes: scans, `truth` sides and broadcast sizes. */
+  * Also pins the plan shapes, the final adaptive plans where a run shares
+  * an exchange: scans, `truth` sides, broadcasts and their sizes. */
 class ClassifyPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -76,7 +78,7 @@ class ClassifyPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       bits(TestOracles.nbPredictLazy(test, lazyModel, referenceCompat = true)))
     assert(bits(row("q31_nb_accuracy")) == bits(Evaluate.accuracy(scored)))
     assert(bits(row("q65_nb_confusion")) == bits(Evaluate.confusion(scored)))
-    assert(bits(row("q66_nb_class_metrics")) == bits(Evaluate.classMetrics(scored)))
+    assert(bits(row("q66_nb_class_metrics")) == bits(TestOracles.classMetricsViaConfusion(scored)))
     // the fixture reaches every case: doc 20 joins two truths, doc 10 one;
     // the token-less docs have no truth, doc 50 no prediction
     val perDoc = scored.groupBy("doc_id").count().as[(Long, Long)].collect().toMap
@@ -85,11 +87,36 @@ class ClassifyPlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(truth.filter("doc_id = 50").count() == 1L)
   }
 
-  test("q21's plan scans documents at most twice") {
-    val scans = collectWithSubqueries(row("q21_tfidf").queryExecution.executedPlan) {
-      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.getName == "documents.parquet") => s
+  test("q21's final plan scans documents once, the other branch a reused exchange") {
+    val plan = PlanProbes.finalPlan(row("q21_tfidf"))
+    val readsDocs: SparkPlan => Boolean = {
+      case s: FileSourceScanExec => s.relation.location.rootPaths.exists(_.getName == "documents.parquet")
+      case _ => false
     }
-    assert(scans.size <= 2, s"${scans.size} documents scans")
+    val scans = collectWithSubqueries(plan) { case s if readsDocs(s) => s }
+    assert(scans.size == 1, s"${scans.size} documents scans in\n$plan")
+    val reused = collectWithSubqueries(plan) { case r: ReusedExchangeExec if r.child.exists(readsDocs) => r }
+    assert(reused.size == 1, s"${reused.size} reused documents exchanges in\n$plan")
+  }
+
+  test("the naive-Bayes rows' final plans hold no broadcast") {
+    for (q <- Seq("q30_nb_predict", "q31_nb_accuracy", "q65_nb_confusion", "q66_nb_class_metrics")) {
+      val plan = PlanProbes.finalPlan(row(q))
+      val bs = collectWithSubqueries(plan) { case b: BroadcastExchangeExec => b }
+      assert(bs.isEmpty, s"$q: ${bs.size} broadcasts in\n$plan")
+    }
+  }
+
+  test("class metrics equal the confusion-derived form bit for bit") {
+    // a null truth, a null pred, c never predicted, d never true, a
+    // duplicated row, and a row null on both sides
+    val scored = Seq[(Long, String, String)](
+      (1L, "a", "a"), (1L, "a", "a"), (2L, "a", "b"), (3L, "b", "b"), (4L, "b", "a"),
+      (5L, "c", "a"), (6L, "c", "b"), (7L, "a", "d"), (8L, null, "a"), (9L, "b", null),
+      (10L, null, null)).toDF("doc_id", "truth", "pred")
+    val got = bits(Evaluate.classMetrics(scored))
+    assert(got == bits(TestOracles.classMetricsViaConfusion(scored)))
+    assert(got.size == 5) // a, b, c, d and the null label
   }
 
   test("no truth side of the naive-Bayes rows explodes tokens") {

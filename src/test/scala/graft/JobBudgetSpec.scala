@@ -56,11 +56,11 @@ class JobBudgetSpec extends SparkSpec {
     assert(n <= max, s"$name scheduled $n jobs, budget $max")
   }
 
-  test("q21_tfidf stays within its job budget") { budget("q21_tfidf", 7) }
+  test("q21_tfidf stays within its job budget") { budget("q21_tfidf", 5) }
 
   test("q29_knn_accuracy stays within its job budget") { budget("q29_knn_accuracy", 6) }
 
-  test("q30_nb_predict stays within its job budget") { budget("q30_nb_predict", 7) }
+  test("q30_nb_predict stays within its job budget") { budget("q30_nb_predict", 5) }
 
   test("q37_ann_brute_topk stays within its job budget") { budget("q37_ann_brute_topk", 3) }
 
@@ -68,9 +68,9 @@ class JobBudgetSpec extends SparkSpec {
 
   test("q179_hard_negatives stays within its job budget") { budget("q179_hard_negatives", 5) }
 
-  test("q31_nb_accuracy stays within its job budget") { budget("q31_nb_accuracy", 10) }
+  test("q31_nb_accuracy stays within its job budget") { budget("q31_nb_accuracy", 7) }
 
-  test("q65_nb_confusion stays within its job budget") { budget("q65_nb_confusion", 10) }
+  test("q65_nb_confusion stays within its job budget") { budget("q65_nb_confusion", 7) }
 
   test("q66_nb_class_metrics stays within its job budget, below the join form") {
     // q66 with the class metrics computed by the former union/join form
@@ -86,7 +86,7 @@ class JobBudgetSpec extends SparkSpec {
     val n = row("q66_nb_class_metrics")
     info(s"q66_nb_class_metrics: $n jobs (join form: $joinForm)")
     assert(n < joinForm, s"q66 scheduled $n jobs, the join form $joinForm")
-    assert(n <= 11, s"q66_nb_class_metrics scheduled $n jobs, budget 11")
+    assert(n <= 7, s"q66_nb_class_metrics scheduled $n jobs, budget 7")
   }
 
   // The graph rows: each iterative round is at least one job, so a budget

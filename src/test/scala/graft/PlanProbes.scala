@@ -5,11 +5,12 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace}
 import org.apache.spark.sql.catalyst.plans.physical.BroadcastMode
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Deterministic plan and scheduler counts that specs pin where wall-clock
   * medians are band-noisy. */
@@ -41,6 +42,27 @@ object PlanProbes extends AdaptiveSparkPlanHelper {
   def broadcasts(df: DataFrame): Seq[Broadcast] = {
     df.queryExecution.toRdd.foreach(_ => ())
     broadcastsIn(df.queryExecution.executedPlan)
+  }
+
+  /** Runs `df` into the noop sink, as the bench and [[JobBudgetSpec]] do,
+    * and returns the write's final adaptive plan: the stages as adaptive
+    * execution re-planned them, a reused exchange as a
+    * `ReusedExchangeExec`. The initial plan shows every branch's own
+    * exchange even where the run shares one. */
+  def finalPlan(df: DataFrame): SparkPlan = {
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.put(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    df.sparkSession.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      // listener delivery is async: wait for the write's own callback
+      Option(plans.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(sys.error("no plan reported for the noop write"))
+    } finally df.sparkSession.listenerManager.unregister(listener)
   }
 
   /** Spark jobs scheduled while `body` runs. Listener delivery is async, so

@@ -55,14 +55,42 @@ object TestOracles {
     val truths = scored.groupBy(col("truth").as("label")).agg(count(lit(1)).as("n_truth"))
     val preds = scored.groupBy(col("pred").as("label")).agg(count(lit(1)).as("n_pred"))
     val z = lit(0L)
-    classes
+    classRatios(classes
       .join(tp, Seq("label"), "left")
       .join(truths, Seq("label"), "left")
       .join(preds, Seq("label"), "left")
       .select(col("label"),
         coalesce(col("tp"), z).as("tp"),
         (coalesce(col("n_pred"), z) - coalesce(col("tp"), z)).as("fp"),
-        (coalesce(col("n_truth"), z) - coalesce(col("tp"), z)).as("fn"))
+        (coalesce(col("n_truth"), z) - coalesce(col("tp"), z)).as("fn")))
+  }
+
+  /** `Evaluate.classMetrics` before it aggregated the scored rows directly:
+    * one (truth, pred) confusion aggregate, each cell exploded into a
+    * truth-side (tp, n_truth) and a pred-side (n_pred) contribution of its
+    * count, then one groupBy(label) — two exchanges. */
+  def classMetricsViaConfusion(scored: DataFrame): DataFrame = {
+    val n = col("n")
+    val z = lit(0L)
+    def side(label: String, tp: Column, nTruth: Column, nPred: Column): Column =
+      struct(col(label).as("label"), tp.as("tp"), nTruth.as("n_truth"), nPred.as("n_pred"))
+    classRatios(scored.groupBy(col("truth"), col("pred")).agg(count(lit(1)).as("n"))
+      .select(explode(array(
+        side("truth", when(col("truth") === col("pred"), n).otherwise(z),
+          when(col("truth").isNotNull, n).otherwise(z), z),
+        side("pred", z, z, when(col("pred").isNotNull, n).otherwise(z)))).as("c"))
+      .groupBy(col("c.label").as("label"))
+      .agg(sum(col("c.tp")).as("tp"), sum(col("c.n_truth")).as("n_truth"),
+        sum(col("c.n_pred")).as("n_pred"))
+      .select(col("label"), col("tp"),
+        (col("n_pred") - col("tp")).as("fp"),
+        (col("n_truth") - col("tp")).as("fn")))
+  }
+
+  /** Precision, recall and F1 over (label, tp, fp, fn), as `classMetrics`
+    * derives them. */
+  private def classRatios(counts: DataFrame): DataFrame =
+    counts
       .withColumn("precision",
         when(col("tp") + col("fp") === 0L, 0.0d)
           .otherwise(col("tp").cast(DoubleType) / (col("tp") + col("fp")).cast(DoubleType)))
@@ -73,7 +101,6 @@ object TestOracles {
         when(col("precision") + col("recall") === 0.0d, 0.0d)
           .otherwise(lit(2.0d) * col("precision") * col("recall") /
             (col("precision") + col("recall"))))
-  }
 
   /** The catalog's TF-IDF before [[TextPipeline.tfidfOf]]: TF ⋈ broadcast
     * IDF, the IDF from the token stream by distinct counts. */
